@@ -12,6 +12,17 @@ it is stored as JSON lines written atomically per entry (rename), so a
 crash mid-write never corrupts it. At 100 TB a partition group is a
 date/hour slice; the loop below is driver-side over groups, each group
 a full distributed job.
+
+The input frame is persisted (MEMORY_AND_DISK) once per run: group
+discovery materializes it, and each group's slice is a filter over
+that cache, so the source is scanned and parsed once, not once per
+group. The cache holds the whole input frame, so its size is the run's
+local-disk footprint; a caller at scale passes `groups` and a frame
+restricted to them (one date slice per run), so the cache holds only
+what the run delivers. `sinks.fanout_write` replaces a group's output
+by renaming a staging directory: atomic on HDFS and local disk, but a
+rename on an object store is a copy, so there a killed run can leave a
+partly copied sink directory that the group's redo then replaces.
 """
 
 from __future__ import annotations
@@ -22,6 +33,7 @@ import time
 import uuid
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -75,24 +87,30 @@ class ResumableBatchJob:
         fail_after: int | None = None,
     ) -> dict[str, str]:
         """Process each group not yet done. `fail_after` aborts after N
-        groups (for kill/resume tests). Returns key -> final status."""
-        if groups is None:
-            groups = [
-                str(r[0])
-                for r in df.select(group_col).distinct().orderBy(group_col).collect()
-            ]
-        done = self.manifest.done_keys()
-        statuses: dict[str, str] = {k: "skipped" for k in groups if k in done}
-        processed = 0
-        for key in groups:
-            if key in done:
-                continue
-            if fail_after is not None and processed >= fail_after:
-                raise RuntimeError(f"injected failure before group {key!r}")
-            self.manifest.mark(key, "started")
-            slice_df = df.filter(F.col(group_col).cast("string") == key)
-            metrics = process_fn(key, slice_df) or {}
-            self.manifest.mark(key, "done", **metrics)
-            statuses[key] = "done"
-            processed += 1
-        return statuses
+        groups (for kill/resume tests). Returns key -> final status.
+        `df` stays persisted for the whole loop and is released on
+        return or abort."""
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            if groups is None:
+                groups = [
+                    str(r[0])
+                    for r in df.select(group_col).distinct().orderBy(group_col).collect()
+                ]
+            done = self.manifest.done_keys()
+            statuses: dict[str, str] = {k: "skipped" for k in groups if k in done}
+            processed = 0
+            for key in groups:
+                if key in done:
+                    continue
+                if fail_after is not None and processed >= fail_after:
+                    raise RuntimeError(f"injected failure before group {key!r}")
+                self.manifest.mark(key, "started")
+                slice_df = df.filter(F.col(group_col).cast("string") == key)
+                metrics = process_fn(key, slice_df) or {}
+                self.manifest.mark(key, "done", **metrics)
+                statuses[key] = "done"
+                processed += 1
+            return statuses
+        finally:
+            df.unpersist()

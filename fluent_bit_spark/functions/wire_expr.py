@@ -33,12 +33,22 @@ from pyspark.sql import functions as F
 
 
 def _be(col: Column, n: int) -> Column:
-    """`n`-byte big-endian binary of a long already proven (by the
-    caller's CASE dispatch) to fit in `n` bytes; for negatives the
-    caller passes the two's-complement-masked value."""
-    return F.to_binary(
-        F.lpad(F.hex(col.cast("long")), 2 * n, "0"), F.lit("hex")
-    )
+    """`n`-byte big-endian binary of a long that fits in `n` unsigned
+    bytes; for negatives the caller passes the two's-complement-masked
+    value. `lpad` would cut a wider value to its first 2n hex digits,
+    so an out-of-range value (e.g. a pre-1970 or post-2106 `sec`) fails
+    the query, as struct.pack does in the Python packer. At n = 8 every
+    long fits: hex() of a negative long is its two's complement."""
+    v = col.cast("long")
+    out = F.to_binary(F.lpad(F.hex(v), 2 * n, "0"), F.lit("hex"))
+    if n >= 8:
+        return out
+    return F.when(
+        (v < 0) | (v >= 1 << (8 * n)),
+        F.raise_error(
+            F.concat(F.lit(f"value does not fit in {n} unsigned bytes: "), v.cast("string"))
+        ),
+    ).otherwise(out)
 
 
 def _byte(col: Column) -> Column:

@@ -9,8 +9,8 @@ Reference semantics (SURVEY.md §2.4):
 - route mask: the set of sinks a record matches, computed once; a
   record can match many sinks (copy fan-out), zero matches => dropped
   (src/flb_routes_mask.c:18-60). Here: `routes` array<string> column
-  + either per-sink filtered writes (single persist) or
-  `explode(routes)` for per-sink aggregates.
+  + `explode(routes)`, one row per (record, sink), which feeds both
+  the one-job partitioned sink write and the per-sink aggregates.
 - rewrite_tag (plugins/filter_rewrite_tag/rewrite_tag.c:287-334):
   per rule (condition, new-tag template, keep); matching records are
   re-emitted under the new tag — `keep=True` keeps the original too
@@ -126,20 +126,9 @@ def route_mask(
 
 
 def explode_routes(df: DataFrame, out: str = "sink") -> DataFrame:
-    """One row per (record, matched sink) — the aggregate-side view of
-    the copy fan-out."""
+    """One row per (record, matched sink) — the copy fan-out as rows,
+    shared by the sink write and the per-sink aggregates."""
     return df.withColumn(out, F.explode("routes"))
-
-
-def fanout(df: DataFrame, sinks: list[tuple[str, str]]) -> dict[str, DataFrame]:
-    """Per-sink filtered views of an (ideally persisted) routed frame.
-    Callers should `df.persist()` before materializing more than one —
-    the reference's zero-copy chunk sharing across output coroutines
-    (src/flb_engine_dispatch.c:180-194) maps to persist-once,
-    filter-N-times."""
-    return {
-        name: df.filter(F.array_contains("routes", name)) for name, _ in sinks
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -178,8 +167,7 @@ def dlq_split(
     engine silently discards chunks with an empty route mask
     (src/flb_router.c). At 100 TB silent drops are unacceptable; the
     scale idiom is a reasoned dead-letter sink: mark once (one
-    whole-stage-codegen pass), persist, filter twice — same
-    single-materialization shape as `fanout`."""
+    whole-stage-codegen pass), persist, filter twice."""
     marked = dlq_mark(df, checks, out)
     return (
         marked.filter(F.col(out).isNull()).drop(out),

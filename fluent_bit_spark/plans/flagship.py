@@ -21,6 +21,7 @@ from fluent_bit_spark.operators import enrich as E
 from fluent_bit_spark.operators import route as R
 from fluent_bit_spark.operators import aggregate as A
 from fluent_bit_spark.operators.parse import apply_regex_parser
+from fluent_bit_spark.session import local_frame
 from fluent_bit_spark.transcripts import load_transcripts
 
 # ---------------------------------------------------------------------------
@@ -98,35 +99,14 @@ JSON_SCHEMA = T.StructType(
 )
 
 
-# dim frames cached per session: building them is a Python->JVM round
-# trip; repeated pipeline constructions (benchmark loops, per-group
-# resume) should reuse one instance.
-_DIM_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def _cached_dim(spark: SparkSession, name: str, build) -> DataFrame:
-    key = (id(spark), name)
-    if key not in _DIM_CACHE:
-        _DIM_CACHE[key] = build().cache()
-    return _DIM_CACHE[key]
-
-
 def tool_categories_dim(spark: SparkSession) -> DataFrame:
-    return _cached_dim(
-        spark,
-        "tool_categories",
-        lambda: spark.createDataFrame(
-            TOOL_CATEGORIES, ["tool_key", "category", "risk_level"]
-        ),
+    return local_frame(
+        spark, TOOL_CATEGORIES, "tool_key string, category string, risk_level string"
     )
 
 
 def role_map_dim(spark: SparkSession) -> DataFrame:
-    return _cached_dim(
-        spark,
-        "role_map",
-        lambda: spark.createDataFrame(ROLE_MAP, ["raw_role", "norm_role"]),
-    )
+    return local_frame(spark, ROLE_MAP, "raw_role string, norm_role string")
 
 
 # ---------------------------------------------------------------------------

@@ -11,11 +11,13 @@ writers); this module provides:
   (src/flb_pack_gelf.c:408), Elasticsearch logstash-style derived
   index (plugins/out_es/es.c:314-428), Loki label-set derivation
   (plugins/out_loki/loki.c:251-421).
-- fanout_write: the multi-sink writer — persist the routed frame once,
-  then one predicate-filtered write per sink (the reference's
-  zero-copy chunk fan-out across output coroutines,
-  src/flb_engine_dispatch.c:180-194). Aggregate sinks (out_counter /
-  out_flowcounter) ride the same persisted frame.
+- fanout_write: the multi-sink writer — explode the route mask once
+  and write every sink in ONE partitioned job, then move each sink's
+  directory into place (the reference hands one chunk to every
+  matching output from a shared buffer,
+  src/flb_engine_dispatch.c:180-194). Per-sink counts are observed on
+  that write; the aggregate sinks (out_counter / out_flowcounter) are
+  one flowcounter pass plus its roll-up.
 - write modes: parquet/json/csv/text, partitioned by tag (out_file's
   file-per-tag) or any column; idempotent overwrite per partition for
   resume safety.
@@ -26,11 +28,12 @@ from __future__ import annotations
 import datetime as _dt
 import re
 from typing import Optional
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from fluent_bit_spark.operators.aggregate import counter, flowcounter
-from fluent_bit_spark.operators.route import explode_routes, fanout
+from fluent_bit_spark.operators.aggregate import flowcounter
+from fluent_bit_spark.operators.route import explode_routes
+from fluent_bit_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -646,6 +649,52 @@ def write_sink(
         raise ValueError(f"unknown format {fmt!r} (one of {sorted(FORMATS)})")
 
 
+def _write_fanout(
+    per_sink: DataFrame,
+    base_path: str,
+    names: list[str],
+    fmt: str = "parquet",
+    partition_by: list[str] | None = None,
+    leaf: str = "",
+) -> dict[str, int]:
+    """The one fan-out writer. `per_sink` holds one row per (record,
+    sink) with the sink name in column `sink`, for sinks in `names`
+    only. Every sink is written by ONE partitioned job into a staging
+    directory under `base_path`; each `sink=<name>` directory is then
+    renamed to `<base_path>/<name><leaf>` through the Hadoop FileSystem
+    API, replacing any older copy, so a redone group or replayed epoch
+    overwrites its output idempotently. A sink with no rows gets one
+    schema-bearing empty file, so it stays readable. Returns the rows
+    per sink, observed on the write itself."""
+    spark = per_sink.sparkSession
+    obs = Observation()
+    observed = per_sink.observe(
+        obs,
+        *[F.count_if(F.col("sink") == n).alias(f"n{i}") for i, n in enumerate(names)],
+    )
+    staging = f"{base_path}/_fanout_staging"
+    write_sink(observed, staging, fmt=fmt, partition_by=["sink", *(partition_by or [])])
+    seen = obs.get
+    got = {n: int(seen[f"n{i}"]) for i, n in enumerate(names)}
+
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    fs = Path(staging).getFileSystem(spark._jsc.hadoopConfiguration())
+    escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    for name in names:
+        dst = Path(f"{base_path}/{name}{leaf}")
+        fs.delete(dst, True)
+        if got[name]:
+            fs.mkdirs(dst.getParent())
+            if not fs.rename(Path(staging, f"sink={escape(name)}"), dst):
+                raise OSError(f"cannot move sink {name!r} into {dst.toString()}")
+            fs.create(Path(dst, "_SUCCESS"), True).close()
+        else:
+            write_sink(per_sink.limit(0).drop("sink"), dst.toString(), fmt=fmt)
+    fs.delete(Path(staging), True)
+    return got
+
+
 def fanout_write(
     routed: DataFrame,
     sinks: list[tuple[str, str]],
@@ -654,37 +703,38 @@ def fanout_write(
     partition_by: list[str] | None = None,
     with_aggregates: bool = True,
 ) -> dict[str, dict]:
-    """Write each sink's routed slice under base_path/<sink>, computing
-    the shared frame ONCE (persist) — plus the counter/flowcounter
-    aggregate tables the reference's aggregate sinks would emit.
-    Returns per-sink row counts (the out_counter surface)."""
-    routed = routed.persist()
+    """Write each configured sink's routed rows under base_path/<sink>
+    (without the `routes` column) in one job, plus the counter and
+    flowcounter tables the reference's aggregate sinks would emit, under
+    base_path/agg_counter and base_path/agg_flowcounter. Returns
+    per-sink row counts (the out_counter surface), every configured
+    sink included; route names outside `sinks` are neither written nor
+    counted.
+
+    `routes` is exploded once into one row per (record, sink) and
+    persisted for the aggregates. Counts come from an observation on
+    the sink write, and counter is flowcounter rolled up over tag and
+    window, so it is written from those counts without another pass."""
+    names = list(dict.fromkeys(name for name, _glob in sinks))
+    per_sink = explode_routes(routed).filter(F.col("sink").isin(names)).drop("routes")
+    if not with_aggregates:
+        got = _write_fanout(per_sink, base_path, names, fmt, partition_by)
+        return {name: {"records": n} for name, n in got.items()}
+    per_sink = per_sink.persist()
     try:
-        results: dict[str, dict] = {}
-        for name, slice_df in fanout(routed, sinks).items():
-            write_sink(
-                slice_df.drop("routes"),
-                f"{base_path}/{name}",
-                fmt=fmt,
-                partition_by=partition_by,
-            )
-        per_sink = explode_routes(routed)
-        counts = counter(per_sink, ["sink"])
-        if with_aggregates:
-            write_sink(counts, f"{base_path}/agg_counter")
-            write_sink(
-                flowcounter(per_sink, ["sink", "tag"]), f"{base_path}/agg_flowcounter"
-            )
-            counts = routed.sparkSession.read.parquet(f"{base_path}/agg_counter")
-        got = {r["sink"]: int(r["records"]) for r in counts.collect()}
-        # every CONFIGURED sink reports, zero-match included (a silent
-        # absence is indistinguishable from a broken Match glob); route
-        # names outside the configuration are not reported
-        for name, _glob in sinks:
-            results[name] = {"records": got.get(name, 0)}
-        return results
+        got = _write_fanout(per_sink, base_path, names, fmt, partition_by)
+        write_sink(flowcounter(per_sink, ["sink", "tag"]), f"{base_path}/agg_flowcounter")
+        write_sink(
+            local_frame(
+                routed.sparkSession,
+                [(name, n) for name, n in got.items() if n],
+                "sink string, records bigint",
+            ),
+            f"{base_path}/agg_counter",
+        )
+        return {name: {"records": n} for name, n in got.items()}
     finally:
-        routed.unpersist()
+        per_sink.unpersist()
 
 
 def retention_by_budget(

@@ -12,9 +12,9 @@ Streaming job:
 - windowed aggregates: event-time windows + watermark (the reference's
   processing-time flush timers, flb_engine.c:92-107, made
   deterministic).
-- fan-out: foreachBatch -> persist once, N filtered writes — identical
-  shape to sinks.fanout_write, with exactly-once via idempotent
-  per-epoch output paths.
+- fan-out: foreachBatch -> the same one-job writer as
+  sinks.fanout_write, with exactly-once via idempotent per-epoch
+  output paths.
 - stateful throttle: applyInPandasWithState token-bucket per key — the
   true streaming analog of filter_throttle's sliding window
   (plugins/filter_throttle/throttle.c:98-105).
@@ -290,21 +290,16 @@ def anomaly_foreach_batch(history_dir: str, out_dir: str,
 
 def foreach_batch_fanout(base_path: str, sinks: list[tuple[str, str]]):
     """Exactly-once fan-out for writeStream.foreachBatch: each epoch
-    writes every sink slice under <base>/<sink>/epoch=<id> (idempotent
-    overwrite on replay)."""
+    writes every sink in one job (the batch fan-out writer) under
+    <base>/<sink>/epoch=<id>, replaced whole on replay."""
+    from fluent_bit_spark.operators.route import explode_routes
+    from fluent_bit_spark.sinks import _write_fanout
+
+    names = list(dict.fromkeys(name for name, _glob in sinks))
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            for name, _ in sinks:
-                (
-                    batch_df.filter(F.array_contains("routes", name))
-                    .drop("routes")
-                    .write.mode("overwrite")
-                    .parquet(f"{base_path}/{name}/epoch={epoch_id}")
-                )
-        finally:
-            batch_df.unpersist()
+        per_sink = explode_routes(batch_df).filter(F.col("sink").isin(names)).drop("routes")
+        _write_fanout(per_sink, base_path, names, leaf=f"/epoch={epoch_id}")
 
     return fn
 

@@ -344,6 +344,37 @@ def test_fanout_write_reports_zero_match_sinks(spark, tmp_path):
     routed = route_mask(df, sinks, drop_unrouted=False)
     res = fanout_write(routed, sinks, str(tmp_path / "out"), with_aggregates=False)
     assert res["s_none"] == {"records": 0} and res["s_all"] == {"records": 1}
+    # a zero-match sink stays readable: 0 rows, the routed schema minus routes
+    back = spark.read.parquet(str(tmp_path / "out" / "s_none"))
+    assert back.count() == 0
+    assert back.schema == routed.drop("routes").schema
+    for name, _glob in sinks:
+        assert (tmp_path / "out" / name / "_SUCCESS").exists()
+
+
+def test_wire_expr_out_of_range_sec_fails_loudly(spark):
+    """An EventTime `sec` outside u32 (pre-1970 here) must fail the
+    query, not emit lpad-truncated bytes; in-range values still encode."""
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    from fluent_bit_spark.functions.wire import pack_turn_event
+    from fluent_bit_spark.functions.wire_expr import pack_turn_event_expr
+
+    def wire(sec: int):
+        df = spark.range(1).select(
+            pack_turn_event_expr(
+                F.lit(sec).cast("long"), F.lit(0).cast("long"), F.lit("c"),
+                F.lit(1).cast("long"), F.lit("user"), F.lit("t"),
+                F.lit(None).cast("string"),
+            ).alias("w")
+        )
+        return bytes(df.collect()[0].w)
+
+    assert wire(2**32 - 1) == pack_turn_event(2**32 - 1, 0, "c", 1, "user", "t", None)
+    for bad in (-1, 2**32):
+        with pytest.raises((PySparkException, Py4JJavaError), match="does not fit in 4"):
+            wire(bad)
 
 
 def test_lsh_probe_bits_widen_candidates(spark, sf_dir):

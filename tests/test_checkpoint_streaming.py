@@ -51,6 +51,24 @@ def test_kill_and_resume_without_reprocess(spark, tmp_path):
     assert all(e["rows"] == 25 for e in done_rows)
 
 
+def test_resumable_job_releases_its_cache(spark, tmp_path):
+    """run() persists its input for the loop and releases it on return
+    and on abort: no persisted RDD outlives the call."""
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    df = spark.range(40).withColumn("grp", (F.col("id") % 4).cast("string"))
+    before = persisted()
+    job = ResumableBatchJob(str(tmp_path / "ckpt"))
+    with pytest.raises(RuntimeError):
+        job.run(df, "grp", lambda key, s: {"rows": s.count()}, fail_after=1)
+    assert persisted() == before
+    statuses = job.run(df, "grp", lambda key, s: {"rows": s.count()})
+    assert statuses == {"0": "skipped", "1": "done", "2": "done", "3": "done"}
+    assert persisted() == before
+
+
 def test_metrics_accumulators(spark):
     m = PipelineMetrics(spark)
     df = spark.createDataFrame([("abc",), ("defgh",), (None,)], ["text"])

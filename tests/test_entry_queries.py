@@ -33,18 +33,6 @@ def _persisted_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
-def _warm_flagship_dims(spark) -> None:
-    """Materialize the flagship's session-scoped dim caches (two tiny
-    lookup frames, deliberately cached for the life of the session —
-    plans/flagship.py _cached_dim) so the pre-query leak snapshot
-    already contains them; otherwise whichever query builds the
-    pipeline FIRST is misflagged as leaking them."""
-    from fluent_bit_spark.plans.flagship import role_map_dim, tool_categories_dim
-
-    tool_categories_dim(spark).count()
-    role_map_dim(spark).count()
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, sf_dir, name):
     if name not in ORACLES:
@@ -56,7 +44,6 @@ def test_query_matches_oracle(spark, sf_dir, name):
     # is shared, and OTHER test modules may hold legitimate caches.
     from fluent_bit_spark.operators.dedup import release_persisted
 
-    _warm_flagship_dims(spark)
     before = _persisted_ids(spark)
     df = QUERIES[name](spark, sf_dir)
     assert_matches_oracle(df, ORACLES[name], sf_dir)

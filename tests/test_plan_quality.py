@@ -751,3 +751,21 @@ def test_minhash_eval_truth_is_postings_equi_join(spark, sf_dir):
     release_persisted()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_delivery_plans_start_no_python_workers(spark, sf_dir):
+    """The flagship pipeline and its lookup dims run JVM-only: a Python
+    RDD scan (createDataFrame(list) plans `Scan ExistingRDD`) or a
+    Python UDF node would spawn Python workers on a fresh JVM's first
+    job."""
+    from fluent_bit_spark.plans.flagship import (
+        role_map_dim,
+        run_pipeline,
+        tool_categories_dim,
+    )
+
+    for df in (run_pipeline(spark, sf_dir), tool_categories_dim(spark), role_map_dim(spark)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython"):
+            assert node not in plan, plan
+    assert "LocalTableScan" in plan

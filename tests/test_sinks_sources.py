@@ -84,6 +84,33 @@ def test_fanout_write(spark, tmp_path):
     assert total == 3  # one row per (sink, tag, window), summing to all routed rows
 
 
+def test_fanout_write_partition_by(spark, tmp_path):
+    import datetime as dt
+
+    rows = [
+        ("errors.user", ["sink_errors", "sink_all"], dt.datetime(2024, 1, 1), "e1"),
+        ("chat.user", ["sink_all"], dt.datetime(2024, 1, 1), "c1"),
+        ("chat.user", ["sink_all"], dt.datetime(2024, 1, 2), "c2"),
+    ]
+    df = spark.createDataFrame(rows, ["tag", "routes", "ts", "text"])
+    sinks = [("sink_errors", "errors.*"), ("sink_all", "*")]
+    out = tmp_path / "out"
+    counts = SK.fanout_write(df, sinks, str(out), partition_by=["tag"], with_aggregates=False)
+    assert counts == {"sink_errors": {"records": 1}, "sink_all": {"records": 3}}
+    tags = lambda sink: sorted(p.name for p in (out / sink).glob("tag=*"))
+    assert tags("sink_all") == ["tag=chat.user", "tag=errors.user"]
+    assert tags("sink_errors") == ["tag=errors.user"]
+    assert list((out / "sink_all" / "tag=chat.user").glob("part-*.parquet"))
+    back = spark.read.parquet(str(out / "sink_all"))
+    assert back.filter(F.col("tag") == "chat.user").count() == 2
+    assert not (out / "_fanout_staging").exists()
+    # a rewrite replaces each sink's directory whole
+    SK.fanout_write(df.filter(F.col("text") == "c2"), sinks, str(out), partition_by=["tag"])
+    assert tags("sink_all") == ["tag=chat.user"]
+    assert spark.read.parquet(str(out / "sink_all")).count() == 1
+    assert spark.read.parquet(str(out / "sink_errors")).count() == 0
+
+
 # --- sources ---------------------------------------------------------------
 
 def test_read_text_lines_and_multiline(spark, tmp_path):

@@ -10,8 +10,25 @@ appends — at-least-once chunk flush becomes exactly-once output).
 The manifest is tiny (one row per partition group per state change);
 it is stored as JSON lines written atomically per entry (rename), so a
 crash mid-write never corrupts it. At 100 TB a partition group is a
-date/hour slice; the loop below is driver-side over groups, each group
-a full distributed job.
+date/hour slice, each group a full distributed job.
+
+Groups are delivered up to four at a time, each on a driver thread of
+its own, the way the reference's engine hands every ready chunk to its
+outputs without waiting for the previous flush
+(src/flb_engine_dispatch.c:180-194) and releases a chunk when its own
+routes finish. A group is a chain of small jobs that the driver plans
+and commits one after another; with several in flight, one group's
+planning and commit overlap another group's tasks, so the executors do
+not sit idle. Each group is still its own commit (`started` when a
+thread picks it up, `done` when its callback returns), so resume
+semantics and the output layout do not depend on the overlap. Four is
+enough to keep the executors fed and bounds what is persisted at once:
+each in-flight group may hold one persisted slice (`fanout_write`
+persists its exploded frame), so at most four sit beside the run's
+input cache. The callback runs on pool threads, so it must be
+thread-safe. After the first failure no new group starts, the groups
+in flight finish and are marked `done` if they succeed, the input
+cache is released, and the first exception is re-raised.
 
 The input frame is persisted (MEMORY_AND_DISK) once per run: group
 discovery materializes it, and each group's slice is a filter over
@@ -32,10 +49,15 @@ import os
 import time
 import uuid
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
+
+# groups delivered at once (see the module docstring for why four)
+MAX_IN_FLIGHT = 4
 
 
 class Manifest:
@@ -70,9 +92,17 @@ class Manifest:
 class ResumableBatchJob:
     """Partition-group loop with resume-without-reprocess.
 
+    Up to `MAX_IN_FLIGHT` pending groups are delivered at a time, each
+    on a driver thread of its own and each still its own commit: a
+    group's `started` entry is written when a thread picks it up and
+    its `done` entry when its `process_fn` returns, so a killed run
+    redoes exactly the groups without `done`.
+
     process_fn(group_key, slice_df) must write idempotently (overwrite
-    its own output location) and may return a metrics dict recorded in
-    the manifest/lineage.
+    its own output location), must be thread-safe (it runs on pool
+    threads, several at once) and may return a metrics dict recorded
+    in the group's `done` entry. Each call inherits the caller's job
+    group, description, job tags and scheduler pool.
     """
 
     def __init__(self, ckpt_dir: str):
@@ -86,31 +116,73 @@ class ResumableBatchJob:
         groups: list[str] | None = None,
         fail_after: int | None = None,
     ) -> dict[str, str]:
-        """Process each group not yet done. `fail_after` aborts after N
-        groups (for kill/resume tests). Returns key -> final status.
-        `df` stays persisted for the whole loop and is released on
-        return or abort."""
+        """Process each group not yet done; returns key -> final status
+        in group order. Groups are found with one distinct job when not
+        given; a NULL group key raises ValueError before any group
+        starts (its rows would match no slice). After the first
+        exception from `process_fn` no new group starts, the groups in
+        flight finish (and are marked done if they succeed), and then
+        the exception is re-raised. `fail_after=N` runs the first N
+        pending groups and then raises (for kill/resume tests). `df`
+        stays persisted until every group has finished."""
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             if groups is None:
-                groups = [
-                    str(r[0])
-                    for r in df.select(group_col).distinct().orderBy(group_col).collect()
-                ]
+                groups = _discover_groups(df, group_col)
             done = self.manifest.done_keys()
-            statuses: dict[str, str] = {k: "skipped" for k in groups if k in done}
-            processed = 0
-            for key in groups:
-                if key in done:
-                    continue
-                if fail_after is not None and processed >= fail_after:
-                    raise RuntimeError(f"injected failure before group {key!r}")
+            pending = [k for k in groups if k not in done]
+            todo = pending if fail_after is None else pending[:fail_after]
+
+            def deliver(key: str) -> None:
                 self.manifest.mark(key, "started")
                 slice_df = df.filter(F.col(group_col).cast("string") == key)
                 metrics = process_fn(key, slice_df) or {}
                 self.manifest.mark(key, "done", **metrics)
-                statuses[key] = "done"
-                processed += 1
-            return statuses
+
+            _run_bounded(df.sparkSession, deliver, todo)
+            if len(todo) < len(pending):
+                raise RuntimeError(f"injected failure before group {pending[len(todo)]!r}")
+            return {k: "skipped" if k in done else "done" for k in groups}
         finally:
             df.unpersist()
+
+
+def _discover_groups(df: DataFrame, group_col: str) -> list[str]:
+    """Distinct group keys in natural order (9 < 10 < 100): sorted on
+    the driver on the raw values, then stringified; a driver sort
+    avoids the sample and sort jobs of a range-partitioned orderBy."""
+    values = [r[0] for r in df.select(group_col).distinct().collect()]
+    if None in values:
+        n = df.filter(F.col(group_col).isNull()).count()
+        raise ValueError(f"{n} rows have a NULL {group_col!r}; no group would deliver them")
+    return [str(v) for v in sorted(values)]
+
+
+def _run_bounded(spark, fn: Callable[[str], None], keys: list[str]) -> None:
+    """Run fn(key) for each key on up to MAX_IN_FLIGHT threads, started
+    in key order. After the first exception no new call starts; the
+    calls in flight finish before it is re-raised."""
+    error: BaseException | None = None
+    queue = iter(keys)
+    with ThreadPoolExecutor(max_workers=MAX_IN_FLIGHT, thread_name_prefix="ckpt-group") as pool:
+        in_flight: set = set()
+
+        def submit_next() -> None:
+            key = next(queue, None)
+            if key is not None:
+                # one capture per call: each thread gets its own copy
+                # of the caller's local properties to change
+                in_flight.add(pool.submit(inheritable_thread_target(spark)(fn), key))
+
+        for _ in range(MAX_IN_FLIGHT):
+            submit_next()
+        while in_flight:
+            ready, _ = wait(in_flight, return_when=FIRST_COMPLETED)
+            for fut in ready:
+                in_flight.remove(fut)
+                if error is None:
+                    error = fut.exception()
+                if error is None:
+                    submit_next()
+    if error is not None:
+        raise error

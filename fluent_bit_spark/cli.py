@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import time
+from collections import Counter
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -83,25 +84,30 @@ def main(argv: list[str] | None = None) -> int:
         shutil.rmtree(f"{args.output}/ckpt", ignore_errors=True)
     job = ResumableBatchJob(f"{args.output}/ckpt")
 
-    sink_totals: dict[str, int] = {}
-
     def process(key: str, slice_df):
+        # runs on a pool thread: no shared state, the counts go to the
+        # group's manifest entry
         counts = fanout_write(
             slice_df.drop("day"),
             SINKS,
             f"{args.output}/data/day={key}",
             with_aggregates=True,
         )
-        rows = 0
-        for sink, c in counts.items():
-            sink_totals[sink] = sink_totals.get(sink, 0) + c["records"]
-            metrics.record_sink(sink, c["records"])
-        rows = counts.get("sink_all", {}).get("records", 0)
-        return {"rows": rows}
+        return {
+            "rows": counts.get("sink_all", {}).get("records", 0),
+            "sink_records": {sink: c["records"] for sink, c in counts.items()},
+        }
 
     statuses = job.run(routed, "day", process)
     elapsed = time.time() - t0
-    rows = sum(e.get("rows", 0) for e in job.manifest.entries() if e["status"] == "done")
+    done_entries = {e["key"]: e for e in job.manifest.entries() if e["status"] == "done"}
+    rows = sum(e.get("rows", 0) for e in done_entries.values())
+    sink_totals: Counter[str] = Counter()
+    for key, status in statuses.items():
+        if status == "done":
+            sink_totals.update(done_entries[key]["sink_records"])
+    for sink, n in sink_totals.items():
+        metrics.record_sink(sink, n)
     print(
         json.dumps(
             {

@@ -157,6 +157,11 @@ def forward_message_bytes(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     turn_idx with sort_array and concatenated with a binary
     aggregate().  Output (tag, conv_id, n_events, message, msg_bytes);
     byte-identical to wire.pack_forward_message (pytest-pinned).
+    Precondition: turn_idx is unique within a (tag, conv_id) group.
+    When it repeats, the sort breaks the tie on the raw event bytes:
+    the message is still the same whatever the input order, but may
+    differ from a caller of wire.pack_forward_message that keeps the
+    duplicates in input order.
     No Python anywhere: collect_list/sort_array/aggregate are all
     JVM-side expressions, and message size is conv-bounded exactly
     like the applyInPandas roundtrip it mirrors."""

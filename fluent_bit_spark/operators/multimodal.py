@@ -303,20 +303,6 @@ def frame_sample(
     )
 
 
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: records the target size in metadata; the pixel
-    operation is the stubbed decode step."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-            F.col("meta.mime").alias("mime"),
-        ),
-    )
-
-
 def byte_histogram_features(
     df: DataFrame,
     id_col: str = "media_id",

@@ -183,12 +183,6 @@ def stable_turn_order_skew_safe(
     )
 
 
-def repartition_conversations(df: DataFrame, n: int, conv: str = "conv_id") -> DataFrame:
-    """Hash-co-locate conversations ahead of per-conv windows/joins so
-    downstream stages reuse one shuffle."""
-    return df.repartition(n, conv)
-
-
 def write_bucketed(
     df: DataFrame, table: str, n_buckets: int, key: str, sort_by: str | None = None
 ) -> None:

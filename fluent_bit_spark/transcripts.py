@@ -133,12 +133,6 @@ def oracle_cte(events: str = "events") -> str:
     return f"WITH transcripts AS ({transcripts_sql('duckdb', events)})\n"
 
 
-def register_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Register the driver's parquet tables as temp views."""
-    for name in TABLES:
-        spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
-
-
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the transcript DataFrame from `events` at `sf_dir`.
 

@@ -5,11 +5,14 @@ from __future__ import annotations
 
 import glob
 import os
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from fluent_bit_spark.checkpoint import Manifest, ResumableBatchJob
+from fluent_bit_spark.checkpoint import MAX_IN_FLIGHT, Manifest, ResumableBatchJob
 from fluent_bit_spark.metrics import PipelineMetrics, summarize_counts
 
 
@@ -36,12 +39,13 @@ def test_kill_and_resume_without_reprocess(spark, tmp_path):
     job = ResumableBatchJob(str(tmp_path / "ckpt"))
     with pytest.raises(RuntimeError):
         job.run(df, "grp", process, fail_after=2)  # killed after 2 groups
-    assert processed_log == ["0", "1"]
+    # groups overlap, so callbacks may finish in any order
+    assert sorted(processed_log) == ["0", "1"]
 
     # resume: groups 0,1 must NOT be reprocessed
     job2 = ResumableBatchJob(str(tmp_path / "ckpt"))
     statuses = job2.run(df, "grp", process)
-    assert processed_log == ["0", "1", "2", "3"]
+    assert sorted(processed_log) == ["0", "1", "2", "3"]
     assert statuses == {"0": "skipped", "1": "skipped", "2": "done", "3": "done"}
 
     total = spark.read.parquet(*glob.glob(str(out_dir / "grp=*"))).count()
@@ -51,22 +55,181 @@ def test_kill_and_resume_without_reprocess(spark, tmp_path):
     assert all(e["rows"] == 25 for e in done_rows)
 
 
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_resumable_job_releases_its_cache(spark, tmp_path):
     """run() persists its input for the loop and releases it on return
     and on abort: no persisted RDD outlives the call."""
-
-    def persisted() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
     df = spark.range(40).withColumn("grp", (F.col("id") % 4).cast("string"))
-    before = persisted()
+    before = _persisted(spark)
     job = ResumableBatchJob(str(tmp_path / "ckpt"))
     with pytest.raises(RuntimeError):
         job.run(df, "grp", lambda key, s: {"rows": s.count()}, fail_after=1)
-    assert persisted() == before
+    assert _persisted(spark) == before
     statuses = job.run(df, "grp", lambda key, s: {"rows": s.count()})
     assert statuses == {"0": "skipped", "1": "done", "2": "done", "3": "done"}
-    assert persisted() == before
+    assert _persisted(spark) == before
+
+
+def test_resumable_job_rejects_null_group_keys(spark, tmp_path):
+    """A NULL key would match no slice filter, so its rows would never
+    be delivered: run() refuses before any group starts."""
+    df = spark.createDataFrame(
+        [(1, "a"), (2, None), (3, "b"), (4, None)], "id int, grp string"
+    )
+    before = _persisted(spark)
+    job = ResumableBatchJob(str(tmp_path / "ckpt"))
+    calls: list[str] = []
+    with pytest.raises(ValueError, match=r"2 rows have a NULL 'grp'"):
+        job.run(df, "grp", lambda key, s: calls.append(key))
+    assert calls == []
+    assert job.manifest.entries() == []
+    assert _persisted(spark) == before
+
+
+def test_resumable_job_natural_group_order(spark, tmp_path):
+    df = spark.createDataFrame([(100,), (9,), (10,), (9,)], "day int")
+    job = ResumableBatchJob(str(tmp_path / "ckpt"))
+    statuses = job.run(df, "day", lambda key, s: {"rows": s.count()})
+    assert list(statuses) == ["9", "10", "100"]
+    rows = {e["key"]: e["rows"] for e in job.manifest.entries() if e["status"] == "done"}
+    assert rows == {"9": 2, "10": 1, "100": 1}
+
+
+def test_resumable_job_groups_overlap(spark, tmp_path):
+    """Two groups must be in flight together: a serial loop would
+    break the barrier (each callback waits for the other)."""
+    df = spark.range(20).withColumn("grp", (F.col("id") % 2).cast("string"))
+    barrier = threading.Barrier(2, timeout=30)
+
+    def process(key, slice_df):
+        barrier.wait()
+        return {"rows": slice_df.count()}
+
+    job = ResumableBatchJob(str(tmp_path / "ckpt"))
+    assert job.run(df, "grp", process) == {"0": "done", "1": "done"}
+
+
+def test_resumable_job_in_flight_bound(spark, tmp_path):
+    """With 6 groups, exactly MAX_IN_FLIGHT (4) run at once: the first
+    callbacks hold until four are in flight, and none sees a fifth."""
+    df = spark.range(60).withColumn("grp", (F.col("id") % 6).cast("string"))
+    cond = threading.Condition()
+    state = {"now": 0, "peak": 0}
+
+    def process(key, slice_df):
+        with cond:
+            state["now"] += 1
+            state["peak"] = max(state["peak"], state["now"])
+            cond.notify_all()
+            cond.wait_for(lambda: state["peak"] >= MAX_IN_FLIGHT, timeout=30)
+        n = slice_df.count()
+        with cond:
+            state["now"] -= 1
+        return {"rows": n}
+
+    job = ResumableBatchJob(str(tmp_path / "ckpt"))
+    statuses = job.run(df, "grp", process)
+    assert statuses == {str(i): "done" for i in range(6)}
+    assert MAX_IN_FLIGHT == 4
+    assert state["peak"] == MAX_IN_FLIGHT
+
+
+def test_resumable_job_manifest_under_thread_churn(spark, tmp_path):
+    """Many short groups with frequent thread switches: every group
+    gets exactly one started and one done entry, with its own metrics."""
+    df = spark.range(24).withColumn("grp", (F.col("id") % 12).cast("string"))
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        job = ResumableBatchJob(str(tmp_path / "ckpt"))
+        statuses = job.run(df, "grp", lambda key, s: {"echo": key})
+    finally:
+        sys.setswitchinterval(old)
+    keys = sorted(str(i) for i in range(12))
+    assert sorted(statuses) == keys and set(statuses.values()) == {"done"}
+    entries = job.manifest.entries()
+    for status in ("started", "done"):
+        assert sorted(e["key"] for e in entries if e["status"] == status) == keys
+    assert all(e["echo"] == e["key"] for e in entries if e["status"] == "done")
+
+
+def test_resumable_job_inherits_caller_job_group(spark, tmp_path):
+    """The caller's job group applies to the jobs every callback runs,
+    although the callbacks run on pool threads."""
+    sc = spark.sparkContext
+    df = spark.range(30).withColumn("grp", (F.col("id") % 3).cast("string"))
+    seen: list[str | None] = []
+
+    def process(key, slice_df):
+        seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return {"rows": slice_df.count()}
+
+    group = "ckpt-caller-group"
+    sc.setJobGroup(group, "resumable job test")
+    try:
+        job = ResumableBatchJob(str(tmp_path / "ckpt"))
+        job.run(df, "grp", process)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == [group] * 3
+    # discovery plus at least one job per group ran under the group
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 4
+
+
+def test_resumable_job_failure_drains_in_flight(spark, tmp_path):
+    """When one group fails, no new group starts, the groups in flight
+    finish and are marked done, the input cache is released, and the
+    error is re-raised; the next run redoes exactly the groups not
+    done."""
+    df = spark.range(60).withColumn("grp", (F.col("id") % 6).cast("string"))
+    cond = threading.Condition()
+    started: set[str] = set()
+    failed = threading.Event()
+
+    def process(key, slice_df):
+        with cond:
+            started.add(key)
+            cond.notify_all()
+        if key == "1":
+            with cond:
+                cond.wait_for(lambda: {"0", "2", "3"} <= started, timeout=30)
+            failed.set()
+            raise OSError("sink unavailable")
+        failed.wait(timeout=30)
+        time.sleep(0.2)  # finish after the failure has been seen
+        return {"rows": slice_df.count()}
+
+    before = _persisted(spark)
+    job = ResumableBatchJob(str(tmp_path / "ckpt"))
+    with pytest.raises(OSError, match="sink unavailable"):
+        job.run(df, "grp", process)
+    assert started == {"0", "1", "2", "3"}
+    entries = job.manifest.entries()
+    assert {e["key"] for e in entries if e["status"] == "started"} == {"0", "1", "2", "3"}
+    assert job.manifest.done_keys() == {"0", "2", "3"}
+    assert _persisted(spark) == before
+
+    redone: list[str] = []
+
+    def process2(key, slice_df):
+        redone.append(key)
+        return {"rows": slice_df.count()}
+
+    statuses = ResumableBatchJob(str(tmp_path / "ckpt")).run(df, "grp", process2)
+    assert sorted(redone) == ["1", "4", "5"]
+    assert statuses == {
+        "0": "skipped",
+        "1": "done",
+        "2": "skipped",
+        "3": "skipped",
+        "4": "done",
+        "5": "done",
+    }
+    assert _persisted(spark) == before
 
 
 def test_metrics_accumulators(spark):

@@ -949,6 +949,34 @@ class TestJvmForwardFraming:
             assert r["msg_bytes"] == len(py)
             assert r["n_events"] == len(evs)
 
+    def test_duplicate_turn_idx_same_bytes_in_any_input_order(self, spark):
+        """A repeated turn_idx breaks ties on the event bytes, so the
+        message does not depend on the order rows arrive in."""
+        import datetime
+
+        from fluent_bit_spark.functions.wire_expr import forward_message_bytes
+        from fluent_bit_spark.transcripts import TRANSCRIPT_SCHEMA
+        from pyspark.sql import functions as F
+
+        ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
+        rows = [
+            ("c1", 0, "user", "hello", None, ts),
+            ("c1", 1, "assistant", "first reply", None, ts),
+            ("c1", 1, "assistant", "second reply", "search", ts),
+            ("c1", 1, "tool", "third", "search", ts),
+            ("c1", 2, "user", "bye", None, ts),
+        ]
+
+        def message(order):
+            df = spark.createDataFrame(order, TRANSCRIPT_SCHEMA).coalesce(1)
+            out = forward_message_bytes(df.withColumn("tag", F.lit("fbs")))
+            (r,) = out.collect()
+            assert r["n_events"] == len(rows)
+            return bytes(r["message"])
+
+        assert message(rows) == message(rows[::-1])
+        assert message(rows) == message(rows[2:] + rows[:2])
+
 
 class TestJvmMqttEncoder:
     """wire_expr.mqtt_publish_expr: byte-identical to

@@ -43,11 +43,13 @@ def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: per-sink flowcounter aggregates at sf0.001."""
-    from fluent_bit_spark.plans.flagship import sink_aggregates
+    """Flagship: per-sink flowcounter aggregates at sf0.001 (the
+    `sink_flowcounter` query)."""
+    from fluent_bit_spark.operators.aggregate import flowcounter
+    from fluent_bit_spark.operators.route import explode_routes
 
     routed = _routed(spark, "/root/testdata/sf0.001")
-    return sink_aggregates(routed)["flowcounter"]
+    return flowcounter(explode_routes(routed), ["sink", "tag"], "1 hour")
 
 
 # ---------------------------------------------------------------------------

@@ -36,7 +36,6 @@ def main(argv: list[str] | None = None) -> int:
         "storage backlog)",
     )
     ap.add_argument("--replicate", type=int, default=1, help="synthetic scale multiplier")
-    ap.add_argument("--backend", choices=["native", "arrow"], default="native")
     ap.add_argument(
         "--config",
         default=None,
@@ -74,7 +73,7 @@ def main(argv: list[str] | None = None) -> int:
     source = metrics.instrument_input(
         synth_transcripts(spark, args.sf_dir, replicate=args.replicate)
     )
-    routed = run_pipeline(spark, args.sf_dir, backend=args.backend, source=source)
+    routed = run_pipeline(spark, args.sf_dir, source=source)
 
     day = F.date_format("ts", "yyyy-MM-dd")
     routed = routed.withColumn("day", day)
@@ -106,8 +105,6 @@ def main(argv: list[str] | None = None) -> int:
     for key, status in statuses.items():
         if status == "done":
             sink_totals.update(done_entries[key]["sink_records"])
-    for sink, n in sink_totals.items():
-        metrics.record_sink(sink, n)
     print(
         json.dumps(
             {

@@ -1,9 +1,10 @@
 """Pipeline metrics + lineage.
 
-Mirrors the reference's metric ids (include/fluent-bit/flb_metrics.h:
-30-38): per input N_RECORDS/N_BYTES, per output OUT_OK_RECORDS/
-OUT_OK_BYTES/errors/retries — re-expressed as Spark accumulators
-(cheap, collected driver-side after actions) plus a lineage table.
+Mirrors the reference's input metric ids (include/fluent-bit/
+flb_metrics.h:30-33, N_RECORDS/N_BYTES) plus a lineage table. Per-sink
+record counts (OUT_OK_RECORDS) are not kept here: `sinks.fanout_write`
+observes them on the write itself and returns them to its caller
+(`cli.py` reports them as `sink_totals`).
 
 Counting happens where the data already flows: `instrument_input`
 attaches a `DataFrame.observe()` aggregate (computed inside the JVM as
@@ -22,11 +23,8 @@ from pyspark.sql import functions as F
 
 class PipelineMetrics:
     def __init__(self, spark: SparkSession):
-        sc = spark.sparkContext
         self.spark = spark
-        self.out_ok: dict[str, object] = {}
         self._observations: list[Observation] = []
-        self._sc = sc
 
     def instrument_input(self, df: DataFrame, bytes_col: str = "text") -> DataFrame:
         """Count records/bytes where the plan already runs: a named
@@ -43,14 +41,6 @@ class PipelineMetrics:
         out = df.observe(obs, *exprs)
         self._observations.append(obs)
         return out
-
-    def sink_accumulator(self, sink: str):
-        if sink not in self.out_ok:
-            self.out_ok[sink] = self._sc.accumulator(0)
-        return self.out_ok[sink]
-
-    def record_sink(self, sink: str, records: int) -> None:
-        self.sink_accumulator(sink).add(int(records))
 
     @staticmethod
     def _observed(obs: Observation) -> dict:
@@ -73,7 +63,6 @@ class PipelineMetrics:
         return {
             "records_in": sum(int(s.get("records", 0)) for s in seen),
             "bytes_in": sum(int(s.get("bytes", 0)) for s in seen),
-            "out_ok": {k: v.value for k, v in self.out_ok.items()},
         }
 
 
@@ -116,11 +105,11 @@ def partition_watermarks(
     portable hash of the conversation key (md5-slice — the same
     engine-agnostic convention the dedup/sketch family uses) and report
     each bucket's high/low watermark, row count, and distinct-key
-    count. This is the table `ResumableBatchJob` checkpoints per
-    partition (checkpoint.py): a killed run replays only buckets whose
-    recorded watermark trails the source's, never reprocessing finished
-    ones — the north rule's "per-partition watermarks with lineage +
-    metrics" as a queryable frame.
+    count — per-partition watermarks with lineage + metrics as a
+    queryable frame. It is a report only: `ResumableBatchJob`
+    (checkpoint.py) does not read it. Resume works per group through
+    the manifest, so a rerun skips every group marked `done` whatever
+    the source's watermark now is.
 
     Scale shape: one groupBy on a 16-way (configurable) bucket id with
     map-side partial min/max/count; distinct keys per bucket are exact

@@ -5,18 +5,22 @@ The reference ships named-group regex parsers (parsers.conf `[PARSER]
 Format regex`, src/flb_parser_regex.c); grok is the macro layer users
 write those patterns in (the Logstash/Elastic pattern syntax, public
 knowledge). This module expands a grok expression into one flat regex
-and hands it to `apply_regex_parser`, so both the JVM
-(`regexp_extract`) and Arrow (`Series.str.extract`) backends run it
-vectorized, unchanged.
+and hands it to `apply_regex_parser`, which runs it as JVM
+`regexp_extract` calls inside whole-stage codegen.
 
 Design constraints:
+- Contract: the expanded pattern is Java regex, like every pattern
+  `apply_regex_parser` runs. A custom base pattern in syntax Java
+  cannot compile (Onigmo-only classes, conditionals) fails the job
+  with Spark's `INVALID_PARAMETER_VALUE.PATTERN` error naming the
+  pattern; it never yields NULL fields.
 - Base patterns contain NO capturing groups (all `(?:...)`) — only
   `%{NAME:field}` introduces a capture. Capture order therefore equals
   field-appearance order, which keeps the stripped positional form
-  (for the JVM backend and for SQL oracles) aligned with field order.
+  (for the JVM and for SQL oracles) aligned with field order.
 - RE2-safe subset (no backrefs, no possessive quantifiers, no
   lookbehind) so the same expanded pattern runs identically on Java
-  regex, Python `re`, pandas, and DuckDB/RE2 — one pattern, every
+  regex, Python `re` and DuckDB/RE2 — one pattern, every
   engine.
 - `%{NAME:field:int}` / `:float` map onto the existing typecast stage
   (integer / float), mirroring grok's two standard conversions.
@@ -170,18 +174,17 @@ def apply_grok(
     df: DataFrame,
     pattern: str,
     source: str = "text",
-    backend: str = "native",
     custom: dict[str, str] | None = None,
     gate: Column | None = None,
     **kwargs,
 ) -> DataFrame:
     """Grok front-end to `apply_regex_parser`: expand the macros, merge
     the `:int`/`:float` casts into any caller-passed `types`, and run
-    the existing vectorized regex stage (JVM or Arrow backend)."""
+    the existing JVM regex stage."""
     from fluent_bit_spark.operators.parse import apply_regex_parser
 
     regex, _fields, casts = grok_compile(pattern, custom)
     types = {**casts, **(kwargs.pop("types", None) or {})}
     return apply_regex_parser(
-        df, regex, source=source, backend=backend, types=types, gate=gate, **kwargs
+        df, regex, source=source, types=types, gate=gate, **kwargs
     )

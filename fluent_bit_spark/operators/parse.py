@@ -5,13 +5,14 @@ Reference behaviors mirrored (see SURVEY.md §2.2):
 
 - regex parser with named capture groups (src/flb_parser_regex.c:115,
   engine src/flb_regex.c:228-240): named groups -> new columns;
-  no-match -> nulls. Two backends:
-    * "native": one `regexp_extract` per group — stays inside
-      whole-stage codegen, zero Python. Preferred when the pattern is
-      Java-regex compatible (the hot path).
-    * "arrow": one pandas-on-Arrow UDF applying a precompiled Python
-      regex via `Series.str.extract` — vectorized, no per-row Python
-      loops; for Onigmo/Ruby-syntax patterns Java can't run.
+  no-match -> nulls. One engine, like the reference: one JVM
+  `regexp_extract` per group, inside whole-stage codegen, no Python.
+  Contract: patterns are Java regex (`java.util.regex`), written with
+  `(?<name>...)` or `(?P<name>...)` groups. Onigmo/Ruby-only syntax
+  (its hex-digit class, `(?(x)...)` conditionals, ...) is out of
+  contract and fails loudly with Spark's
+  `INVALID_PARAMETER_VALUE.PATTERN` error, which names the pattern,
+  instead of yielding NULL fields.
 - json parser (src/flb_parser_json.c): `from_json` with schema.
 - ltsv parser (src/flb_parser_ltsv.c): `str_to_map`.
 - logfmt parser (src/flb_parser_logfmt.c): regexp_extract_all pairs ->
@@ -33,11 +34,9 @@ from __future__ import annotations
 import re
 from collections.abc import Iterable
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 _NAMED_GROUP = re.compile(r"\(\?P?<([A-Za-z_][A-Za-z0-9_]*)>")
 
@@ -47,9 +46,9 @@ def named_groups(pattern: str) -> list[str]:
     return _NAMED_GROUP.findall(pattern)
 
 
-def _java_pattern(pattern: str) -> str:
-    """Strip named groups to plain groups for the JVM backend (Java
-    group names can't contain underscores); extraction is by index."""
+def java_pattern(pattern: str) -> str:
+    """Strip named groups to plain groups (Java group names can't
+    contain underscores); extraction is by index."""
     return _NAMED_GROUP.sub("(", pattern)
 
 
@@ -70,7 +69,7 @@ def regex_extract_native(
     per task. No-match and empty-capture both yield NULL (the reference
     skips unmatched/unnamed groups, src/flb_parser_regex.c:142-156)."""
     groups = list(groups) if groups is not None else named_groups(pattern)
-    jpat = _java_pattern(pattern)
+    jpat = java_pattern(pattern)
     idx = _group_indices(pattern)
     out = {}
     for g in groups:
@@ -80,33 +79,10 @@ def regex_extract_native(
     return out
 
 
-def regex_parse_arrow(pattern: str, groups: list[str] | None = None):
-    """Arrow-vectorized grok: precompiled Python regex applied once per
-    batch with `Series.str.extract` (no per-row Python). Returns a
-    pandas UDF producing a struct of string fields, NULL per group on
-    no-match."""
-    groups = groups if groups is not None else named_groups(pattern)
-    schema = T.StructType([T.StructField(g, T.StringType()) for g in groups])
-    compiled = re.compile(
-        re.sub(r"\(\?<([A-Za-z_][A-Za-z0-9_]*)>", r"(?P<\1>", pattern)
-    )
-
-    @pandas_udf(schema)
-    def extract(s: pd.Series) -> pd.DataFrame:
-        # select named groups by name so plain unnamed '(' groups in the
-        # pattern can't shift columns
-        df = s.str.extract(compiled)[groups]
-        # empty captures -> null, matching the native backend
-        return df.replace({"": None}).where(df.notna(), None)
-
-    return extract
-
-
 def apply_regex_parser(
     df: DataFrame,
     pattern: str,
     source: str = "text",
-    backend: str = "native",
     types: dict[str, str] | None = None,
     time_key: str | None = None,
     time_format: str | None = None,
@@ -129,18 +105,10 @@ def apply_regex_parser(
     a subset never changes matching — so callers that derive some
     fields more cheaply (e.g. flagship's span-group path/code) can
     skip the per-group matcher runs they replace."""
-    groups = list(groups) if groups is not None else named_groups(pattern)
-    if backend == "arrow":
-        udf = regex_parse_arrow(pattern, groups)
-        src = F.when(gate, F.col(source)) if gate is not None else F.col(source)
-        df = df.withColumn("_p", udf(src))
-        cols = {g: F.col(f"_p.{g}") for g in groups}
-        df = df.withColumns({g: c for g, c in cols.items()}).drop("_p")
-    else:
-        extracted = regex_extract_native(F.col(source), pattern, groups)
-        if gate is not None:
-            extracted = {g: F.when(gate, c) for g, c in extracted.items()}
-        df = df.withColumns(extracted)
+    extracted = regex_extract_native(F.col(source), pattern, groups)
+    if gate is not None:
+        extracted = {g: F.when(gate, c) for g, c in extracted.items()}
+    df = df.withColumns(extracted)
     if types:
         df = typecast(df, types)
     if time_key:

@@ -4,10 +4,8 @@ config with five parsers, lookup/modify filters, glob-routed outputs
 and counter/flowcounter aggregate sinks.
 
 Every stage is pure `pyspark.sql.functions` (whole-stage codegen, no
-Python in the hot path); the optional Arrow backend for the apache
-grok exists to cover Onigmo-only patterns and for benchmarking the
-UDF path. Stage-by-stage reference parity is documented in the
-operator modules.
+Python in the hot path). Stage-by-stage reference parity is documented
+in the operator modules.
 """
 
 from __future__ import annotations
@@ -15,12 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-import re as _re
 
 from fluent_bit_spark.operators import enrich as E
 from fluent_bit_spark.operators import route as R
-from fluent_bit_spark.operators import aggregate as A
-from fluent_bit_spark.operators.parse import apply_regex_parser
+from fluent_bit_spark.operators.parse import apply_regex_parser, java_pattern
 from fluent_bit_spark.session import local_frame
 from fluent_bit_spark.transcripts import load_transcripts
 
@@ -71,8 +67,6 @@ APACHE_PC_RE = (
 )
 SYSLOG_RE = r"^<(?P<pri>\d+)>1 (?P<stime>\S+) (?P<shost>\S+) (?P<sapp>\S+) (?P<sproc>\d+) (?P<smsgid>\S+) - (?P<smsg>.*)$"
 
-_SYSLOG_JAVA = _re.sub(r"\(\?P<[^>]+>", "(", SYSLOG_RE)
-
 # SYSLOG_RE with a span group over everything after '<' — the syslog
 # analog of APACHE_PC_RE: one `ps` extract feeds both pri and smsg
 # where the per-group form paid the full matcher twice per syslog
@@ -87,7 +81,7 @@ SYSLOG_PS_RE = (
     r"^<(?P<ps>(?P<pri>\d+)>1 (?P<stime>\S+) (?P<shost>\S+) (?P<sapp>\S+) "
     r"(?P<sproc>\d+) (?P<smsgid>\S+) - (?P<smsg>.*))$"
 )
-_SYSLOG_PS_JAVA = _re.sub(r"\(\?P<[^>]+>", "(", SYSLOG_PS_RE)
+_SYSLOG_PS_JAVA = java_pattern(SYSLOG_PS_RE)
 
 JSON_SCHEMA = T.StructType(
     [
@@ -112,7 +106,7 @@ def role_map_dim(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 # stage 1: parse
 
-def parse_stage(df: DataFrame, backend: str = "native") -> DataFrame:
+def parse_stage(df: DataFrame) -> DataFrame:
     """Multi-grammar parse. Grammar detection is an ordered anchored-
     regex chain (the reference's filter_parser tries its parser list in
     order, first success wins); each grammar then contributes its field
@@ -145,37 +139,24 @@ def parse_stage(df: DataFrame, backend: str = "native") -> DataFrame:
     df = apply_regex_parser(
         df,
         APACHE_PC_RE,
-        backend=backend,
         types={"size": "integer"},
         time_key="atime",
         time_format="dd/MMM/yyyy:HH:mm:ss",
         time_keep=True,
         time_col="event_time",
         gate=F.col("fmt") == "apache",
-        groups=["host", "http_user", "atime", "method", "size"],
+        groups=["host", "http_user", "atime", "method", "size", "pc"],
     )
-    from fluent_bit_spark.operators.parse import _group_indices, _java_pattern
-
-    _pc = F.when(
-        F.col("fmt") == "apache",
-        F.nullif(
-            F.regexp_extract(
-                t, _java_pattern(APACHE_PC_RE), _group_indices(APACHE_PC_RE)["pc"]
-            ),
-            F.lit(""),
-        ),
-    )
-    df = df.withColumn("_pc", _pc)
     df = df.withColumns(
         {
             # \S+ / \d+ admit no spaces, so the span's first and last
             # tokens ARE the group values; a non-matching row has NULL
-            # _pc and NULL fields, exactly like the per-group extracts
+            # pc and NULL fields, exactly like the per-group extracts
             "path": F.when(
-                F.col("_pc").isNotNull(),
-                F.substring_index(F.col("_pc"), " ", 1),
+                F.col("pc").isNotNull(),
+                F.substring_index(F.col("pc"), " ", 1),
             ),
-            "code": F.substring_index(F.col("_pc"), " ", -1).cast("long"),
+            "code": F.substring_index(F.col("pc"), " ", -1).cast("long"),
         }
     )
     # logfmt (unified fields via anchored extracts — JVM path)
@@ -280,7 +261,7 @@ def parse_stage(df: DataFrame, backend: str = "native") -> DataFrame:
     )
     # the parse-once helper columns are internal; CollapseProject will
     # not inline them back (non-cheap exprs referenced multiple times)
-    return df.drop("_j", "_lm", "_pc", "_ps")
+    return df.drop("_j", "_lm", "pc", "_ps")
 
 
 # ---------------------------------------------------------------------------
@@ -342,20 +323,11 @@ def route_stage(df: DataFrame) -> DataFrame:
 # composition
 
 def run_pipeline(
-    spark: SparkSession, sf_dir: str, backend: str = "native", source: DataFrame | None = None
+    spark: SparkSession, sf_dir: str, source: DataFrame | None = None
 ) -> DataFrame:
     """Full routed frame (pre-sink): transcripts + parsed fields +
     enrich + tag + routes."""
     df = source if source is not None else load_transcripts(spark, sf_dir)
-    df = parse_stage(df, backend=backend)
+    df = parse_stage(df)
     df = enrich_stage(df, spark)
     return route_stage(df)
-
-
-def sink_aggregates(routed: DataFrame) -> dict[str, DataFrame]:
-    """Per-sink aggregate outputs (counter + flowcounter)."""
-    per_sink = R.explode_routes(routed)
-    return {
-        "counter": A.counter(per_sink, ["sink"]),
-        "flowcounter": A.flowcounter(per_sink, ["sink", "tag"], window="1 hour"),
-    }

@@ -1838,12 +1838,12 @@ def _grok_parse_sql() -> str:
     capture i == field i; `:int` fields get the BIGINT cast the Spark
     typecast stage applies."""
     from fluent_bit_spark.operators.grok import grok_compile
-    from fluent_bit_spark.operators.parse import _java_pattern
+    from fluent_bit_spark.operators.parse import java_pattern
 
     import __spark_entry__ as entry
 
     regex, fields, casts = grok_compile(entry.GROK_APACHE)
-    pos = _java_pattern(regex).replace("'", "''")
+    pos = java_pattern(regex).replace("'", "''")
     cols = []
     for i, f in enumerate(fields):
         e = f"nullif(regexp_extract(text, '{pos}', {i + 1}), '')"

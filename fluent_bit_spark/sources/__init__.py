@@ -66,19 +66,18 @@ def tail_tag(tag: str, file_col: Column, tag_regex: str | None = None) -> Column
       captures the regex extracts from the path; a missing capture
       renders '_' (the reference's hash-miss fallback)."""
     if tag_regex:
-        from fluent_bit_spark.operators.parse import _group_indices, _java_pattern
+        from fluent_bit_spark.operators.parse import named_groups, regex_extract_native
 
-        idx = _group_indices(tag_regex)
-        jpat = _java_pattern(tag_regex)
+        names = named_groups(tag_regex)
         parts: list[Column] = []
         pos = 0
         for m in re.finditer(r"<([A-Za-z_][A-Za-z0-9_]*)>", tag):
             if m.start() > pos:
                 parts.append(F.lit(tag[pos : m.start()]))
             g = m.group(1)
-            if g in idx:
-                cap = F.regexp_extract(file_col, jpat, idx[g])
-                parts.append(F.when(cap == "", F.lit("_")).otherwise(cap))
+            if g in names:
+                cap = regex_extract_native(file_col, tag_regex, [g])[g]
+                parts.append(F.coalesce(cap, F.lit("_")))
             else:
                 parts.append(F.lit("_"))
             pos = m.end()

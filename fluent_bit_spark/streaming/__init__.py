@@ -46,22 +46,14 @@ def streaming_pipeline(spark: SparkSession, source: DataFrame) -> DataFrame:
 def windowed_flowcounter(
     routed: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
-    """Streaming flowcounter: watermarked event-time windows per
-    (sink, tag)."""
+    """Streaming flowcounter: the batch `flowcounter` per (sink, tag)
+    over a watermarked input, so finished windows are emitted and their
+    state evicted."""
+    from fluent_bit_spark.operators.aggregate import flowcounter
     from fluent_bit_spark.operators.route import explode_routes
 
-    per_sink = explode_routes(routed.withWatermark("ts", watermark))
-    return (
-        per_sink.groupBy("sink", "tag", F.window("ts", window).alias("w"))
-        .agg(F.count("*").alias("counts"), F.sum(F.length("text")).alias("bytes"))
-        .select(
-            "sink",
-            "tag",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "counts",
-            "bytes",
-        )
+    return flowcounter(
+        explode_routes(routed.withWatermark("ts", watermark)), ["sink", "tag"], window
     )
 
 

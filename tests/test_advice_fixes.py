@@ -5,6 +5,7 @@ regex capture groups, and rewrite_tag first-matching-rule semantics."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.functions import scalars as SC
@@ -113,14 +114,13 @@ def test_regex_native_with_unnamed_group(spark):
     assert (row.verb, row.path) == ("GET", "/a")
 
 
-def test_regex_arrow_with_unnamed_group(spark):
-    pat = r"^(\w+) (?<verb>\w+) (?<path>\S+)$"
-    df = spark.createDataFrame([("x1 GET /a",), ("nope",)], ["text"])
-    out = P.apply_regex_parser(df, pat, backend="arrow")
-    rows = out.orderBy("text").collect()
-    got = {r.text: (r.verb, r.path) for r in rows}
-    assert got["x1 GET /a"] == ("GET", "/a")
-    assert got["nope"] == (None, None)
+def test_regex_parser_rejects_pattern_java_cannot_compile(spark):
+    # conditionals are Python/Onigmo syntax, outside the Java-regex
+    # contract: the job must fail naming the pattern, not emit NULLs
+    pat = r"^(?P<x>a)?(?(x)b|c)$"
+    df = spark.createDataFrame([("ab",), ("c",)], ["text"])
+    with pytest.raises(PySparkException, match=r"(?s)INVALID_PARAMETER_VALUE\.PATTERN.*\(\?\(x\)b\|c\)"):
+        P.apply_regex_parser(df, pat).collect()
 
 
 # --- rewrite_tag first-matching-rule (ADVICE #4) ---------------------------

@@ -1082,10 +1082,10 @@ def _q_streaming_multiline(spark, sf_dir):
     over the REAL lines only.  NULL text is pinned to '' on both sides
     (DuckDB string_agg would silently skip NULL rows; the state machine
     renders them as empty lines)."""
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
     from fluent_bit_spark.streaming import multiline_stateful
 
-    t = _persist(_transcripts(spark, sf_dir))
+    t = persist_tracked(_transcripts(spark, sf_dir))
     lines = t.select(
         F.col("conv_id").alias("file"),
         F.col("turn_idx").cast("long").alias("line_no"),
@@ -1117,10 +1117,10 @@ def _q_streaming_dedup(spark, sf_dir):
     the oracle is simply the undupe'd transcript table."""
     from fluent_bit_spark.streaming import dedup_stateful
 
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
     from fluent_bit_spark.transcripts import TRANSCRIPT_SCHEMA
 
-    t = _persist(_transcripts(spark, sf_dir))
+    t = persist_tracked(_transcripts(spark, sf_dir))
     dupes = t.filter(F.col("turn_idx") % 5 == 0)
     out = _drain_stream(
         spark,
@@ -2563,7 +2563,7 @@ def _q_conv_branching(spark, sf_dir):
     variant one hour later — exactly those slots must resolve to the
     regenerated text with n_branches=2, everything else passes through
     with n_branches=1."""
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
     from fluent_bit_spark.operators.transcript_qa import canonical_branch
 
     t = _transcripts(spark, sf_dir).select("conv_id", "turn_idx", "text", "ts")
@@ -2611,7 +2611,7 @@ def _q_reply_latency(spark, sf_dir):
 def _q_mad_outliers(spark, sf_dir):
     """Robust MAD outlier screen over logfmt latencies with injected
     50x spikes (md5 mod 37) — exactly the spikes must flag."""
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
     from fluent_bit_spark.operators.sketch import mad_outliers
     from fluent_bit_spark.plans.flagship import parse_stage
 
@@ -2713,7 +2713,7 @@ def _q_late_data(spark, sf_dir):
     """Watermark lateness accounting under a simulated 0-20 min
     transport delay (md5-derived, cross-engine identical): per
     processing hour, how many rows a 10-minute watermark would drop."""
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
     from fluent_bit_spark.streaming import late_data_report
 
     t = _transcripts(spark, sf_dir)
@@ -2726,7 +2726,7 @@ def _q_cdc_apply(spark, sf_dir):
     slot 0 gets two conflicting updates (seq 2 must win), slot 1 a
     delete, slot 2 an insert under a fresh key — everything else
     passes through."""
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
     from fluent_bit_spark.operators.enrich import cdc_apply
 
     t = _transcripts(spark, sf_dir).select("conv_id", "turn_idx", "text", "role")
@@ -2788,7 +2788,7 @@ def _q_data_diff(spark, sf_dir):
     drops slot 1, and emits fresh rows from slot 4 — the diff must
     report exactly those keys with the right verdicts."""
     from fluent_bit_spark.operators.dataquality import data_diff
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
 
     old = _transcripts(spark, sf_dir).select("conv_id", "turn_idx", "role", "text")
     h = md5_32(
@@ -2893,7 +2893,7 @@ def _q_canary_leak(spark, sf_dir):
     """Secret-sharer canary census: turns in the md5 slot get a
     per-tool-domain canary token appended; the census must recover
     each canary with its exact conversation and occurrence counts."""
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
     from fluent_bit_spark.operators.governance import canary_extract
 
     t = _transcripts(spark, sf_dir)
@@ -2936,7 +2936,7 @@ def _q_gdpr_manifest(spark, sf_dir):
     """Right-to-erasure audit: conversations in md5 slot 3 are
     tombstoned; the manifest reports per-day deleted/kept rows and
     distinct deleted keys (the record an auditor signs)."""
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
     from fluent_bit_spark.operators.governance import tombstone_delete
 
     t = _transcripts(spark, sf_dir)
@@ -2955,7 +2955,7 @@ def _q_kappa_agreement(spark, sf_dir):
     3/4 of md5-slotted turns and rotates the label on the rest —
     kappa must land between the po/pe extremes, integer-exact."""
     from fluent_bit_spark.operators.dataquality import kappa_agreement
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
 
     t = _transcripts(spark, sf_dir)
     a = F.concat(F.lit("q"), (md5_32(F.col("text")) % 3).cast("string"))
@@ -3008,7 +3008,7 @@ def _q_seasonal_anomaly(spark, sf_dir):
     current-window cells must flag high against the first-half
     baseline (cross-multiplied integer verdicts, no division)."""
     from fluent_bit_spark.operators.aggregate import seasonal_anomaly
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     cell = F.concat(
@@ -3350,7 +3350,7 @@ def _q_fk_orphans(spark, sf_dir):
     md5 slot of orders is withheld from the parent side, so exactly
     its lineitems must report as orphans."""
     from fluent_bit_spark.operators.dataquality import fk_integrity
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
@@ -3364,7 +3364,7 @@ def _q_legal_hold(spark, sf_dir):
     """Right-to-erasure with litigation holds: conversations in md5
     slot 3 are tombstoned, the md5%30 sub-slot is ALSO under legal
     hold — held rows must survive and be reported separately."""
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
     from fluent_bit_spark.operators.governance import tombstone_delete
 
     t = _transcripts(spark, sf_dir)
@@ -3452,7 +3452,7 @@ def _q_gelf_chunks(spark, sf_dir):
     turns split into a handful of 12-byte-headed datagrams, the md5
     slot's 60x-repeated payloads blow past 128 chunks and must be
     dropped — datagram counts and wire bytes are closed-form exact."""
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
     from fluent_bit_spark.sinks import gelf_chunk_plan
 
     t = _transcripts(spark, sf_dir)
@@ -3909,7 +3909,7 @@ def _releasing(fn):
 
     @functools.wraps(fn)
     def wrapped(spark, sf_dir):
-        from fluent_bit_spark.operators.dedup import release_persisted
+        from fluent_bit_spark.session import release_persisted
 
         release_persisted()
         return fn(spark, sf_dir)

@@ -99,12 +99,14 @@ def main(argv: list[str] | None = None) -> int:
 
     statuses = job.run(routed, "day", process)
     elapsed = time.time() - t0
+    # both totals cover every group the manifest marks done, this run's
+    # and earlier ones, so a resume reports the whole delivery
     done_entries = {e["key"]: e for e in job.manifest.entries() if e["status"] == "done"}
-    rows = sum(e.get("rows", 0) for e in done_entries.values())
+    rows = 0
     sink_totals: Counter[str] = Counter()
-    for key, status in statuses.items():
-        if status == "done":
-            sink_totals.update(done_entries[key]["sink_records"])
+    for e in done_entries.values():
+        rows += e.get("rows", 0)
+        sink_totals.update(e.get("sink_records", {}))
     print(
         json.dumps(
             {

@@ -21,12 +21,17 @@ record's JSON serialization, not its msgpack serialization — the hash
 function and UUID formatting are byte-exact, the serialization feeding
 it is not.  Test vectors in tests/test_hashing.py were generated by
 compiling and running the reference murmur3.c with seed 42.
+
+`md5_32` is the package's cross-engine 32-bit content hash (Spark and
+DuckDB compute it identically), shared by the sampling, sketch, dedup
+and curation operators and by `metrics.partition_watermarks`.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -158,3 +163,13 @@ def es_generate_id(serialized: pd.Series) -> pd.Series:
     UUID string. Feed it the record's serialized form, e.g.
     ``F.to_json(F.struct(*cols))``."""
     return pd.Series(es_uuid_batch(serialized.fillna("")), index=serialized.index)
+
+
+# 32-bit hash both Spark (JVM md5 + conv) and DuckDB
+# (('0x'||substr(md5(x),1,8))::BIGINT) compute identically — this is
+# what makes the whole MinHash/SimHash family exactly oracle-checkable
+# (the oracle re-derives the same signatures in pure SQL).
+
+def md5_32(s: Column, offset: int = 1) -> Column:
+    """First (or offset-th) 4 bytes of md5(s) as a non-negative long."""
+    return F.conv(F.substring(F.md5(s), offset, 8), 16, 10).cast("long")

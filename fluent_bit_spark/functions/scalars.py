@@ -4,12 +4,10 @@
   (plugins/filter_apm_url_normalizer/filter_url_normalize.c:210):
   strip volatile path segments (numeric ids, uuids, hashes) to a
   normalized route.
-- sha512 ≙ src/flb_sha512.c -> F.sha2(col, 512).
-- uri encode/decode ≙ src/flb_uri.c -> url_encode/url_decode.
-- mysql_quoted decoder ≙ src/flb_parser_decoder.c backend
-  'mysql_quoted': unescape \\' and \\" quoting.
-- gzip ≙ src/flb_gzip.c: engine-level (write with
-  option('compression','gzip')); no per-value function needed.
+- sha512 (src/flb_sha512.c), uri encode/decode (src/flb_uri.c) and
+  gzip (src/flb_gzip.c) need no wrapper: `F.sha2(col, 512)`,
+  `F.url_encode` / `F.url_decode`, and writes with
+  option('compression','gzip').
 """
 
 from __future__ import annotations
@@ -30,24 +28,3 @@ def url_normalize(url: Column) -> Column:
     return c
 
 
-def sha512_hex(c: Column) -> Column:
-    return F.sha2(c, 512)
-
-
-def uri_encode(c: Column) -> Column:
-    return F.url_encode(c)
-
-
-def uri_decode(c: Column) -> Column:
-    return F.url_decode(c)
-
-
-def decode_mysql_quoted(c: Column) -> Column:
-    r"""Unescape MySQL-style quoting: \' \" \\ sequences. The escaped
-    backslash is swapped to a sentinel first so the single-pass
-    left-to-right reference semantics hold (e.g. \\' -> \' not ')."""
-    sentinel = "\ue000"
-    c = F.regexp_replace(c, r"\\\\", sentinel)
-    for esc, rep in ((r"\\'", "'"), (r'\\"', '"')):
-        c = F.regexp_replace(c, esc, rep)
-    return F.regexp_replace(c, sentinel, "\\\\")

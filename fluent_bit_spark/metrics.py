@@ -1,7 +1,7 @@
-"""Pipeline metrics + lineage.
+"""Pipeline metrics.
 
 Mirrors the reference's input metric ids (include/fluent-bit/
-flb_metrics.h:30-33, N_RECORDS/N_BYTES) plus a lineage table. Per-sink
+flb_metrics.h:30-33, N_RECORDS/N_BYTES). Per-sink
 record counts (OUT_OK_RECORDS) are not kept here: `sinks.fanout_write`
 observes them on the write itself and returns them to its caller
 (`cli.py` reports them as `sink_totals`).
@@ -14,8 +14,6 @@ reads the totals from every observation that has completed.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -66,35 +64,6 @@ class PipelineMetrics:
         }
 
 
-def lineage_rows(
-    spark: SparkSession,
-    run_id: str,
-    stage: str,
-    metrics: dict,
-    extra: dict | None = None,
-) -> DataFrame:
-    """One lineage record per (run, stage): who produced what, when,
-    with counts — the queryable audit trail of a pipeline run."""
-    row = {
-        "run_id": run_id,
-        "stage": stage,
-        "at": time.time(),
-        "metrics": {k: str(v) for k, v in metrics.items()},
-        **(extra or {}),
-    }
-    return spark.createDataFrame([row])
-
-
-def summarize_counts(df: DataFrame, keys: list[str], bytes_col: str | None = "text") -> DataFrame:
-    """Declarative metrics: counts (+bytes) per key set computed inside
-    the engine (preferred at scale over accumulators — it is itself a
-    tiny aggregate job Catalyst fuses with the main plan when cached)."""
-    aggs = [F.count("*").alias("records")]
-    if bytes_col and bytes_col in df.columns:
-        aggs.append(F.sum(F.length(bytes_col)).alias("bytes"))
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def partition_watermarks(
     df: DataFrame,
     n_buckets: int = 16,
@@ -115,7 +84,7 @@ def partition_watermarks(
     map-side partial min/max/count; distinct keys per bucket are exact
     but bucket-local, so no global distinct shuffle.
     """
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
 
     bucket = (md5_32(F.col(key_col)) % F.lit(n_buckets)).cast("int")
     return (

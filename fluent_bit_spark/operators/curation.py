@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from fluent_bit_spark.operators.dedup import md5_32
+from fluent_bit_spark.functions.hashing import md5_32
 
 # ---------------------------------------------------------------------------
 # PII redaction
@@ -209,18 +209,6 @@ def gopher_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
 # benchmark contamination (n-gram overlap against an eval suite)
 
 
-def word_shingles(text: Column, n: int) -> Column:
-    """Distinct word n-grams of `text` (space-joined); empty when the
-    text has fewer than n words. Convenience for single-use/test
-    contexts ONLY — the token array is referenced inside the gram
-    lambda, so an inline text expression re-tokenizes per gram; hot
-    paths bind tokens to a column and use text_analysis.word_grams
-    (see contamination_flags)."""
-    from fluent_bit_spark.operators.text_analysis import tokens, word_grams
-
-    return F.array_distinct(word_grams(tokens(text), n))
-
-
 def contamination_flags(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -270,13 +258,13 @@ def dup_ngram_fraction(
     count > 1 are joined (the duplicate set is far smaller than the
     gram universe), and per-doc coverage is a partial-agg groupBy.
     """
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
     from fluent_bit_spark.operators.text_analysis import tokens, word_grams
 
     # persisted: the exploded gram frame feeds BOTH the count shuffle
     # and the join-back side; without the cache the corpus is
-    # tokenized + gram-exploded twice (see dedup._persist convention)
-    grams = _persist(
+    # tokenized + gram-exploded twice (see session.persist_tracked)
+    grams = persist_tracked(
         df.select(
             F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("tk")
         ).select("id", F.explode(word_grams(F.col("tk"), n)).alias("g"))
@@ -534,18 +522,18 @@ def cross_doc_span_dedup(
     At 100 TB, raise `n` (the reference setting in the paper is
     50-token spans) to shrink the dup set and splice points.
     """
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
     from fluent_bit_spark.operators.text_analysis import tokens, word_grams
 
     # tokenization feeds the occurrence build AND the rebuild join —
     # persist so the corpus splits once (the bigram_logprob rationale);
     # occ additionally feeds both sides of its stats self-join
-    toks_f = _persist(
+    toks_f = persist_tracked(
         df.select(F.col(id_col), tokens(F.col(text_col)).alias("tk")).withColumn(
             "nt", F.size("tk")
         )
     )
-    occ = _persist(
+    occ = persist_tracked(
         toks_f.select(F.col(id_col), F.posexplode(word_grams(F.col("tk"), n)))
         .select(F.col(id_col), (F.col("pos") + 1).alias("start"), F.col("col").alias("g"))
     )
@@ -664,7 +652,7 @@ def clean_text(
 TRACKING_PARAM_PREFIXES: tuple[str, ...] = ("utm_",)
 TRACKING_PARAMS: tuple[str, ...] = ("fbclid", "gclid", "msclkid", "yclid")
 
-_URL_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$"
+URL_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$"
 
 
 def canonicalize_url(url: Column) -> Column:
@@ -685,8 +673,8 @@ def canonicalize_url(url: Column) -> Column:
     Scale shape: a pure map stage -- canonicalization itself never
     shuffles; the dedup that follows groups on the canonical string
     (16-byte digest at the shuffle via md5 if keys are long)."""
-    scheme = F.lower(F.nullif(F.regexp_extract(url, _URL_RE, 1), F.lit("")))
-    host = F.lower(F.nullif(F.regexp_extract(url, _URL_RE, 2), F.lit("")))
+    scheme = F.lower(F.nullif(F.regexp_extract(url, URL_RE, 1), F.lit("")))
+    host = F.lower(F.nullif(F.regexp_extract(url, URL_RE, 2), F.lit("")))
     host = F.when(
         (scheme == "https") & host.endswith(":443"),
         F.substring(host, 1, F.length(host) - 4),
@@ -694,10 +682,10 @@ def canonicalize_url(url: Column) -> Column:
         (scheme == "http") & host.endswith(":80"),
         F.substring(host, 1, F.length(host) - 3),
     ).otherwise(host)
-    path = F.regexp_extract(url, _URL_RE, 3)
+    path = F.regexp_extract(url, URL_RE, 3)
     path = F.regexp_replace(path, "/+$", "")
     path = F.when(path == "", F.lit("/")).otherwise(path)
-    query = F.nullif(F.regexp_extract(url, _URL_RE, 4), F.lit(""))
+    query = F.nullif(F.regexp_extract(url, URL_RE, 4), F.lit(""))
     def _is_tracking(p: Column) -> Column:
         # static prefix list -> plain OR chain at plan time (no fold)
         cond = F.lit(False)

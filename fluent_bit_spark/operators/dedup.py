@@ -33,6 +33,11 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fluent_bit_spark.functions.hashing import md5_32
+from fluent_bit_spark.session import persist_tracked
+# perfbench (worker.py conv_skew) imports release_persisted from here
+from fluent_bit_spark.session import release_persisted  # noqa: F401
+
 
 # ---------------------------------------------------------------------------
 # exact
@@ -74,52 +79,10 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.array_distinct(F.when(n >= k, sh).otherwise(F.array(F.concat_ws(" ", toks))))
 
 
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Word k-shingles of an inline text expression — convenience for
-    single-use/test contexts ONLY. Hot paths must bind tokens to a
-    column first (shingle_frame) to avoid per-shingle re-tokenization."""
-    return shingles_from_tokens(tokens_col(text), k)
-
-
 def jaccard_col(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-# ---------------------------------------------------------------------------
-# cross-engine content hash
-
-# 32-bit hash both Spark (JVM md5 + conv) and DuckDB
-# (('0x'||substr(md5(x),1,8))::BIGINT) compute identically — this is
-# what makes the whole MinHash/SimHash family exactly oracle-checkable
-# (the oracle re-derives the same signatures in pure SQL).
-
-def md5_32(s: Column, offset: int = 1) -> Column:
-    """First (or offset-th) 4 bytes of md5(s) as a non-negative long."""
-    return F.conv(F.substring(F.md5(s), offset, 8), 16, 10).cast("long")
-
-
-# frames persisted inside operators (self-joins consume them twice);
-# call release_persisted() after materializing results to free storage
-_PERSISTED: list = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    _PERSISTED.append(df)
-    return df.persist()
-
-
-def release_persisted() -> None:
-    """Unpersist every signature/shingle frame cached by the dedup
-    operators in this session (they are unreachable to callers
-    otherwise; long-lived sessions running many dedup queries should
-    call this between jobs)."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
 
 
 def _spread(df: DataFrame, spread: bool = True) -> DataFrame:
@@ -146,13 +109,13 @@ def _spread(df: DataFrame, spread: bool = True) -> DataFrame:
 # deterministic affine permutation constants (seeded, module-level).
 # 31-bit Mersenne prime: a,b,h < 2^31 keeps a*h+b < 2^62 (no int64
 # overflow under ANSI arithmetic).
-_P = (1 << 31) - 1
+MINHASH_P = (1 << 31) - 1
 
 
-def _perm_consts(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
+def perm_consts(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     rng = np.random.RandomState(seed)
     return [
-        (int(rng.randint(1, _P - 1)), int(rng.randint(0, _P - 1)))
+        (int(rng.randint(1, MINHASH_P - 1)), int(rng.randint(0, MINHASH_P - 1)))
         for _ in range(num_perm)
     ]
 
@@ -185,32 +148,24 @@ def minhash_sig_from_shingles(sh: Column, num_perm: int = 64) -> Column:
     expressions — recomputes the shingle pipeline per permutation
     because Catalyst does not CSE across higher-order lambdas: ~64x
     slower.)"""
-    base = F.transform(sh, lambda s: md5_32(s) % F.lit(_P))
-    consts = _perm_consts(num_perm)
+    base = F.transform(sh, lambda s: md5_32(s) % F.lit(MINHASH_P))
+    consts = perm_consts(num_perm)
     consts_arr = F.array(
         *[
             F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
             for a, b in consts
         ]
     )
-    init = F.array(*([F.lit(_P).cast("long")] * num_perm))
+    init = F.array(*([F.lit(MINHASH_P).cast("long")] * num_perm))
     return F.aggregate(
         base,
         init,
         lambda acc, h: F.zip_with(
             acc,
             consts_arr,
-            lambda m, c: F.least(m, (h * c["a"] + c["b"]) % F.lit(_P)),
+            lambda m, c: F.least(m, (h * c["a"] + c["b"]) % F.lit(MINHASH_P)),
         ),
     )
-
-
-def minhash_signature(text: Column, num_perm: int = 64, shingle_k: int = 3) -> Column:
-    """MinHash signature of an inline text expression — convenience for
-    single-use/test contexts ONLY (inherits shingles_col's per-shingle
-    re-tokenization). Hot paths go shingle_frame ->
-    minhash_sig_from_shingles."""
-    return minhash_sig_from_shingles(shingles_col(text, shingle_k), num_perm)
 
 
 def minhash_candidates(
@@ -248,7 +203,7 @@ def minhash_candidates_from_shingles(
     # persist: the self-join consumes the signatures TWICE (both join
     # sides) and Spark has no common-subplan sharing across them — at
     # any scale you compute signatures once, not per side
-    sig = _persist(
+    sig = persist_tracked(
         shingled.select(
             "id", minhash_sig_from_shingles(F.col("sh"), num_perm).alias("sig")
         )
@@ -298,7 +253,7 @@ def minhash_dedup_pairs(
     # gets its own spread (separate lineage, one exchange each)
     cands = minhash_candidates(df, text_col, id_col, num_perm, bands, spread, shingle_k)
     # persisted: joined twice below (id_a and id_b sides)
-    docs = _persist(shingle_frame(df, text_col, id_col, shingle_k, spread))
+    docs = persist_tracked(shingle_frame(df, text_col, id_col, shingle_k, spread))
     return (
         cands.join(docs.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(docs.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -355,7 +310,7 @@ def minhash_eval(
             "is all blocked pairs and the scorecard is meaningless"
         )
     src = df.select(F.col(id_col).alias("id"), F.col(block_col).alias("blk"))
-    sides = _persist(
+    sides = persist_tracked(
         shingle_frame(df, text_col, id_col, shingle_k, spread).join(src, "id")
     )
     cand = minhash_candidates_from_shingles(
@@ -439,13 +394,6 @@ def minhash_eval(
     )
 
 
-def drop_near_dups(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Keep-first policy: drop ids that appear as the larger member of
-    any duplicate pair."""
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
-
-
 def resolve_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
     """Min-label propagation over the duplicate graph: returns
     (id, cluster_id=min id in its connected component). Bounded
@@ -478,7 +426,7 @@ def resolve_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
 # slices (bytes 0-3 and 4-7 of md5(token)); bit j of the signature is
 # the majority vote of bit j across tokens. Everything is JVM
 # expressions — one fold over the token-hash array updates all 62 vote
-# counters per token (same single-pass pattern as minhash_signature),
+# counters per token (same single-pass pattern as minhash_sig_from_shingles),
 # so there is no Python in the row path at all, and the DuckDB oracle
 # re-derives identical signatures from md5() in pure SQL.
 
@@ -542,13 +490,6 @@ def simhash_from_tokens(toks: Column) -> Column:
     return F.coalesce(F.when(n > 0, packed), F.lit(0).cast("long"))
 
 
-def simhash_col(text_col: str = "text") -> Column:
-    """62-bit SimHash of an inline text column — convenience for
-    single-use/test contexts ONLY (re-tokenizes per bit via the packing
-    lambda). Hot paths bind tokens first (see simhash_near_dup_pairs)."""
-    return simhash_from_tokens(tokens_col(F.col(text_col)))
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -567,7 +508,7 @@ def simhash_near_dup_pairs(
     df = _spread(df, spread)
     # persisted: the banded self-join consumes signatures on both sides.
     # tokens bound to a column first — see simhash_from_tokens.
-    sigs = _persist(
+    sigs = persist_tracked(
         df.select(
             F.col(id_col).alias("id"), tokens_col(F.col(text_col)).alias("tk")
         ).select("id", simhash_from_tokens(F.col("tk")).alias("sh"))
@@ -631,7 +572,7 @@ def jaccard_pairs_blocked(
         )
     # persisted: tokenization feeds the postings self-join and both
     # size lookups
-    docs = _persist(
+    docs = persist_tracked(
         df.select(
             F.col(block_col).alias("blk"),
             F.col(id_col).alias("id"),
@@ -699,7 +640,7 @@ def edit_distance_pairs(
     if max_dist < 0 or block_tokens < 1:
         raise ValueError("max_dist must be >= 0 and block_tokens >= 1")
     # persisted: tokenization feeds both sides of the block self-join
-    docs = _persist(
+    docs = persist_tracked(
         df.select(
             F.array_join(
                 F.slice(tokens_col(F.col(text_col)), 1, block_tokens), " "

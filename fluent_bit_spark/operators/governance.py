@@ -235,7 +235,7 @@ def contribution_clamp(
     """
     from pyspark.sql import Window
 
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
 
     day = F.date_trunc("day", F.col(ts_col))
     cents = F.floor(F.col(value_col) * 100 + 0.5).cast("long")

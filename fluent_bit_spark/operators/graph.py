@@ -49,15 +49,15 @@ def pagerank(
     count. For large `iters`, checkpoint the rank frame every few
     rounds to cut lineage (not needed at 3).
     """
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
-    nodes = _persist(
+    nodes = persist_tracked(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
     )
     outw = edges.groupBy(src).agg(F.sum(weight).alias("_outw"))
-    e = _persist(
+    e = persist_tracked(
         edges.join(outw, src).select(
             F.col(src).alias("_src"),
             F.col(dst).alias("_dst"),

@@ -28,8 +28,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -52,26 +51,6 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 FEATURE_DIM = 16
-
-
-def synth_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table: payload bytes derived from
-    sha256(seed, id) so every run (and every engine) agrees."""
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        digest = hashlib.sha256(f"{seed}:{i}".encode()).digest()
-        payload = (digest * ((256 + i) // len(digest) + 1))[: 256 + i]
-        kind = kinds[i % 3]
-        rows.append(
-            (
-                i,
-                kind,
-                bytearray(payload),
-                (64 + i % 8, 48 + i % 5, 1000 + 7 * i, f"{kind}/fake"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def decode_media(payload: bytes, kind: str, fake: bool = False) -> np.ndarray:
@@ -202,50 +181,6 @@ def media_decode_stats(
     return df.select(id_col, payload_col).mapInPandas(gen, out_schema)
 
 
-def resize_image(
-    df: DataFrame,
-    width: int,
-    height: int,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """REAL nearest-neighbor image resize: decode PNG -> index-map to
-    the target grid (src = floor(dst * src_dim / dst_dim), the standard
-    NN convention) -> re-encode. Non-PNG payloads pass through
-    unchanged with resized=false. Arrow-batched mapInPandas."""
-    from fluent_bit_spark.operators import media_codecs as mc
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("resized", T.BooleanType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads, flags = [], [], []
-            for mid, payload in zip(b[id_col], b[payload_col]):
-                raw = bytes(payload)
-                if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                    px = mc.decode_png(raw)
-                    sh, sw = px.shape[0], px.shape[1]
-                    ys = (np.arange(height, dtype=np.int64) * sh) // height
-                    xs = (np.arange(width, dtype=np.int64) * sw) // width
-                    payloads.append(mc.encode_png(px[ys][:, xs]))
-                    flags.append(True)
-                else:
-                    payloads.append(raw)
-                    flags.append(False)
-                ids.append(int(mid))
-            yield pd.DataFrame(
-                {id_col: ids, "payload": payloads, "resized": flags}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(gen, out_schema)
-
-
 def extract_features(
     df: DataFrame, fake_decode: bool = True, feature_dim: int = FEATURE_DIM
 ) -> DataFrame:
@@ -284,23 +219,6 @@ def extract_features(
             )
 
     return df.mapInPandas(gen, out_schema)
-
-
-def frame_sample(
-    df: DataFrame, every_ms: int = 500, fake_decode: bool = True
-) -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled frame
-    offset (duration_ms / every_ms frames). The frame decode itself is
-    the stubbed step; offsets and batch shape are real."""
-    frames = F.sequence(
-        F.lit(0), F.greatest((F.col("meta.duration_ms") / every_ms).cast("int") - 1, F.lit(0))
-    )
-    return (
-        df.filter(F.col("kind") == "video")
-        .withColumn("frame_idx", F.explode(frames))
-        .withColumn("frame_offset_ms", F.col("frame_idx") * every_ms)
-        .select("media_id", "frame_idx", "frame_offset_ms", "meta")
-    )
 
 
 def byte_histogram_features(

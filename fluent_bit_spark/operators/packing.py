@@ -179,7 +179,7 @@ def cdc_chunks(
     the per-position gram hash reads a `window`-token slice, so the
     row cost is O(n_tokens * window) with no Python in the path.
     """
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
     from fluent_bit_spark.operators.text_analysis import tokens
 
     if window < 1 or divisor < 1:

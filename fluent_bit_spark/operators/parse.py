@@ -22,8 +22,8 @@ Reference behaviors mirrored (see SURVEY.md §2.2):
   drops the raw field.
 - typecast (`Types k:integer ...`, include/fluent-bit/flb_parser.h:69-75):
   `cast`, hex via `conv(x,16,10)`.
-- field decoders decode_field_as=json (src/flb_parser_decoder.c):
-  `from_json` on a sub-field, escaped/escaped_utf8 via regexp_replace.
+- field decoder Decode_Field_As json (src/flb_parser_decoder.c):
+  `decode_field_as_json`, `from_json` on a sub-field.
 
 Per-turn text-equality invariant: parsers only ADD columns; the source
 `text` column is never rewritten.
@@ -262,36 +262,6 @@ def decode_field_as_json(
     """Decode_Field_As json (src/flb_parser_decoder.c:419-443): re-parse
     an embedded JSON string field, replacing (or aliasing) the value."""
     return df.withColumn(out or field, F.from_json(F.col(field), schema))
-
-
-def decode_field_json(
-    df: DataFrame, field: str, schema: T.StructType | str, prefix: str = ""
-) -> DataFrame:
-    """Decode_Field json — MERGE mode (include/fluent-bit/
-    flb_parser_decoder.h:29-36): the decoded keys are appended alongside
-    the record and the RAW field is preserved untouched, unlike
-    Decode_Field_As which replaces the field's value."""
-    df = df.withColumn("_dec", F.from_json(F.col(field), schema))
-    names = [f.name for f in df.schema["_dec"].dataType.fields]
-    return df.withColumns(
-        {prefix + n: F.col(f"_dec.{n}") for n in names}
-    ).drop("_dec")
-
-
-def decode_field_escaped(df: DataFrame, field: str, out: str | None = None) -> DataFrame:
-    r"""Decoder `escaped`/`escaped_utf8`: unescape \n \t \" \\ sequences
-    (src/flb_unescape.c semantics for the common escapes).
-
-    Single-pass left-to-right equivalence: swap the escaped backslash to
-    a sentinel FIRST so 'a\\nb' decodes to 'a\nb' (backslash + n), not
-    'a<newline>b' — sequential replacement without the sentinel would
-    let the trailing half of '\\' pair with the following 'n'."""
-    sentinel = "\ue000"  # private-use char, never present in log text
-    c = F.regexp_replace(F.col(field), r"\\\\", sentinel)
-    for esc, rep in ((r"\\n", "\n"), (r"\\t", "\t"), (r"\\\"", '"')):
-        c = F.regexp_replace(c, esc, rep)
-    c = F.regexp_replace(c, sentinel, "\\\\")
-    return df.withColumn(out or field, c)
 
 
 def template_expr(col: Column) -> Column:

@@ -3,7 +3,7 @@
 A 100 TB curation pipeline needs reproducible sampling that does not
 depend on partitioning, row order, executor count, or Spark's RNG:
 the decision for a row must be a pure function of the row's key. Both
-operators hash with the cross-engine md5 slice (operators/dedup.md5_32)
+operators hash with the cross-engine md5 slice (functions/hashing.md5_32)
 so the DuckDB oracle reproduces the exact same row sets, and a re-run
 over re-partitioned data selects identical rows (resume/idempotence).
 
@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from fluent_bit_spark.operators.dedup import md5_32
+from fluent_bit_spark.functions.hashing import md5_32
 
 # hash domain: md5_32 is uniform on [0, 2^32)
 _DOMAIN = 1 << 32
@@ -285,13 +285,13 @@ def dsir_weights(
     the per-doc pass is map-side + one partial-agg shuffle on the doc
     id. Nothing downstream of the explode ever re-reads the corpus.
     """
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
     from fluent_bit_spark.operators.text_analysis import tokens, word_grams
 
     tk = docs.select(
         F.col(id_col).alias("id"), target.alias("is_t"), tokens(F.col(text_col)).alias("tk")
     )
-    feats = _persist(
+    feats = persist_tracked(
         tk.select("id", "is_t", F.explode(word_grams(F.col("tk"), 2)).alias("g")).select(
             "id", "is_t", (md5_32(F.col("g")) % F.lit(buckets)).alias("b")
         )
@@ -510,7 +510,7 @@ def priority_sample(
     Scale shape: a pure filter — no shuffle, no state; the rate table
     is a literal CASE chain (tiers are enum-sized).
     """
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
 
     rate = F.lit(default_ppm)
     for lvl, ppm in sorted(rates_ppm.items()):

@@ -202,25 +202,6 @@ def _ssq(a: Column, b: Column) -> Column:
     )
 
 
-def _assign_l2(sub: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Nearest centroid by round-6 squared-L2 (ties: code asc) — the
-    Euclidean sibling of assign_to_centroids for PQ codebooks. `sub`
-    carries (id_col, sv); `cents` carries (label, centroid).
-
-    The argmin is MIN over a (d, cluster) struct — lexicographic struct
-    ordering IS the (d asc, cluster asc) tie rule, and an aggregate
-    gets map-side partial combining, so unlike a row_number window
-    there is no per-round sort and the shuffle carries one pre-reduced
-    row per id (the cosine path expresses its desc/asc-mixed ties the
-    same way via the _negkey integer encoding in assign_to_centroids)."""
-    scored = sub.crossJoin(
-        F.broadcast(cents.select(F.col("label").alias("cluster"), "centroid"))
-    ).withColumn("d", F.round(_ssq(F.col("sv"), F.col("centroid")), 6))
-    return scored.groupBy(id_col).agg(
-        F.min(F.struct("d", "cluster")).alias("_best")
-    ).select(id_col, F.col("_best.cluster").alias("cluster"))
-
-
 def _lit_vec(v) -> Column:
     """A collected centroid re-embedded as an array literal — the
     doubles round-trip driver<->JVM bit-exactly, so expressions over
@@ -245,13 +226,13 @@ def _vec_sql(v) -> str:
 
 
 def _assign_l2_expr(sv_sql: str, cent_rows: list) -> Column:
-    """Literal-centroid variant of _assign_l2: the same (d asc, label
-    asc) argmin — array_min over (round-6 ssq, label) structs is the
-    lexicographic MIN _assign_l2 aggregates — but evaluated as a
-    MAP-ONLY expression over driver-collected centroids, so an
-    iteration's assignment costs zero shuffle (the DataFrame variant
-    shuffles one pre-reduced row per id per round, which at 100 TB is
-    a corpus-sized exchange per iteration).
+    """Nearest-centroid assignment: the (d asc, label asc) argmin —
+    array_min over (round-6 ssq, label) structs, i.e. the lexicographic
+    MIN — evaluated as a MAP-ONLY expression over driver-collected
+    centroids, so an iteration's assignment costs zero shuffle (a
+    cross-join-and-aggregate assignment shuffles one pre-reduced row
+    per id per round, which at 100 TB is a corpus-sized exchange per
+    iteration).
 
     `sv_sql` is a SQL fragment for the subvector (a column name or
     e.g. a slice(...) call). The whole argmin is BUILT as one SQL
@@ -406,7 +387,7 @@ def pq_fit(
     per subspace. The seed centroids stay the id < k_codes subvectors
     whether or not they fall in the sample (fixed, oracle-replayable).
     """
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
     if iters < 1:
         raise ValueError(f"iters must be >= 1 (got {iters})")
@@ -415,7 +396,7 @@ def pq_fit(
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     sd = dim // m
-    prepped = _persist(
+    prepped = persist_tracked(
         vectors.select(F.col(id_col), as_double_array(F.col(vec_col)).alias("_v"))
         .filter(
             (F.size("_v") == dim) & ~F.exists("_v", lambda x: x.isNull())
@@ -710,7 +691,7 @@ def dim_trunc_eval(
 # ---------------------------------------------------------------------------
 # random-hyperplane LSH
 
-def _planes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
+def hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
     rng = np.random.RandomState(seed)
     return rng.randn(nbits, dim).tolist()
 
@@ -759,7 +740,7 @@ def lsh_topk(
 
     if dim is None:
         dim = len(vectors.select(vec_col).first()[0])
-    planes = _planes(dim, nbits)
+    planes = hyperplanes(dim, nbits)
     v = vectors.select(
         F.col(id_col),
         as_double_array(F.col(vec_col)).alias("_vv"),
@@ -891,13 +872,13 @@ def embedding_near_dup_pairs(
     exact cosine verification (cosine >= threshold, id_a < id_b)."""
     if dim is None:
         dim = len(vectors.select(vec_col).first()[0])
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
-    planes = _planes(dim, nbits)
+    planes = hyperplanes(dim, nbits)
     # persisted (shared registry with dedup; release via
-    # dedup.release_persisted): the bucket self-join consumes
+    # session.release_persisted): the bucket self-join consumes
     # signatures on both sides
-    v = _persist(
+    v = persist_tracked(
         vectors.select(
             F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("vv")
         ).withColumn("sig", hyperplane_signature(F.col("vv"), planes))
@@ -1129,14 +1110,14 @@ def semantic_dedup(
     pure order on ids — the oracle replays it as an unrolled CTE chain
     plus a within-cluster self-join.
     """
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
     # reuse the fit's prepared double-array frame — re-preparing from
     # `vectors` would scan/cast/persist the embeddings a second time;
     # the cluster label is the fit's map-only literal expression, so
     # labeling costs no corpus self-join
     _, _, prepped, cent_rows = _kmeans_fit(vectors, k, iters, vec_col, id_col)
-    labeled = _persist(
+    labeled = persist_tracked(
         prepped.select(
             F.col(id_col),
             F.col(vec_col).alias("_v"),
@@ -1229,7 +1210,7 @@ def _kmeans_fit(
     label_centroids' #labels x dim key shuffle. (The earlier
     DataFrame loop paid a per-id pre-reduced exchange PLUS a corpus
     self-join per round — both corpus-sized at 100 TB.)"""
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
     if iters < 1:
         raise ValueError(f"iters must be >= 1 (got {iters})")
@@ -1238,7 +1219,7 @@ def _kmeans_fit(
     # per use; the persisted _nv norm is what lets every literal-cosine
     # round pay one dot fold per centroid instead of a full cosine
     arr = as_double_array(F.col(vec_col))
-    prepped = _persist(
+    prepped = persist_tracked(
         vectors.select(
             F.col(id_col),
             arr.alias(vec_col),

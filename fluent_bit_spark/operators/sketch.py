@@ -19,11 +19,11 @@ executor:
   merges with a trivial MAX — the shape used for per-window distinct
   counts over unbounded streams.
 
-All hashing goes through md5 hex slices (`dedup.md5_32`), the repo's
-cross-engine convention: DuckDB re-derives identical positions via
-('0x'||substr(md5(x),1,8))::BIGINT, so every sketch here is EXACTLY
-oracle-checkable — registers, counters, and bloom verdicts (including
-false positives) are deterministic and engine-independent.
+All hashing goes through md5 hex slices (`functions.hashing.md5_32`),
+the repo's cross-engine convention: DuckDB re-derives identical
+positions via ('0x'||substr(md5(x),1,8))::BIGINT, so every sketch here
+is EXACTLY oracle-checkable — registers, counters, and bloom verdicts
+(including false positives) are deterministic and engine-independent.
 
 Reference parity note: Fluent Bit itself has no sketch stage; these
 belong to the "beyond the reference: training-data pipeline" brief
@@ -35,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from fluent_bit_spark.operators.dedup import _persist, md5_32
+from fluent_bit_spark.functions.hashing import md5_32
+from fluent_bit_spark.session import persist_tracked
 
 # ---------------------------------------------------------------------------
 # Bloom filter
@@ -124,11 +125,11 @@ def bloom_contamination(
 
     # both frames feed two consumers each (build+join, agg+semi-join);
     # no common-subplan sharing in Spark, so persist per the dedup.py
-    # convention (caller releases via dedup.release_persisted())
-    bench_sh = _persist(doc_shingles(benchmark, text_col, n))
+    # convention (caller releases via session.release_persisted())
+    bench_sh = persist_tracked(doc_shingles(benchmark, text_col, n))
     words = bloom_build(bench_sh, "shingle", m, k)
 
-    flagged = _persist(
+    flagged = persist_tracked(
         doc_shingles(corpus, text_col, n, id_col=id_col).filter(
             bloom_member(F.col("shingle"), words, m, k)
         )
@@ -155,7 +156,7 @@ def bloom_contamination(
 # ---------------------------------------------------------------------------
 
 
-def _probe_struct(key_col: str, depth: int, width: int) -> Column:
+def cms_probes(key_col: str, depth: int, width: int) -> Column:
     """Exploded (seed, pos) probe rows — one per hash row of the grid."""
     return F.explode(
         F.array(
@@ -186,7 +187,7 @@ def cms_counters(
     grid is depth*width rows regardless of vocabulary size.
     """
     return (
-        counts.select(F.col(n_col).alias("_n"), _probe_struct(key_col, depth, width))
+        counts.select(F.col(n_col).alias("_n"), cms_probes(key_col, depth, width))
         .select("pr.seed", "pr.pos", "_n")
         .groupBy("seed", "pos")
         .agg(F.sum("_n").alias("cnt"))
@@ -209,7 +210,7 @@ def cms_estimate(
     inner join would drop the key, or min over only its occupied cells).
     """
     probed = keys.select(
-        F.col("*"), _probe_struct(key_col, depth, width)
+        F.col("*"), cms_probes(key_col, depth, width)
     ).select(F.col("*"), F.col("pr.seed").alias("seed"), F.col("pr.pos").alias("pos")).drop("pr")
     joined = probed.join(F.broadcast(counters), ["seed", "pos"], "left")
     group_cols = [c for c in keys.columns]
@@ -236,7 +237,7 @@ def cms_topk_compare(
 
     # counts feeds both the grid build and the exact top-k; persist so
     # the full-vocab aggregation runs once (dedup.py convention)
-    counts = _persist(
+    counts = persist_tracked(
         docs.select(F.explode(tokens(F.col(text_col))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("n"))

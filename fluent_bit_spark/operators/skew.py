@@ -138,14 +138,14 @@ def stable_turn_order_skew_safe(
     plain window — use stable_turn_order when max conversation length
     is bounded (the common case); this variant when skew_report shows
     a conversation outweighing a whole task."""
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
     ob = [F.col(conv), F.col(idx), F.col(ts)]
     spark = df.sparkSession
     n = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     # persisted: the range layout feeds the offsets count AND the rank
     # pass; recomputation must see the same partition boundaries
-    srt = _persist(
+    srt = persist_tracked(
         df.repartitionByRange(n, *ob)
         .sortWithinPartitions(*ob)
         .withColumn("_pid", F.spark_partition_id())
@@ -181,19 +181,6 @@ def stable_turn_order_skew_safe(
         .withColumn(out, (F.col("_g") - F.col("_b") + F.lit(1)).cast("int"))
         .drop("_pid", "_g", "_b")
     )
-
-
-def write_bucketed(
-    df: DataFrame, table: str, n_buckets: int, key: str, sort_by: str | None = None
-) -> None:
-    """Persist bucketed by `key` (hive-style bucketing into the session
-    warehouse): later equi-joins/aggregations on `key` between tables
-    bucketed the same way run shuffle-free — the 100 TB co-location
-    strategy for repeatedly-joined conversation tables."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.saveAsTable(table)
 
 
 def skew_report(

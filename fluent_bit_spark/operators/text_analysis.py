@@ -113,18 +113,6 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(normalized_text(text))
 
 
-def rolling_fingerprint(text: Column, base: int = 31, mod: int = (1 << 31) - 1) -> Column:
-    """Polynomial rolling hash over the normalized text's characters
-    (JVM aggregate over the codepoint array) — the classic
-    Rabin-Karp-style document fingerprint."""
-    chars = F.split(normalized_text(text), "")
-    return F.aggregate(
-        F.filter(chars, lambda c: c != ""),
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * F.lit(base) + F.ascii(ch)) % F.lit(mod),
-    )
-
-
 def let_bound(col: Column, fn) -> Column:
     """Let-bind `col` as a higher-order-function lambda variable:
     `get(transform(array(col), x -> fn(x)), 0)`. Everything `fn`
@@ -218,7 +206,7 @@ def word_grams(toks: Column, n: int) -> Column:
     lambdas, so an inline `tokens(text)` here would re-run the whole
     split/trim/filter once per gram — O(tokens^2) per row. The single
     shared gram builder for corpus_ngram_topk and curation's
-    word_shingles."""
+    n-gram operators."""
     sz = F.size(toks)
     # ascending 1-based starts; clamp so short texts never feed
     # sequence() a descending range (ANSI error), then discard via when
@@ -316,11 +304,11 @@ def unigram_logprob(
     pre-filter word counts (no third pass); the vocab (>=min_count
     survivors, i.e. the Zipf head) is broadcast back and the total is a
     broadcast cross join — scoring is map-side + one partial-agg per
-    doc. Call dedup.release_persisted() between jobs in long sessions."""
-    from fluent_bit_spark.operators.dedup import _persist
+    doc. Call session.release_persisted() between jobs in long sessions."""
+    from fluent_bit_spark.session import persist_tracked
 
     tk = df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("tk"))
-    words = _persist(tk.select("id", F.explode("tk").alias("w")))
+    words = persist_tracked(tk.select("id", F.explode("tk").alias("w")))
     wcounts = words.groupBy("w").agg(F.count("*").alias("cnt"))
     vocab = wcounts.filter(F.col("cnt") >= min_count)
     total = wcounts.agg(F.sum("cnt").alias("_total"))
@@ -358,11 +346,11 @@ def bigram_logprob(
     on the bigram key (one shuffle), left-context counts on w1, and V
     rides in as a 1-row broadcast.
     """
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
     # tk feeds both the bigram and the unigram explode — persist so the
     # corpus tokenization runs once (the unigram_logprob rationale)
-    tk = _persist(
+    tk = persist_tracked(
         df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("tk"))
     )
     sz = F.size("tk")
@@ -371,10 +359,10 @@ def bigram_logprob(
         F.slice(F.col("tk"), 2, F.greatest(sz - 1, F.lit(0))),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
-    big = _persist(
+    big = persist_tracked(
         tk.select("id", F.explode(grams).alias("g")).select("id", "g.w1", "g.w2")
     )
-    uni = _persist(
+    uni = persist_tracked(
         tk.select(F.explode("tk").alias("w")).groupBy("w").agg(
             F.count("*").alias("n1")
         )
@@ -578,11 +566,11 @@ def pmi_topk(
     min_count filters pairs AFTER the totals are taken, so
     probabilities stay those of the full pair population.
     """
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
     # toks feeds two plan branches (pair generation + marginal counts);
     # Spark shares no common subplans, so persist (dedup.py convention)
-    toks = _persist(df.select(tokens(F.lower(F.col(text_col))).alias("tk")))
+    toks = persist_tracked(df.select(tokens(F.lower(F.col(text_col))).alias("tk")))
     sz = F.size(F.col("tk"))
     arms = [
         F.zip_with(
@@ -673,14 +661,14 @@ def bm25_topk(
     query terms, df) then shuffle-join instead, identical values,
     with hot-term skew riding AQE's skew-join splitting.
     """
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
     toks = docs.select(
         F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
     )
     # tf feeds three consumers (dfreq, dlen, the query join); persist so
     # the corpus is tokenized and aggregated once (dedup.py convention)
-    tf = _persist(toks.groupBy(id_col, "term").agg(F.count("*").alias("tf")))
+    tf = persist_tracked(toks.groupBy(id_col, "term").agg(F.count("*").alias("tf")))
     dlen = tf.groupBy(id_col).agg(F.sum("tf").alias("len_d"))
     stats = dlen.agg(
         F.count("*").alias("n_docs"), F.sum("len_d").alias("total_len")
@@ -846,7 +834,7 @@ def _bpe_iterate(
     induction path doesn't cache the string payload per iteration."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    from fluent_bit_spark.operators.dedup import _persist
+    from fluent_bit_spark.session import persist_tracked
 
     toks = df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("word"))
     base = toks.groupBy("word").agg(F.count("*").alias("n"))
@@ -855,7 +843,7 @@ def _bpe_iterate(
         lambda i: F.col("word").substr(i, F.lit(1)),
     )
     carry = ["word"] if apply_last else []
-    cur = _persist(base.select(*carry, "n", chars.alias("sym")))
+    cur = persist_tracked(base.select(*carry, "n", chars.alias("sym")))
     tops = []
     for it in range(1, iters + 1):
         sz = F.size(F.col("sym"))
@@ -869,7 +857,7 @@ def _bpe_iterate(
             .groupBy("p.a", "p.b")
             .agg(F.sum("n").alias("cnt"))
         )
-        top = _persist(
+        top = persist_tracked(
             pc.orderBy(F.desc("cnt"), "a", "b")
             .limit(1)
             .select(
@@ -906,7 +894,7 @@ def _bpe_iterate(
                     ),
                 ).otherwise(F.concat(acc, F.array(s))),
             )
-            cur = _persist(
+            cur = persist_tracked(
                 cur.crossJoin(rule).select(*carry, "n", folded.alias("sym"))
             )
     return tops, cur
@@ -1006,7 +994,7 @@ def hard_negatives(
     DuckDB oracle), keeping the broadcast side constant-bounded no
     matter the corpus.  Pass None to disable the cap; mine more
     negatives by raising `every` instead of the cap where possible."""
-    from fluent_bit_spark.operators.dedup import md5_32
+    from fluent_bit_spark.functions.hashing import md5_32
 
     q = docs.filter(F.col(id_col) % every == 0).select(
         F.col(id_col).alias("query_id"),

@@ -8,13 +8,13 @@ the point (it's the oracle).
 
 from __future__ import annotations
 
-from fluent_bit_spark.operators.dedup import _P, _perm_consts
-from fluent_bit_spark.operators.similarity import _planes
+from fluent_bit_spark.operators.dedup import MINHASH_P, perm_consts
+from fluent_bit_spark.operators.similarity import hyperplanes
 from fluent_bit_spark.plans.flagship import ROLE_MAP, SINKS, TOOL_CATEGORIES
 from fluent_bit_spark.transcripts import transcripts_sql
 
 # ---------------------------------------------------------------------------
-# cross-engine signature SQL (mirrors operators/dedup.py md5_32 hashing:
+# cross-engine signature SQL (mirrors functions/hashing.py md5_32 hashing:
 # both engines derive hashes from md5 hex slices, so MinHash / SimHash /
 # hyperplane-LSH outputs are EXACTLY reproducible in DuckDB — the
 # signature constants below are shared algorithm parameters, while the
@@ -33,7 +33,7 @@ DUP_DOCS_SQL = """
 
 
 def _md5_32_sql(expr: str, offset: int = 1) -> str:
-    """DuckDB equivalent of operators.dedup.md5_32."""
+    """DuckDB equivalent of functions.hashing.md5_32."""
     return f"(('0x' || substr(md5({expr}),{offset},8))::BIGINT)"
 
 
@@ -895,11 +895,11 @@ def _minhash_ctes(
     """MinHash-LSH CTE chain (shingles -> md5 base hashes -> affine
     permutation minima -> banded candidate join) through `mh_cand`;
     `mh_sig` keeps the shingle sets for exact verification. Same
-    permutation constants as minhash_signature."""
+    permutation constants as minhash_sig_from_shingles."""
     rows = num_perm // bands
-    consts = _perm_consts(num_perm)
+    consts = perm_consts(num_perm)
     sig_exprs = ", ".join(
-        f"list_min(list_transform(base, h -> (h*{a} + {b}) % {_P}))"
+        f"list_min(list_transform(base, h -> (h*{a} + {b}) % {MINHASH_P}))"
         for a, b in consts
     )
     band_rows = ", ".join(
@@ -921,7 +921,7 @@ mh_sig AS (
     SELECT id, shingles,
            [{sig_exprs}] AS sig
     FROM (SELECT id, shingles,
-                 list_transform(shingles, s -> {_md5_32_sql('s')} % {_P}) AS base
+                 list_transform(shingles, s -> {_md5_32_sql('s')} % {MINHASH_P}) AS base
           FROM mh_sh)),
 mh_band AS (
     SELECT id, b.band, b.key FROM mh_sig,
@@ -1033,7 +1033,7 @@ WHERE bit_count(xor(a.sh, b.sh)) <= {max_hamming}"""
 
 
 def _planes_values_sql(dim: int, nbits: int) -> str:
-    planes = _planes(dim, nbits)
+    planes = hyperplanes(dim, nbits)
     rows = ", ".join(
         f"({i}, [{', '.join(repr(float(x)) for x in p)}]::DOUBLE[])"
         for i, p in enumerate(planes)
@@ -2206,7 +2206,7 @@ FROM tf1 GROUP BY lang"""
     from fluent_bit_spark.operators.curation import (
         TRACKING_PARAM_PREFIXES,
         TRACKING_PARAMS,
-        _URL_RE,
+        URL_RE,
     )
 
     trk = " OR ".join(
@@ -2229,10 +2229,10 @@ FROM tf1 GROUP BY lang"""
     FROM documents)
 , ud1 AS (
     SELECT doc_id,
-           lower(nullif(regexp_extract(url, '{_URL_RE}', 1), '')) AS scheme,
-           lower(nullif(regexp_extract(url, '{_URL_RE}', 2), '')) AS host0,
-           regexp_extract(url, '{_URL_RE}', 3) AS path0,
-           nullif(regexp_extract(url, '{_URL_RE}', 4), '') AS query
+           lower(nullif(regexp_extract(url, '{URL_RE}', 1), '')) AS scheme,
+           lower(nullif(regexp_extract(url, '{URL_RE}', 2), '')) AS host0,
+           regexp_extract(url, '{URL_RE}', 3) AS path0,
+           nullif(regexp_extract(url, '{URL_RE}', 4), '') AS query
     FROM ud0)
 , ud2 AS (
     SELECT doc_id, scheme,

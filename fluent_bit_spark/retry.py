@@ -1,65 +1,15 @@
-"""Sink retry with capped full-jitter backoff.
+"""Sink retry schedule as a queryable frame.
 
 The reference retries failed output flushes with "full jitter"
 exponential backoff, base 5 s capped at 2000 s, per-output retry
 limits (src/flb_scheduler.c:255-301, include/fluent-bit/
 flb_scheduler.h:30-31, flb_task.c:115-139). Spark's task scheduler
-retries *tasks*; this wrapper covers the remaining surface — sink-level
-delivery retries around a whole write — with deterministic (seeded)
-jitter so tests and replays are reproducible. Writes must be
-idempotent (overwrite paths), which checkpoint.py already requires.
+retries *tasks*, and a failed delivery group is redone by
+`checkpoint.ResumableBatchJob` on the next run; this module keeps the
+schedule itself as data (`retry_schedule_frame`).
 """
 
 from __future__ import annotations
-
-import logging
-import random
-import time
-from collections.abc import Callable
-
-log = logging.getLogger(__name__)
-
-
-class RetryError(RuntimeError):
-    def __init__(self, attempts: int, last: Exception):
-        super().__init__(f"sink failed after {attempts} attempts: {last}")
-        self.attempts = attempts
-        self.last = last
-
-
-def full_jitter_delays(
-    retries: int, base: float = 5.0, cap: float = 2000.0, seed: int = 42
-) -> list[float]:
-    """Delay schedule: uniform(0, min(cap, base * 2^n)) per attempt —
-    the reference's full-jitter formula, deterministic via seed."""
-    rng = random.Random(seed)
-    return [rng.uniform(0, min(cap, base * (2**n))) for n in range(retries)]
-
-
-def retry_write(
-    fn: Callable[[], None],
-    retries: int = 3,
-    base: float = 5.0,
-    cap: float = 2000.0,
-    seed: int = 42,
-    sleep: Callable[[float], None] = time.sleep,
-) -> int:
-    """Run an idempotent write, retrying with capped full-jitter
-    backoff. Returns the number of attempts used; raises RetryError
-    when the limit (≙ Retry_Limit) is exhausted."""
-    delays = full_jitter_delays(retries, base, cap, seed)
-    last: Exception | None = None
-    for attempt in range(retries + 1):
-        try:
-            fn()
-            return attempt + 1
-        except Exception as e:  # noqa: BLE001 - sink errors are opaque
-            last = e
-            if attempt < retries:
-                d = delays[attempt]
-                log.warning("sink write failed (attempt %d): %s; backoff %.2fs", attempt + 1, e, d)
-                sleep(d)
-    raise RetryError(retries + 1, last)
 
 
 def retry_schedule_frame(

@@ -6,6 +6,9 @@ Arrow enabled for pandas UDFs). `shuffle_partitions` should be ~cores
 for local runs; on a real cluster leave AQE to coalesce.
 `local_frame` builds small driver-side tables (lookup dims, counter
 rows) as JVM-local relations, so they start no Python worker.
+`persist_tracked` / `release_persisted` are the one persist registry:
+operators that self-join a frame persist it through `persist_tracked`,
+and a long-lived session frees all of them with `release_persisted`.
 """
 
 from __future__ import annotations
@@ -62,3 +65,26 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     )
     df = DataFrame(spark._jsparkSession.createDataFrame(jrows, strings), spark)
     return df.select(*[F.col(name).cast(t) for name, t in fields])
+
+
+# frames persisted inside operators (self-joins consume them twice);
+# call release_persisted() after materializing results to free storage
+_PERSISTED: list = []
+
+
+def persist_tracked(df: DataFrame) -> DataFrame:
+    """`df.persist()`, registered so `release_persisted` can free it."""
+    _PERSISTED.append(df)
+    return df.persist()
+
+
+def release_persisted() -> None:
+    """Unpersist every frame cached through `persist_tracked` in this
+    session (they are unreachable to callers otherwise; long-lived
+    sessions running many operator queries should call this between
+    jobs)."""
+    while _PERSISTED:
+        try:
+            _PERSISTED.pop().unpersist()
+        except Exception:
+            pass

@@ -17,7 +17,9 @@ writers); this module provides:
   matching output from a shared buffer,
   src/flb_engine_dispatch.c:180-194). Per-sink counts are observed on
   that write; the aggregate sinks (out_counter / out_flowcounter) are
-  one flowcounter pass plus its roll-up.
+  one flowcounter pass plus its roll-up. `write_fanout` is that staged
+  write and move, the one fan-out writer: `streaming.
+  foreach_batch_fanout` calls it once per micro-batch.
 - write modes: parquet/json/csv/text, partitioned by tag (out_file's
   file-per-tag) or any column; idempotent overwrite per partition for
   resume safety.
@@ -25,9 +27,8 @@ writers); this module provides:
 
 from __future__ import annotations
 
-import datetime as _dt
 import re
-from typing import Optional
+
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -572,55 +573,6 @@ def influx_line_transform(
     return df.select(F.col("conv_id"), F.col("turn_idx"), line.alias("line"))
 
 
-# Spark 4 bundles the Avro FileFormat classes inside spark-sql but does
-# not service-register the short "avro" name; the fully-qualified class
-# name resolves on a bare distribution, so container files work without
-# the external spark-avro package (only to_avro/from_avro stay gated).
-_AVRO_FORMAT = "org.apache.spark.sql.avro.AvroFileFormat"
-
-
-def write_avro(df: DataFrame, path: str) -> bool:
-    """Avro object-container write (src/flb_avro.c). Tries the short
-    registered name first (full spark-avro deployments), then the
-    bundled FileFormat class. Returns False ONLY when the avro format
-    itself is unavailable; genuine write failures (bad path, schema
-    error, executor loss) re-raise instead of being swallowed."""
-    for fmt in ("avro", _AVRO_FORMAT):
-        try:
-            df.write.mode("overwrite").format(fmt).save(path)
-            return True
-        except Exception as e:
-            msg = str(e)
-            if (
-                "Failed to find data source" in msg
-                or "FAILED_FIND_DATA_SOURCE" in msg
-                or "DATA_SOURCE_NOT_FOUND" in msg
-                or "ClassNotFoundException" in msg
-            ):
-                continue
-            raise
-    return False
-
-
-def read_avro(spark, path: str) -> Optional[DataFrame]:
-    """Read back an Avro object container written by write_avro.
-    Returns None only when no avro datasource is resolvable."""
-    for fmt in ("avro", _AVRO_FORMAT):
-        try:
-            return spark.read.format(fmt).load(path)
-        except Exception as e:
-            msg = str(e)
-            if (
-                "Failed to find data source" in msg
-                or "FAILED_FIND_DATA_SOURCE" in msg
-                or "DATA_SOURCE_NOT_FOUND" in msg
-                or "ClassNotFoundException" in msg
-            ):
-                continue
-            raise
-    return None
-
-
 # ---------------------------------------------------------------------------
 # fan-out writer
 
@@ -649,7 +601,7 @@ def write_sink(
         raise ValueError(f"unknown format {fmt!r} (one of {sorted(FORMATS)})")
 
 
-def _write_fanout(
+def write_fanout(
     per_sink: DataFrame,
     base_path: str,
     names: list[str],
@@ -718,11 +670,11 @@ def fanout_write(
     names = list(dict.fromkeys(name for name, _glob in sinks))
     per_sink = explode_routes(routed).filter(F.col("sink").isin(names)).drop("routes")
     if not with_aggregates:
-        got = _write_fanout(per_sink, base_path, names, fmt, partition_by)
+        got = write_fanout(per_sink, base_path, names, fmt, partition_by)
         return {name: {"records": n} for name, n in got.items()}
     per_sink = per_sink.persist()
     try:
-        got = _write_fanout(per_sink, base_path, names, fmt, partition_by)
+        got = write_fanout(per_sink, base_path, names, fmt, partition_by)
         write_sink(flowcounter(per_sink, ["sink", "tag"]), f"{base_path}/agg_flowcounter")
         write_sink(
             local_frame(

@@ -12,8 +12,9 @@ what remains worth modeling:
 - storage_backlog (plugins/in_storage_backlog): resume-without-
   reprocess — see checkpoint.py.
 - kafka / forward / tcp / http / syslog listeners: streaming sources
-  (`spark.readStream.format('kafka')` etc.); gated stubs here since
-  the sandbox has no kafka jars — the batch tables stand in.
+  (`spark.readStream.format('kafka')` with the spark-sql-kafka
+  connector, etc.); no wrapper here — the batch tables stand in. The
+  Kafka record-batch decode side is `functions.wire.unpack_kafka_batch`.
 - lib (src/flb_lib.c flb_lib_push): `spark.createDataFrame` in tests.
 """
 
@@ -404,25 +405,6 @@ def synthetic_metrics(
         ),
     )
     return df
-
-
-def read_kafka_stream(
-    spark: SparkSession, bootstrap: str, topic: str
-):  # pragma: no cover - needs kafka jars
-    """in_kafka / out_kafka streaming source (gated: kafka connector
-    jars are not in this image)."""
-    try:
-        return (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("subscribe", topic)
-            .load()
-        )
-    except Exception as e:
-        raise NotImplementedError(
-            "kafka connector not available in this runtime; in batch mode "
-            "read the landed table instead"
-        ) from e
 
 
 # statsd line grammar (plugins/in_statsd/statsd.c:142-190

@@ -12,9 +12,9 @@ Streaming job:
 - windowed aggregates: event-time windows + watermark (the reference's
   processing-time flush timers, flb_engine.c:92-107, made
   deterministic).
-- fan-out: foreachBatch -> the same one-job writer as
-  sinks.fanout_write, with exactly-once via idempotent per-epoch
-  output paths.
+- fan-out: foreachBatch -> sinks.write_fanout, the same one-job
+  writer behind sinks.fanout_write, with exactly-once via idempotent
+  per-epoch output paths.
 - stateful throttle: applyInPandasWithState token-bucket per key — the
   true streaming analog of filter_throttle's sliding window
   (plugins/filter_throttle/throttle.c:98-105).
@@ -173,12 +173,12 @@ def windowed_cms(
 
     Output: (window_start, window_end, seed, pos, cnt).
     """
-    from fluent_bit_spark.operators.sketch import _probe_struct
+    from fluent_bit_spark.operators.sketch import cms_probes
 
     src = df.withWatermark(ts_col, watermark) if df.isStreaming else df
     return (
         src.filter(F.col(key_col).isNotNull())
-        .select(F.col(ts_col), _probe_struct(key_col, depth, width))
+        .select(F.col(ts_col), cms_probes(key_col, depth, width))
         .select(F.col(ts_col), F.col("pr.seed").alias("seed"), F.col("pr.pos").alias("pos"))
         .groupBy(F.window(ts_col, window).alias("w"), "seed", "pos")
         .agg(F.count("*").alias("cnt"))
@@ -192,106 +192,18 @@ def windowed_cms(
     )
 
 
-def windowed_rate(
-    df: DataFrame,
-    key: str = "event_type",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-key hourly rate counts (key, hour, n). Streaming frames get
-    a watermark so append-mode emits each hour exactly once when it
-    closes; works on batch frames too (same expressions) for the
-    stream==batch cross-check."""
-    src = df.withWatermark(ts_col, watermark) if df.isStreaming else df
-    return (
-        src.filter(F.col(ts_col).isNotNull())
-        .groupBy(F.col(key), F.window(ts_col, window).alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col(key), F.col("w.start").alias("hour"), F.col("n"))
-    )
-
-
-def anomaly_foreach_batch(history_dir: str, out_dir: str,
-                          key: str = "event_type",
-                          window_hours: int = 6,
-                          z_threshold: float = 3.0):
-    """Streaming rolling-z spike detection: a foreachBatch sink over
-    the closed hourly windows from `windowed_rate` (append mode). A
-    rolling window over PRIOR hours cannot be a pure streaming
-    aggregate (it crosses window boundaries), so the sink keeps its own
-    rolling state: the last `window_hours` OBSERVED hours per key —
-    everything the ROWS-frame z-score can ever look back at. Each
-    micro-batch reads the previous state snapshot, scores the newly
-    closed hours with the exact-integer-sum expressions the batch
-    operator uses (aggregate.rate_anomalies_hourly — so stream and
-    batch verdicts are identical), emits those verdicts, and writes the
-    next state snapshot.
-
-    This is exact, not a time-horizon approximation: hours close in
-    event-time order under the watermark, so a new hour's trailing
-    `window_hours` observed buckets are always inside (previous state
-    UNION this batch's earlier hours). State and per-batch I/O are
-    O(keys x window_hours) — they do NOT grow with stream length.
-
-    Idempotence: state and verdicts go to per-batch subdirectories
-    keyed by batch_id with mode("overwrite") (plain 'b<id>' names —
-    'batch=<id>' would trigger partition-column inference on read);
-    the state READ picks the newest snapshot with id < batch_id, so a
-    replayed micro-batch re-derives from its predecessor instead of
-    double-counting its own failed attempt. Snapshot listing uses the
-    local filesystem (this runtime's storage); an object-store
-    deployment would swap in the Hadoop FileSystem listing.
-    """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        import glob as _glob
-
-        from pyspark.sql import Window
-
-        from fluent_bit_spark.operators.aggregate import rate_anomalies_hourly
-
-        spark = batch_df.sparkSession
-        prior = [
-            int(p.rsplit("/b", 1)[1])
-            for p in _glob.glob(f"{history_dir}/b*")
-            if p.rsplit("/b", 1)[1].isdigit()
-        ]
-        prior = [i for i in prior if i < batch_id]
-        new = batch_df.select(key, "hour", "n")
-        if prior:
-            state = spark.read.parquet(f"{history_dir}/b{max(prior)}")
-            combined = state.unionByName(new)
-        else:
-            combined = new
-        verdicts = rate_anomalies_hourly(combined, key, window_hours, z_threshold)
-        emit = verdicts.join(new.select(key, "hour"), [key, "hour"], "left_semi")
-        emit.write.mode("overwrite").parquet(f"{out_dir}/b{batch_id}")
-        w = Window.partitionBy(key).orderBy(F.col("hour").desc())
-        next_state = (
-            combined.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= window_hours)
-            .drop("_r")
-        )
-        next_state.write.mode("overwrite").parquet(f"{history_dir}/b{batch_id}")
-
-    return _sink
-
-
 def foreach_batch_fanout(base_path: str, sinks: list[tuple[str, str]]):
     """Exactly-once fan-out for writeStream.foreachBatch: each epoch
     writes every sink in one job (the batch fan-out writer) under
     <base>/<sink>/epoch=<id>, replaced whole on replay."""
     from fluent_bit_spark.operators.route import explode_routes
-    from fluent_bit_spark.sinks import _write_fanout
+    from fluent_bit_spark.sinks import write_fanout
 
     names = list(dict.fromkeys(name for name, _glob in sinks))
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         per_sink = explode_routes(batch_df).filter(F.col("sink").isin(names)).drop("routes")
-        _write_fanout(per_sink, base_path, names, leaf=f"/epoch={epoch_id}")
+        write_fanout(per_sink, base_path, names, leaf=f"/epoch={epoch_id}")
 
     return fn
 

@@ -128,11 +128,6 @@ def transcripts_sql(dialect: str, events: str = "events") -> str:
     return sql.replace("<LB>", "{").replace("<RB>", "}")
 
 
-def oracle_cte(events: str = "events") -> str:
-    """`WITH transcripts AS (...)` prefix for DuckDB oracle queries."""
-    return f"WITH transcripts AS ({transcripts_sql('duckdb', events)})\n"
-
-
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the transcript DataFrame from `events` at `sf_dir`.
 

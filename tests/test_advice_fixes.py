@@ -8,7 +8,6 @@ import pytest
 from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
-from fluent_bit_spark.functions import scalars as SC
 from fluent_bit_spark.operators import filters as FL
 from fluent_bit_spark.operators import parse as P
 from fluent_bit_spark.operators.route import RewriteRule, rewrite_tag
@@ -80,29 +79,6 @@ def test_a_key_matches_no_columns(records):
     assert all(r.mark is None for r in out.collect())
 
 
-# --- single-pass unescape (ADVICE #2) --------------------------------------
-
-def test_decode_field_escaped_backslash_then_n(spark):
-    # chars: a \ \ n b  -> single-pass left-to-right: a \ n b (literal)
-    df = spark.createDataFrame([("a\\\\nb",), ("x\\ny",), ("q\\\\\\tz",)], ["f"])
-    from fluent_bit_spark.operators.parse import decode_field_escaped
-
-    got = [r.f for r in decode_field_escaped(df, "f").collect()]
-    assert got[0] == "a\\nb"  # \\ -> \, then literal n
-    assert got[1] == "x\ny"  # \n -> newline
-    assert got[2] == "q\\\tz"  # \\ -> \, then \t -> tab
-
-
-def test_decode_mysql_quoted_single_pass(spark):
-    df = spark.createDataFrame([("a\\\\'b",), ("it\\'s",)], ["q"])
-    got = [
-        r.d
-        for r in df.select(SC.decode_mysql_quoted(F.col("q")).alias("d")).collect()
-    ]
-    assert got[0] == "a\\'b"  # \\ -> \, then literal '
-    assert got[1] == "it's"  # \' -> '
-
-
 # --- unnamed capture groups (ADVICE #3) ------------------------------------
 
 def test_regex_native_with_unnamed_group(spark):
@@ -148,30 +124,6 @@ def test_rewrite_tag_nonkeep_then_keep_first_match_wins(spark):
     ]
     got = sorted((r.id, r.tag) for r in rewrite_tag(df, rules).collect())
     assert got == [("r1", "rewritten")]
-
-
-# --- Decode_Field merge mode (parser-decoder parity) ------------------------
-
-def test_decode_field_json_merge_keeps_raw(spark):
-    from fluent_bit_spark.operators.parse import decode_field_as_json, decode_field_json
-
-    df = spark.createDataFrame([('{"a": 1, "b": "x"}',), ("nope",)], ["log"])
-    merged = decode_field_json(df, "log", "a BIGINT, b STRING")
-    rows = {r.log: (r.a, r.b) for r in merged.collect()}
-    assert set(merged.columns) == {"log", "a", "b"}  # raw field preserved
-    assert rows['{"a": 1, "b": "x"}'] == (1, "x")
-    assert rows["nope"] == (None, None)
-    # contrast: As-mode replaces the field value
-    replaced = decode_field_as_json(df, "log", "a BIGINT, b STRING")
-    assert dict(replaced.dtypes)["log"].startswith("struct")
-
-
-def test_decode_field_json_merge_prefix(spark):
-    from fluent_bit_spark.operators.parse import decode_field_json
-
-    df = spark.createDataFrame([('{"a": 7}',)], ["log"])
-    out = decode_field_json(df, "log", "a BIGINT", prefix="dec_")
-    assert out.collect()[0].dec_a == 7 and "log" in out.columns
 
 
 # --- round-2 code-review regressions ----------------------------------------
@@ -222,15 +174,16 @@ def test_dedup_spread_preserves_many_file_partitioning(spark, tmp_path):
 
 
 def test_release_persisted_unpersists(spark):
+    from fluent_bit_spark import session as S
     from fluent_bit_spark.operators import dedup as D
 
     docs = spark.createDataFrame(
         [(i, f"tok{i} a b c d") for i in range(10)], ["doc_id", "text"]
     )
     D.simhash_near_dup_pairs(docs, max_hamming=3).collect()
-    assert D._PERSISTED
-    D.release_persisted()
-    assert not D._PERSISTED
+    assert S._PERSISTED
+    S.release_persisted()
+    assert not S._PERSISTED
 
 
 def test_config_sink_without_ts_is_config_error(spark):

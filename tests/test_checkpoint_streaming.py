@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.checkpoint import MAX_IN_FLIGHT, Manifest, ResumableBatchJob
-from fluent_bit_spark.metrics import PipelineMetrics, summarize_counts
+from fluent_bit_spark.metrics import PipelineMetrics
 
 
 def test_manifest_roundtrip(tmp_path):
@@ -241,12 +241,6 @@ def test_metrics_accumulators(spark):
     assert snap["records_in"] == 3 and snap["bytes_in"] == 8
 
 
-def test_summarize_counts(spark):
-    df = spark.createDataFrame([("a", "xy"), ("a", "z"), ("b", "w")], ["k", "text"])
-    got = {r.k: (r.records, r.bytes) for r in summarize_counts(df, ["k"]).collect()}
-    assert got == {"a": (2, 3), "b": (1, 1)}
-
-
 # --- streaming -------------------------------------------------------------
 
 @pytest.fixture(scope="module")
@@ -346,35 +340,6 @@ def test_throttle_stateful(spark):
         finally:
             q.stop()
     assert got == ["m0", "m1", "m2", "m4", "m6", "m8"]
-
-
-def test_retry_write_full_jitter():
-    from fluent_bit_spark.retry import RetryError, full_jitter_delays, retry_write
-
-    delays = full_jitter_delays(4, base=5, cap=2000, seed=42)
-    assert len(delays) == 4 and all(0 <= d <= 2000 for d in delays)
-    assert delays == full_jitter_delays(4, base=5, cap=2000, seed=42)  # deterministic
-    assert delays[1] <= 10 and delays[2] <= 20  # capped exponential envelope
-
-    calls = {"n": 0}
-    slept = []
-
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise IOError("transient")
-
-    attempts = retry_write(flaky, retries=4, sleep=slept.append)
-    assert attempts == 3 and len(slept) == 2
-
-    def always_fails():
-        raise IOError("down")
-
-    import pytest as _pytest
-
-    with _pytest.raises(RetryError) as ei:
-        retry_write(always_fails, retries=2, sleep=lambda d: None)
-    assert ei.value.attempts == 3
 
 
 def test_session_stats_streaming_matches_batch(spark, sf_dir, transcript_dir):
@@ -677,63 +642,6 @@ def test_dedup_stateful_drops_duplicates_across_batches(spark, tmp_path):
         q.stop()
     assert got == {("c1", 0), ("c1", 1), ("c2", 0), ("c2", 1)}
     assert n == 4  # the cross-batch duplicate was dropped, not re-emitted
-
-
-def test_rate_anomalies_streaming_matches_batch(spark, sf_dir, tmp_path):
-    """Rolling-z spike verdicts from the streaming foreachBatch path
-    must equal the batch rate_anomalies rows for every hour the stream
-    closed (the last watermark horizon never closes under availableNow
-    — that is the documented streaming contract)."""
-    import glob as globmod
-
-    from pyspark.sql import functions as F
-
-    from fluent_bit_spark.operators.aggregate import rate_anomalies
-    from fluent_bit_spark.streaming import anomaly_foreach_batch, windowed_rate
-
-    # watermarks require TIMESTAMP (LTZ) event time; the session TZ is
-    # UTC so the cast is value-preserving
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp_ltz")
-    )
-    # multiple time-ordered files => multiple micro-batches, watermark
-    # advances between them and closes earlier hours
-    src_dir = str(tmp_path / "events_stream")
-    for i, (lo, hi) in enumerate([(1, 9), (9, 17), (17, 25), (25, 32)]):
-        events.filter(
-            (F.dayofmonth("ts") >= lo) & (F.dayofmonth("ts") < hi)
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src_dir}/f{i}")
-    hist_dir = str(tmp_path / "hist")
-    out_dir = str(tmp_path / "out")
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/f*")
-    )
-    q = (
-        windowed_rate(stream, "event_type", watermark="2 hours")
-        .writeStream.outputMode("append")
-        .foreachBatch(anomaly_foreach_batch(hist_dir, out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    assert globmod.glob(f"{out_dir}/b*"), "stream emitted nothing"
-    got = {
-        (r.event_type, r.hour): (r.n, r.mean_n, r.z, r.spike)
-        for r in spark.read.parquet(f"{out_dir}/b*").collect()
-    }
-    want = {
-        (r.event_type, r.hour): (r.n, r.mean_n, r.z, r.spike)
-        for r in rate_anomalies(events).collect()
-    }
-    assert len(got) > 100
-    for k, v in got.items():
-        assert want[k] == v, k
 
 
 def test_backpressure_stateful_matches_batch_when_never_paused(

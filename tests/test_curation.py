@@ -12,8 +12,8 @@ from fluent_bit_spark.operators.curation import (
     gopher_quality,
     pii_redact,
     quota_sample,
-    word_shingles,
 )
+from fluent_bit_spark.operators.text_analysis import tokens, word_grams
 
 
 def test_pii_redact_all_categories(spark):
@@ -63,7 +63,8 @@ def test_gopher_quality_flags(spark):
 
 def test_word_shingles_short_text_is_empty(spark):
     df = spark.createDataFrame([("a b c",), ("",)], ["text"])
-    out = df.select(word_shingles(F.col("text"), 5).alias("sh")).collect()
+    toks = df.select(tokens(F.col("text")).alias("tk"))
+    out = toks.select(word_grams(F.col("tk"), 5).alias("sh")).collect()
     assert [r["sh"] for r in out] == [[], []]
 
 

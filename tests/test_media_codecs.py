@@ -1,7 +1,7 @@
 """Real media codec tests: PNG (filters 0-4, gray/RGB/RGBA) and
 WAV/PCM (8/16-bit) — pure stdlib+numpy codecs in
 operators/media_codecs.py, plus the Spark-side real-decode operators
-(synth_media_real / media_decode_stats / resize_image) and the
+(synth_media_real / media_decode_stats) and the
 decode_media sniffing upgrade.
 
 Beyond-reference multimodal brief: Fluent Bit never decodes media;
@@ -176,20 +176,3 @@ def test_synth_media_real_decode_stats(spark):
             assert r.n_samples == n and r.sample_sum == want
 
 
-def test_resize_image_real(spark):
-    ids = spark.range(4).select((F.col("id") * 2).alias("media_id"))  # images
-    media = MM.synth_media_real(ids)
-    out = MM.resize_image(media, width=8, height=6)
-    assert all(r.resized for r in out.select("resized").collect())
-    stats = {r.media_id: r for r in MM.media_decode_stats(out).collect()}
-    assert all((r.width, r.height) == (8, 6) for r in stats.values())
-    # nearest-neighbor exactness for one id
-    d = 2
-    w, h = 16 + d % 8, 12 + d % 5
-    src = np.array(
-        [[(d * 31 + x * 7 + y * 13) % 256 for x in range(w)] for y in range(h)],
-        dtype=np.uint8,
-    )
-    ys = (np.arange(6) * h) // 6
-    xs = (np.arange(8) * w) // 8
-    assert stats[d].sample_sum == int(src[ys][:, xs].astype(np.int64).sum())

@@ -61,33 +61,6 @@ def test_window_prune_drops_unused_rank(spark, sf_dir):
     assert "Window" not in plan_of(df, "simple")
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    import shutil
-
-    from fluent_bit_spark.operators.skew import write_bucketed
-
-    for t in ("bk_a", "bk_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-
-    a = spark.range(1000).select(
-        F.concat(F.lit("c"), (F.col("id") % 50)).alias("conv_id"), F.col("id").alias("x")
-    )
-    b = spark.range(500).select(
-        F.concat(F.lit("c"), (F.col("id") % 50)).alias("conv_id"), F.col("id").alias("y")
-    )
-    write_bucketed(a, "bk_a", 8, "conv_id")
-    write_bucketed(b, "bk_b", 8, "conv_id")
-    joined = (
-        spark.table("bk_a")
-        .join(spark.table("bk_b").hint("merge"), "conv_id")
-        .groupBy("conv_id")
-        .count()
-    )
-    plan = plan_of(joined, "simple")
-    assert "Exchange hashpartitioning" not in plan, plan
-
-
 def test_embed_near_dup_no_cartesian(spark, sf_dir):
     """The near-dup driver query must stay an equi-join on the
     hyperplane signature — never a cartesian product with a cosine

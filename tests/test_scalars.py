@@ -22,13 +22,3 @@ def test_url_normalize(spark):
     }
 
 
-def test_sha_uri_mysql(spark):
-    df = spark.createDataFrame([(1, "a b", r"it\'s \"ok\"")], ["id", "s", "q"])
-    row = df.select(
-        SC.sha512_hex(F.col("s")).alias("h"),
-        SC.uri_encode(F.col("s")).alias("e"),
-        SC.uri_decode(SC.uri_encode(F.col("s"))).alias("rt"),
-        SC.decode_mysql_quoted(F.col("q")).alias("mq"),
-    ).collect()[0]
-    assert len(row.h) == 128 and row.rt == "a b" and row.e in ("a+b", "a%20b")
-    assert row.mq == 'it\'s "ok"'

@@ -96,3 +96,4 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     assert all(s == "skipped" for s in second["groups"].values())
     assert sorted(second["groups"]) == days
     assert second["rows_done"] == first["rows_done"]
+    assert second["sink_totals"] == first["sink_totals"]

@@ -5,14 +5,15 @@ per-turn text equality invariant."""
 
 from __future__ import annotations
 
-from fluent_bit_spark.transcripts import load_transcripts, oracle_cte
+from fluent_bit_spark.transcripts import load_transcripts, transcripts_sql
 
 from tests.oracle import assert_matches_oracle
 
 
 def test_transcripts_parity(spark, sf_dir):
     df = load_transcripts(spark, sf_dir)
-    assert_matches_oracle(df, oracle_cte() + "SELECT * FROM transcripts", sf_dir)
+    cte = f"WITH transcripts AS ({transcripts_sql('duckdb')})\n"
+    assert_matches_oracle(df, cte + "SELECT * FROM transcripts", sf_dir)
 
 
 def test_transcripts_shape(spark, sf_dir):

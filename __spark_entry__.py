@@ -2035,7 +2035,7 @@ def _q_dpo_pairs(spark, sf_dir):
     turns are the candidate pool (prompt = conv_id), scored by distinct
     token count (integer -> exact cross-engine); chosen/rejected are
     the score extremes with deterministic tie-breaks."""
-    from fluent_bit_spark.operators.dedup import tokens_col
+    from fluent_bit_spark.operators.text_analysis import tokens
     from fluent_bit_spark.operators.transcript_qa import dpo_pairs, norm_role_col
 
     t = _transcripts(spark, sf_dir)
@@ -2043,7 +2043,7 @@ def _q_dpo_pairs(spark, sf_dir):
         "conv_id",
         "turn_idx",
         "text",
-        F.size(F.array_distinct(tokens_col(F.col("text")))).alias("score"),
+        F.size(F.array_distinct(tokens(F.col("text")))).alias("score"),
     )
     return dpo_pairs(
         cands, prompt_col="conv_id", cand_col="turn_idx",
@@ -4377,14 +4377,22 @@ def _q_resume_manifest(spark, sf_dir):
     from fluent_bit_spark.checkpoint import ResumableBatchJob
 
     t = _transcripts(spark, sf_dir)
+    survivors = sorted(r[0] for r in t.select("role").distinct().collect())[:3]
     ckpt = tempfile.mkdtemp(prefix="fbs-resume-manifest-")
     try:
         def fn(key, sdf):
             return {"n_rows": sdf.count()}
 
+        def killed_after_3(key, sdf):
+            # groups run concurrently, so every later key fails, not
+            # only the 4th: a later one may already be in flight
+            if key not in survivors:
+                raise RuntimeError(f"injected kill at group {key!r}")
+            return fn(key, sdf)
+
         job = ResumableBatchJob(ckpt)
         try:
-            job.run(t, "role", fn, fail_after=3)
+            job.run(t, "role", killed_after_3)
         except RuntimeError:
             pass  # the injected kill
         first = set(job.manifest.done_keys())

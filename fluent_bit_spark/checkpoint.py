@@ -22,22 +22,22 @@ planning and commit overlap another group's tasks, so the executors do
 not sit idle. Each group is still its own commit (`started` when a
 thread picks it up, `done` when its callback returns), so resume
 semantics and the output layout do not depend on the overlap. Four is
-enough to keep the executors fed and bounds what is persisted at once:
-each in-flight group may hold one persisted slice (`fanout_write`
-persists its exploded frame), so at most four sit beside the run's
-input cache. The callback runs on pool threads, so it must be
-thread-safe. After the first failure no new group starts, the groups
-in flight finish and are marked `done` if they succeed, the input
-cache is released, and the first exception is re-raised.
+enough to keep the executors fed. The callback runs on pool threads,
+so it must be thread-safe. After the first failure no new group
+starts, the groups in flight finish and are marked `done` if they
+succeed, the input cache is released, and the first exception is
+re-raised.
 
-The input frame is persisted (MEMORY_AND_DISK) once per run: group
-discovery materializes it, and each group's slice is a filter over
-that cache, so the source is scanned and parsed once, not once per
-group. The cache holds the whole input frame, so its size is the run's
-local-disk footprint; a caller at scale passes `groups` and a frame
-restricted to them (one date slice per run), so the cache holds only
-what the run delivers. `sinks.fanout_write` replaces a group's output
-by renaming a staging directory: atomic on HDFS and local disk, but a
+The input frame is persisted (MEMORY_AND_DISK) once per run, the one
+materialization of the delivery: group discovery fills it, and each
+group's slice is a filter over that cache, so the source is scanned
+and parsed once, not once per group, and a callback may read its
+slice more than once (`sinks.fanout_write` reads it twice). The cache
+holds the whole input frame, so its size is the run's local-disk
+footprint; a caller at scale passes `groups` and a frame restricted
+to them (one date slice per run), so the cache holds only what the
+run delivers. `sinks.fanout_write` replaces a group's output by
+renaming a staging directory: atomic on HDFS and local disk, but a
 rename on an object store is a copy, so there a killed run can leave a
 partly copied sink directory that the group's redo then replaces.
 """
@@ -114,7 +114,6 @@ class ResumableBatchJob:
         group_col: str,
         process_fn: Callable[[str, DataFrame], dict | None],
         groups: list[str] | None = None,
-        fail_after: int | None = None,
     ) -> dict[str, str]:
         """Process each group not yet done; returns key -> final status
         in group order. Groups are found with one distinct job when not
@@ -122,16 +121,14 @@ class ResumableBatchJob:
         starts (its rows would match no slice). After the first
         exception from `process_fn` no new group starts, the groups in
         flight finish (and are marked done if they succeed), and then
-        the exception is re-raised. `fail_after=N` runs the first N
-        pending groups and then raises (for kill/resume tests). `df`
-        stays persisted until every group has finished."""
+        the exception is re-raised. `df` stays persisted until every
+        group has finished."""
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             if groups is None:
                 groups = _discover_groups(df, group_col)
             done = self.manifest.done_keys()
             pending = [k for k in groups if k not in done]
-            todo = pending if fail_after is None else pending[:fail_after]
 
             def deliver(key: str) -> None:
                 self.manifest.mark(key, "started")
@@ -139,9 +136,7 @@ class ResumableBatchJob:
                 metrics = process_fn(key, slice_df) or {}
                 self.manifest.mark(key, "done", **metrics)
 
-            _run_bounded(df.sparkSession, deliver, todo)
-            if len(todo) < len(pending):
-                raise RuntimeError(f"injected failure before group {pending[len(todo)]!r}")
+            _run_bounded(df.sparkSession, deliver, pending)
             return {k: "skipped" if k in done else "done" for k in groups}
         finally:
             df.unpersist()

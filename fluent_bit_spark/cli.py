@@ -62,7 +62,7 @@ def main(argv: list[str] | None = None) -> int:
     from fluent_bit_spark.plans.flagship import SINKS, run_pipeline
     from fluent_bit_spark.session import get_spark
     from fluent_bit_spark.sinks import fanout_write
-    from fluent_bit_spark.transcripts import synth_transcripts
+    from fluent_bit_spark.transcripts import load_transcripts
 
     from pyspark.sql import functions as F
 
@@ -71,7 +71,7 @@ def main(argv: list[str] | None = None) -> int:
     t0 = time.time()
     metrics = PipelineMetrics(spark)
     source = metrics.instrument_input(
-        synth_transcripts(spark, args.sf_dir, replicate=args.replicate)
+        load_transcripts(spark, args.sf_dir, replicate=args.replicate)
     )
     routed = run_pipeline(spark, args.sf_dir, source=source)
 

@@ -24,18 +24,17 @@ class PipelineMetrics:
         self.spark = spark
         self._observations: list[Observation] = []
 
-    def instrument_input(self, df: DataFrame, bytes_col: str = "text") -> DataFrame:
-        """Count records/bytes where the plan already runs: a named
-        `observe()` aggregate piggybacked on the existing stage (the
-        reference's N_RECORDS/N_BYTES counters, flb_metrics.h:30-33).
-        Totals become visible after the first action that consumes the
-        returned DataFrame."""
+    def instrument_input(self, df: DataFrame) -> DataFrame:
+        """Count records, and bytes of `text` when the frame has it,
+        where the plan already runs: a named `observe()` aggregate
+        piggybacked on the existing stage (the reference's
+        N_RECORDS/N_BYTES counters, flb_metrics.h:30-33). Totals become
+        visible after the first action that consumes the returned
+        DataFrame."""
         obs = Observation(f"input_{len(self._observations)}")
         exprs = [F.count(F.lit(1)).alias("records")]
-        if bytes_col in df.columns:
-            exprs.append(
-                F.coalesce(F.sum(F.length(bytes_col)), F.lit(0)).alias("bytes")
-            )
+        if "text" in df.columns:
+            exprs.append(F.coalesce(F.sum(F.length("text")), F.lit(0)).alias("bytes"))
         out = df.observe(obs, *exprs)
         self._observations.append(obs)
         return out

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.functions.hashing import md5_32
+from fluent_bit_spark.operators.text_analysis import tokens
 from fluent_bit_spark.session import persist_tracked
 # perfbench (worker.py conv_skew) imports release_persisted from here
 from fluent_bit_spark.session import release_persisted  # noqa: F401
@@ -57,10 +58,6 @@ def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFram
 # ---------------------------------------------------------------------------
 # tokens & shingles (shared)
 
-def tokens_col(text: Column) -> Column:
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
-
-
 def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     """Word k-shingles (distinct) from a BOUND token-array column.
 
@@ -69,8 +66,8 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     inside higher-order-function lambdas, so an inline tokens tree in
     the slice lambda below would re-run the whole split/trim/filter
     once per shingle — O(tokens^2) per row (measured 19x slower at 400
-    tokens/doc). Project tokens_col() into a column first (see
-    shingle_frame)."""
+    tokens/doc). Project text_analysis.tokens() into a column first
+    (see shingle_frame)."""
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
     sh = F.transform(
@@ -130,7 +127,7 @@ def shingle_frame(
     """(id, sh) frame with tokens BOUND to a column before shingling —
     the scale-correct way to shingle (see shingles_from_tokens)."""
     tk = _spread(df, spread).select(
-        F.col(id_col).alias("id"), tokens_col(F.col(text_col)).alias("tk")
+        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("tk")
     )
     return tk.select("id", shingles_from_tokens(F.col("tk"), k).alias("sh"))
 
@@ -510,7 +507,7 @@ def simhash_near_dup_pairs(
     # tokens bound to a column first — see simhash_from_tokens.
     sigs = persist_tracked(
         df.select(
-            F.col(id_col).alias("id"), tokens_col(F.col(text_col)).alias("tk")
+            F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("tk")
         ).select("id", simhash_from_tokens(F.col("tk")).alias("sh"))
     )
     banded = sigs.select(
@@ -576,7 +573,7 @@ def jaccard_pairs_blocked(
         df.select(
             F.col(block_col).alias("blk"),
             F.col(id_col).alias("id"),
-            F.array_distinct(tokens_col(F.col(text_col))).alias("tok"),
+            F.array_distinct(tokens(F.col(text_col))).alias("tok"),
         )
     )
     posts = docs.select("blk", "id", F.explode("tok").alias("w"))
@@ -643,7 +640,7 @@ def edit_distance_pairs(
     docs = persist_tracked(
         df.select(
             F.array_join(
-                F.slice(tokens_col(F.col(text_col)), 1, block_tokens), " "
+                F.slice(tokens(F.col(text_col)), 1, block_tokens), " "
             ).alias("blk"),
             F.col(id_col).alias("id"),
             F.col(text_col).alias("txt"),

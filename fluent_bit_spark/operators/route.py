@@ -15,8 +15,8 @@ Reference semantics (SURVEY.md §2.4):
   per rule (condition, new-tag template, keep); matching records are
   re-emitted under the new tag — `keep=True` keeps the original too
   (copy), `keep=False` replaces it. The reference re-enters the whole
-  pipeline through an emitter input; unbounded in C, we apply a
-  bounded number of passes (configs are acyclic in practice).
+  pipeline through an emitter input; unbounded in C, we apply one
+  pass (configs are acyclic in practice).
 
 Tag assignment itself mirrors filter_grep's ordered first-decisive-rule
 evaluation (plugins/filter_grep/grep.c:148-175) as a lazy `when` chain.
@@ -59,16 +59,15 @@ def first_match_tag(
     df: DataFrame,
     rules: list[tuple[Column, Column]],
     default: Column,
-    out: str = "tag",
 ) -> DataFrame:
-    """Ordered first-match-wins tag assignment: nested when-chain, so
-    later predicates short-circuit exactly like grep's decisive-rule
-    loop."""
+    """Ordered first-match-wins assignment of column `tag`: nested
+    when-chain, so later predicates short-circuit exactly like grep's
+    decisive-rule loop."""
     expr = None
     for cond, tag in rules:
         expr = F.when(cond, tag) if expr is None else expr.when(cond, tag)
     expr = expr.otherwise(default) if expr is not None else default
-    return df.withColumn(out, expr)
+    return df.withColumn("tag", expr)
 
 
 @dataclass(frozen=True)
@@ -78,38 +77,35 @@ class RewriteRule:
     keep: bool = False
 
 
-def rewrite_tag(df: DataFrame, rules: list[RewriteRule], passes: int = 1) -> DataFrame:
-    """Bounded rewrite_tag cascade. Each pass applies the FIRST matching
-    rule per record — keep and non-keep rules share one ordered scan
-    (rewrite_tag.c:287-334 stops at the first hit), so a record matching
-    an earlier keep rule is never also rewritten by a later rule.
+def rewrite_tag(df: DataFrame, rules: list[RewriteRule]) -> DataFrame:
+    """One rewrite_tag pass: the FIRST matching rule per record applies.
+    Keep and non-keep rules share one ordered scan (rewrite_tag.c:287-334
+    stops at the first hit), so a record matching an earlier keep rule
+    is never also rewritten by a later rule.
     Non-keep rules rewrite in place (cheap, no union); keep rules emit a
     re-tagged copy via a union (the reference's emitter copy fan-out)."""
-    for _ in range(passes):
-        # effective condition per rule = its own condition AND no earlier
-        # rule (of either kind) matched; the set is mutually exclusive
-        prior = F.lit(False)
-        replace_expr = F.col("tag")
-        copies = []
-        for rule in rules:
-            # NULL-valued conditions are non-matches (a NULL folded into
-            # `prior` would otherwise poison ~prior for all later rules)
-            cond = F.coalesce(rule.condition, F.lit(False))
-            eff = cond & ~prior
-            if rule.keep:
-                copies.append(df.filter(eff).withColumn("tag", rule.new_tag))
-            else:
-                replace_expr = F.when(eff, rule.new_tag).otherwise(replace_expr)
-            prior = prior | cond
-        df = df.withColumn("tag", replace_expr)
-        for c in copies:
-            df = df.unionByName(c)
+    # effective condition per rule = its own condition AND no earlier
+    # rule (of either kind) matched; the set is mutually exclusive
+    prior = F.lit(False)
+    replace_expr = F.col("tag")
+    copies = []
+    for rule in rules:
+        # NULL-valued conditions are non-matches (a NULL folded into
+        # `prior` would otherwise poison ~prior for all later rules)
+        cond = F.coalesce(rule.condition, F.lit(False))
+        eff = cond & ~prior
+        if rule.keep:
+            copies.append(df.filter(eff).withColumn("tag", rule.new_tag))
+        else:
+            replace_expr = F.when(eff, rule.new_tag).otherwise(replace_expr)
+        prior = prior | cond
+    df = df.withColumn("tag", replace_expr)
+    for c in copies:
+        df = df.unionByName(c)
     return df
 
 
-def route_mask(
-    df: DataFrame, sinks: list[tuple[str, str]], drop_unrouted: bool = True
-) -> DataFrame:
+def route_mask(df: DataFrame, sinks: list[tuple[str, str]]) -> DataFrame:
     """Compute `routes: array<string>` = sinks whose Match glob matches
     the record's tag. Zero matches => record dropped (reference drops
     chunks with an empty route mask)."""
@@ -120,15 +116,14 @@ def route_mask(
         ]
     )
     df = df.withColumn("routes", F.filter(matches, lambda x: x.isNotNull()))
-    if drop_unrouted:
-        df = df.filter(F.size("routes") > 0)
-    return df
+    return df.filter(F.size("routes") > 0)
 
 
-def explode_routes(df: DataFrame, out: str = "sink") -> DataFrame:
-    """One row per (record, matched sink) — the copy fan-out as rows,
-    shared by the sink write and the per-sink aggregates."""
-    return df.withColumn(out, F.explode("routes"))
+def explode_routes(df: DataFrame) -> DataFrame:
+    """One row per (record, matched sink), the sink in column `sink` —
+    the copy fan-out as rows, shared by the sink write and the per-sink
+    aggregates."""
+    return df.withColumn("sink", F.explode("routes"))
 
 
 # ---------------------------------------------------------------------------

@@ -292,8 +292,7 @@ def enrich_stage(df: DataFrame, spark: SparkSession) -> DataFrame:
 # stage 3: route
 
 def route_stage(df: DataFrame) -> DataFrame:
-    """Ordered tag rules (first match wins), one bounded rewrite_tag
-    pass, then the sink route mask (zero matches would drop, though
+    """Ordered tag rules (first match wins), one rewrite_tag pass, then the sink route mask (zero matches would drop, though
     sink_all matches everything here)."""
     df = R.first_match_tag(
         df,
@@ -314,7 +313,6 @@ def route_stage(df: DataFrame) -> DataFrame:
                 keep=False,
             )
         ],
-        passes=1,
     )
     return R.route_mask(df, SINKS)
 

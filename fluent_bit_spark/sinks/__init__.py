@@ -11,18 +11,17 @@ writers); this module provides:
   (src/flb_pack_gelf.c:408), Elasticsearch logstash-style derived
   index (plugins/out_es/es.c:314-428), Loki label-set derivation
   (plugins/out_loki/loki.c:251-421).
-- fanout_write: the multi-sink writer — explode the route mask once
-  and write every sink in ONE partitioned job, then move each sink's
-  directory into place (the reference hands one chunk to every
-  matching output from a shared buffer,
+- write_fanout: the one fan-out writer — explode the route mask and
+  write every sink as parquet in ONE job partitioned by sink, then
+  move each sink's directory into place (the reference hands one
+  chunk to every matching output from a shared buffer,
   src/flb_engine_dispatch.c:180-194). Per-sink counts are observed on
-  that write; the aggregate sinks (out_counter / out_flowcounter) are
-  one flowcounter pass plus its roll-up. `write_fanout` is that staged
-  write and move, the one fan-out writer: `streaming.
-  foreach_batch_fanout` calls it once per micro-batch.
-- write modes: parquet/json/csv/text, partitioned by tag (out_file's
-  file-per-tag) or any column; idempotent overwrite per partition for
-  resume safety.
+  that write. `fanout_write` adds the aggregate sinks (out_counter /
+  out_flowcounter): one flowcounter pass plus the roll-up of those
+  counts; `streaming.foreach_batch_fanout` calls `write_fanout` once
+  per micro-batch.
+- write_sink: one overwrite of a frame as parquet/json/csv/text, so a
+  redone write replaces its output.
 """
 
 from __future__ import annotations
@@ -579,16 +578,8 @@ def influx_line_transform(
 FORMATS = {"parquet", "json", "csv", "text"}
 
 
-def write_sink(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
+def write_sink(df: DataFrame, path: str, fmt: str = "parquet") -> None:
+    w = df.write.mode("overwrite")
     if fmt == "parquet":
         w.parquet(path)
     elif fmt == "json":
@@ -601,31 +592,35 @@ def write_sink(
         raise ValueError(f"unknown format {fmt!r} (one of {sorted(FORMATS)})")
 
 
+def _sink_rows(routed: DataFrame, names: list[str]) -> DataFrame:
+    """One row per (record, sink in `names` it is routed to), the sink
+    name in column `sink`, without `routes`."""
+    return explode_routes(routed).filter(F.col("sink").isin(names)).drop("routes")
+
+
 def write_fanout(
-    per_sink: DataFrame,
-    base_path: str,
-    names: list[str],
-    fmt: str = "parquet",
-    partition_by: list[str] | None = None,
-    leaf: str = "",
+    routed: DataFrame, sinks: list[tuple[str, str]], base_path: str, leaf: str = ""
 ) -> dict[str, int]:
-    """The one fan-out writer. `per_sink` holds one row per (record,
-    sink) with the sink name in column `sink`, for sinks in `names`
-    only. Every sink is written by ONE partitioned job into a staging
+    """The one fan-out writer. Each record of `routed` is written once
+    per sink of `sinks` its `routes` names (without `routes`); route
+    names outside `sinks` are neither written nor counted. Every sink is
+    written as parquet by ONE job, partitioned by sink, into a staging
     directory under `base_path`; each `sink=<name>` directory is then
     renamed to `<base_path>/<name><leaf>` through the Hadoop FileSystem
     API, replacing any older copy, so a redone group or replayed epoch
     overwrites its output idempotently. A sink with no rows gets one
     schema-bearing empty file, so it stays readable. Returns the rows
     per sink, observed on the write itself."""
-    spark = per_sink.sparkSession
+    spark = routed.sparkSession
+    names = list(dict.fromkeys(name for name, _glob in sinks))
+    per_sink = _sink_rows(routed, names)
     obs = Observation()
     observed = per_sink.observe(
         obs,
         *[F.count_if(F.col("sink") == n).alias(f"n{i}") for i, n in enumerate(names)],
     )
     staging = f"{base_path}/_fanout_staging"
-    write_sink(observed, staging, fmt=fmt, partition_by=["sink", *(partition_by or [])])
+    observed.write.mode("overwrite").partitionBy("sink").parquet(staging)
     seen = obs.get
     got = {n: int(seen[f"n{i}"]) for i, n in enumerate(names)}
 
@@ -642,7 +637,7 @@ def write_fanout(
                 raise OSError(f"cannot move sink {name!r} into {dst.toString()}")
             fs.create(Path(dst, "_SUCCESS"), True).close()
         else:
-            write_sink(per_sink.limit(0).drop("sink"), dst.toString(), fmt=fmt)
+            write_sink(per_sink.limit(0).drop("sink"), dst.toString())
     fs.delete(Path(staging), True)
     return got
 
@@ -651,31 +646,25 @@ def fanout_write(
     routed: DataFrame,
     sinks: list[tuple[str, str]],
     base_path: str,
-    fmt: str = "parquet",
-    partition_by: list[str] | None = None,
     with_aggregates: bool = True,
 ) -> dict[str, dict]:
-    """Write each configured sink's routed rows under base_path/<sink>
-    (without the `routes` column) in one job, plus the counter and
+    """`write_fanout` under base_path/<sink>, plus the counter and
     flowcounter tables the reference's aggregate sinks would emit, under
     base_path/agg_counter and base_path/agg_flowcounter. Returns
     per-sink row counts (the out_counter surface), every configured
-    sink included; route names outside `sinks` are neither written nor
-    counted.
+    sink included.
 
-    `routes` is exploded once into one row per (record, sink) and
-    persisted for the aggregates. Counts come from an observation on
-    the sink write, and counter is flowcounter rolled up over tag and
-    window, so it is written from those counts without another pass."""
-    names = list(dict.fromkeys(name for name, _glob in sinks))
-    per_sink = explode_routes(routed).filter(F.col("sink").isin(names)).drop("routes")
-    if not with_aggregates:
-        got = write_fanout(per_sink, base_path, names, fmt, partition_by)
-        return {name: {"records": n} for name, n in got.items()}
-    per_sink = per_sink.persist()
-    try:
-        got = write_fanout(per_sink, base_path, names, fmt, partition_by)
-        write_sink(flowcounter(per_sink, ["sink", "tag"]), f"{base_path}/agg_flowcounter")
+    `routed` is read twice, once by the sink write and once by the
+    flowcounter, so pass a cached frame (the delivery loop passes a
+    slice of `ResumableBatchJob`'s run cache). Counter is flowcounter
+    rolled up over tag and window, so it is written from the counts
+    observed on the sink write without another pass."""
+    got = write_fanout(routed, sinks, base_path)
+    if with_aggregates:
+        write_sink(
+            flowcounter(_sink_rows(routed, list(got)), ["sink", "tag"]),
+            f"{base_path}/agg_flowcounter",
+        )
         write_sink(
             local_frame(
                 routed.sparkSession,
@@ -684,9 +673,7 @@ def fanout_write(
             ),
             f"{base_path}/agg_counter",
         )
-        return {name: {"records": n} for name, n in got.items()}
-    finally:
-        per_sink.unpersist()
+    return {name: {"records": n} for name, n in got.items()}
 
 
 def retention_by_budget(

@@ -196,14 +196,10 @@ def foreach_batch_fanout(base_path: str, sinks: list[tuple[str, str]]):
     """Exactly-once fan-out for writeStream.foreachBatch: each epoch
     writes every sink in one job (the batch fan-out writer) under
     <base>/<sink>/epoch=<id>, replaced whole on replay."""
-    from fluent_bit_spark.operators.route import explode_routes
     from fluent_bit_spark.sinks import write_fanout
 
-    names = list(dict.fromkeys(name for name, _glob in sinks))
-
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        per_sink = explode_routes(batch_df).filter(F.col("sink").isin(names)).drop("routes")
-        write_fanout(per_sink, base_path, names, leaf=f"/epoch={epoch_id}")
+        write_fanout(batch_df, sinks, base_path, leaf=f"/epoch={epoch_id}")
 
     return fn
 

@@ -128,13 +128,37 @@ def transcripts_sql(dialect: str, events: str = "events") -> str:
     return sql.replace("<LB>", "{").replace("<RB>", "}")
 
 
-def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def load_transcripts(
+    spark: SparkSession, sf_dir: str, replicate: int = 1, hot_factor: int = 0
+) -> DataFrame:
     """Derive the transcript DataFrame from `events` at `sf_dir`.
 
     The window rank shuffles once by user_id; at production scale the
     table is read pre-materialized (`read_transcripts`) instead.
+
+    `replicate` > 1 replicates the events `replicate`x (distinct
+    event_ids and shifted ts, same grammar mix) to reach benchmark row
+    counts. `hot_factor` > 0 adds Zipf-style conversation skew
+    (FIXTURES.md §1): every 20th conversation receives `hot_factor`x
+    extra replicas, so a few conversations hold a disproportionate
+    share of turns, exercising the salting/skew paths. Both are
+    deterministic; the oracle-checked correctness path uses the
+    defaults, where the derivation is dialect-exact.
     """
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView("events")
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    if replicate > 1 or hot_factor > 0:
+        n = events.agg(F.max("event_id")).collect()[0][0] + 1
+        reps = F.when(
+            (F.col("user_id") % 20 == 0) & (F.lit(hot_factor) > 0),
+            F.lit(replicate * max(hot_factor, 1)),
+        ).otherwise(F.lit(replicate))
+        events = (
+            events.withColumn("rep", F.explode(F.sequence(F.lit(0), reps - 1)))
+            .withColumn("event_id", F.col("event_id") + F.col("rep") * F.lit(n))
+            .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("rep") * 7 + F.col("event_id") % 13))
+            .drop("rep")
+        )
+    events.createOrReplaceTempView("events")
     return spark.sql(transcripts_sql("spark"))
 
 
@@ -183,33 +207,3 @@ def read_transcripts(
             )
         return spark.read.format("iceberg").load(path)
     return spark.read.parquet(path)
-
-
-def synth_transcripts(
-    spark: SparkSession, sf_dir: str, replicate: int = 1, hot_factor: int = 0
-) -> DataFrame:
-    """Benchmark-scale transcript synthesis: the deterministic derivation,
-    optionally replicated `replicate`x (distinct event_ids and shifted ts,
-    same grammar mix) to reach bench row counts.
-
-    `hot_factor` > 0 adds Zipf-style conversation skew (FIXTURES.md §1):
-    every 20th conversation receives `hot_factor`x extra replicas, so a
-    few conversations hold a disproportionate share of turns —
-    exercising the salting/skew paths. Deterministic; bench-only (the
-    oracle-checked correctness path always uses replicate=1,
-    hot_factor=0 where the derivation is dialect-exact)."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if replicate > 1 or hot_factor > 0:
-        n = events.agg(F.max("event_id")).collect()[0][0] + 1
-        reps = F.when(
-            (F.col("user_id") % 20 == 0) & (F.lit(hot_factor) > 0),
-            F.lit(replicate * max(hot_factor, 1)),
-        ).otherwise(F.lit(replicate))
-        events = (
-            events.withColumn("rep", F.explode(F.sequence(F.lit(0), reps - 1)))
-            .withColumn("event_id", F.col("event_id") + F.col("rep") * F.lit(n))
-            .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("rep") * 7 + F.col("event_id") % 13))
-            .drop("rep")
-        )
-    events.createOrReplaceTempView("events")
-    return spark.sql(transcripts_sql("spark"))

@@ -294,7 +294,7 @@ def test_fanout_write_reports_zero_match_sinks(spark, tmp_path):
 
     sinks = [("s_none", "nothing.*"), ("s_all", "*")]
     df = spark.createDataFrame([("app.a", 1)], ["tag", "x"])
-    routed = route_mask(df, sinks, drop_unrouted=False)
+    routed = route_mask(df, sinks)
     res = fanout_write(routed, sinks, str(tmp_path / "out"), with_aggregates=False)
     assert res["s_none"] == {"records": 0} and res["s_all"] == {"records": 1}
     # a zero-match sink stays readable: 0 rows, the routed schema minus routes

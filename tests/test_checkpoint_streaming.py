@@ -25,6 +25,20 @@ def test_manifest_roundtrip(tmp_path):
     assert len(m.entries()) == 3
 
 
+def _killed_after(n: int, process):
+    """`process` for group keys "0".."n-1"; every later key raises, as
+    in a run killed after n groups. Groups run concurrently, so every
+    later key must fail, not only the next: it may already be in
+    flight."""
+
+    def fn(key, slice_df):
+        if int(key) >= n:
+            raise RuntimeError(f"injected kill at group {key!r}")
+        return process(key, slice_df)
+
+    return fn
+
+
 def test_kill_and_resume_without_reprocess(spark, tmp_path):
     df = spark.range(100).withColumn("grp", (F.col("id") % 4).cast("string"))
     out_dir = tmp_path / "out"
@@ -38,7 +52,7 @@ def test_kill_and_resume_without_reprocess(spark, tmp_path):
 
     job = ResumableBatchJob(str(tmp_path / "ckpt"))
     with pytest.raises(RuntimeError):
-        job.run(df, "grp", process, fail_after=2)  # killed after 2 groups
+        job.run(df, "grp", _killed_after(2, process))
     # groups overlap, so callbacks may finish in any order
     assert sorted(processed_log) == ["0", "1"]
 
@@ -66,7 +80,7 @@ def test_resumable_job_releases_its_cache(spark, tmp_path):
     before = _persisted(spark)
     job = ResumableBatchJob(str(tmp_path / "ckpt"))
     with pytest.raises(RuntimeError):
-        job.run(df, "grp", lambda key, s: {"rows": s.count()}, fail_after=1)
+        job.run(df, "grp", _killed_after(1, lambda key, s: {"rows": s.count()}))
     assert _persisted(spark) == before
     statuses = job.run(df, "grp", lambda key, s: {"rows": s.count()})
     assert statuses == {"0": "skipped", "1": "done", "2": "done", "3": "done"}

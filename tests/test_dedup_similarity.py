@@ -148,7 +148,7 @@ def test_simhash_near_dup(spark):
 
 def test_simhash_matches_python_oracle(spark, docs):
     sample = docs.limit(20)
-    toks = sample.select("doc_id", D.tokens_col(F.col("text")).alias("tk"))
+    toks = sample.select("doc_id", TA.tokens(F.col("text")).alias("tk"))
     got = {
         r.doc_id: r.sh
         for r in toks.select("doc_id", D.simhash_from_tokens(F.col("tk")).alias("sh")).collect()

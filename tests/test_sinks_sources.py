@@ -67,7 +67,7 @@ def test_fanout_write(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, ["tag", "routes", "ts", "text"])
     sinks = [("sink_errors", "errors.*"), ("sink_tools", "tools.*"), ("sink_all", "*")]
-    counts = SK.fanout_write(df, sinks, str(tmp_path / "out"), fmt="parquet")
+    counts = SK.fanout_write(df, sinks, str(tmp_path / "out"))
     assert counts == {
         "sink_errors": {"records": 1},
         "sink_tools": {"records": 1},
@@ -85,7 +85,7 @@ def test_fanout_write(spark, tmp_path):
     assert total == 3  # one row per (sink, tag, window), summing to all routed rows
 
 
-def test_fanout_write_partition_by(spark, tmp_path):
+def test_fanout_write_rewrite_replaces_sinks(spark, tmp_path):
     import datetime as dt
 
     rows = [
@@ -96,20 +96,17 @@ def test_fanout_write_partition_by(spark, tmp_path):
     df = spark.createDataFrame(rows, ["tag", "routes", "ts", "text"])
     sinks = [("sink_errors", "errors.*"), ("sink_all", "*")]
     out = tmp_path / "out"
-    counts = SK.fanout_write(df, sinks, str(out), partition_by=["tag"], with_aggregates=False)
+    counts = SK.fanout_write(df, sinks, str(out), with_aggregates=False)
     assert counts == {"sink_errors": {"records": 1}, "sink_all": {"records": 3}}
-    tags = lambda sink: sorted(p.name for p in (out / sink).glob("tag=*"))
-    assert tags("sink_all") == ["tag=chat.user", "tag=errors.user"]
-    assert tags("sink_errors") == ["tag=errors.user"]
-    assert list((out / "sink_all" / "tag=chat.user").glob("part-*.parquet"))
+    assert list((out / "sink_all").glob("part-*.parquet"))
     back = spark.read.parquet(str(out / "sink_all"))
     assert back.filter(F.col("tag") == "chat.user").count() == 2
     assert not (out / "_fanout_staging").exists()
     # a rewrite replaces each sink's directory whole
-    SK.fanout_write(df.filter(F.col("text") == "c2"), sinks, str(out), partition_by=["tag"])
-    assert tags("sink_all") == ["tag=chat.user"]
-    assert spark.read.parquet(str(out / "sink_all")).count() == 1
+    SK.fanout_write(df.filter(F.col("text") == "c2"), sinks, str(out))
+    assert sorted(r.text for r in spark.read.parquet(str(out / "sink_all")).collect()) == ["c2"]
     assert spark.read.parquet(str(out / "sink_errors")).count() == 0
+    assert not (out / "_fanout_staging").exists()
 
 
 # --- sources ---------------------------------------------------------------

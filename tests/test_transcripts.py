@@ -66,9 +66,8 @@ def test_synth_skew_and_salted_agg_invariance(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from fluent_bit_spark.operators.skew import salted_agg
-    from fluent_bit_spark.transcripts import synth_transcripts
 
-    df = synth_transcripts(spark, sf_dir, replicate=2, hot_factor=10).cache()
+    df = load_transcripts(spark, sf_dir, replicate=2, hot_factor=10).cache()
     counts = df.groupBy("conv_id").count().collect()
     by_conv = {r.conv_id: r["count"] for r in counts}
     hot = max(by_conv.values())

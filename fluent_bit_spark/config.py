@@ -10,15 +10,25 @@ the DataFrame pipeline, preserving the reference's composition rules:
   filter's Match glob (src/flb_filter.c:56-128); non-matching records
   pass through untouched;
 - each OUTPUT receives records whose tag matches its Match glob
-  (src/flb_router.c); zero-match records are dropped; an output can be
-  a data sink (file/stdout/null) or an aggregate sink
-  (counter/flowcounter).
+  (src/flb_router.c); zero-match records are dropped; an output is an
+  aggregate (counter/flowcounter), a debug sink (stdout/null), a file,
+  or a delivery plugin whose envelope is written as files.
 
 Supported plugin names (the Spark-expressible surface):
-  inputs : dummy, tail, parquet (extension), transcripts (extension)
+  inputs : dummy, tail, parquet (extension), transcripts (extension),
+           syslog, kmsg, systemd, statsd, cpu, mem, disk, netif,
+           thermal, random
   filters: grep, record_modifier, modify, nest, lift, parser,
-           throttle, rewrite_tag, expect, lua (python callable)
-  outputs: file, stdout, null, counter, flowcounter
+           throttle, throttle_size, alter_size, geoip2/apm_geoip,
+           lookup/apm_ldap, rewrite_tag, expect, lua (python callable),
+           tensorflow, kubernetes, aws, apm_uaparser,
+           apm_url_normalizer, apm_message_formatter,
+           apm_goals_airflow, apm_kubernetes_labels, stdout, sampling
+  outputs: counter, flowcounter, stdout, null, file, es, loki, splunk,
+           datadog, gelf, http, kinesis_streams, kinesis_firehose,
+           pgsql, kafka_rest, nrlogs, es_bulk, cloudwatch_logs,
+           bigquery, azure, slack, logdna, nats, stackdriver, influxdb,
+           syslog, prometheus_exporter, gelf_chunked
 
 Example:
     [INPUT]
@@ -37,19 +47,22 @@ Example:
 
 from __future__ import annotations
 
+import csv
 import functools
 import json
 import os
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_spark import sinks as SK
 from fluent_bit_spark.operators import filters as FL
 from fluent_bit_spark.operators import route as R
-from fluent_bit_spark.operators.aggregate import counter, flowcounter
+from fluent_bit_spark.operators.aggregate import flowcounter
 from fluent_bit_spark.operators.parse import apply_regex_parser
+from fluent_bit_spark.session import local_frame
 
 
 class ConfigError(ValueError):
@@ -287,11 +300,50 @@ def _strptime_to_spark(fmt: str) -> str:
     return fmt
 
 
+def _ddl_name(name: str) -> str:
+    """A column name from a user file, quoted for a DDL schema."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _read_dim_csv(path: str, shape: str, what: str) -> list[tuple[int, list[str]]]:
+    """The (line number, row) pairs of a filter's csv dim file: blank
+    lines skipped, every row exactly the columns `shape` names, and at
+    least one row."""
+    rows = []
+    with open(path) as f:
+        for lineno, rec in enumerate(csv.reader(f), start=1):
+            if not rec or all(not c.strip() for c in rec):
+                continue  # blank/whitespace line
+            if len(rec) != len(shape.split(",")):
+                raise ConfigError(
+                    f"{path}:{lineno}: expected {shape} (got {len(rec)} columns)"
+                )
+            rows.append((lineno, rec))
+    if not rows:
+        raise ConfigError(f"csv file {path!r} has no {what}")
+    return rows
+
+
 def _ddl_type(t: str) -> str:
     return {
         "integer": "bigint", "int": "bigint", "float": "double",
         "bool": "boolean", "boolean": "boolean", "hex": "string",
     }.get(t, "string")
+
+
+def _match_predicate(match: str) -> Column:
+    """The records a Match glob selects, for filters and outputs alike:
+    never NULL, and a NULL tag matches nothing."""
+    return F.coalesce(R.glob_predicate(F.col("tag"), match), F.lit(False))
+
+
+# an output resolves its timestamp and message columns once, as the
+# first of these present; `need` names an unresolved one by its role
+_TS_COLS = ("ts", "time", "event_time")
+_MSG_COLS = ("text", "log", "message")
+_TS = f"a timestamp column ({'/'.join(_TS_COLS)})"
+_MSG = f"a message column ({'/'.join(_MSG_COLS)})"
+_REC = "a record column (any column but tag and the timestamp)"
 
 
 class ConfigPipeline:
@@ -421,11 +473,11 @@ class ConfigPipeline:
     def _apply_filter(self, df: DataFrame, s: Section) -> DataFrame:
         name = (s.get("Name") or "").lower()
         match = s.get("Match", "*")
-        pred = F.coalesce(R.glob_predicate(F.col("tag"), match), F.lit(False))
         if match == "*":
             return self._filter_all(df, s, name)
-        # coalesced pred: NULL-tag records are non-matches that must PASS
-        # THROUGH untouched (filter(~NULL) would silently drop them)
+        # NULL-tag records are non-matches that must PASS THROUGH
+        # untouched (filter(~NULL) would silently drop them)
+        pred = _match_predicate(match)
         matched = df.filter(pred)
         rest = df.filter(~pred)
         out = self._filter_all(matched, s, name)
@@ -509,69 +561,48 @@ class ConfigPipeline:
             return FL.alter_size(df, remove=int(s.get("Remove", "0")))
         if name in ("geoip2", "apm_geoip"):
             # range lookup over a csv table: Ranges_file with lo,hi,field=value
-            import csv as _csv
-
             from fluent_bit_spark.operators.enrich import range_lookup_enrich
 
-            rows, out_field = [], None
             path = s.get("Ranges_file")
             if not path:
                 raise ConfigError("geoip2 filter needs a Ranges_file")
-            with open(path) as f:
-                for lineno, rec in enumerate(_csv.reader(f), start=1):
-                    if not rec or all(not c.strip() for c in rec):
-                        continue  # blank/whitespace line
-                    if len(rec) != 4:
-                        raise ConfigError(
-                            f"{path}:{lineno}: expected lo,hi,field,value "
-                            f"(got {len(rec)} columns)"
-                        )
-                    lo, hi, field, value = rec
-                    try:
-                        rows.append((float(lo), float(hi), value))
-                    except ValueError as e:
-                        raise ConfigError(
-                            f"{path}:{lineno}: non-numeric range bound: {e}"
-                        ) from None
-                    out_field = field
-            if not rows:
-                raise ConfigError(f"Ranges_file {path!r} has no range rows")
-            ranges = df.sparkSession.createDataFrame(rows, ["lo", "hi", out_field])
+            rows = []
+            for lineno, (lo, hi, out_field, value) in _read_dim_csv(
+                path, "lo,hi,field,value", "range rows"
+            ):
+                try:
+                    rows.append((float(lo), float(hi), value))
+                except ValueError as e:
+                    raise ConfigError(
+                        f"{path}:{lineno}: non-numeric range bound: {e}"
+                    ) from None
+            ranges = local_frame(
+                df.sparkSession,
+                rows,
+                f"lo double, hi double, {_ddl_name(out_field)} string",
+            )
             return range_lookup_enrich(
                 df, ranges, s.get("Lookup_key", "value"),
                 defaults={out_field: s.get("Default", "unknown")},
             )
         if name in ("apm_ldap", "lookup"):
             # broadcast lookup: Lookup_file csv of key,value pairs
-            import csv as _csv
-
             from fluent_bit_spark.operators.enrich import lookup_enrich
 
             path = s.get("Lookup_file")
             if not path:
                 raise ConfigError("lookup filter needs a Lookup_file")
-            rows = []
-            with open(path) as f:
-                for lineno, rec in enumerate(_csv.reader(f), start=1):
-                    if not rec or all(not c.strip() for c in rec):
-                        continue
-                    if len(rec) != 2:
-                        raise ConfigError(
-                            f"{path}:{lineno}: expected key,value "
-                            f"(got {len(rec)} columns)"
-                        )
-                    rows.append(tuple(rec))
-            if not rows:
-                raise ConfigError(f"Lookup_file {path!r} has no rows")
             out_field = s.get("Record_key", "looked_up")
-            dim = df.sparkSession.createDataFrame(rows, ["_k", out_field])
+            dim = local_frame(
+                df.sparkSession,
+                [rec for _lineno, rec in _read_dim_csv(path, "key,value", "rows")],
+                f"_k string, {_ddl_name(out_field)} string",
+            )
             return lookup_enrich(
                 df, dim, key=s.get("Match_key", "tag"), dim_key="_k",
                 defaults={out_field: s.get("Default")} if s.get("Default") else None,
             )
         if name == "rewrite_tag":
-            import re as _re
-
             from fluent_bit_spark.functions.record_accessor import (
                 ra_translate,
                 regex_captures,
@@ -594,8 +625,8 @@ class ConfigPipeline:
                 # $0..$9 captures from THIS rule's regex
                 # (rewrite_tag.c:287-334)
                 try:
-                    n_groups = _re.compile(pattern).groups
-                except _re.error:  # Java-only syntax: no capture refs
+                    n_groups = re.compile(pattern).groups
+                except re.error:  # Java-only syntax: no capture refs
                     n_groups = 0
                 caps = regex_captures(src, pattern, n_groups)
                 tag_col = ra_translate(df, new_tag, captures=caps)
@@ -852,8 +883,6 @@ class ConfigPipeline:
             # pod_name -> labels JSON (LOOKUP_KEY_PATH); label key
             # names and fallback values use the reference's env vars
             # and defaults (filter_kubernetes_labels.h).
-            import os as _os
-
             from fluent_bit_spark.operators.enrich import lookup_enrich
 
             path = s.get("mapping_path")
@@ -863,14 +892,14 @@ class ConfigPipeline:
                 )
             with open(path) as f:
                 mapping = json.load(f)
-            proj_label = _os.environ.get(
+            proj_label = os.environ.get(
                 "SFAPM_PROJECTNAME_LABEL", "snappyflow/projectname"
             )
-            app_label = _os.environ.get(
+            app_label = os.environ.get(
                 "SFAPM_APPNAME_LABEL", "snappyflow/appname"
             )
-            proj_default = _os.environ.get("SFAPM_PROJECT_NAME", "project")
-            app_default = _os.environ.get("SFAPM_APP_NAME", "app")
+            proj_default = os.environ.get("SFAPM_PROJECT_NAME", "project")
+            app_default = os.environ.get("SFAPM_APP_NAME", "app")
             rows = [
                 (
                     pod,
@@ -881,8 +910,8 @@ class ConfigPipeline:
             ]
             if not rows:
                 raise ConfigError(f"mapping_path {path!r} has no pods")
-            dim = df.sparkSession.createDataFrame(
-                rows, ["_pod", "projectName", "appName"]
+            dim = local_frame(
+                df.sparkSession, rows, "_pod string, projectName string, appName string"
             )
             pod_key = s.get("Pod_Key", "pod_name")
             if pod_key not in df.columns:
@@ -998,366 +1027,274 @@ class ConfigPipeline:
     def run(
         self, spark: SparkSession, output_base: str | None = None
     ) -> dict[str, object]:
+        """Deliver every OUTPUT: each gets the post-filter records its
+        Match selects (records no output matches are dropped); returns
+        {`<name>_<i>`: count, rows, or written path}."""
         outputs = [s for s in self.sections if s.kind == "OUTPUT"]
         if not outputs:
             raise ConfigError("config needs at least one OUTPUT")
-        df = self.frame(spark)
-
-        sinks = [
-            ((s.get("Name") or "x") + f"_{i}", s.get("Match", "*"))
-            for i, s in enumerate(outputs)
-        ]
-        routed = R.route_mask(df, sinks).persist()
+        df = self.frame(spark).persist()
         results: dict[str, object] = {}
         try:
-            for (sink_id, _glob), s in zip(sinks, outputs):
-                name = (s.get("Name") or "").lower()
-                slice_df = routed.filter(F.array_contains("routes", sink_id)).drop(
-                    "routes"
+            for i, s in enumerate(outputs):
+                sink_id = (s.get("Name") or "x") + f"_{i}"
+                results[sink_id] = self._output(
+                    df.filter(_match_predicate(s.get("Match", "*"))),
+                    s,
+                    sink_id,
+                    output_base,
                 )
-                if name == "counter":
-                    results[sink_id] = slice_df.count()
-                elif name == "flowcounter":
-                    unit = s.get("Unit", "hour")
-                    results[sink_id] = flowcounter(
-                        slice_df.withColumn("sink", F.lit(sink_id)),
-                        ["sink", "tag"],
-                        window=f"1 {unit}",
-                        bytes_col=next(
-                            (c for c in ("text", "log", "message") if c in slice_df.columns),
-                            slice_df.columns[0],
-                        ),
-                    ).collect()
-                elif name == "stdout":
-                    results[sink_id] = slice_df.collect()
-                elif name == "null":
-                    slice_df.write.format("noop").mode("overwrite").save()
-                    results[sink_id] = None
-                elif name == "file":
-                    from fluent_bit_spark import sinks as SK
-
-                    fmt = (s.get("Format", "json_lines")).lower()
-                    path = f"{output_base}/{sink_id}"
-                    if fmt in ("json", "json_lines"):
-                        SK.write_sink(SK.to_json_lines(slice_df), path, fmt="text")
-                    elif fmt == "csv":
-                        SK.write_sink(
-                            SK.to_csv_lines(slice_df, slice_df.columns), path, fmt="text"
-                        )
-                    elif fmt == "ltsv":
-                        SK.write_sink(
-                            SK.to_ltsv_lines(slice_df, slice_df.columns), path, fmt="text"
-                        )
-                    elif fmt == "template":
-                        SK.write_sink(
-                            SK.to_template_lines(slice_df, s.get("Template", "{time}")),
-                            path,
-                            fmt="text",
-                        )
-                    else:
-                        SK.write_sink(slice_df, path, fmt=fmt)
-                    results[sink_id] = path
-                elif name in ("es", "loki", "splunk", "datadog", "gelf"):
-                    # delivery plugins in batch mode: apply the exact
-                    # envelope transform, land JSON lines at the sink
-                    # path (the network hop is the only thing elided)
-                    from fluent_bit_spark import sinks as SK
-
-                    ts_col = next(
-                        (c for c in ("ts", "time", "event_time") if c in slice_df.columns),
-                        None,
-                    )
-                    if ts_col is None and name != "loki":
-                        raise ConfigError(
-                            f"output {name!r} needs a timestamp column "
-                            "(ts/time/event_time) in the routed records"
-                        )
-                    msg_col = next(
-                        (c for c in ("text", "log", "message") if c in slice_df.columns),
-                        None,
-                    )
-                    if msg_col is None and name in ("datadog", "gelf"):
-                        raise ConfigError(
-                            f"output {name!r} needs a message column "
-                            "(text/log/message) in the routed records"
-                        )
-                    if name == "es":
-                        env = SK.es_logstash_index(
-                            slice_df, prefix=s.get("Logstash_Prefix", "logstash"),
-                            ts_col=ts_col,
-                        )
-                    elif name == "loki":
-                        remove = [
-                            k.strip()
-                            for k in (s.get("Remove_keys") or "").split(",")
-                            if k.strip()
-                        ]
-                        env = SK.loki_labels(
-                            slice_df,
-                            label_cols=[
-                                c.strip() for c in (s.get("Labels", "tag")).split(",")
-                                if c.strip() in slice_df.columns
-                            ],
-                            remove_keys=remove or None,
-                        )
-                    elif name == "splunk":
-                        env = SK.splunk_hec_transform(slice_df, ts_col=ts_col)
-                    elif name == "datadog":
-                        env = SK.datadog_transform(
-                            slice_df, message_col=msg_col, ts_col=ts_col
-                        )
-                    else:
-                        env = SK.gelf_transform(
-                            slice_df,
-                            host_col=s.get("Gelf_Host_Key", "tag"),
-                            short_message_col=msg_col,
-                            ts_col=ts_col,
-                        )
-                    path = f"{output_base}/{sink_id}"
-                    SK.write_sink(SK.to_json_lines(env), path, fmt="text")
-                    results[sink_id] = path
-                elif name in (
-                    "http", "kinesis_streams", "kinesis_firehose",
-                    "pgsql", "kafka_rest", "nrlogs", "es_bulk",
-                ):
-                    # envelope transforms over arbitrary routed records:
-                    # the record map is every routed column except the
-                    # routing internals; the event time column feeds the
-                    # injected date key (http) and is not repeated in
-                    # the map, mirroring [time, map] event pairs
-                    from fluent_bit_spark import sinks as SK
-
-                    ts_col = next(
-                        (c for c in ("ts", "time", "event_time") if c in slice_df.columns),
-                        None,
-                    )
-                    rec_cols = [
-                        c for c in slice_df.columns
-                        if c not in ("tag", "routes", ts_col)
-                    ]
-                    if not rec_cols:
-                        raise ConfigError(
-                            f"output {name!r} has no record columns to "
-                            "render (routed records carry only routing "
-                            "internals and the timestamp)"
-                        )
-                    if name == "http":
-                        if ts_col is None:
-                            raise ConfigError(
-                                "output 'http' needs a timestamp column "
-                                "(ts/time/event_time) in the routed records"
-                            )
-                        # the reference's default Format is msgpack
-                        # (http_conf.c:145 FLB_PACK_JSON_FORMAT_NONE);
-                        # only the JSON body family is supported here,
-                        # so an absent Format is an explicit error
-                        # rather than a silent json_lines default
-                        fmt_opt = s.get("Format")
-                        if fmt_opt is None:
-                            raise ConfigError(
-                                "output 'http': Format is required (the "
-                                "reference default is msgpack, which has no "
-                                "HTTP text-body rendering here; use "
-                                "json/json_lines/json_stream)"
-                            )
-                        fmt_opt = fmt_opt.lower()
-                        fmt_map = {
-                            "json": "json",
-                            "json_lines": "lines",
-                            "json_stream": "stream",
-                        }
-                        if fmt_opt not in fmt_map:
-                            raise ConfigError(
-                                f"output 'http' Format {fmt_opt!r} not supported "
-                                "(json/json_lines/json_stream)"
-                            )
-                        # json_date_format default is DOUBLE in the
-                        # reference (http_conf.c:174)
-                        date_fmt = (
-                            s.get("Json_Date_Format", "double").lower()
-                        )
-                        if date_fmt not in ("double", "iso8601"):
-                            raise ConfigError(
-                                f"output 'http' Json_Date_Format {date_fmt!r} "
-                                "not supported (double/iso8601)"
-                            )
-                        env = SK.http_body_transform(
-                            slice_df,
-                            fmt=fmt_map[fmt_opt],
-                            cols=rec_cols,
-                            ts_col=ts_col,
-                            order_col=ts_col,
-                            group_cols=["tag"],
-                            json_date_key=s.get("Json_Date_Key", "date"),
-                            json_date_format=date_fmt,
-                        ).select("body")
-                    elif name == "kinesis_streams":
-                        env = SK.kinesis_records_transform(
-                            slice_df, cols=rec_cols, key_col="tag"
-                        ).select("entry")
-                    elif name == "kinesis_firehose":
-                        env = SK.firehose_records_transform(
-                            slice_df, cols=rec_cols
-                        ).select("entry")
-                    elif name in ("pgsql", "kafka_rest", "nrlogs", "es_bulk"):
-                        if ts_col is None:
-                            raise ConfigError(
-                                f"output {name!r} needs a timestamp column "
-                                "(ts/time/event_time) in the routed records"
-                            )
-                        if name == "pgsql":
-                            env = SK.pgsql_insert_transform(
-                                slice_df,
-                                table=s.get("Table", "fluentbit"),
-                                timestamp_key=s.get("Timestamp_Key", "date"),
-                                cols=rec_cols, ts_col=ts_col,
-                                order_col=ts_col, group_cols=["tag"],
-                            ).select("query")
-                        elif name == "kafka_rest":
-                            env = SK.kafka_rest_records_transform(
-                                slice_df,
-                                time_key=s.get("Time_Key", "@timestamp"),
-                                cols=rec_cols, ts_col=ts_col,
-                                order_col=ts_col, group_cols=["tag"],
-                            ).select("body")
-                        elif name == "nrlogs":
-                            msg = next(
-                                (c for c in ("text", "log", "message")
-                                 if c in slice_df.columns),
-                                None,
-                            )
-                            if msg is None:
-                                raise ConfigError(
-                                    "output 'nrlogs' needs a message column "
-                                    "(text/log/message) in the routed records"
-                                )
-                            env = SK.newrelic_payload_transform(
-                                slice_df, message_col=msg,
-                                attr_cols=[c for c in rec_cols if c != msg],
-                                ts_col=ts_col, order_col=ts_col,
-                                group_cols=["tag"],
-                            ).select("payload")
-                        else:
-                            env = SK.es_bulk_transform(
-                                slice_df,
-                                prefix=s.get("Logstash_Prefix", "logstash"),
-                                cols=rec_cols, ts_col=ts_col,
-                                order_col=ts_col, group_cols=["tag"],
-                            ).select("body")
-                    path = f"{output_base}/{sink_id}"
-                    SK.write_sink(env, path, fmt="text")
-                    results[sink_id] = path
-                elif name in (
-                    "cloudwatch_logs", "bigquery", "azure", "slack",
-                    "logdna", "nats", "stackdriver", "influxdb", "syslog",
-                    "prometheus_exporter", "gelf_chunked",
-                ):
-                    # the remaining real-logic envelopes, reachable from
-                    # a reference-style .conf (their transforms render
-                    # transcript-shaped records; reference plugin dirs
-                    # plugins/out_cloudwatch_logs, out_bigquery,
-                    # out_azure, out_slack, out_logdna, out_nats,
-                    # out_stackdriver, out_influxdb, out_syslog, the
-                    # metrics-exporter exposition, and out_gelf's
-                    # chunked-UDP mode)
-                    from fluent_bit_spark import sinks as SK
-
-                    def _need(*cols, _n=name, _cols=tuple(slice_df.columns)):
-                        missing = [c for c in cols if c not in _cols]
-                        if missing:
-                            raise ConfigError(
-                                f"output {_n!r} needs record columns "
-                                f"{missing} (transcript-shaped input)"
-                            )
-
-                    out_fmt = "text"
-                    if name == "prometheus_exporter":
-                        labels = tuple(
-                            x.strip()
-                            for x in s.get("Labels", "tag").split(",")
-                            if x.strip()
-                        )
-                        _need(*labels)
-                        counts = slice_df.groupBy(
-                            *[F.col(c) for c in labels]
-                        ).agg(F.count("*").alias("n"))
-                        env = SK.prometheus_exposition(
-                            counts,
-                            metric=s.get("Metric", "fbs_records_total"),
-                            label_cols=labels,
-                        ).select("line")
-                    elif name == "cloudwatch_logs":
-                        _need("conv_id", "turn_idx", "role", "text", "ts")
-                        env = SK.cloudwatch_events_transform(
-                            slice_df
-                        ).select("event")
-                    elif name == "bigquery":
-                        _need("conv_id", "turn_idx", "role", "text")
-                        env = SK.bigquery_rows_transform(
-                            slice_df
-                        ).select("payload")
-                    elif name == "slack":
-                        _need("conv_id", "turn_idx", "role", "text", "ts")
-                        env = SK.slack_text_transform(
-                            slice_df
-                        ).select("fragment")
-                    elif name == "syslog":
-                        _need("conv_id", "turn_idx", "text", "ts")
-                        env = SK.syslog_rfc5424_transform(
-                            slice_df,
-                            host_col="host" if "host" in slice_df.columns else None,
-                            app_col="tool" if "tool" in slice_df.columns else None,
-                            severity_col="level" if "level" in slice_df.columns else None,
-                        ).select("line")
-                    elif name == "influxdb":
-                        _need("conv_id", "turn_idx", "text", "ts")
-                        env = SK.influx_line_transform(
-                            slice_df,
-                            measurement=s.get("Measurement", "transcripts"),
-                            tag_cols=tuple(
-                                c for c in ("role", "tool")
-                                if c in slice_df.columns
-                            ),
-                        ).select("line")
-                    elif name == "gelf_chunked":
-                        _need("text")
-                        env = SK.gelf_chunk_plan(
-                            slice_df,
-                            pckt_size=int(s.get("Packet_Size", "8192")),
-                        ).select(
-                            "payload_bytes", "chunked", "n_chunks",
-                            "dropped", "wire_bytes",
-                        )
-                        out_fmt = "json"
-                    elif name == "azure":
-                        _need("conv_id", "turn_idx", "role", "text", "ts")
-                        env = SK.azure_log_transform(
-                            slice_df, log_type=s.get("Log_Type", "fluentbit")
-                        )
-                        out_fmt = "json"
-                    elif name == "logdna":
-                        _need("conv_id", "turn_idx", "role", "text", "ts")
-                        env = SK.logdna_lines_transform(slice_df)
-                        out_fmt = "json"
-                    elif name == "nats":
-                        _need("conv_id", "turn_idx", "role", "text", "ts")
-                        env = SK.nats_pairs_transform(slice_df)
-                        out_fmt = "json"
-                    else:  # stackdriver
-                        _need("conv_id", "turn_idx", "text", "ts")
-                        env = SK.stackdriver_transform(
-                            slice_df,
-                            severity_col="level" if "level" in slice_df.columns else None,
-                        )
-                        out_fmt = "json"
-                    path = f"{output_base}/{sink_id}"
-                    SK.write_sink(env, path, fmt=out_fmt)
-                    results[sink_id] = path
-                else:
-                    raise ConfigError(f"unsupported output plugin {name!r}")
         finally:
-            routed.unpersist()
+            df.unpersist()
         return results
+
+    def _output(
+        self, df: DataFrame, s: Section, sink_id: str, output_base: str | None
+    ) -> object:
+        """One OUTPUT over its Match slice `df`. The aggregate and debug
+        outputs return their value. Every other output renders its
+        envelope and writes it to `<output_base>/<sink_id>`, which it
+        returns: delivery plugins run in batch mode, so the exact
+        envelope lands at the sink path and only the network hop is
+        elided."""
+        name = (s.get("Name") or "").lower()
+        cols = df.columns
+        ts_col = next((c for c in _TS_COLS if c in cols), None)
+        msg_col = next((c for c in _MSG_COLS if c in cols), None)
+        # the record map is every column but the routing tag and the
+        # event time, which envelopes render on their own ([time, map]
+        # event pairs)
+        rec_cols = [c for c in cols if c not in ("tag", ts_col)]
+        resolved = {
+            _TS: ts_col,
+            _MSG: msg_col,
+            _REC: rec_cols[0] if rec_cols else None,
+        }
+
+        def need(*needed: str) -> None:
+            missing = [c for c in needed if resolved.get(c, c) not in cols]
+            if missing:
+                raise ConfigError(
+                    f"output {name!r} needs {', '.join(missing)} in the "
+                    "routed records"
+                )
+
+        if name == "counter":
+            return df.count()
+        if name == "flowcounter":
+            return flowcounter(
+                df.withColumn("sink", F.lit(sink_id)),
+                ["sink", "tag"],
+                window=f"1 {s.get('Unit', 'hour')}",
+                bytes_col=msg_col or df.columns[0],
+            ).collect()
+        if name == "stdout":
+            return df.collect()
+        if name == "null":
+            df.write.format("noop").mode("overwrite").save()
+            return None
+        fmt = "text"
+        if name == "file":
+            fmt = s.get("Format", "json_lines").lower()
+            if fmt in ("json", "json_lines"):
+                env, fmt = SK.to_json_lines(df), "text"
+            elif fmt == "csv":
+                env, fmt = SK.to_csv_lines(df, df.columns), "text"
+            elif fmt == "ltsv":
+                env, fmt = SK.to_ltsv_lines(df, df.columns), "text"
+            elif fmt == "template":
+                env, fmt = SK.to_template_lines(df, s.get("Template", "{time}")), "text"
+            else:
+                env = df
+        elif name == "es":
+            need(_TS)
+            env = SK.to_json_lines(
+                SK.es_logstash_index(
+                    df, prefix=s.get("Logstash_Prefix", "logstash"), ts_col=ts_col
+                )
+            )
+        elif name == "loki":
+            remove = [
+                k.strip() for k in (s.get("Remove_keys") or "").split(",") if k.strip()
+            ]
+            env = SK.to_json_lines(
+                SK.loki_labels(
+                    df,
+                    label_cols=[
+                        c.strip() for c in (s.get("Labels", "tag")).split(",")
+                        if c.strip() in df.columns
+                    ],
+                    remove_keys=remove or None,
+                )
+            )
+        elif name == "splunk":
+            need(_TS)
+            env = SK.to_json_lines(SK.splunk_hec_transform(df, ts_col=ts_col))
+        elif name == "datadog":
+            need(_TS, _MSG)
+            env = SK.to_json_lines(
+                SK.datadog_transform(df, message_col=msg_col, ts_col=ts_col)
+            )
+        elif name == "gelf":
+            need(_TS, _MSG)
+            env = SK.to_json_lines(
+                SK.gelf_transform(
+                    df,
+                    host_col=s.get("Gelf_Host_Key", "tag"),
+                    short_message_col=msg_col,
+                    ts_col=ts_col,
+                )
+            )
+        elif name == "http":
+            need(_REC, _TS)
+            # the reference's default Format is msgpack
+            # (http_conf.c:145 FLB_PACK_JSON_FORMAT_NONE); only the JSON
+            # body family is supported here, so an absent Format is an
+            # explicit error rather than a silent json_lines default
+            fmt_opt = s.get("Format")
+            if fmt_opt is None:
+                raise ConfigError(
+                    "output 'http': Format is required (the reference "
+                    "default is msgpack, which has no HTTP text-body "
+                    "rendering here; use json/json_lines/json_stream)"
+                )
+            fmt_opt = fmt_opt.lower()
+            fmt_map = {"json": "json", "json_lines": "lines", "json_stream": "stream"}
+            if fmt_opt not in fmt_map:
+                raise ConfigError(
+                    f"output 'http' Format {fmt_opt!r} not supported "
+                    "(json/json_lines/json_stream)"
+                )
+            # json_date_format default is DOUBLE in the reference
+            # (http_conf.c:174)
+            date_fmt = s.get("Json_Date_Format", "double").lower()
+            if date_fmt not in ("double", "iso8601"):
+                raise ConfigError(
+                    f"output 'http' Json_Date_Format {date_fmt!r} "
+                    "not supported (double/iso8601)"
+                )
+            env = SK.http_body_transform(
+                df,
+                fmt=fmt_map[fmt_opt],
+                cols=rec_cols,
+                ts_col=ts_col,
+                order_col=ts_col,
+                group_cols=["tag"],
+                json_date_key=s.get("Json_Date_Key", "date"),
+                json_date_format=date_fmt,
+            ).select("body")
+        elif name == "kinesis_streams":
+            need(_REC)
+            env = SK.kinesis_records_transform(
+                df, cols=rec_cols, key_col="tag"
+            ).select("entry")
+        elif name == "kinesis_firehose":
+            need(_REC)
+            env = SK.firehose_records_transform(df, cols=rec_cols).select("entry")
+        elif name == "pgsql":
+            need(_REC, _TS)
+            env = SK.pgsql_insert_transform(
+                df,
+                table=s.get("Table", "fluentbit"),
+                timestamp_key=s.get("Timestamp_Key", "date"),
+                cols=rec_cols, ts_col=ts_col,
+                order_col=ts_col, group_cols=["tag"],
+            ).select("query")
+        elif name == "kafka_rest":
+            need(_REC, _TS)
+            env = SK.kafka_rest_records_transform(
+                df,
+                time_key=s.get("Time_Key", "@timestamp"),
+                cols=rec_cols, ts_col=ts_col,
+                order_col=ts_col, group_cols=["tag"],
+            ).select("body")
+        elif name == "nrlogs":
+            need(_REC, _TS, _MSG)
+            env = SK.newrelic_payload_transform(
+                df, message_col=msg_col,
+                attr_cols=[c for c in rec_cols if c != msg_col],
+                ts_col=ts_col, order_col=ts_col,
+                group_cols=["tag"],
+            ).select("payload")
+        elif name == "es_bulk":
+            need(_REC, _TS)
+            env = SK.es_bulk_transform(
+                df,
+                prefix=s.get("Logstash_Prefix", "logstash"),
+                cols=rec_cols, ts_col=ts_col,
+                order_col=ts_col, group_cols=["tag"],
+            ).select("body")
+        # the transcript-shaped envelopes (reference plugin dirs
+        # plugins/out_cloudwatch_logs, out_bigquery, out_azure,
+        # out_slack, out_logdna, out_nats, out_stackdriver,
+        # out_influxdb, out_syslog, the metrics-exporter exposition,
+        # and out_gelf's chunked-UDP mode)
+        elif name == "prometheus_exporter":
+            labels = tuple(
+                x.strip() for x in s.get("Labels", "tag").split(",") if x.strip()
+            )
+            need(*labels)
+            counts = df.groupBy(*[F.col(c) for c in labels]).agg(
+                F.count("*").alias("n")
+            )
+            env = SK.prometheus_exposition(
+                counts,
+                metric=s.get("Metric", "fbs_records_total"),
+                label_cols=labels,
+            ).select("line")
+        elif name == "cloudwatch_logs":
+            need("conv_id", "turn_idx", "role", "text", "ts")
+            env = SK.cloudwatch_events_transform(df).select("event")
+        elif name == "bigquery":
+            need("conv_id", "turn_idx", "role", "text")
+            env = SK.bigquery_rows_transform(df).select("payload")
+        elif name == "slack":
+            need("conv_id", "turn_idx", "role", "text", "ts")
+            env = SK.slack_text_transform(df).select("fragment")
+        elif name == "syslog":
+            need("conv_id", "turn_idx", "text", "ts")
+            env = SK.syslog_rfc5424_transform(
+                df,
+                host_col="host" if "host" in df.columns else None,
+                app_col="tool" if "tool" in df.columns else None,
+                severity_col="level" if "level" in df.columns else None,
+            ).select("line")
+        elif name == "influxdb":
+            need("conv_id", "turn_idx", "text", "ts")
+            env = SK.influx_line_transform(
+                df,
+                measurement=s.get("Measurement", "transcripts"),
+                tag_cols=tuple(c for c in ("role", "tool") if c in df.columns),
+            ).select("line")
+        elif name == "gelf_chunked":
+            need("text")
+            env = SK.gelf_chunk_plan(
+                df, pckt_size=int(s.get("Packet_Size", "8192"))
+            ).select("payload_bytes", "chunked", "n_chunks", "dropped", "wire_bytes")
+            fmt = "json"
+        elif name == "azure":
+            need("conv_id", "turn_idx", "role", "text", "ts")
+            env = SK.azure_log_transform(df, log_type=s.get("Log_Type", "fluentbit"))
+            fmt = "json"
+        elif name == "logdna":
+            need("conv_id", "turn_idx", "role", "text", "ts")
+            env = SK.logdna_lines_transform(df)
+            fmt = "json"
+        elif name == "nats":
+            need("conv_id", "turn_idx", "role", "text", "ts")
+            env = SK.nats_pairs_transform(df)
+            fmt = "json"
+        elif name == "stackdriver":
+            need("conv_id", "turn_idx", "text", "ts")
+            env = SK.stackdriver_transform(
+                df, severity_col="level" if "level" in df.columns else None
+            )
+            fmt = "json"
+        else:
+            raise ConfigError(f"unsupported output plugin {name!r}")
+        path = f"{output_base}/{sink_id}"
+        SK.write_sink(env, path, fmt=fmt)
+        return path
 
 
 def pipeline_from_file(

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fluent_bit_spark.session import local_frame
+
 
 def data_diff(
     old: DataFrame,
@@ -334,7 +336,7 @@ def schema_compat(
         F.col("has_default").alias("_nd"),
     )
     promo = F.broadcast(
-        spark.createDataFrame(_PROMOTABLE, "_ot string, _nt string")
+        local_frame(spark, _PROMOTABLE, "_ot string, _nt string")
         .withColumn("_promo", F.lit(True))
     )
     j = o.join(n, "field", "full_outer").join(

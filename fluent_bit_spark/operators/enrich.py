@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fluent_bit_spark.session import local_frame
+
 
 def lookup_enrich(
     df: DataFrame,
@@ -437,7 +439,8 @@ def kube_meta_enrich(
     )
     spark = df.sparkSession
     map_t = "map<string,string>"
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             (
                 r["namespace_name"],

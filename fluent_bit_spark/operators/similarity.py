@@ -23,6 +23,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fluent_bit_spark.session import local_frame, persist_tracked
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -387,8 +389,6 @@ def pq_fit(
     per subspace. The seed centroids stay the id < k_codes subvectors
     whether or not they fall in the sample (fixed, oracle-replayable).
     """
-    from fluent_bit_spark.session import persist_tracked
-
     if iters < 1:
         raise ValueError(f"iters must be >= 1 (got {iters})")
     if dim is None:
@@ -508,7 +508,8 @@ def pq_fit(
     codes = prepped.select(
         F.col(id_col), F.explode(code_structs).alias("_sc")
     ).select(id_col, F.col("_sc.sub").alias("sub"), F.col("_sc.code").alias("code"))
-    books = spark.createDataFrame(
+    books = local_frame(
+        spark,
         [
             (s, int(label), [float(x) for x in c])
             for s in range(m)
@@ -872,7 +873,6 @@ def embedding_near_dup_pairs(
     exact cosine verification (cosine >= threshold, id_a < id_b)."""
     if dim is None:
         dim = len(vectors.select(vec_col).first()[0])
-    from fluent_bit_spark.session import persist_tracked
 
     planes = hyperplanes(dim, nbits)
     # persisted (shared registry with dedup; release via
@@ -1110,8 +1110,6 @@ def semantic_dedup(
     pure order on ids — the oracle replays it as an unrolled CTE chain
     plus a within-cluster self-join.
     """
-    from fluent_bit_spark.session import persist_tracked
-
     # reuse the fit's prepared double-array frame — re-preparing from
     # `vectors` would scan/cast/persist the embeddings a second time;
     # the cluster label is the fit's map-only literal expression, so
@@ -1210,8 +1208,6 @@ def _kmeans_fit(
     label_centroids' #labels x dim key shuffle. (The earlier
     DataFrame loop paid a per-id pre-reduced exchange PLUS a corpus
     self-join per round — both corpus-sized at 100 TB.)"""
-    from fluent_bit_spark.session import persist_tracked
-
     if iters < 1:
         raise ValueError(f"iters must be >= 1 (got {iters})")
     # the prepared (id, double-array, norm) frame feeds every round's
@@ -1256,7 +1252,8 @@ def _kmeans_fit(
         best["cluster"].alias("cluster"),
         best["cosine"].alias("cosine"),
     )
-    cents = vectors.sparkSession.createDataFrame(
+    cents = local_frame(
+        vectors.sparkSession,
         [(int(label), [float(x) for x in c]) for label, c in cent_rows],
         "label bigint, centroid array<double>",
     )

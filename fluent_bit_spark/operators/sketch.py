@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.functions.hashing import md5_32
-from fluent_bit_spark.session import persist_tracked
+from fluent_bit_spark.session import local_frame, persist_tracked
 
 # ---------------------------------------------------------------------------
 # Bloom filter
@@ -400,7 +400,7 @@ def _hist_quantiles(
         F.sum("n").over(w_all).alias("n_total"),
     )
     spark = df.sparkSession
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q: double")
+    qdf = local_frame(spark, [(float(q),) for q in qs], "q double")
     hit = qdf.join(
         cum, F.col("cum_n") >= F.ceil(F.col("q") * F.col("n_total"))
     )

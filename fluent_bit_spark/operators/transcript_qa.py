@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.plans.flagship import ROLE_MAP
+from fluent_bit_spark.session import local_frame
 
 
 def norm_role_col(role: Column) -> Column:
@@ -588,8 +589,8 @@ def tool_args_qa(
         (tool, list(req), sorted(set(req) | set(opt)))
         for tool, (req, opt) in sorted(spec.items())
     ]
-    spec_df = spark.createDataFrame(
-        rows, "tool_key string, required array<string>, allowed array<string>"
+    spec_df = local_frame(
+        spark, rows, "tool_key string, required array<string>, allowed array<string>"
     )
     joined = df.join(
         F.broadcast(spec_df), F.col(tool_col) == F.col("tool_key"), "inner"

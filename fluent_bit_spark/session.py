@@ -16,7 +16,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 
 def get_spark(
@@ -47,24 +47,20 @@ def get_spark(
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """`rows` as a JVM-local relation (`LocalTableScan`) with the DDL
-    `schema` ("name type, ..."). `createDataFrame(list)` plans a Python
-    RDD (`Scan ExistingRDD`) instead, whose first job spawns Python
-    workers. The values cross to the JVM as strings and are cast to
-    their declared types there; the cast folds into the relation."""
-    fields = [f.split() for f in schema.split(",")]
-    jvm, gw = spark._jvm, spark.sparkContext._gateway
-    jrows = []
-    for row in rows:
-        values = gw.new_array(jvm.java.lang.Object, len(fields))
-        for i, v in enumerate(row):
-            values[i] = None if v is None else str(v)
-        jrows.append(jvm.org.apache.spark.sql.RowFactory.create(values))
-    strings = jvm.org.apache.spark.sql.types.StructType.fromDDL(
-        ", ".join(f"`{name}` string" for name, _type in fields)
+    """`rows` as a JVM-local relation (`LocalTableScan`) typed by the DDL
+    `schema` ("name type, ..."; quote a name with backticks). The rows
+    cross to the JVM as one Arrow table of the declared types;
+    `createDataFrame(list)` plans a Python RDD (`Scan ExistingRDD`)
+    instead, whose first job spawns Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, row)) for row in rows],
+        schema=to_arrow_schema(struct),
     )
-    df = DataFrame(spark._jsparkSession.createDataFrame(jrows, strings), spark)
-    return df.select(*[F.col(name).cast(t) for name, t in fields])
+    return spark.createDataFrame(table, struct)
 
 
 # frames persisted inside operators (self-joins consume them twice);

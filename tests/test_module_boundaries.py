@@ -7,6 +7,7 @@
   transcripts, the flagship plan) loads a fixed set of package
   modules, so an import added there cannot pull an operator family in
   unnoticed.
+- Driver-side rows become a frame only through `session.local_frame`.
 """
 
 from __future__ import annotations
@@ -102,3 +103,20 @@ def test_core_path_loads_only_core_modules():
     assert loaded == CORE_MODULES, (
         f"extra: {sorted(loaded - CORE_MODULES)}, missing: {sorted(CORE_MODULES - loaded)}"
     )
+
+
+def test_driver_rows_become_frames_only_through_local_frame():
+    """Driver-side rows become a frame only through
+    `session.local_frame`, the one path that plans a JVM-local relation:
+    `createDataFrame(<list>)` plans a Python RDD scan whose first job
+    spawns Python workers."""
+    found = [
+        f"{f.relative_to(REPO)}:{node.lineno}"
+        for f in sorted((REPO / PKG).rglob("*.py"))
+        if f != REPO / PKG / "session.py"
+        for node in ast.walk(ast.parse(f.read_text(), str(f)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+    ]
+    assert not found, "\n".join(found)

@@ -726,19 +726,54 @@ def test_minhash_eval_truth_is_postings_equi_join(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_delivery_plans_start_no_python_workers(spark, sf_dir):
-    """The flagship pipeline and its lookup dims run JVM-only: a Python
-    RDD scan (createDataFrame(list) plans `Scan ExistingRDD`) or a
-    Python UDF node would spawn Python workers on a fresh JVM's first
+def test_delivery_plans_start_no_python_workers(spark, sf_dir, tmp_path):
+    """The flagship pipeline, its lookup dims and a config pipeline's
+    lookup, geoip2 and apm_kubernetes_labels dims run JVM-only: a
+    Python RDD scan (createDataFrame(list) plans `Scan ExistingRDD`) or
+    a Python UDF node would spawn Python workers on a fresh JVM's first
     job."""
+    import json
+
+    from fluent_bit_spark.config import ConfigPipeline
     from fluent_bit_spark.plans.flagship import (
         role_map_dim,
         run_pipeline,
         tool_categories_dim,
     )
 
-    for df in (run_pipeline(spark, sf_dir), tool_categories_dim(spark), role_map_dim(spark)):
+    (tmp_path / "lookup.csv").write_text("a,hit\n")
+    (tmp_path / "ranges.csv").write_text("0,100,country,US\n")
+    (tmp_path / "pods.json").write_text(
+        json.dumps({"web-1": {"snappyflow/projectname": "proj-a"}})
+    )
+    cfg = f"""
+[INPUT]
+    Name dummy
+    Dummy {{"message": "m", "score": 42, "pod_name": "web-1"}}
+    Samples 2
+    Tag a
+[FILTER]
+    Name lookup
+    Match *
+    Lookup_file {tmp_path / "lookup.csv"}
+[FILTER]
+    Name geoip2
+    Match *
+    Ranges_file {tmp_path / "ranges.csv"}
+    Lookup_key score
+[FILTER]
+    Name apm_kubernetes_labels
+    Match *
+    mapping_path {tmp_path / "pods.json"}
+"""
+    frames = (
+        run_pipeline(spark, sf_dir),
+        tool_categories_dim(spark),
+        role_map_dim(spark),
+        ConfigPipeline(cfg).frame(spark),
+    )
+    for df in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
         for node in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython"):
             assert node not in plan, plan
-    assert "LocalTableScan" in plan
+    assert "LocalTableScan" in plan, plan

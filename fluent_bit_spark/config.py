@@ -344,6 +344,8 @@ _MSG_COLS = ("text", "log", "message")
 _TS = f"a timestamp column ({'/'.join(_TS_COLS)})"
 _MSG = f"a message column ({'/'.join(_MSG_COLS)})"
 _REC = "a record column (any column but tag and the timestamp)"
+# outputs that return their value instead of writing under output_base
+_VALUE_OUTPUTS = ("counter", "flowcounter", "stdout", "null")
 
 
 class ConfigPipeline:
@@ -1029,15 +1031,26 @@ class ConfigPipeline:
     ) -> dict[str, object]:
         """Deliver every OUTPUT: each gets the post-filter records its
         Match selects (records no output matches are dropped); returns
-        {`<name>_<i>`: count, rows, or written path}."""
-        outputs = [s for s in self.sections if s.kind == "OUTPUT"]
-        if not outputs:
+        {`<name>_<i>`: count, rows, or written path}. An output that
+        writes files without an `output_base` is a ConfigError, raised
+        before anything runs."""
+        sections = [s for s in self.sections if s.kind == "OUTPUT"]
+        if not sections:
             raise ConfigError("config needs at least one OUTPUT")
+        outputs = {
+            (s.get("Name") or "x") + f"_{i}": s for i, s in enumerate(sections)
+        }
+        if output_base is None:
+            for sink_id, s in outputs.items():
+                if (s.get("Name") or "").lower() not in _VALUE_OUTPUTS:
+                    raise ConfigError(
+                        f"output {sink_id!r} writes files and needs an "
+                        "output_base"
+                    )
         df = self.frame(spark).persist()
         results: dict[str, object] = {}
         try:
-            for i, s in enumerate(outputs):
-                sink_id = (s.get("Name") or "x") + f"_{i}"
+            for sink_id, s in outputs.items():
                 results[sink_id] = self._output(
                     df.filter(_match_predicate(s.get("Match", "*"))),
                     s,

@@ -8,9 +8,15 @@ Reference semantics (SURVEY.md §2.4):
   evaluated as a `rlike` predicate per sink.
 - route mask: the set of sinks a record matches, computed once; a
   record can match many sinks (copy fan-out), zero matches => dropped
-  (src/flb_routes_mask.c:18-60). Here: `routes` array<string> column
-  + `explode(routes)`, one row per (record, sink), which feeds both
-  the one-job partitioned sink write and the per-sink aggregates.
+  (src/flb_routes_mask.c:18-60). Here: a `routes` array<string>
+  column built by `concat` of one `when(pred, [name])` term per sink
+  (compiled, no lambda), a drop rule that is the OR of the sinks'
+  predicates, and `explode_routes`, one row per (record, sink), which
+  feeds both the one-job partitioned sink write and the per-sink
+  aggregates. The explode is `explode_outer` plus a non-NULL filter on
+  the sink: for a plain `explode` Spark infers `size(routes) > 0` and
+  pushes it below the tag projections, which re-evaluates the tag
+  chain per sink; a filter on the generator's output stays above it.
 - rewrite_tag (plugins/filter_rewrite_tag/rewrite_tag.c:287-334):
   per rule (condition, new-tag template, keep); matching records are
   re-emitted under the new tag — `keep=True` keeps the original too
@@ -105,25 +111,52 @@ def rewrite_tag(df: DataFrame, rules: list[RewriteRule]) -> DataFrame:
     return df
 
 
-def route_mask(df: DataFrame, sinks: list[tuple[str, str]]) -> DataFrame:
-    """Compute `routes: array<string>` = sinks whose Match glob matches
-    the record's tag. Zero matches => record dropped (reference drops
-    chunks with an empty route mask)."""
-    matches = F.array(
+def _matched_sinks(tag: Column, sinks: list[tuple[str, str]]) -> Column:
+    """`array<string>` of the names of the sinks whose Match glob matches
+    `tag`, in sink order: a `concat` of one `when(pred, [name])` /
+    empty-array term per sink. It compiles (no lambda) and is never
+    NULL; a NULL predicate (NULL tag) counts as no match."""
+    empty = F.array().cast("array<string>")
+    if not sinks:
+        return empty
+    return F.concat(
         *[
-            F.when(glob_predicate(F.col("tag"), glob), F.lit(name))
+            F.when(glob_predicate(tag, glob), F.array(F.lit(name))).otherwise(empty)
             for name, glob in sinks
         ]
     )
-    df = df.withColumn("routes", F.filter(matches, lambda x: x.isNotNull()))
-    return df.filter(F.size("routes") > 0)
+
+
+def route_mask(df: DataFrame, sinks: list[tuple[str, str]]) -> DataFrame:
+    """Compute `routes: array<string>` = sinks whose Match glob matches
+    the record's tag. Zero matches => record dropped (reference drops
+    chunks with an empty route mask). The drop rule is the OR of the
+    sinks' predicates rather than `size(routes) > 0`: a name is in
+    `routes` exactly when its predicate is true, and a `*` sink over a
+    non-NULL tag lets Catalyst fold the filter away."""
+    tag = F.col("tag")
+    keep = F.lit(False)
+    for _name, glob in sinks:
+        keep = keep | glob_predicate(tag, glob)
+    return df.withColumn("routes", _matched_sinks(tag, sinks)).filter(keep)
 
 
 def explode_routes(df: DataFrame) -> DataFrame:
     """One row per (record, matched sink), the sink in column `sink` —
     the copy fan-out as rows, shared by the sink write and the per-sink
-    aggregates."""
-    return df.withColumn("sink", F.explode("routes"))
+    aggregates. Records whose `routes` is empty or NULL give no row, as
+    with `explode` (`routes` never holds a NULL name).
+
+    Written as `explode_outer` plus a filter on the generated `sink`:
+    for a plain `explode`, Spark's `InferFiltersFromGenerate` adds
+    `size(routes) > 0 AND isnotnull(routes)` under the Generate, and
+    predicate pushdown then inlines that condition through the tag
+    projections (the tag CASE chain and rewrite_tag's regex once per
+    sink). A filter on the generator's output cannot be pushed below
+    it."""
+    return df.withColumn("sink", F.explode_outer("routes")).filter(
+        F.col("sink").isNotNull()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -196,18 +229,9 @@ def route_diff(
     """
     tags = df.groupBy(tag_col).agg(F.count(F.lit(1)).alias("n_rows"))
 
-    def routes(sinks) -> Column:
-        matches = F.array(
-            *[
-                F.when(glob_predicate(F.col(tag_col), glob), F.lit(name))
-                for name, glob in sinks
-            ]
-        )
-        return F.array_sort(F.filter(matches, lambda x: x.isNotNull()))
-
-    staged = tags.withColumn("_ra", routes(sinks_old)).withColumn(
-        "_rb", routes(sinks_new)
-    )
+    staged = tags.withColumn(
+        "_ra", F.array_sort(_matched_sinks(F.col(tag_col), sinks_old))
+    ).withColumn("_rb", F.array_sort(_matched_sinks(F.col(tag_col), sinks_new)))
     verdict = (
         F.when(F.col("_ra") == F.col("_rb"), F.lit("unchanged"))
         .when(F.size("_rb") == 0, F.lit("newly_dropped"))

@@ -144,6 +144,27 @@ def test_file_output_json_lines(spark, tmp_path):
     assert len(lines) == 3 and all('"message":"hello"' in l for l in lines)
 
 
+def test_file_output_without_output_base_is_config_error(spark):
+    """A writing output with no output_base fails naming the output,
+    before anything runs, instead of writing under a relative `None/`
+    directory."""
+    cfg = """
+[INPUT]
+    Name dummy
+    Dummy {"message": "hello"}
+    Samples 1
+    Tag f.x
+[OUTPUT]
+    Name counter
+    Match *
+[OUTPUT]
+    Name file
+    Match *
+"""
+    with pytest.raises(ConfigError, match="'file_1'.*output_base"):
+        ConfigPipeline(cfg).run(spark)
+
+
 def test_lua_callable(spark):
     def double(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.concat([pdf, pdf])

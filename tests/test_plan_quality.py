@@ -41,6 +41,33 @@ def test_flowcounter_single_exchange_with_partial_agg(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2
 
 
+def test_route_stage_filters_only_non_null_keys(spark, sf_dir):
+    """Routing costs one compiled evaluation of the tag: no lambda
+    (the route mask is a `concat`, not an array `filter`) and no filter
+    that re-evaluates the tag chain per sink (rewrite_tag's RLIKE, a
+    sink's StartsWith) pushed below the projections. The `*` sink folds
+    the OR-of-globs drop rule away, and the explode's non-NULL filter
+    stays above the Generate."""
+    from fluent_bit_spark.operators.aggregate import flowcounter
+    from fluent_bit_spark.operators.route import explode_routes
+    from fluent_bit_spark.plans.flagship import run_pipeline
+
+    agg = flowcounter(explode_routes(run_pipeline(spark, sf_dir)), ["sink", "tag"])
+    plan = agg._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in plan, plan
+    conds = [
+        m.group(1).strip()
+        for m in re.finditer(r"\bFilter (.*)$", plan, flags=re.MULTILINE)
+    ]
+    assert conds, plan
+    for cond in conds:
+        assert "RLIKE" not in cond and "StartsWith" not in cond, cond
+    assert {re.sub(r"#\d+", "", c) for c in conds} == {
+        "isnotnull(ts)",
+        "isnotnull(sink)",
+    }, conds
+
+
 def test_scan_pushdown_and_pruning(spark, sf_dir):
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     q = events.filter(F.col("event_type") == "error").select("event_id", "value")

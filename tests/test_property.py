@@ -210,11 +210,12 @@ def test_modify_matches_python_oracle(spark, rules, cond, rows):
 # --- glob predicate ≡ anchored-regex form -----------------------------------
 
 _tagchar = st.from_regex(r"[A-Za-z0-9_.*-]{0,12}", fullmatch=True)
+_glob = st.from_regex(r"[A-Za-z0-9_.*-]{0,8}", fullmatch=True)
 
 
 @SET
 @given(
-    glob=st.from_regex(r"[A-Za-z0-9_.*-]{0,8}", fullmatch=True),
+    glob=_glob,
     tags=st.lists(st.one_of(st.none(), _tagchar), min_size=1, max_size=8),
 )
 def test_glob_predicate_equals_regex_form(spark, glob, tags):
@@ -239,6 +240,71 @@ def test_glob_predicate_equals_regex_form(spark, glob, tags):
         ).collect()
     }
     assert fast == slow
+
+
+# --- route mask ≡ the array-filter form -------------------------------------
+
+
+def _route_mask_array_filter(df, sinks):
+    """Reference form of `route_mask`: an array of `when(pred, name)`
+    per sink with its NULLs filtered out by a lambda, and rows with an
+    empty array dropped."""
+    from pyspark.sql import functions as F
+
+    from fluent_bit_spark.operators.route import glob_predicate
+
+    matches = F.array(
+        *[
+            F.when(glob_predicate(F.col("tag"), glob), F.lit(name))
+            for name, glob in sinks
+        ]
+    )
+    df = df.withColumn("routes", F.filter(matches, lambda x: x.isNotNull()))
+    return df.filter(F.size("routes") > 0)
+
+
+@SET
+@given(
+    globs=st.lists(st.one_of(st.just("*"), _glob), min_size=0, max_size=4),
+    tags=st.lists(st.one_of(st.none(), _tagchar), min_size=1, max_size=8),
+)
+def test_route_mask_equals_array_filter_form(spark, globs, tags):
+    """The `concat` route mask with the OR-of-globs drop rule keeps the
+    same rows, with element-for-element equal `routes`, as the
+    array-filter form, for any tags (NULL included) and any glob list
+    (with and without `*`, and empty)."""
+    from fluent_bit_spark.operators.route import route_mask
+
+    sinks = [(f"s{i}", g) for i, g in enumerate(globs)]
+    df = spark.createDataFrame(list(enumerate(tags)), "i int, tag string")
+
+    def rows(routed):
+        return sorted((r.i, r.tag, list(r.routes)) for r in routed.collect())
+
+    assert rows(route_mask(df, sinks)) == rows(_route_mask_array_filter(df, sinks))
+
+
+@SET
+@given(
+    st.lists(
+        st.one_of(st.none(), st.lists(st.sampled_from(["a", "b", "c"]), max_size=3)),
+        min_size=1,
+        max_size=8,
+    )
+)
+def test_explode_routes_equals_explode(spark, routes):
+    """`explode_outer` plus the non-NULL sink filter gives the rows of
+    `explode`: none for an empty or NULL `routes`, one per name
+    otherwise."""
+    from pyspark.sql import functions as F
+
+    from fluent_bit_spark.operators.route import explode_routes
+
+    df = spark.createDataFrame(list(enumerate(routes)), "i int, routes array<string>")
+    got = explode_routes(df)
+    want = df.withColumn("sink", F.explode("routes"))
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
 
 
 _words = st.lists(

@@ -676,7 +676,7 @@ def _q_journal_source(spark, sf_dir):
         F.concat(F.lit("_PID="), (F.col("turn_idx") + 1000).cast("string")),
         F.concat(
             F.lit("__REALTIME_TIMESTAMP="),
-            F.unix_micros(F.col("ts").cast("timestamp_ltz")).cast("string"),
+            F.unix_micros(F.col("ts")).cast("string"),
         ),
         F.lit(""),
     )
@@ -938,7 +938,6 @@ def _drain_stream(
     build,
     name: str,
     output_mode: str = "complete",
-    schema=None,
 ) -> DataFrame:
     """Run a streaming computation over `frame` through the real
     Structured Streaming engine: materialize the batch frame to a temp
@@ -950,12 +949,10 @@ def _drain_stream(
     import shutil
     import tempfile
 
-    from fluent_bit_spark.streaming import streaming_transcripts
-
     tmp = tempfile.mkdtemp(prefix=f"fbs_{name}_src_")
     try:
         frame.write.mode("overwrite").parquet(tmp)
-        src = streaming_transcripts(spark, tmp, schema or frame.schema)
+        src = spark.readStream.schema(frame.schema).parquet(tmp)
         spark.catalog.dropTempView(name)
         q = (
             build(src)
@@ -973,25 +970,6 @@ def _drain_stream(
     return spark.table(name)
 
 
-def _drain_transcript_stream(
-    spark, sf_dir, build, name: str, output_mode: str = "complete"
-) -> DataFrame:
-    """_drain_stream over the derived transcript table. The staged
-    parquet is re-read with TRANSCRIPT_SCHEMA's TIMESTAMP (LTZ) ts so
-    watermarks apply (the derived frame carries TIMESTAMP_NTZ, which
-    the streaming engine rejects as an event-time column)."""
-    from fluent_bit_spark.transcripts import TRANSCRIPT_SCHEMA
-
-    return _drain_stream(
-        spark,
-        _transcripts(spark, sf_dir),
-        build,
-        name,
-        output_mode,
-        schema=TRANSCRIPT_SCHEMA,
-    )
-
-
 def _q_streaming_enrich(spark, sf_dir):
     """Driver-gated STREAMING query: the flagship parse + enrich
     stages run UNCHANGED through the streaming engine — map-only regex
@@ -1001,9 +979,9 @@ def _q_streaming_enrich(spark, sf_dir):
     bit-for-bit because the plan is the same code."""
     from fluent_bit_spark.plans.flagship import enrich_stage, parse_stage
 
-    return _drain_transcript_stream(
+    return _drain_stream(
         spark,
-        sf_dir,
+        _transcripts(spark, sf_dir),
         lambda src: enrich_stage(parse_stage(src), spark).select(
             "conv_id",
             "turn_idx",
@@ -1025,9 +1003,9 @@ def _q_streaming_hll(spark, sf_dir):
     closed-form register math as hll_hourly."""
     from fluent_bit_spark.streaming import windowed_hll
 
-    return _drain_transcript_stream(
+    return _drain_stream(
         spark,
-        sf_dir,
+        _transcripts(spark, sf_dir),
         lambda src: windowed_hll(src, "conv_id", window="1 hour"),
         "fbs_streaming_hll",
     )
@@ -1042,9 +1020,9 @@ def _q_streaming_cms(spark, sf_dir):
     math."""
     from fluent_bit_spark.streaming import windowed_cms
 
-    return _drain_transcript_stream(
+    return _drain_stream(
         spark,
-        sf_dir,
+        _transcripts(spark, sf_dir),
         lambda src: windowed_cms(src, "tool", window="1 hour"),
         "fbs_streaming_cms",
     )
@@ -1060,9 +1038,9 @@ def _q_streaming_sessions(spark, sf_dir):
     Oracle = the sessions_per_conv closed-form gap cumsum."""
     from fluent_bit_spark.streaming import session_stats
 
-    sessions = _drain_transcript_stream(
+    sessions = _drain_stream(
         spark,
-        sf_dir,
+        _transcripts(spark, sf_dir),
         lambda src: session_stats(src, "conv_id", gap="2 hours"),
         "fbs_streaming_sessions",
     )
@@ -1118,11 +1096,10 @@ def _q_streaming_dedup(spark, sf_dir):
     from fluent_bit_spark.streaming import dedup_stateful
 
     from fluent_bit_spark.session import persist_tracked
-    from fluent_bit_spark.transcripts import TRANSCRIPT_SCHEMA
 
     t = persist_tracked(_transcripts(spark, sf_dir))
     dupes = t.filter(F.col("turn_idx") % 5 == 0)
-    out = _drain_stream(
+    return _drain_stream(
         spark,
         t.unionByName(dupes),
         lambda src: dedup_stateful(
@@ -1130,11 +1107,7 @@ def _q_streaming_dedup(spark, sf_dir):
         ),
         "fbs_streaming_dedup",
         output_mode="append",
-        schema=TRANSCRIPT_SCHEMA,
     )
-    # the watermark needed an LTZ ts; hand back the pipeline's NTZ
-    # convention (wall-clock identical under the fixed UTC session)
-    return out.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
 def _q_streaming_throttle(spark, sf_dir):
@@ -1166,7 +1139,7 @@ def _q_streaming_throttle(spark, sf_dir):
         spark,
         lines,
         lambda src: throttle_stateful(
-            src, key_col="conv_id", rate_per_sec=0.5, burst=2, ts_col="ts"
+            src, key_col="conv_id", rate_per_sec=0.5, burst=2
         ),
         "fbs_streaming_throttle",
         output_mode="append",
@@ -1818,7 +1791,7 @@ def _q_interval_overlap(spark, sf_dir):
         F.concat(
             F.col("conv_id"),
             F.lit("#"),
-            F.unix_micros(F.col("session_start").cast("timestamp_ltz")).cast("string"),
+            F.unix_micros(F.col("session_start")).cast("string"),
         ).alias("session_id"),
         F.col("session_start").alias("s"),
         F.col("session_end").alias("e"),
@@ -2250,7 +2223,7 @@ def _q_statsd_agg(spark, sf_dir):
     lines = statsd_lines_from_transcripts(_transcripts(spark, sf_dir))
     okey = F.concat(
         F.lpad(
-            F.unix_micros(F.col("ts").cast("timestamp_ltz")).cast("string"),
+            F.unix_micros(F.col("ts")).cast("string"),
             20,
             "0",
         ),
@@ -3095,10 +3068,9 @@ def _q_msgpack_wire_jvm(spark, sf_dir):
     arithmetic."""
     from fluent_bit_spark.functions.wire_expr import turn_event_bytes
 
-    t = _transcripts(spark, sf_dir)
-    return turn_event_bytes(
-        t.withColumn("ts", F.col("ts").cast("timestamp"))
-    ).select("conv_id", "turn_idx", "n_bytes")
+    return turn_event_bytes(_transcripts(spark, sf_dir)).select(
+        "conv_id", "turn_idx", "n_bytes"
+    )
 
 
 def _q_avro_wire_jvm(spark, sf_dir):
@@ -3111,10 +3083,9 @@ def _q_avro_wire_jvm(spark, sf_dir):
     the exact per-row wire size from the varint closed form."""
     from fluent_bit_spark.functions.wire_expr import avro_turn_bytes
 
-    t = _transcripts(spark, sf_dir)
-    return avro_turn_bytes(
-        t.withColumn("ts", F.col("ts").cast("timestamp"))
-    ).select("conv_id", "turn_idx", "n_bytes")
+    return avro_turn_bytes(_transcripts(spark, sf_dir)).select(
+        "conv_id", "turn_idx", "n_bytes"
+    )
 
 
 def _q_forward_wire_jvm(spark, sf_dir):
@@ -3129,8 +3100,7 @@ def _q_forward_wire_jvm(spark, sf_dir):
     array headers)."""
     from fluent_bit_spark.functions.wire_expr import forward_message_bytes
 
-    r = _routed(spark, sf_dir).withColumn("ts", F.col("ts").cast("timestamp"))
-    return forward_message_bytes(r).select(
+    return forward_message_bytes(_routed(spark, sf_dir)).select(
         "tag", "conv_id", "n_events", "msg_bytes"
     )
 

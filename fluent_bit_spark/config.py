@@ -1095,10 +1095,12 @@ class ConfigPipeline:
         if name == "counter":
             return df.count()
         if name == "flowcounter":
+            need(_TS)
             return flowcounter(
                 df.withColumn("sink", F.lit(sink_id)),
                 ["sink", "tag"],
                 window=f"1 {s.get('Unit', 'hour')}",
+                ts=ts_col,
                 bytes_col=msg_col or df.columns[0],
             ).collect()
         if name == "stdout":

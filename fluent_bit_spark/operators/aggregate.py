@@ -126,6 +126,8 @@ def rate_anomalies(
     Scale shape: one shuffle to the (key, hour) aggregate (map-side
     partial), then a per-key ordered window over tiny hourly rows.
     """
+    from pyspark.sql import Window
+
     # NULL timestamps have no hour bucket — drop them up front (engines
     # disagree on NULL placement in window ORDER BY: Spark NULLS FIRST,
     # DuckDB NULLS LAST, so keeping them would also break the oracle)
@@ -134,20 +136,6 @@ def rate_anomalies(
         .groupBy(F.col(key), F.date_trunc("hour", F.col(ts_col)).alias("hour"))
         .agg(F.count("*").alias("n"))
     )
-    return rate_anomalies_hourly(hourly, key, window_hours, z_threshold)
-
-
-def rate_anomalies_hourly(
-    hourly: DataFrame,
-    key: str = "event_type",
-    window_hours: int = 6,
-    z_threshold: float = 3.0,
-) -> DataFrame:
-    """rate_anomalies over a pre-bucketed (key, hour, n) table — the
-    shared core the batch operator and the streaming foreachBatch sink
-    both call, so stream and batch verdicts are the same expressions."""
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy(key)
         .orderBy("hour")

@@ -717,13 +717,9 @@ def reply_latency(
     ).select(
         conv_col,
         idx_col,
-        (
-            # transcripts carry TIMESTAMP_NTZ; unix_micros wants LTZ.
-            # The session TZ is pinned UTC, and this is a difference,
-            # so the conversion cancels exactly either way.
-            F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
-            - F.unix_micros(F.col("_prev_ts").cast("timestamp_ltz"))
-        ).alias("wait_us"),
+        (F.unix_micros(F.col(ts_col)) - F.unix_micros(F.col("_prev_ts"))).alias(
+            "wait_us"
+        ),
     )
 
 

@@ -5,8 +5,11 @@ batch plans in plans/flagship.py are the primary deliverable per the
 north rule, and this module runs the same stages as a Structured
 Streaming job:
 
-- source: readStream (files/kafka/socket; tests drive with a parquet
-  directory + processAllAvailable).
+- source: transcripts.streaming_transcripts, a parquet directory read
+  as TRANSCRIPT_SCHEMA (tests drive it with processAllAvailable). The
+  record's event time is its `ts` column, as in the reference's
+  `[ts, map]` pair, so the event-time operators here take no time
+  column name.
 - parse/enrich/route: the exact same stage functions — they are pure
   column transforms, so they compose with streaming frames unchanged.
 - windowed aggregates: event-time windows + watermark (the reference's
@@ -28,11 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def streaming_transcripts(spark: SparkSession, path: str, schema) -> DataFrame:
-    """File-based streaming source over a transcript directory."""
-    return spark.readStream.schema(schema).parquet(path)
 
 
 def streaming_pipeline(spark: SparkSession, source: DataFrame) -> DataFrame:
@@ -62,7 +60,6 @@ def session_stats(
     key_col: str = "conv_id",
     gap: str = "30 minutes",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Streaming sessionization: native session_window (gap-merged
     event-time sessions) per conversation with a watermark bounding
@@ -75,10 +72,10 @@ def session_stats(
     and merges/extends it as events arrive, evicting sessions older
     than the watermark — bounded state at any scale, no custom
     stateful UDF needed."""
-    src = routed.withWatermark(ts_col, watermark) if routed.isStreaming else routed
+    src = routed.withWatermark("ts", watermark) if routed.isStreaming else routed
     return (
         src.groupBy(
-            F.col(key_col), F.session_window(F.col(ts_col), gap).alias("sw")
+            F.col(key_col), F.session_window("ts", gap).alias("sw")
         )
         .agg(F.count("*").alias("n_turns"))
         .select(
@@ -95,7 +92,6 @@ def windowed_hll(
     value_col: str = "conv_id",
     window: str = "1 hour",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
     p: int = 10,
 ) -> DataFrame:
     """Streaming per-window distinct-count HLL registers: the sketch
@@ -114,10 +110,10 @@ def windowed_hll(
     from fluent_bit_spark.operators.sketch import hll_bucket_rho
 
     bucket, rho = hll_bucket_rho(value_col, p)
-    src = df.withWatermark(ts_col, watermark) if df.isStreaming else df
+    src = df.withWatermark("ts", watermark) if df.isStreaming else df
     return (
         src.filter(F.col(value_col).isNotNull())
-        .groupBy(F.window(ts_col, window).alias("w"), bucket.alias("bucket"))
+        .groupBy(F.window("ts", window).alias("w"), bucket.alias("bucket"))
         .agg(F.max(rho).alias("max_rho"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -132,7 +128,6 @@ def dedup_stateful(
     df: DataFrame,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Streaming exact dedup: keep the first arrival per key, catching
     duplicates ACROSS micro-batches — the streaming analog of the
@@ -146,7 +141,7 @@ def dedup_stateful(
     watermark are NOT caught — that is the documented contract (late
     exact dedup at unbounded horizons is a batch backfill job).
     """
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         list(key_cols)
     )
 
@@ -156,7 +151,6 @@ def windowed_cms(
     key_col: str = "tool",
     window: str = "1 hour",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
     depth: int = 4,
     width: int = 512,
 ) -> DataFrame:
@@ -175,12 +169,12 @@ def windowed_cms(
     """
     from fluent_bit_spark.operators.sketch import cms_probes
 
-    src = df.withWatermark(ts_col, watermark) if df.isStreaming else df
+    src = df.withWatermark("ts", watermark) if df.isStreaming else df
     return (
         src.filter(F.col(key_col).isNotNull())
-        .select(F.col(ts_col), cms_probes(key_col, depth, width))
-        .select(F.col(ts_col), F.col("pr.seed").alias("seed"), F.col("pr.pos").alias("pos"))
-        .groupBy(F.window(ts_col, window).alias("w"), "seed", "pos")
+        .select("ts", cms_probes(key_col, depth, width))
+        .select("ts", F.col("pr.seed").alias("seed"), F.col("pr.pos").alias("pos"))
+        .groupBy(F.window("ts", window).alias("w"), "seed", "pos")
         .agg(F.count("*").alias("cnt"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -292,7 +286,6 @@ def throttle_stateful(
     key_col: str,
     rate_per_sec: float,
     burst: int,
-    ts_col: str = "ts",
 ):
     """Streaming rate limit: per-key token bucket kept in the state
     store (applyInPandasWithState). Emits only rows that acquire a
@@ -319,9 +312,9 @@ def throttle_stateful(
             chunks[0]
             if len(chunks) == 1
             else pd.concat(chunks, ignore_index=True)
-        ).sort_values(ts_col)
+        ).sort_values("ts")
         keep_idx = []
-        for i, t in zip(pdf.index, pdf[ts_col]):
+        for i, t in zip(pdf.index, pdf["ts"]):
             now = t.timestamp()
             if last:
                 tokens = min(float(burst), tokens + (now - last) * rate_per_sec)
@@ -342,7 +335,6 @@ def late_data_report(
     df,
     delay_s,
     watermark_s: int = 600,
-    ts_col: str = "ts",
 ):
     """Watermark lateness accounting: given the event time and a
     transport-delay column (arrival = event + delay), report per
@@ -356,7 +348,7 @@ def late_data_report(
     """
     from pyspark.sql import functions as F
 
-    arrival = F.timestamp_add("SECOND", delay_s.cast("long"), F.col(ts_col))
+    arrival = F.timestamp_add("SECOND", delay_s.cast("long"), F.col("ts"))
     staged = df.select(
         F.date_trunc("hour", arrival).alias("proc_hour"),
         (delay_s.cast("long") > F.lit(watermark_s)).cast("long").alias("_late"),

@@ -6,6 +6,12 @@ multi-turn conversation transcripts:
     conv_id:string, turn_idx:int, role:string, text:string,
     tool:string, ts:timestamp
 
+This module alone decides that row type, `TRANSCRIPT_SCHEMA`: each
+entry point (`read_transcripts`, `streaming_transcripts`,
+`load_transcripts`) yields exactly its names, order and types. A `ts`
+stored as `timestamp_ntz` is read as `timestamp`; any other missing or
+mistyped column raises ValueError before a job runs.
+
 In production this table is read directly (`read_transcripts`). For
 tests/benchmarks the driver only ships a TPC-H-ish star schema plus an
 `events` table, so we *derive* transcripts deterministically from
@@ -38,6 +44,7 @@ so Spark and DuckDB render identical strings.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,6 +59,8 @@ TRANSCRIPT_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType()),
     ]
 )
+
+_DECLARED = [(f.name, f.dataType) for f in TRANSCRIPT_SCHEMA]
 
 TABLES = [
     "region",
@@ -128,38 +137,51 @@ def transcripts_sql(dialect: str, events: str = "events") -> str:
     return sql.replace("<LB>", "{").replace("<RB>", "}")
 
 
-def load_transcripts(
-    spark: SparkSession, sf_dir: str, replicate: int = 1, hot_factor: int = 0
-) -> DataFrame:
+def _conform(df: DataFrame) -> DataFrame:
+    """`df` as TRANSCRIPT_SCHEMA. A timestamp_ntz `ts` is cast to
+    timestamp (same wall clock under the UTC session zone); any other
+    missing or mistyped column raises ValueError. A conforming frame
+    comes back as is, plan unchanged. Nullability is Spark's to derive:
+    the derivation's non-null `turn_idx` and `role` conform."""
+    found = {f.name: f.dataType for f in df.schema}
+    for name, want in _DECLARED:
+        got = found.get(name)
+        if got != want and not (name == "ts" and got == T.TimestampNTZType()):
+            raise ValueError(
+                f"transcript column {name!r} is {got.simpleString() if got else 'missing'}, "
+                f"declared {want.simpleString()}"
+            )
+    if list(found.items()) == _DECLARED:
+        return df
+    return df.select(*[F.col(name).cast(want).alias(name) for name, want in _DECLARED])
+
+
+def load_transcripts(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame:
     """Derive the transcript DataFrame from `events` at `sf_dir`.
 
-    The window rank shuffles once by user_id; at production scale the
-    table is read pre-materialized (`read_transcripts`) instead.
+    `events` is read with its declared types, so `ts` is a timestamp
+    however the file stores it. The window rank shuffles once by
+    user_id; at production scale the table is read pre-materialized
+    (`read_transcripts`) instead.
 
     `replicate` > 1 replicates the events `replicate`x (distinct
     event_ids and shifted ts, same grammar mix) to reach benchmark row
-    counts. `hot_factor` > 0 adds Zipf-style conversation skew
-    (FIXTURES.md §1): every 20th conversation receives `hot_factor`x
-    extra replicas, so a few conversations hold a disproportionate
-    share of turns, exercising the salting/skew paths. Both are
-    deterministic; the oracle-checked correctness path uses the
-    defaults, where the derivation is dialect-exact.
+    counts, deterministically; the oracle-checked correctness path uses
+    the default, where the derivation is dialect-exact.
     """
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if replicate > 1 or hot_factor > 0:
+    events = spark.read.schema(
+        "event_id long, ts timestamp, user_id long, event_type string, value double"
+    ).parquet(f"{sf_dir}/events.parquet")
+    if replicate > 1:
         n = events.agg(F.max("event_id")).collect()[0][0] + 1
-        reps = F.when(
-            (F.col("user_id") % 20 == 0) & (F.lit(hot_factor) > 0),
-            F.lit(replicate * max(hot_factor, 1)),
-        ).otherwise(F.lit(replicate))
         events = (
-            events.withColumn("rep", F.explode(F.sequence(F.lit(0), reps - 1)))
+            events.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicate - 1))))
             .withColumn("event_id", F.col("event_id") + F.col("rep") * F.lit(n))
             .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("rep") * 7 + F.col("event_id") % 13))
             .drop("rep")
         )
     events.createOrReplaceTempView("events")
-    return spark.sql(transcripts_sql("spark"))
+    return _conform(spark.sql(transcripts_sql("spark")))
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -185,7 +207,9 @@ def iceberg_available(spark: SparkSession) -> bool:
 def read_transcripts(
     spark: SparkSession, path: str, table_format: str = "parquet"
 ) -> DataFrame:
-    """Production path: read a materialized transcript table.
+    """Production path: read a materialized transcript table, infer its
+    schema and conform it. (Reading with the declared schema skips the
+    schema job, but the first query over the frame then pays as much.)
 
     table_format='iceberg' reads through the Iceberg connector — an
     EXPLICIT gate (NotImplementedError when the runtime jar is absent,
@@ -205,5 +229,19 @@ def read_transcripts(
                 "table_format='parquet' (manifest-based resume) or add "
                 "org.apache.iceberg:iceberg-spark-runtime to spark.jars"
             )
-        return spark.read.format("iceberg").load(path)
-    return spark.read.parquet(path)
+        return _conform(spark.read.format("iceberg").load(path))
+    return _conform(spark.read.parquet(path))
+
+
+def streaming_transcripts(spark: SparkSession, path: str) -> DataFrame:
+    """File-based streaming source over a transcript directory. The
+    stream reads with the declared schema (the parquet reader reads a
+    timestamp_ntz `ts` as timestamp), after the files already there are
+    conformed: the stream would read a column they lack as NULLs. A
+    directory with no data files yet starts unchecked."""
+    try:
+        _conform(spark.read.parquet(path))
+    except AnalysisException as e:
+        if e.getCondition() not in ("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND"):
+            raise
+    return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(path)

@@ -268,14 +268,10 @@ def transcript_dir(spark, sf_dir, tmp_path_factory):
 
 def test_streaming_pipeline_matches_batch(spark, sf_dir, transcript_dir):
     from fluent_bit_spark.plans.flagship import run_pipeline
-    from fluent_bit_spark.streaming import (
-        streaming_pipeline,
-        streaming_transcripts,
-        windowed_flowcounter,
-    )
-    from fluent_bit_spark.transcripts import TRANSCRIPT_SCHEMA
+    from fluent_bit_spark.streaming import streaming_pipeline, windowed_flowcounter
+    from fluent_bit_spark.transcripts import streaming_transcripts
 
-    src = streaming_transcripts(spark, transcript_dir, TRANSCRIPT_SCHEMA)
+    src = streaming_transcripts(spark, transcript_dir)
     agg = windowed_flowcounter(streaming_pipeline(spark, src), window="1 hour")
     q = (
         agg.writeStream.outputMode("complete")
@@ -304,14 +300,10 @@ def test_streaming_pipeline_matches_batch(spark, sf_dir, transcript_dir):
 
 def test_foreach_batch_fanout(spark, transcript_dir, tmp_path):
     from fluent_bit_spark.plans.flagship import SINKS
-    from fluent_bit_spark.streaming import (
-        foreach_batch_fanout,
-        streaming_pipeline,
-        streaming_transcripts,
-    )
-    from fluent_bit_spark.transcripts import TRANSCRIPT_SCHEMA
+    from fluent_bit_spark.streaming import foreach_batch_fanout, streaming_pipeline
+    from fluent_bit_spark.transcripts import streaming_transcripts
 
-    src = streaming_transcripts(spark, transcript_dir, TRANSCRIPT_SCHEMA)
+    src = streaming_transcripts(spark, transcript_dir)
     routed = streaming_pipeline(spark, src)
     out = tmp_path / "sinks"
     q = routed.writeStream.foreachBatch(foreach_batch_fanout(str(out), SINKS)).start()
@@ -360,10 +352,10 @@ def test_session_stats_streaming_matches_batch(spark, sf_dir, transcript_dir):
     """Native session_window sessionization: the streaming result must
     equal the same expression evaluated in batch over the same input,
     and sessions must respect the gap (merge within, split beyond)."""
-    from fluent_bit_spark.streaming import session_stats, streaming_transcripts
-    from fluent_bit_spark.transcripts import TRANSCRIPT_SCHEMA, load_transcripts
+    from fluent_bit_spark.streaming import session_stats
+    from fluent_bit_spark.transcripts import load_transcripts, streaming_transcripts
 
-    src = streaming_transcripts(spark, transcript_dir, TRANSCRIPT_SCHEMA)
+    src = streaming_transcripts(spark, transcript_dir)
     q = (
         session_stats(src, gap="30 minutes")
         .writeStream.outputMode("complete")
@@ -519,10 +511,10 @@ def test_windowed_hll_streaming_matches_batch(spark, sf_dir, transcript_dir):
     (hll_registers by=hour) on non-null hours — three independent paths
     to byte-identical registers."""
     from fluent_bit_spark.operators.sketch import hll_registers
-    from fluent_bit_spark.streaming import streaming_transcripts, windowed_hll
-    from fluent_bit_spark.transcripts import TRANSCRIPT_SCHEMA, load_transcripts
+    from fluent_bit_spark.streaming import windowed_hll
+    from fluent_bit_spark.transcripts import load_transcripts, streaming_transcripts
 
-    src = streaming_transcripts(spark, transcript_dir, TRANSCRIPT_SCHEMA)
+    src = streaming_transcripts(spark, transcript_dir)
     q = (
         windowed_hll(src, "conv_id", window="1 hour")
         .writeStream.outputMode("complete")
@@ -566,10 +558,10 @@ def test_windowed_cms_streaming_matches_batch(spark, sf_dir, transcript_dir):
     from pyspark.sql import functions as F
 
     from fluent_bit_spark.operators.sketch import cms_counters
-    from fluent_bit_spark.streaming import streaming_transcripts, windowed_cms
-    from fluent_bit_spark.transcripts import TRANSCRIPT_SCHEMA, load_transcripts
+    from fluent_bit_spark.streaming import windowed_cms
+    from fluent_bit_spark.transcripts import load_transcripts, streaming_transcripts
 
-    src = streaming_transcripts(spark, transcript_dir, TRANSCRIPT_SCHEMA)
+    src = streaming_transcripts(spark, transcript_dir)
     q = (
         windowed_cms(src, "tool", window="1 hour")
         .writeStream.outputMode("complete")

@@ -1391,6 +1391,31 @@ def test_syslog_input_from_path(spark, tmp_path):
     assert ok[0]["tag"] == "sys.a"
 
 
+def test_flowcounter_output_uses_resolved_time_column(spark, tmp_path):
+    """A syslog record's time column is `event_time`, not `ts`: the
+    flowcounter output windows on the column the output resolved."""
+    import datetime as dt
+
+    f = tmp_path / "syslog.txt"
+    f.write_text(
+        "<165>1 2024-01-01T00:00:01.000000Z host1 app 42 ID47 - boom\n"
+        "<165>1 2024-01-01T00:59:59.000000Z host1 app 43 ID47 - again\n"
+        "<165>1 2024-01-01T01:00:00.000000Z host1 app 44 ID47 - later\n"
+    )
+    cfg = f"""
+[INPUT]
+    Name syslog
+    Path {f}
+    Tag sys.a
+[OUTPUT]
+    Name flowcounter
+    Match *
+"""
+    rows = ConfigPipeline(cfg).run(spark)["flowcounter_0"]
+    got = sorted((r["window_start"], r["counts"]) for r in rows)
+    assert got == [(dt.datetime(2024, 1, 1, 0), 2), (dt.datetime(2024, 1, 1, 1), 1)]
+
+
 def test_kmsg_input_from_path(spark, tmp_path):
     f = tmp_path / "kmsg.txt"
     f.write_text("6,100,5000000,-;hello kernel\n")

@@ -8,6 +8,9 @@
   modules, so an import added there cannot pull an operator family in
   unnoticed.
 - Driver-side rows become a frame only through `session.local_frame`.
+- Only `transcripts.py` names `TRANSCRIPT_SCHEMA`: it decides the
+  transcript row type, and every other module takes the frames its
+  entry points return as they are.
 """
 
 from __future__ import annotations
@@ -118,5 +121,21 @@ def test_driver_rows_become_frames_only_through_local_frame():
         if isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
         and node.func.attr == "createDataFrame"
+    ]
+    assert not found, "\n".join(found)
+
+
+def test_only_transcripts_names_the_transcript_schema():
+    """The transcript row type is decided in one module. A module that
+    names `TRANSCRIPT_SCHEMA` is reading or re-typing transcripts on its
+    own, which is how the per-caller timestamp casts came about."""
+    files = sorted((REPO / PKG).rglob("*.py")) + [REPO / "__spark_entry__.py"]
+    found = [
+        f"{f.relative_to(REPO)}:{node.lineno}"
+        for f in files
+        if f != REPO / PKG / "transcripts.py"
+        for node in ast.walk(ast.parse(f.read_text(), str(f)))
+        if "TRANSCRIPT_SCHEMA"
+        in (getattr(node, "id", None), getattr(node, "attr", None), getattr(node, "name", None))
     ]
     assert not found, "\n".join(found)

@@ -5,7 +5,17 @@ per-turn text equality invariant."""
 
 from __future__ import annotations
 
-from fluent_bit_spark.transcripts import load_transcripts, transcripts_sql
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from fluent_bit_spark.transcripts import (
+    TRANSCRIPT_SCHEMA,
+    load_transcripts,
+    read_transcripts,
+    streaming_transcripts,
+    transcripts_sql,
+)
 
 from tests.oracle import assert_matches_oracle
 
@@ -61,13 +71,20 @@ def test_all_grammars_present(spark, sf_dir):
 
 
 def test_synth_skew_and_salted_agg_invariance(spark, sf_dir):
-    """hot_factor concentrates turns in few conversations; salted
-    two-phase aggregation must agree exactly with the plain groupBy."""
+    """Every 20th conversation holding 10x its turns concentrates the
+    table in few conversations; salted two-phase aggregation must agree
+    exactly with the plain groupBy."""
     from pyspark.sql import functions as F
 
     from fluent_bit_spark.operators.skew import salted_agg
 
-    df = load_transcripts(spark, sf_dir, replicate=2, hot_factor=10).cache()
+    hot = F.substring("conv_id", 6, 8).cast("long") % 20 == 0
+    df = (
+        load_transcripts(spark, sf_dir, replicate=2)
+        .withColumn("_rep", F.explode(F.sequence(F.lit(1), F.when(hot, 10).otherwise(1))))
+        .drop("_rep")
+        .cache()
+    )
     counts = df.groupBy("conv_id").count().collect()
     by_conv = {r.conv_id: r["count"] for r in counts}
     hot = max(by_conv.values())
@@ -93,6 +110,110 @@ def test_synth_skew_and_salted_agg_invariance(spark, sf_dir):
     df.unpersist()
 
 
+# --- one transcript schema at every entry point ----------------------------
+
+
+def _fields(schema):
+    """(name, type) pairs: the contract. Nullability is Spark's to
+    derive, and the derivation proves `turn_idx` and `role` non-null."""
+    return [(f.name, f.dataType) for f in schema]
+
+
+@pytest.fixture(scope="module")
+def tables(spark, sf_dir, tmp_path_factory):
+    """Transcript and events tables written with an NTZ and an LTZ
+    `ts`, plus two out-of-contract transcript tables."""
+    d = tmp_path_factory.mktemp("schema")
+    t = load_transcripts(spark, sf_dir)
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    out = {}
+    for kind, ts_type in (("ntz", "timestamp_ntz"), ("ltz", "timestamp")):
+        out[kind], out[f"sf_{kind}"] = str(d / kind), str(d / f"sf_{kind}")
+        t.withColumn("ts", F.col("ts").cast(ts_type)).write.parquet(out[kind])
+        ev.withColumn("ts", F.col("ts").cast(ts_type)).write.parquet(
+            f"{out[f'sf_{kind}']}/events.parquet"
+        )
+    out["missing"] = str(d / "missing")
+    t.drop("tool").write.parquet(out["missing"])
+    out["wrong"] = str(d / "wrong")
+    t.withColumn("turn_idx", F.col("turn_idx").cast("string")).write.parquet(out["wrong"])
+    return out
+
+
+_STORED = {"ntz": T.TimestampNTZType(), "ltz": T.TimestampType()}
+
+
+@pytest.mark.parametrize("kind", ["ntz", "ltz"])
+def test_load_transcripts_yields_declared_schema(spark, sf_dir, tables, kind):
+    events = spark.read.parquet(f"{tables[f'sf_{kind}']}/events.parquet")
+    assert events.schema["ts"].dataType == _STORED[kind]
+    df = load_transcripts(spark, tables[f"sf_{kind}"])
+    assert _fields(df.schema) == _fields(TRANSCRIPT_SCHEMA)
+    assert sorted(df.collect()) == sorted(load_transcripts(spark, sf_dir).collect())
+
+
+@pytest.mark.parametrize("kind", ["ntz", "ltz"])
+def test_read_transcripts_yields_declared_schema(spark, sf_dir, tables, kind):
+    assert spark.read.parquet(tables[kind]).schema["ts"].dataType == _STORED[kind]
+    df = read_transcripts(spark, tables[kind])
+    assert df.schema == TRANSCRIPT_SCHEMA
+    assert sorted(df.collect()) == sorted(load_transcripts(spark, sf_dir).collect())
+
+
+def test_read_transcripts_orders_and_projects_declared_columns(spark, tables, tmp_path):
+    path = str(tmp_path / "reordered")
+    t = spark.read.parquet(tables["ltz"])
+    t.select(F.lit(1).alias("extra"), *reversed(t.columns)).write.parquet(path)
+    assert read_transcripts(spark, path).schema == TRANSCRIPT_SCHEMA
+
+
+@pytest.mark.parametrize("kind", ["ntz", "ltz"])
+def test_streaming_transcripts_yields_declared_schema(spark, tables, kind):
+    assert streaming_transcripts(spark, tables[kind]).schema == TRANSCRIPT_SCHEMA
+
+
+def test_streamed_flowcounter_over_ntz_table(spark, sf_dir, tables):
+    """Event-time windows and watermarks reject a TIMESTAMP_NTZ column;
+    a table written with one still streams, and the windowed counts
+    equal the batch flowcounter's."""
+    from fluent_bit_spark.operators.aggregate import flowcounter
+    from fluent_bit_spark.operators.route import explode_routes
+    from fluent_bit_spark.plans.flagship import run_pipeline
+    from fluent_bit_spark.streaming import streaming_pipeline, windowed_flowcounter
+
+    src = streaming_transcripts(spark, tables["ntz"])
+    agg = windowed_flowcounter(streaming_pipeline(spark, src), window="1 hour")
+    q = agg.writeStream.outputMode("complete").format("memory").queryName("fc_ntz").start()
+    try:
+        q.processAllAvailable()
+        got = {
+            (r.sink, r.tag, r.window_start): (r.counts, r.bytes)
+            for r in spark.table("fc_ntz").collect()
+        }
+    finally:
+        q.stop()
+    batch = flowcounter(explode_routes(run_pipeline(spark, sf_dir)), ["sink", "tag"])
+    want = {(r.sink, r.tag, r.window_start): (r.counts, r.bytes) for r in batch.collect()}
+    assert got == want and got
+
+
+@pytest.mark.parametrize("entry", [read_transcripts, streaming_transcripts])
+@pytest.mark.parametrize(
+    "kind, message",
+    [
+        ("missing", "transcript column 'tool' is missing, declared string"),
+        ("wrong", "transcript column 'turn_idx' is string, declared int"),
+    ],
+)
+def test_out_of_contract_table_raises(spark, tables, entry, kind, message):
+    with pytest.raises(ValueError, match=message):
+        entry(spark, tables[kind])
+
+
+def test_streaming_transcripts_starts_on_empty_directory(spark, tmp_path):
+    assert streaming_transcripts(spark, str(tmp_path)).schema == TRANSCRIPT_SCHEMA
+
+
 def test_read_transcripts_iceberg_gate(spark, sf_dir, tmp_path):
     """Missing Iceberg runtime must be an explicit error, never a
     silent parquet fallback (resume semantics differ)."""
@@ -105,7 +226,9 @@ def test_read_transcripts_iceberg_gate(spark, sf_dir, tmp_path):
     with _pytest.raises(NotImplementedError):
         read_transcripts(spark, str(tmp_path), table_format="iceberg")
     # explicit parquet path still works
-    assert read_transcripts(spark, f"{sf_dir}/events.parquet").count() > 0
+    path = str(tmp_path / "transcripts")
+    load_transcripts(spark, sf_dir).write.parquet(path)
+    assert read_transcripts(spark, path).count() == 1000
 
 
 def test_stable_turn_order_skew_safe_equals_window(spark, sf_dir):

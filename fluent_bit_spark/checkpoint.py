@@ -34,8 +34,8 @@ group's slice is a filter over that cache, so the source is scanned
 and parsed once, not once per group, and a callback may read its
 slice more than once (`sinks.fanout_write` reads it twice). The cache
 holds the whole input frame, so its size is the run's local-disk
-footprint; a caller at scale passes `groups` and a frame restricted
-to them (one date slice per run), so the cache holds only what the
+footprint; a caller at scale passes a frame restricted to the groups
+it delivers (one date slice per run), so the cache holds only what the
 run delivers. `sinks.fanout_write` replaces a group's output by
 renaming a staging directory: atomic on HDFS and local disk, but a
 rename on an object store is a copy, so there a killed run can leave a
@@ -113,20 +113,17 @@ class ResumableBatchJob:
         df: DataFrame,
         group_col: str,
         process_fn: Callable[[str, DataFrame], dict | None],
-        groups: list[str] | None = None,
     ) -> dict[str, str]:
         """Process each group not yet done; returns key -> final status
-        in group order. Groups are found with one distinct job when not
-        given; a NULL group key raises ValueError before any group
-        starts (its rows would match no slice). After the first
+        in group order. Groups are found with one distinct job; a NULL
+        group key raises ValueError before any group starts (its rows would match no slice). After the first
         exception from `process_fn` no new group starts, the groups in
         flight finish (and are marked done if they succeed), and then
         the exception is re-raised. `df` stays persisted until every
         group has finished."""
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            if groups is None:
-                groups = _discover_groups(df, group_col)
+            groups = _discover_groups(df, group_col)
             done = self.manifest.done_keys()
             pending = [k for k in groups if k not in done]
 

@@ -110,9 +110,7 @@ _META_SET = re.compile(r"^@SET\s+([^=\s]+)\s*=\s*(.*)$", re.IGNORECASE)
 _VAR = re.compile(r"\$\{([^}]+)\}")
 
 
-def load_config_file(
-    path: str, env: dict[str, str] | None = None, _depth: int = 0
-) -> list[Section]:
+def load_config_file(path: str) -> list[Section]:
     """Load a config file with the reference's meta commands:
 
     - `@INCLUDE <path>` inlines another file at that point; a `*` makes
@@ -126,9 +124,7 @@ def load_config_file(
     """
     import glob as _glob
 
-    if _depth > 8:
-        raise ConfigError(f"@INCLUDE nesting too deep at {path!r}")
-    env = dict(env or {})
+    env: dict[str, str] = {}
     sections: list[Section] = []
 
     def read_one(p: str, depth: int) -> None:
@@ -165,7 +161,7 @@ def load_config_file(
                 raise ConfigError(f"unknown meta command: {line!r}")
             _parse_config_line(line, sections)
 
-    read_one(path, _depth)
+    read_one(path, 0)
 
     def translate(v: str) -> str:
         return _VAR.sub(
@@ -355,11 +351,10 @@ class ConfigPipeline:
         self,
         config: str | list[Section],
         lua_functions: dict | None = None,
-        parsers_conf: str | None = None,
     ):
         self.sections = parse_config(config) if isinstance(config, str) else config
         self.lua_functions = lua_functions or {}
-        self.parsers = parse_parsers_conf(parsers_conf) if parsers_conf else {}
+        self.parsers: dict = {}
 
     # -- inputs -------------------------------------------------------------
     def _input_frame(self, spark: SparkSession, s: Section) -> DataFrame:
@@ -655,8 +650,13 @@ class ConfigPipeline:
                     rules.append(("key_val_eq", a, b))
             return FL.expect(df, rules, action=s.get("Action", "warn"))
         if name == "lua":
-            fn = self.lua_functions[s.get("Call")]
-            return FL.record_function(df, fn)
+            call = s.get("Call")
+            if call not in self.lua_functions:
+                raise ConfigError(
+                    f"lua filter: Call {call!r} names no registered function"
+                    " (pass it in ConfigPipeline(lua_functions=...))"
+                )
+            return FL.record_function(df, self.lua_functions[call])
         if name == "tensorflow":
             # plugins/filter_tensorflow analog: quantized-MLP inference
             # over integer feature columns. `Model_file` loads a REAL
@@ -1312,16 +1312,16 @@ class ConfigPipeline:
         return path
 
 
-def pipeline_from_file(
-    path: str, lua_functions: dict | None = None
-) -> ConfigPipeline:
+def pipeline_from_file(path: str) -> ConfigPipeline:
     """Load a main config file into a runnable pipeline, honoring
     `[SERVICE] Parsers_File <path>` references the way the reference
     does (relative paths resolve against the main config's directory;
     multiple Parsers_File entries merge, later files winning on a
-    parser-name clash)."""
+    parser-name clash). A `lua` filter needs its functions registered
+    through `ConfigPipeline(lua_functions=...)`, which a file cannot
+    carry."""
     sections = load_config_file(path)
-    pipe = ConfigPipeline(sections, lua_functions=lua_functions)
+    pipe = ConfigPipeline(sections)
     base = os.path.dirname(os.path.abspath(path))
     for s in sections:
         if s.kind != "SERVICE":

@@ -49,7 +49,6 @@ def _key_column(df: DataFrame, key: str, path: list[str]) -> Column:
 def ra_translate(
     df: DataFrame,
     template: str,
-    tag_col: str = "tag",
     captures: dict[int, Column] | None = None,
 ) -> Column:
     """Render the template to a string Column. Missing keys / captures
@@ -63,12 +62,12 @@ def ra_translate(
             idx = int(m.group("tagidx"))
             parts.append(
                 F.coalesce(
-                    F.try_element_at(F.split(F.col(tag_col), r"\."), F.lit(idx + 1)),
+                    F.try_element_at(F.split(F.col("tag"), r"\."), F.lit(idx + 1)),
                     F.lit(""),
                 )
             )
         elif m.group(0) == "$TAG":
-            parts.append(F.coalesce(F.col(tag_col), F.lit("")))
+            parts.append(F.coalesce(F.col("tag"), F.lit("")))
         elif m.group("capture") is not None:
             i = int(m.group("capture"))
             c = (captures or {}).get(i, F.lit(""))
@@ -96,10 +95,8 @@ def regex_captures(source: Column, pattern: str, n_groups: int) -> dict[int, Col
     return out
 
 
-def ra_regex_match(
-    df: DataFrame, accessor: str, pattern: str, tag_col: str = "tag"
-) -> Column:
+def ra_regex_match(df: DataFrame, accessor: str, pattern: str) -> Column:
     """Boolean: does the resolved accessor value match the regex
     (missing value => false)."""
-    val = ra_translate(df, accessor, tag_col=tag_col)
+    val = ra_translate(df, accessor)
     return F.coalesce(val.rlike(pattern), F.lit(False))

@@ -457,23 +457,6 @@ def gelf_chunk(payload: bytes, msgid: bytes, pckt_size: int) -> list:
     ]
 
 
-def gelf_reassemble(chunks: list) -> bytes:
-    """Inverse of gelf_chunk: validate magic/msgid/count, reorder by
-    sequence number, concatenate."""
-    if len(chunks) == 1 and not chunks[0][:2] == GELF_MAGIC:
-        return chunks[0]
-    msgid = chunks[0][2:10]
-    total = chunks[0][11]
-    if len(chunks) != total:
-        raise ValueError(f"expected {total} chunks, got {len(chunks)}")
-    parts = {}
-    for c in chunks:
-        if c[:2] != GELF_MAGIC or c[2:10] != msgid:
-            raise ValueError("magic/msgid mismatch")
-        parts[c[10]] = c[GELF_HEADER_SIZE:]
-    return b"".join(parts[i] for i in range(total))
-
-
 # -------------------------------------------- Kafka record batch (magic 2)
 
 # CRC-32C (Castagnoli), the checksum Kafka's v2 record batches carry —

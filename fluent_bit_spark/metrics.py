@@ -66,13 +66,11 @@ class PipelineMetrics:
 def partition_watermarks(
     df: DataFrame,
     n_buckets: int = 16,
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Per-partition watermark + lineage metrics: bucket rows by a
-    portable hash of the conversation key (md5-slice — the same
+    portable hash of the conversation key `conv_id` (md5-slice — the same
     engine-agnostic convention the dedup/sketch family uses) and report
-    each bucket's high/low watermark, row count, and distinct-key
+    each bucket's high/low `ts` watermark, row count, and distinct-key
     count — per-partition watermarks with lineage + metrics as a
     queryable frame. It is a report only: `ResumableBatchJob`
     (checkpoint.py) does not read it. Resume works per group through
@@ -85,28 +83,23 @@ def partition_watermarks(
     """
     from fluent_bit_spark.functions.hashing import md5_32
 
-    bucket = (md5_32(F.col(key_col)) % F.lit(n_buckets)).cast("int")
+    bucket = (md5_32(F.col("conv_id")) % F.lit(n_buckets)).cast("int")
     return (
         df.withColumn("bucket", bucket)
         .groupBy("bucket")
         .agg(
-            F.max(F.col(ts_col)).alias("watermark"),
-            F.min(F.col(ts_col)).alias("low_ts"),
+            F.max(F.col("ts")).alias("watermark"),
+            F.min(F.col("ts")).alias("low_ts"),
             F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct(F.col(key_col)).alias("n_keys"),
+            F.count_distinct(F.col("conv_id")).alias("n_keys"),
         )
     )
 
 
-def msgpack_event_size(
-    conv_id: str = "conv_id",
-    turn_idx: str = "turn_idx",
-    role: str = "role",
-    text: str = "text",
-    tool: str = "tool",
-):
+def msgpack_event_size():
     """Exact wire size of one transcript event as the reference buffers
-    it -- the msgpack pair [EventTime ext0, 5-key map]
+    it -- the msgpack pair [EventTime ext0, 5-key map of conv_id,
+    turn_idx, role, text, tool]
     (functions/wire.pack_event; sizes per the msgpack spec, identical
     to the closed form the DuckDB oracle derives for
     `msgpack_roundtrip`).  Pure JVM column math, so chunk-byte
@@ -119,7 +112,7 @@ def msgpack_event_size(
             + b
         )
 
-    t = F.col(turn_idx)
+    t = F.col("turn_idx")
     turn_sz = (
         F.when(t <= 127, 1)
         .when(t <= 255, 2)
@@ -131,11 +124,11 @@ def msgpack_event_size(
     fixed = 1 + 10 + 1 + 8 + 9 + 5 + 5 + 5
     return (
         F.lit(fixed)
-        + strsz(conv_id)
+        + strsz("conv_id")
         + turn_sz
-        + strsz(role)
-        + strsz(text)
-        + F.when(F.col(tool).isNull(), F.lit(1)).otherwise(strsz(tool))
+        + strsz("role")
+        + strsz("text")
+        + F.when(F.col("tool").isNull(), F.lit(1)).otherwise(strsz("tool"))
     ).cast("long")
 
 
@@ -229,9 +222,9 @@ def metrics_endpoint(df: DataFrame) -> DataFrame:
     )
 
 
-def storage_limit_drops(chunks: DataFrame, limit: int, sink_col: str = "sink",
-                        order_col: str = "hour", bytes_col: str = "chunk_bytes") -> DataFrame:
-    """storage.total_limit_size FIFO eviction accounting
+def storage_limit_drops(chunks: DataFrame, limit: int) -> DataFrame:
+    """storage.total_limit_size FIFO eviction accounting over
+    (sink, hour, chunk_bytes) chunk rows
     (src/flb_input_chunk.c:152 flb_intput_chunk_count_dropped_chunks +
     :201 find_space_new_data): each arriving chunk evicts the OLDEST
     buffered chunks for its output until it fits; a chunk larger than
@@ -253,13 +246,13 @@ def storage_limit_drops(chunks: DataFrame, limit: int, sink_col: str = "sink",
     partition is one running sum."""
     from pyspark.sql import Window
 
-    accepted = F.col(bytes_col) <= F.lit(limit)
+    accepted = F.col("chunk_bytes") <= F.lit(limit)
     w = (
-        Window.partitionBy(sink_col)
-        .orderBy(F.col(order_col).desc())
+        Window.partitionBy("sink")
+        .orderBy(F.col("hour").desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    newest_cum = F.sum(F.when(accepted, F.col(bytes_col)).otherwise(0)).over(w)
+    newest_cum = F.sum(F.when(accepted, F.col("chunk_bytes")).otherwise(0)).over(w)
     return chunks.withColumn(
         "status",
         F.when(~accepted, F.lit("rejected_oversize"))

@@ -65,14 +65,13 @@ def sessionize(
     df: DataFrame,
     key: str,
     gap: str = "30 minutes",
-    ts: str = "ts",
 ) -> DataFrame:
     """Session aggregation per key: `session_window(ts, gap)` — counts
     and bounds per session. (Not in the reference's SQL surface —
     SURVEY.md §2.5 notes session windows are absent there; free on
     Spark and listed as an addition.)"""
     return (
-        df.groupBy(key, F.session_window(F.col(ts), gap).alias("sw"))
+        df.groupBy(key, F.session_window(F.col("ts"), gap).alias("sw"))
         .agg(F.count("*").alias("n_turns"))
         .select(
             key,
@@ -88,34 +87,22 @@ def timeseries_forecast(
     x: str,
     y: str,
     group_keys: list[str] | None = None,
-    future_x: float | None = None,
 ) -> DataFrame:
-    """Linear-regression forecast per group: slope, intercept, and the
-    predicted y at `future_x` (≙ TIMESERIES_FORECAST(x, y, n))."""
+    """Linear-regression fit per group: slope and intercept, the model
+    TIMESERIES_FORECAST(x, y, n) evaluates at its horizon."""
     keys = group_keys or []
-    agg = df.groupBy(*keys).agg(
+    return df.groupBy(*keys).agg(
         F.regr_slope(F.col(y), F.col(x)).alias("slope"),
         F.regr_intercept(F.col(y), F.col(x)).alias("intercept"),
     )
-    if future_x is not None:
-        agg = agg.withColumn(
-            "forecast", F.col("intercept") + F.col("slope") * F.lit(float(future_x))
-        )
-    return agg
 
 
-def rate_anomalies(
-    df: DataFrame,
-    key: str = "event_type",
-    ts_col: str = "ts",
-    window_hours: int = 6,
-    z_threshold: float = 3.0,
-) -> DataFrame:
-    """Rolling z-score spike detection over hourly rates: for each
-    (key, hour) bucket, compare the count against the mean/std of the
-    trailing `window_hours` OBSERVED buckets (ROWS frame — gaps don't
-    widen the window). `z`/`spike` are NULL until a full trailing
-    window exists or when the window variance is 0.
+def rate_anomalies(df: DataFrame) -> DataFrame:
+    """Rolling z-score spike detection over hourly `ts` rates: for each
+    (event_type, hour) bucket, compare the count against the mean/std
+    of the trailing 6 OBSERVED buckets (ROWS frame — gaps don't widen
+    the window); a spike is z > 3. `z`/`spike` are NULL until a full
+    trailing window exists or when the window variance is 0.
 
     Determinism note: mean/variance are derived from exact integer
     window sums (sum n, sum n^2) with only IEEE-correctly-rounded
@@ -123,21 +110,23 @@ def rate_anomalies(
     bit-for-bit — unlike stddev_samp/stddev_pop, whose accumulation
     order differs per engine.
 
-    Scale shape: one shuffle to the (key, hour) aggregate (map-side
-    partial), then a per-key ordered window over tiny hourly rows.
+    Scale shape: one shuffle to the (event_type, hour) aggregate
+    (map-side partial), then a per-key ordered window over tiny hourly
+    rows.
     """
     from pyspark.sql import Window
 
+    window_hours, z_threshold = 6, 3.0
     # NULL timestamps have no hour bucket — drop them up front (engines
     # disagree on NULL placement in window ORDER BY: Spark NULLS FIRST,
     # DuckDB NULLS LAST, so keeping them would also break the oracle)
     hourly = (
-        df.filter(F.col(ts_col).isNotNull())
-        .groupBy(F.col(key), F.date_trunc("hour", F.col(ts_col)).alias("hour"))
+        df.filter(F.col("ts").isNotNull())
+        .groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("hour"))
         .agg(F.count("*").alias("n"))
     )
     w = (
-        Window.partitionBy(key)
+        Window.partitionBy("event_type")
         .orderBy("hour")
         .rowsBetween(-window_hours, -1)
     )
@@ -150,7 +139,7 @@ def rate_anomalies(
     z = (F.col("n") - mean) / F.sqrt(var)
     full = (cnt == window_hours) & (var > 0)
     return hourly.select(
-        key,
+        "event_type",
         "hour",
         "n",
         F.when(full, F.round(mean, 6)).alias("mean_n"),
@@ -159,27 +148,21 @@ def rate_anomalies(
     )
 
 
-def m4_downsample(
-    df: DataFrame,
-    key: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    bucket_seconds: int = 21600,
-) -> DataFrame:
-    """M4 time-series downsampling (Jugel et al., VLDB 2014): per (key,
-    time bucket) keep min, max, first and last value — the four points
+def m4_downsample(df: DataFrame) -> DataFrame:
+    """M4 time-series downsampling (Jugel et al., VLDB 2014): per
+    (event_type, 6-hour `ts` bucket) keep min, max, first and last
+    `value` — the four points
     that make a line chart pixel-exact at the bucket resolution. The
     scalable analog of the reference's out_plot (plugins/out_plot:
     writes every point for gnuplot); at 100 TB you downsample
     map-side-combinably instead of shipping raw points.
 
-    first/last tie-break on (ts, id) via a zero-padded string key —
+    first/last tie-break on (ts, event_id) via a zero-padded string key —
     min_by/arg_min take one ordering argument in both engines, and the
     padded concatenation sorts exactly like the (ts, id) tuple for
     non-negative ids (20-digit pad covers the whole BIGINT range; a
     negative id would misorder — row ids are non-negative).
-    Output: (key, bucket_start_s BIGINT epoch seconds, n, v_min, v_max,
+    Output: (event_type, bucket_start_s BIGINT epoch seconds, n, v_min, v_max,
     v_first, v_last). Values are the stored doubles, bit-identical to
     the oracle's; rows with a NULL value are dropped (a NULL point
     renders nothing, and the engines disagree on whether min_by skips
@@ -188,8 +171,8 @@ def m4_downsample(
     Scale shape: one partial-agg shuffle on (key, bucket) — min/max/
     min_by/max_by all combine map-side; no windows, no sort.
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
-    step_us = F.lit(bucket_seconds * 1_000_000).cast("long")
+    us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
+    step_us = F.lit(21600 * 1_000_000).cast("long")
     # pure integer FLOOR arithmetic (pmod keeps pre-1970 timestamps in
     # the bucket that starts before them; plain % would truncate toward
     # zero); (us - pmod) is an exact multiple of step_us (itself a
@@ -198,49 +181,43 @@ def m4_downsample(
     order_key = F.concat(
         F.lpad(us.cast("string"), 20, "0"),
         F.lit("#"),
-        F.lpad(F.col(id_col).cast("string"), 20, "0"),
+        F.lpad(F.col("event_id").cast("string"), 20, "0"),
     )
     return (
-        df.filter(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
-        .groupBy(F.col(key), bucket.alias("bucket_start_s"))
+        df.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
+        .groupBy(F.col("event_type"), bucket.alias("bucket_start_s"))
         .agg(
             F.count("*").alias("n"),
-            F.min(value_col).alias("v_min"),
-            F.max(value_col).alias("v_max"),
-            F.min_by(value_col, order_key).alias("v_first"),
-            F.max_by(value_col, order_key).alias("v_last"),
+            F.min("value").alias("v_min"),
+            F.max("value").alias("v_max"),
+            F.min_by("value", order_key).alias("v_first"),
+            F.max_by("value", order_key).alias("v_last"),
         )
     )
 
 
-def alert_edges(
-    df: DataFrame,
-    key: str = "event_type",
-    ts_col: str = "ts",
-    window_hours: int = 6,
-    z_threshold: float = 3.0,
-) -> DataFrame:
+def alert_edges(df: DataFrame) -> DataFrame:
     """Flap suppression over rate_anomalies: emit only spike-state
     TRANSITIONS — 'alert' when the flag goes false->true, 'resolve' on
     true->false (NULL z hours count as not-spiking). A monitoring sink
     pages on edges, not on every hot hour; this is the dedup between
     the anomaly detector and the pager.
 
-    Output (key, hour, n, z, kind). One extra per-key lag window over
-    the already-tiny hourly verdict table.
+    Output (event_type, hour, n, z, kind). One extra per-key lag window
+    over the already-tiny hourly verdict table.
     """
     from pyspark.sql import Window
 
-    v = rate_anomalies(df, key, ts_col, window_hours, z_threshold)
+    v = rate_anomalies(df)
     sp = F.coalesce(F.col("spike"), F.lit(False))
-    w = Window.partitionBy(key).orderBy("hour")
+    w = Window.partitionBy("event_type").orderBy("hour")
     staged = v.withColumn("_sp", sp).withColumn(
         "_prev", F.coalesce(F.lag("_sp").over(w), F.lit(False))
     )
     return (
         staged.filter(F.col("_sp") != F.col("_prev"))
         .select(
-            key,
+            "event_type",
             "hour",
             "n",
             "z",
@@ -251,12 +228,11 @@ def alert_edges(
 
 def ewma_hourly(
     df: DataFrame,
-    key: str = "event_type",
-    ts_col: str = "ts",
     alpha: float = 0.3,
     window_hours: int = 8,
 ) -> DataFrame:
-    """Exponentially-weighted moving average of hourly rates, truncated
+    """Exponentially-weighted moving average of hourly `ts` rates per
+    event_type, truncated
     to the trailing `window_hours` OBSERVED buckets (current included)
     and renormalized: ewma_t = sum(w_j * n_{t-j}) / sum(w_j) with
     w_j = (1-alpha)^j. The smoothing baseline a telemetry dashboard
@@ -270,7 +246,8 @@ def ewma_hourly(
     Determinism: the trailing counts are gathered as an ordered window
     list and both the weighted numerator and the weight sum are
     fixed-pointed to BIGINT per term before summation — integer sums in
-    any order, then one division, round-6. Output (key, hour, n, ewma).
+    any order, then one division, round-6. Output (event_type, hour, n,
+    ewma).
 
     Scale shape: one (key, hour) partial-agg shuffle + a per-key window
     over tiny hourly rows (the rate_anomalies shape).
@@ -278,12 +255,12 @@ def ewma_hourly(
     from pyspark.sql import Window
 
     hourly = (
-        df.filter(F.col(ts_col).isNotNull())
-        .groupBy(F.col(key), F.date_trunc("hour", F.col(ts_col)).alias("hour"))
+        df.filter(F.col("ts").isNotNull())
+        .groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("hour"))
         .agg(F.count("*").alias("n"))
     )
     w = (
-        Window.partitionBy(key)
+        Window.partitionBy("event_type")
         .orderBy("hour")
         .rowsBetween(-(window_hours - 1), 0)
     )
@@ -315,16 +292,14 @@ def ewma_hourly(
         lambda acc, v: acc + v,
     )
     return staged.select(
-        key,
+        "event_type",
         "hour",
         "n",
         F.round(num.cast("double") / den.cast("double"), 6).alias("ewma"),
     )
 
 
-def statsd_flush(
-    df: DataFrame, order_key_col: str = "okey"
-) -> DataFrame:
+def statsd_flush(df: DataFrame) -> DataFrame:
     """statsd-server flush semantics over records parsed by
     sources.parse_statsd (the aggregation a statsd daemon applies
     between the wire format the reference ingests at
@@ -334,7 +309,7 @@ def statsd_flush(
     - timer:   sum + min + max of the raw values;
     - gauge:   last non-incremental value plus every '+/-' delta
                recorded AFTER it (or the bare delta sum when no
-               absolute value was ever set), in `order_key_col` order;
+               absolute value was ever set), in `okey` order;
     - set:     distinct raw-string count.
 
     The gauge rule is one window pass: a row contributes iff NO
@@ -352,10 +327,10 @@ def statsd_flush(
     """
     from pyspark.sql import Window
 
-    okey = F.col(order_key_col)
+    okey = F.col("okey")
     w_after = (
         Window.partitionBy("mtype", "bucket")
-        .orderBy(order_key_col)
+        .orderBy("okey")
         .rowsBetween(1, Window.unboundedFollowing)
     )
     is_gauge = F.col("mtype") == "gauge"
@@ -389,7 +364,6 @@ def reliability_report(
     df: DataFrame,
     key_col: str = "tool",
     err_col=None,
-    z: float = 1.96,
 ) -> DataFrame:
     """Per-key reliability ranking with a Wilson score lower bound:
     the raw error rate over-ranks keys with tiny samples (1 error in 1
@@ -413,8 +387,8 @@ def reliability_report(
     )
     n = F.col("n_turns").cast("double")
     e = F.col("n_errs").cast("double")
-    zl = F.lit(z)
-    z2 = F.lit(z) * F.lit(z)
+    zl = F.lit(1.96)
+    z2 = zl * zl
     phat = e / n
     lb = (
         phat
@@ -433,15 +407,13 @@ def reliability_report(
 def burn_rate_alerts(
     df: DataFrame,
     err_col,
-    ts_col: str = "ts",
     slo: float = 0.95,
     long_hours: int = 6,
-    threshold: float = 1.0,
 ) -> DataFrame:
     """Multi-window SLO burn-rate alerting (the SRE-workbook pattern):
     burn = error_rate / error_budget, where budget = 1 - slo. A page
     fires only when BOTH the short (1 h) and the long (`long_hours`)
-    aligned window burn above `threshold` — the long window filters
+    aligned `ts` window burn faster than the budget (burn > 1) — the long window filters
     blips, the short window ends the page quickly once the burn stops.
     Output one row per hour: (window_start, n, n_err, short_burn,
     long_burn, alert).
@@ -453,7 +425,7 @@ def burn_rate_alerts(
     budget = 1.0 - slo
     hourly = (
         df.select(
-            F.date_trunc("hour", F.col(ts_col)).alias("window_start"),
+            F.date_trunc("hour", F.col("ts")).alias("window_start"),
             err_col.cast("long").alias("_e"),
         )
         .groupBy("window_start")
@@ -486,17 +458,13 @@ def burn_rate_alerts(
     )
     return out.withColumn(
         "alert",
-        (F.col("short_burn") > F.lit(threshold))
-        & (F.col("long_burn") > F.lit(threshold)),
+        (F.col("short_burn") > F.lit(1.0))
+        & (F.col("long_burn") > F.lit(1.0)),
     )
 
 
-def mtbf_report(
-    df: DataFrame,
-    key_col: str = "tool",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Mean time between failures per key over an already-filtered
+def mtbf_report(df: DataFrame) -> DataFrame:
+    """Mean time between failures per `tool` over an already-filtered
     failure stream: MTBF = observed span / (n-1) — algebraically equal
     to the mean of consecutive gaps, but computed from ONE min/max/count
     groupBy (map-side combine) instead of a per-key ordered window over
@@ -505,19 +473,19 @@ def mtbf_report(
     report NULL mtbf.
     """
     agg = (
-        df.filter(F.col(key_col).isNotNull())
-        .groupBy(key_col)
+        df.filter(F.col("tool").isNotNull())
+        .groupBy("tool")
         .agg(
             F.count(F.lit(1)).alias("n_failures"),
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
         )
     )
     span_us = F.unix_micros(
         F.col("last_ts").cast("timestamp_ltz")
     ) - F.unix_micros(F.col("first_ts").cast("timestamp_ltz"))
     return agg.select(
-        key_col,
+        "tool",
         "n_failures",
         "first_ts",
         "last_ts",
@@ -536,9 +504,6 @@ def backpressure_sim(
     df: DataFrame,
     drain_per_hour: int,
     mem_buf_limit: int,
-    sink_col: str = "sink",
-    hour_col: str = "hour",
-    n_col: str = "n_in",
 ) -> DataFrame:
     """Per-sink buffer-occupancy simulation under a constant drain
     rate — the batch analog of the reference's backpressure loop
@@ -570,18 +535,18 @@ def backpressure_sim(
     from pyspark.sql import Window
 
     w = (
-        Window.partitionBy(sink_col)
-        .orderBy(hour_col)
+        Window.partitionBy("sink")
+        .orderBy("hour")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    s = F.sum(F.col(n_col) - F.lit(drain_per_hour)).over(w)
+    s = F.sum(F.col("n_in") - F.lit(drain_per_hour)).over(w)
     staged = df.withColumn("_s", s).withColumn(
         "queue_depth", F.col("_s") - F.least(F.lit(0), F.min("_s").over(w))
     )
     return staged.select(
-        sink_col,
-        hour_col,
-        n_col,
+        "sink",
+        "hour",
+        "n_in",
         F.col("queue_depth").cast("long").alias("queue_depth"),
         (F.col("queue_depth") > F.lit(mem_buf_limit)).alias("paused"),
     )
@@ -629,11 +594,9 @@ def seasonal_anomaly(
     df: DataFrame,
     split_day: int = 15,
     factor: int = 2,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """Hour-of-day seasonal baseline anomaly screen: days <= split_day
-    build a per-(group, hour-of-day) baseline (total count and number
+    """Hour-of-day seasonal baseline anomaly screen over `ts`: days <=
+    split_day build a per-(event_type, hour-of-day) baseline (total count and number
     of distinct baseline days); each later (group, day, hour-of-day)
     cell is compared against the baseline MEAN by exact cross
     multiplication — no division anywhere, so both engines agree
@@ -647,7 +610,7 @@ def seasonal_anomaly(
     a fleet whose traffic is hour-of-day periodic needs the baseline
     keyed by hour-of-day, not a trailing window.
 
-    Output: (group, day, hod, n, base_total, base_days, verdict) for
+    Output: (event_type, day, hod, n, base_total, base_days, verdict) for
     current-window cells only.
 
     Scale shape: one groupBy to (group, day, hod) cells, a broadcast
@@ -655,9 +618,9 @@ def seasonal_anomaly(
     and a map-side verdict. Nothing row-scale survives stage one.
     """
     cells = df.groupBy(
-        F.col(group_col).alias("grp"),
-        F.date_trunc("day", F.col(ts_col)).alias("day"),
-        F.hour(F.col(ts_col)).alias("hod"),
+        F.col("event_type").alias("grp"),
+        F.date_trunc("day", F.col("ts")).alias("day"),
+        F.hour(F.col("ts")).alias("hod"),
     ).agg(F.count(F.lit(1)).alias("n"))
     dd = F.dayofmonth(F.col("day"))
     base = (
@@ -688,7 +651,7 @@ def seasonal_anomaly(
     # zero-filled so the output carries no nullable integral columns
     # (nullable int64 promotes to float64 in Arrow/pandas comparators)
     return j.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("event_type"),
         "day",
         "hod",
         "n",
@@ -701,10 +664,8 @@ def seasonal_anomaly(
 def heartbeat_gaps(
     df: DataFrame,
     threshold_hours: int = 6,
-    group_col: str = "source",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """Dead-man-switch report: per source, the silent intervals — runs
+    """Dead-man-switch report: per `source`, the silent `ts` intervals — runs
     of consecutive heartbeat HOURS with no events — longer than
     ``threshold_hours``. The classic "host X stopped logging" alert,
     which the reference cannot express at all (it only sees records
@@ -723,8 +684,7 @@ def heartbeat_gaps(
     from pyspark.sql import Window
 
     hours = df.select(
-        F.col(group_col).alias("source"),
-        F.date_trunc("hour", F.col(ts_col)).alias("hour"),
+        "source", F.date_trunc("hour", F.col("ts")).alias("hour")
     ).distinct()
     w = Window.partitionBy("source").orderBy("hour")
     staged = hours.withColumn("_prev", F.lag("hour").over(w)).withColumn(
@@ -748,9 +708,8 @@ def cardinality_guard(
     df: DataFrame,
     label_col: str,
     growth_ppm: int = 200_000,
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """Label-cardinality explosion alarm: per day, the EXACT distinct
+    """Label-cardinality explosion alarm: per `ts` day, the EXACT distinct
     count of ``label_col`` values, the previous day's count, the
     day-over-day growth in integer ppm, and an alarm when growth
     exceeds ``growth_ppm`` (default +20%). This is the guard that
@@ -769,7 +728,7 @@ def cardinality_guard(
 
     days = (
         df.select(
-            F.date_trunc("day", F.col(ts_col)).alias("day"),
+            F.date_trunc("day", F.col("ts")).alias("day"),
             F.col(label_col).alias("_l"),
         )
         .distinct()
@@ -794,30 +753,24 @@ def cardinality_guard(
     )
 
 
-def flap_suppress(
-    df: DataFrame,
-    key: str = "event_type",
-    ts_col: str = "ts",
-    max_edges_per_day: int = 4,
-    window_hours: int = 6,
-    z_threshold: float = 3.0,
-) -> DataFrame:
-    """Flap-suppression report over `alert_edges`: per (key, day),
+def flap_suppress(df: DataFrame, max_edges_per_day: int = 4) -> DataFrame:
+    """Flap-suppression report over `alert_edges`: per
+    (event_type, day),
     how many alert/resolve transitions fired and whether the pager
     should be SILENCED for that key-day (more than
     ``max_edges_per_day`` edges = the detector is flapping, paging
     adds noise, route to a digest instead — standard alert-manager
     semantics layered on the reference's alert math).
 
-    Output: (key, day, n_edges, n_alerts, suppressed).
+    Output: (event_type, day, n_edges, n_alerts, suppressed).
 
     Scale shape: groups the already-tiny edge table by (key, day);
     nothing row-scale is touched beyond rate_anomalies' one hourly
     aggregate.
     """
-    edges = alert_edges(df, key, ts_col, window_hours, z_threshold)
     return (
-        edges.groupBy(key, F.date_trunc("day", F.col("hour")).alias("day"))
+        alert_edges(df)
+        .groupBy("event_type", F.date_trunc("day", F.col("hour")).alias("day"))
         .agg(
             F.count(F.lit(1)).alias("n_edges"),
             F.sum((F.col("kind") == "alert").cast("long")).alias("n_alerts"),

@@ -56,24 +56,23 @@ def range_lookup_enrich(
     df: DataFrame,
     ranges: DataFrame,
     key: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
     defaults: dict[str, str] | None = None,
 ) -> DataFrame:
     """Interval lookup (the geoip2 shape, plugins/filter_geoip2: an IP
     maps into a CIDR/range row): broadcast range join
-    `lo <= key < hi`, non-matches filled from defaults.
+    `lo <= key < hi` against the `lo`/`hi` columns of `ranges`,
+    non-matches filled from defaults.
 
     At scale the ranges table is small (broadcast, no shuffle); the
     join is a broadcast nested-loop with a range predicate — fine for
     dim tables of thousands of intervals. For million-interval tables,
     pre-bucket both sides on floor(key/width) and equi-join first."""
-    value_cols = [c for c in ranges.columns if c not in (lo_col, hi_col)]
+    value_cols = [c for c in ranges.columns if c not in ("lo", "hi")]
     joined = df.join(
         F.broadcast(ranges),
-        on=(df[key] >= ranges[lo_col]) & (df[key] < ranges[hi_col]),
+        on=(df[key] >= ranges["lo"]) & (df[key] < ranges["hi"]),
         how="left",
-    ).drop(lo_col, hi_col)
+    ).drop("lo", "hi")
     if defaults:
         joined = joined.withColumns(
             {c: F.coalesce(F.col(c), F.lit(d)) for c, d in defaults.items() if c in value_cols}
@@ -264,17 +263,11 @@ def regex_table_enrich(
     return df.withColumns(out_cols)
 
 
-def scd2_history(
-    df: DataFrame,
-    key_cols: tuple = ("conv_id",),
-    attr_col: str = "tool",
-    ts_col: str = "ts",
-    order_cols: tuple = ("turn_idx",),
-) -> DataFrame:
+def scd2_history(df: DataFrame) -> DataFrame:
     """Slowly-changing-dimension type 2 from an update stream: collapse
-    consecutive identical attribute values per key, then emit one
-    validity interval per change — (key, attr, valid_from, valid_to,
-    is_current), half-open [valid_from, valid_to). The lakehouse
+    consecutive identical `tool` values per `conv_id` in (ts, turn_idx)
+    order, then emit one validity interval per change — (conv_id, tool,
+    valid_from, valid_to, is_current), half-open [valid_from, valid_to). The lakehouse
     pattern for "what was this conversation's active tool AT time t":
     a point-in-time join lands on exactly one interval.
 
@@ -283,32 +276,23 @@ def scd2_history(
     per-key update counts — the same conv co-location every sequence
     op in this engine uses.
     """
-    keys = [F.col(k) for k in key_cols]
-    order = [F.col(ts_col), *[F.col(c) for c in order_cols]]
-    w = Window.partitionBy(*keys).orderBy(*order)
+    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
     chg = (
-        df.withColumn("_prev", F.lag(attr_col).over(w))
-        .withColumn("_first", F.lag(ts_col).over(w).isNull())
-        .filter(F.col("_first") | ~F.col(attr_col).eqNullSafe(F.col("_prev")))
+        df.withColumn("_prev", F.lag("tool").over(w))
+        .withColumn("_first", F.lag("ts").over(w).isNull())
+        .filter(F.col("_first") | ~F.col("tool").eqNullSafe(F.col("_prev")))
     )
-    w2 = Window.partitionBy(*keys).orderBy(*order)
     return chg.select(
-        *key_cols,
-        F.col(attr_col),
-        F.col(ts_col).alias("valid_from"),
-        F.lead(ts_col).over(w2).alias("valid_to"),
+        "conv_id",
+        "tool",
+        F.col("ts").alias("valid_from"),
+        F.lead("ts").over(w).alias("valid_to"),
     ).withColumn("is_current", F.col("valid_to").isNull())
 
 
-def cdc_apply(
-    base: DataFrame,
-    changes: DataFrame,
-    key_cols: tuple = ("conv_id", "turn_idx"),
-    op_col: str = "op",
-    seq_col: str = "seq",
-) -> DataFrame:
-    """MERGE/upsert semantics over a CDC change stream: per key, the
-    change with the highest `seq` wins; a winning D(elete) removes the
+def cdc_apply(base: DataFrame, changes: DataFrame) -> DataFrame:
+    """MERGE/upsert semantics over a CDC change stream: per key
+    (conv_id, turn_idx), the change with the highest `seq` wins; a winning D(elete) removes the
     row, a winning I/U upserts the change's payload columns; keys the
     stream never touched pass through from `base`. This is the
     batch-materialization of an Iceberg/Delta MERGE INTO — how a
@@ -323,15 +307,15 @@ def cdc_apply(
     plus the insert anti-join — both on the same key, so AQE can plan
     one co-partitioned exchange.
     """
-    keys = list(key_cols)
-    payload = [c for c in changes.columns if c not in (*keys, op_col, seq_col)]
+    keys = ["conv_id", "turn_idx"]
+    payload = [c for c in changes.columns if c not in (*keys, "op", "seq")]
     winners = (
         changes.groupBy(*keys)
         .agg(
             F.max(
                 F.struct(
-                    F.col(seq_col).alias("seq"),
-                    F.col(op_col).alias("op"),
+                    F.col("seq"),
+                    F.col("op"),
                     *[F.col(c).alias(c) for c in payload],
                 )
             ).alias("_w")
@@ -408,10 +392,8 @@ def kube_meta_enrich(
     df: DataFrame,
     meta_rows: list[dict],
     tag_prefix: str = "kube.var.log.containers.",
-    tag_col: str = "tag",
     labels: bool = True,
     annotations: bool = True,
-    out_col: str = "kubernetes",
 ) -> DataFrame:
     """filter_kubernetes metadata enrich: strip `tag_prefix` from the
     routing tag, extract (pod_name, namespace_name, container_name,
@@ -426,9 +408,9 @@ def kube_meta_enrich(
     Scale shape: the cache is one row per pod (config-sized), so the
     join is a broadcast hash join; tag parsing is pure JVM regex."""
     stripped = F.when(
-        F.col(tag_col).startswith(tag_prefix),
-        F.expr(f"substring({tag_col}, {len(tag_prefix) + 1})"),
-    ).otherwise(F.col(tag_col))
+        F.col("tag").startswith(tag_prefix),
+        F.expr(f"substring(tag, {len(tag_prefix) + 1})"),
+    ).otherwise(F.col("tag"))
     parsed = df.withColumns(
         {
             "_kpod": F.regexp_extract(stripped, KUBE_TAG_REGEX, 1),
@@ -475,7 +457,7 @@ def kube_meta_enrich(
         F.col("_kdock").alias("docker_id"),
     ]
     out = joined.withColumn(
-        out_col,
+        "kubernetes",
         F.when(F.col("_kpod") != "", F.struct(*fields)),
     )
     return out.drop("_kpod", "_kns", "_kcont", "_kdock",
@@ -524,9 +506,7 @@ _UA_DEVICES = [
 _UA_UNKNOWN = "Unknown"
 
 
-def ua_parse(
-    df: DataFrame, agent_col: str, prefix: str = ""
-) -> DataFrame:
+def ua_parse(df: DataFrame, agent_col: str) -> DataFrame:
     """Derive filter_apm_uaparser's nine record fields (browser_name,
     browser_version, browser, OS_name, OS_version, OS, device,
     device_brand, device_model — filter_uaparser.h) from a user-agent
@@ -554,16 +534,15 @@ def ua_parse(
     ver = chain(b_rules, version_of)
     os_name = chain(_UA_OS, lambda r: F.lit(r[0]))
     os_ver = chain(_UA_OS, version_of)
-    p = prefix
     out = df.withColumns(
         {
-            p + "browser_name": name,
-            p + "browser_version": ver,
-            p + "OS_name": os_name,
-            p + "OS_version": os_ver,
-            p + "device": chain(_UA_DEVICES, lambda r: F.lit(r[0])),
-            p + "device_brand": chain(_UA_DEVICES, lambda r: F.lit(r[1])),
-            p + "device_model": chain(_UA_DEVICES, lambda r: F.lit(r[2])),
+            "browser_name": name,
+            "browser_version": ver,
+            "OS_name": os_name,
+            "OS_version": os_ver,
+            "device": chain(_UA_DEVICES, lambda r: F.lit(r[0])),
+            "device_brand": chain(_UA_DEVICES, lambda r: F.lit(r[1])),
+            "device_model": chain(_UA_DEVICES, lambda r: F.lit(r[2])),
         }
     )
     # family strings: "<name> <major>" when both known, else the name,
@@ -577,7 +556,7 @@ def ua_parse(
 
     return out.withColumns(
         {
-            p + "browser": family(p + "browser_name", p + "browser_version"),
-            p + "OS": family(p + "OS_name", p + "OS_version"),
+            "browser": family("browser_name", "browser_version"),
+            "OS": family("OS_name", "OS_version"),
         }
     )

@@ -17,7 +17,7 @@ Parity notes per operator (SURVEY.md §2.3):
 - nest / lift (plugins/filter_nest/nest.c): wildcard-selected columns
   into a struct; struct splat up with optional prefix add/remove.
 - parser (plugins/filter_parser/filter_parser.c:181-307): re-parse one
-  field with a parser chain, Reserve_Data / Preserve_Key.
+  field with a parser chain, Reserve_Data.
 - throttle (plugins/filter_throttle/throttle.c:98-105): sliding-window
   rate limit. Batch analog: deterministic event-time windows —
   keep the first `rate * window` records per window in (ts, stable id)
@@ -27,8 +27,8 @@ Parity notes per operator (SURVEY.md §2.3):
   bytes per key per window via a running windowed sum.
 - expect (plugins/filter_expect/expect.c): data-quality assertions;
   action 'warn' logs, 'exit' raises.
-- alter_size (plugins/filter_alter_size/alter_size.c:62-133): test
-  helper — add N synthetic records or drop the first N.
+- alter_size (plugins/filter_alter_size/alter_size.c:62-133): drop
+  the first N records.
 - lua (plugins/filter_lua/lua.c:411): arbitrary per-record function
   that can drop/modify/split records => `mapInPandas` batch transform
   (Arrow-vectorized; a returned frame may have any row count).
@@ -296,26 +296,18 @@ def filter_parser(
     key_name: str,
     parsers: list[Callable[[Column], Column]],
     reserve_data: bool = True,
-    preserve_key: bool = False,
 ) -> DataFrame:
     """Re-parse `key_name` with a parser chain; each parser maps a
     string Column -> struct Column (null on failure); first success
-    wins. Parsed fields splat to top level; Reserve_Data keeps the
-    other fields (else projects only parsed), Preserve_Key keeps the
-    raw field."""
+    wins. Parsed fields splat to top level and the raw field goes;
+    Reserve_Data keeps the other fields (else projects only parsed)."""
     parsed = F.coalesce(*[p(F.col(key_name)) for p in parsers])
     df = df.withColumn("_parsed", parsed)
     names = [f.name for f in df.schema["_parsed"].dataType.fields]
     out = {n: F.col(f"_parsed.{n}") for n in names}
     if reserve_data:
-        df = df.withColumns(out)
-    else:
-        keep = [key_name] if preserve_key else []
-        df = df.select(*keep, *[c.alias(n) for n, c in out.items()], "_parsed")
-    df = df.drop("_parsed")
-    if not preserve_key and reserve_data:
-        df = df.drop(key_name)
-    return df
+        return df.withColumns(out).drop("_parsed", key_name)
+    return df.select(*[c.alias(n) for n, c in out.items()])
 
 
 # ---------------------------------------------------------------------------
@@ -325,11 +317,10 @@ def throttle(
     df: DataFrame,
     rate: float,
     window_seconds: int,
-    ts: str = "ts",
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Global rate limit: keep the first `rate * window_seconds`
-    records per event-time window, ordered by (ts, tiebreak).
+    records per `ts` window, ordered by (ts, tiebreak).
 
     Scale shape: a naive global rank puts an entire window's traffic in
     ONE task. Stage 1 pre-limits per input partition (any row in the
@@ -339,8 +330,8 @@ def throttle(
     from fluent_bit_spark.operators.skew import topk_per_group
 
     budget = int(rate * window_seconds)
-    bucket = F.window(F.col(ts), f"{window_seconds} seconds")
-    order = [F.col(ts)] + [F.col(c) for c in (order_cols or [])]
+    bucket = F.window(F.col("ts"), f"{window_seconds} seconds")
+    order = [F.col("ts")] + [F.col(c) for c in (order_cols or [])]
     return topk_per_group(df, [bucket], order, budget)
 
 
@@ -350,10 +341,9 @@ def throttle_size(
     byte_limit: int,
     window_seconds: int,
     size_col: str = "text",
-    ts: str = "ts",
     order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Per-key byte budget per window: keep records while the running
+    """Per-key byte budget per `ts` window: keep records while the running
     byte total stays within the limit.
 
     Hot-key safe: a per-input-partition running-sum pre-filter bounds
@@ -365,8 +355,8 @@ def throttle_size(
     the global running sum, so the final filter reproduces the global
     cutoff exactly (without it, dropping a single huge record locally
     would un-poison the window for later small records)."""
-    bucket = F.window(F.col(ts), f"{window_seconds} seconds")
-    order = [F.col(ts)] + [F.col(c) for c in (order_cols or [])]
+    bucket = F.window(F.col("ts"), f"{window_seconds} seconds")
+    order = [F.col("ts")] + [F.col(c) for c in (order_cols or [])]
     pre = (
         Window.partitionBy(F.spark_partition_id(), F.col(key), bucket)
         .orderBy(*order)
@@ -445,9 +435,9 @@ def expect(
 # alter_size
 
 def alter_size(
-    df: DataFrame, add: DataFrame | None = None, remove: int = 0, order_cols: list[str] | None = None
+    df: DataFrame, remove: int = 0, order_cols: list[str] | None = None
 ) -> DataFrame:
-    """Add synthetic records / drop the first N (deterministic order).
+    """Drop the first `remove` records (deterministic order).
 
     Dropping the globally-first N never ranks the full table: any row
     in the global first N is also in its own partition's first N, so
@@ -467,8 +457,6 @@ def alter_size(
             .drop("_rn")
         )
         df = safe.unionByName(kept_cand)
-    if add is not None:
-        df = df.unionByName(add, allowMissingColumns=True)
     return df
 
 

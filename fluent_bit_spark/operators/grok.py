@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 # Common grok base patterns (RE2-safe, capture-free). Public-knowledge
 # definitions, simplified where the canonical ones use constructs RE2
@@ -118,9 +118,7 @@ class GrokError(ValueError):
     pass
 
 
-def grok_compile(
-    pattern: str, custom: dict[str, str] | None = None
-) -> tuple[str, list[str], dict[str, str]]:
+def grok_compile(pattern: str) -> tuple[str, list[str], dict[str, str]]:
     """Expand a grok expression to `(regex, fields, casts)`:
 
     - `regex`: flat named-group pattern (`(?<field>...)` per
@@ -130,7 +128,6 @@ def grok_compile(
     - `casts`: field -> typecast name for the `:int`/`:float`
       conversions (`typecast` stage vocabulary).
     """
-    custom = {**GROK_PATTERNS, **(custom or {})}
     fields: list[str] = []
     casts: dict[str, str] = {}
 
@@ -140,14 +137,14 @@ def grok_compile(
 
         def sub(m: re.Match) -> str:
             name, field, ty = m.group("name"), m.group("field"), m.group("type")
-            if name not in custom:
+            if name not in GROK_PATTERNS:
                 raise GrokError(f"unknown grok pattern %{{{name}}}")
             if ty and ty not in _TYPE_MAP:
                 raise GrokError(
                     f"unsupported grok conversion {ty!r} in %{{{name}:{field}:{ty}}}"
                     " (only :int / :float)"
                 )
-            body = expand(custom[name], depth + 1, capture=False)
+            body = expand(GROK_PATTERNS[name], depth + 1, capture=False)
             if field and capture:
                 if field in fields:
                     raise GrokError(f"duplicate grok field {field!r}")
@@ -174,8 +171,6 @@ def apply_grok(
     df: DataFrame,
     pattern: str,
     source: str = "text",
-    custom: dict[str, str] | None = None,
-    gate: Column | None = None,
     **kwargs,
 ) -> DataFrame:
     """Grok front-end to `apply_regex_parser`: expand the macros, merge
@@ -183,8 +178,6 @@ def apply_grok(
     the existing JVM regex stage."""
     from fluent_bit_spark.operators.parse import apply_regex_parser
 
-    regex, _fields, casts = grok_compile(pattern, custom)
+    regex, _fields, casts = grok_compile(pattern)
     types = {**casts, **(kwargs.pop("types", None) or {})}
-    return apply_regex_parser(
-        df, regex, source=source, types=types, gate=gate, **kwargs
-    )
+    return apply_regex_parser(df, regex, source=source, types=types, **kwargs)

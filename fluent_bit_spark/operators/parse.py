@@ -118,18 +118,20 @@ def apply_regex_parser(
 
 def typecast(df: DataFrame, types: dict[str, str]) -> DataFrame:
     """Per-key declared casts: integer/float/bool/string/hex
-    (include/fluent-bit/flb_parser.h:69-75)."""
+    (include/fluent-bit/flb_parser.h:69-75). A value that does not
+    parse as its type becomes NULL (`try_cast`): under ANSI mode a plain
+    cast would abort the whole job on one malformed log line."""
     cols = {}
     for key, ty in types.items():
         c = F.col(key)
         if ty in ("integer", "int"):
-            cols[key] = c.cast("long")
+            cols[key] = c.try_cast("long")
         elif ty == "float":
-            cols[key] = c.cast("double")
+            cols[key] = c.try_cast("double")
         elif ty in ("bool", "boolean"):
-            cols[key] = c.cast("boolean")
+            cols[key] = c.try_cast("boolean")
         elif ty == "hex":
-            cols[key] = F.conv(c, 16, 10).cast("long")
+            cols[key] = F.conv(c, 16, 10).try_cast("long")
         else:
             cols[key] = c.cast("string")
     return df.withColumns(cols)
@@ -159,22 +161,16 @@ def json_parser(
     df: DataFrame,
     schema: T.StructType | str,
     source: str = "text",
-    prefix: str = "",
-    mode: str = "flatten",
 ) -> DataFrame:
     """JSON parse (src/flb_parser_json.c): `from_json` with an explicit
-    schema. mode='flatten' splats fields (optionally prefixed) to top
-    level; mode='struct' keeps one struct column `parsed`."""
-    parsed = F.from_json(F.col(source), schema)
-    if mode == "struct":
-        return df.withColumn("parsed", parsed)
-    df = df.withColumn("_j", parsed)
+    schema, its fields splatted to top-level columns."""
+    df = df.withColumn("_j", F.from_json(F.col(source), schema))
     names = (
         schema.fieldNames()
         if isinstance(schema, T.StructType)
         else df.select("_j.*").columns
     )
-    df = df.withColumns({prefix + n: F.col(f"_j.{n}") for n in names})
+    df = df.withColumns({n: F.col(f"_j.{n}") for n in names})
     return df.drop("_j")
 
 
@@ -208,8 +204,8 @@ def _map_last_wins(keys: Column, vals: Column) -> Column:
     )
 
 
-def ltsv_parser(df: DataFrame, source: str = "text", out: str = "ltsv") -> DataFrame:
-    """LTSV `k:v<TAB>...` -> MapType column (src/flb_parser_ltsv.c).
+def ltsv_parser(df: DataFrame, source: str = "text") -> DataFrame:
+    """LTSV `k:v<TAB>...` -> MapType column `ltsv` (src/flb_parser_ltsv.c).
     Duplicate keys keep the last value (str_to_map would throw
     DUPLICATE_MAP_KEY); values may contain ':'."""
     pairs = F.filter(F.split(F.col(source), "\t"), lambda p: p.contains(":"))
@@ -224,7 +220,7 @@ def ltsv_parser(df: DataFrame, source: str = "text", out: str = "ltsv") -> DataF
         }
     )
     return df.withColumn(
-        out, _map_last_wins(F.col("_lt_keys"), F.col("_lt_vals"))
+        "ltsv", _map_last_wins(F.col("_lt_keys"), F.col("_lt_vals"))
     ).drop("_lt_pairs", "_lt_keys", "_lt_vals")
 
 
@@ -232,8 +228,8 @@ def ltsv_parser(df: DataFrame, source: str = "text", out: str = "ltsv") -> DataF
 _LOGFMT_PAIR = r'([A-Za-z0-9_.-]+)=("[^"]*"|\S+)'
 
 
-def logfmt_parser(df: DataFrame, source: str = "text", out: str = "logfmt") -> DataFrame:
-    """logfmt -> MapType column entirely with builtins: extract key and
+def logfmt_parser(df: DataFrame, source: str = "text") -> DataFrame:
+    """logfmt -> MapType column `logfmt` entirely with builtins: extract key and
     value arrays with `regexp_extract_all`, unquote quoted values, zip
     into a map (src/flb_parser_logfmt.c semantics)."""
     df = df.withColumns(
@@ -252,7 +248,7 @@ def logfmt_parser(df: DataFrame, source: str = "text", out: str = "logfmt") -> D
     )
     # last occurrence wins on duplicate keys (no DUPLICATE_MAP_KEY crash)
     return df.withColumn(
-        out, _map_last_wins(F.col("_lf_keys"), F.col("_lf_vals"))
+        "logfmt", _map_last_wins(F.col("_lf_keys"), F.col("_lf_vals"))
     ).drop("_lf_keys", "_lf_vals")
 
 
@@ -272,16 +268,11 @@ def template_expr(col: Column) -> Column:
     return F.regexp_replace(t, r"\d+", "<N>")
 
 
-def template_mine(
-    df: DataFrame,
-    text_col: str = "text",
-    group_col: str = "conv_id",
-    min_groups: int = 3,
-) -> DataFrame:
-    """Log-template mining: collapse the variable tokens of each line —
-    IPv4 dotted quads, then any digit run — to typed placeholders and
-    group the resulting templates, keeping those that recur across at
-    least `min_groups` distinct conversations. The masking pass is the
+def template_mine(df: DataFrame, min_groups: int = 3) -> DataFrame:
+    """Log-template mining: collapse the variable tokens of each `text`
+    line — IPv4 dotted quads, then any digit run — to typed placeholders
+    and group the resulting templates, keeping those that recur across
+    at least `min_groups` distinct conversations (`conv_id`). The masking pass is the
     core of Drain/Spell-style template extraction; the recurring
     templates are the "log schema" a fleet emits (the discovery step
     the reference leaves to the operator who hand-writes
@@ -295,12 +286,12 @@ def template_mine(
     templated log text collapses to a tiny distinct set by design.
     """
     return (
-        df.withColumn("template", template_expr(F.col(text_col)))
+        df.withColumn("template", template_expr(F.col("text")))
         .groupBy("template")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
-            F.count_distinct(F.col(group_col)).alias("n_groups"),
-            F.min(F.col(text_col)).alias("sample"),
+            F.count_distinct(F.col("conv_id")).alias("n_groups"),
+            F.min(F.col("text")).alias("sample"),
         )
         .filter(F.col("n_groups") >= min_groups)
     )

@@ -172,23 +172,21 @@ class DlqCheck:
     failed: Column
 
 
-def dlq_mark(
-    df: DataFrame, checks: list[DlqCheck], out: str = "dlq_reason"
-) -> DataFrame:
-    """Add `out` = reason of the FIRST failing check, NULL when every
+def dlq_mark(df: DataFrame, checks: list[DlqCheck]) -> DataFrame:
+    """Add `dlq_reason` = reason of the FIRST failing check, NULL when every
     check passes. One map stage; NULL check results count as passing
     (`when` is false-on-NULL)."""
     if not checks:
         raise ValueError("dlq_mark needs at least one check")
     return df.withColumn(
-        out, F.coalesce(*[F.when(c.failed, F.lit(c.reason)) for c in checks])
+        "dlq_reason", F.coalesce(*[F.when(c.failed, F.lit(c.reason)) for c in checks])
     )
 
 
 def dlq_split(
-    df: DataFrame, checks: list[DlqCheck], out: str = "dlq_reason"
+    df: DataFrame, checks: list[DlqCheck]
 ) -> tuple[DataFrame, DataFrame]:
-    """(clean, dead_letter) views of one marked frame — the quarantine
+    """(clean, dead_letter) views of one `dlq_reason`-marked frame — the quarantine
     analog of the reference's parse-failure handling: filter_parser
     either drops unparseable records or passes them through untouched
     (plugins/filter_parser/filter_parser.c Reserve_Data), and the
@@ -196,10 +194,10 @@ def dlq_split(
     (src/flb_router.c). At 100 TB silent drops are unacceptable; the
     scale idiom is a reasoned dead-letter sink: mark once (one
     whole-stage-codegen pass), persist, filter twice."""
-    marked = dlq_mark(df, checks, out)
+    marked = dlq_mark(df, checks)
     return (
-        marked.filter(F.col(out).isNull()).drop(out),
-        marked.filter(F.col(out).isNotNull()),
+        marked.filter(F.col("dlq_reason").isNull()).drop("dlq_reason"),
+        marked.filter(F.col("dlq_reason").isNotNull()),
     )
 
 
@@ -207,13 +205,12 @@ def route_diff(
     df: DataFrame,
     sinks_old: list[tuple[str, str]],
     sinks_new: list[tuple[str, str]],
-    tag_col: str = "tag",
 ) -> DataFrame:
     """Config-reload impact preview: before swapping router configs
     (the reference re-builds the router on SIGHUP/hot-reload,
     src/flb_router.c — with no way to ask "what will change?"),
     evaluate BOTH Match-glob rule sets against the observed tag
-    vocabulary and report, per tag:
+    vocabulary and report, per `tag`:
 
     - ``n_rows``: how many records currently carry the tag;
     - ``routes_old`` / ``routes_new``: comma-joined sorted sink sets;
@@ -227,11 +224,11 @@ def route_diff(
     over #tags rows (closed-form per tag, rows never re-read). The
     preview of a config change against 100 TB costs one count pass.
     """
-    tags = df.groupBy(tag_col).agg(F.count(F.lit(1)).alias("n_rows"))
+    tags = df.groupBy("tag").agg(F.count(F.lit(1)).alias("n_rows"))
 
     staged = tags.withColumn(
-        "_ra", F.array_sort(_matched_sinks(F.col(tag_col), sinks_old))
-    ).withColumn("_rb", F.array_sort(_matched_sinks(F.col(tag_col), sinks_new)))
+        "_ra", F.array_sort(_matched_sinks(F.col("tag"), sinks_old))
+    ).withColumn("_rb", F.array_sort(_matched_sinks(F.col("tag"), sinks_new)))
     verdict = (
         F.when(F.col("_ra") == F.col("_rb"), F.lit("unchanged"))
         .when(F.size("_rb") == 0, F.lit("newly_dropped"))
@@ -239,7 +236,7 @@ def route_diff(
         .otherwise(F.lit("rerouted"))
     )
     return staged.select(
-        tag_col,
+        "tag",
         "n_rows",
         F.array_join("_ra", ",").alias("routes_old"),
         F.array_join("_rb", ",").alias("routes_new"),

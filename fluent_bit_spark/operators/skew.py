@@ -93,36 +93,25 @@ def salted_agg(
     return partial.groupBy(key).agg(*final_aggs)
 
 
-def stable_turn_order(
-    df: DataFrame,
-    conv: str = "conv_id",
-    idx: str = "turn_idx",
-    ts: str = "ts",
-    out: str = "turn_rank",
-) -> DataFrame:
-    """Deterministic within-conversation rank — (turn_idx, ts) ordered,
-    independent of arrival/shuffle order. This is the ordering the
-    per-turn text-equality invariant is defined under."""
-    w = Window.partitionBy(conv).orderBy(F.col(idx), F.col(ts))
-    return df.withColumn(out, F.row_number().over(w))
+def stable_turn_order(df: DataFrame) -> DataFrame:
+    """Deterministic within-conversation rank `turn_rank` — per conv_id,
+    (turn_idx, ts) ordered, independent of arrival/shuffle order. This
+    is the ordering the per-turn text-equality invariant is defined
+    under."""
+    w = Window.partitionBy("conv_id").orderBy(F.col("turn_idx"), F.col("ts"))
+    return df.withColumn("turn_rank", F.row_number().over(w))
 
 
-def stable_turn_order_skew_safe(
-    df: DataFrame,
-    conv: str = "conv_id",
-    idx: str = "turn_idx",
-    ts: str = "ts",
-    out: str = "turn_rank",
-    partitions: int | None = None,
-) -> DataFrame:
+def stable_turn_order_skew_safe(df: DataFrame) -> DataFrame:
     """stable_turn_order for corpora with PATHOLOGICALLY hot
-    conversations: identical `out` values (row_number within conv by
-    (idx, ts)) without ever giving one task a whole conversation.
+    conversations: identical `turn_rank` values (row_number within
+    conv_id by (turn_idx, ts)) without ever giving one task a whole
+    conversation.
 
     The plain window hash-partitions by conv, so a conversation with
     10^9 turns is one task's sort — the single shape in this pipeline
     a hot key can break at 10^12-turn scale. Here the global order
-    (conv, idx, ts) is built with a RANGE repartition (the range
+    (conv_id, turn_idx, ts) is built with a RANGE repartition (the range
     partitioner splits a hot conversation across as many partitions
     as it needs) + within-partition sort; a per-partition row_number
     plus driver-side cumulative partition offsets (numPartitions tiny
@@ -137,12 +126,12 @@ def stable_turn_order_skew_safe(
     Trade-off: one extra shuffle + a numPartitions-row collect vs the
     plain window — use stable_turn_order when max conversation length
     is bounded (the common case); this variant when skew_report shows
-    a conversation outweighing a whole task."""
+    a conversation outweighing a whole task. The range layout has
+    `spark.sql.shuffle.partitions` partitions."""
     from fluent_bit_spark.session import persist_tracked
 
-    ob = [F.col(conv), F.col(idx), F.col(ts)]
-    spark = df.sparkSession
-    n = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    ob = [F.col("conv_id"), F.col("turn_idx"), F.col("ts")]
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # persisted: the range layout feeds the offsets count AND the rank
     # pass; recomputation must see the same partition boundaries
     srt = persist_tracked(
@@ -155,9 +144,7 @@ def stable_turn_order_skew_safe(
         for r in srt.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()
     }
     if not cnts:
-        return stable_turn_order(
-            srt, conv, idx, ts, out
-        ).drop("_pid")  # empty input: plain window on nothing
+        return stable_turn_order(srt).drop("_pid")  # empty input: plain window on nothing
     # cumulative offsets as ONE array literal indexed by _pid:
     # element_at on a constant array is O(1) per row and a single
     # Literal node in the plan, vs a literal create_map whose
@@ -175,20 +162,16 @@ def stable_turn_order_skew_safe(
         F.element_at(off_arr, F.col("_pid") + F.lit(1))
         + F.row_number().over(wp),
     )
-    base = g.groupBy(conv).agg(F.min("_g").alias("_b"))
+    base = g.groupBy("conv_id").agg(F.min("_g").alias("_b"))
     return (
-        g.join(base, conv)
-        .withColumn(out, (F.col("_g") - F.col("_b") + F.lit(1)).cast("int"))
+        g.join(base, "conv_id")
+        .withColumn("turn_rank", (F.col("_g") - F.col("_b") + F.lit(1)).cast("int"))
         .drop("_pid", "_g", "_b")
     )
 
 
-def skew_report(
-    df: DataFrame,
-    key_col: str = "conv_id",
-    topk: int = 20,
-) -> DataFrame:
-    """Heavy-hitter skew diagnostic: the top-`topk` keys by row count
+def skew_report(df: DataFrame, topk: int = 20) -> DataFrame:
+    """Heavy-hitter skew diagnostic: the top-`topk` conv_ids by row count
     with each key's exact share of the table in parts-per-million
     (integer floor division — engine-exact, no float rounding). This is
     the report that decides the salting/AQE-skew-split parameters for
@@ -201,7 +184,7 @@ def skew_report(
     TakeOrdered (per-partition pre-limit, never a global sort
     materialization).
     """
-    counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("n_rows"))
+    counts = df.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_rows"))
     total = counts.agg(F.sum("n_rows").alias("_sk_total"))
     ranked = (
         counts.crossJoin(F.broadcast(total))
@@ -212,14 +195,14 @@ def skew_report(
             "share_ppm",
             F.expr("n_rows * CAST(1000000 AS BIGINT) div _sk_total"),
         )
-        .orderBy(F.desc("n_rows"), F.col(key_col))
+        .orderBy(F.desc("n_rows"), F.col("conv_id"))
         .limit(topk)
     )
     # unpartitioned window is safe here: it runs AFTER the limit, over
     # at most `topk` rows (the WindowExec single-partition warning is
     # about this bounded frame, not the table)
-    w = Window.orderBy(F.desc("n_rows"), F.col(key_col))
+    w = Window.orderBy(F.desc("n_rows"), F.col("conv_id"))
     return (
         ranked.withColumn("rnk", F.row_number().over(w))
-        .select(key_col, "n_rows", "share_ppm", "rnk")
+        .select("conv_id", "n_rows", "share_ppm", "rnk")
     )

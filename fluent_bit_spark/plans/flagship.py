@@ -156,7 +156,7 @@ def parse_stage(df: DataFrame) -> DataFrame:
                 F.col("pc").isNotNull(),
                 F.substring_index(F.col("pc"), " ", 1),
             ),
-            "code": F.substring_index(F.col("pc"), " ", -1).cast("long"),
+            "code": F.substring_index(F.col("pc"), " ", -1).try_cast("long"),
         }
     )
     # logfmt (unified fields via anchored extracts — JVM path)
@@ -166,7 +166,7 @@ def parse_stage(df: DataFrame) -> DataFrame:
             "level": F.when(F.col("fmt") == "logfmt", lf(r"(?:^|\s)level=(\S+)")),
             "msg": F.when(F.col("fmt") == "logfmt", lf(r'msg="([^"]*)"')),
             "latency_cents": F.when(
-                F.col("fmt") == "logfmt", lf(r"latency_cents=(\d+)").cast("long")
+                F.col("fmt") == "logfmt", lf(r"latency_cents=(\d+)").try_cast("long")
             ),
         }
     )
@@ -202,7 +202,7 @@ def parse_stage(df: DataFrame) -> DataFrame:
     _ps_toks = F.split(F.col("_ps"), " ")
     df = df.withColumns(
         {
-            "pri": F.substring_index(F.col("_ps"), ">", 1).cast("long"),
+            "pri": F.substring_index(F.col("_ps"), ">", 1).try_cast("long"),
             "smsg": F.nullif(
                 F.array_join(
                     F.slice(
@@ -214,21 +214,19 @@ def parse_stage(df: DataFrame) -> DataFrame:
             ),
         }
     )
-    # ltsv — the map is built ONCE into a gated column (same
-    # no-branch-CSE story as _j: three `when(fmt=ltsv, element_at(
-    # str_to_map(...)))` branches re-split the line each; measured
-    # 2.5 s -> 1.0 s for the ltsv block alone at 10M rows). A NULL
-    # map (non-ltsv rows) makes try_element_at yield NULL — identical
-    # values to the gated form.
-    df = df.withColumn(
-        "_lm",
-        F.when(F.col("fmt") == "ltsv", F.str_to_map(t, F.lit("\t"), F.lit(":"))),
+    # ltsv — one anchored extract per field reads the key's FIRST
+    # occurrence, an empty value as NULL (the oracle's rule). A map
+    # (str_to_map) would fail the whole job on a line that repeats a
+    # key (DUPLICATED_MAP_KEY under ANSI).
+    lt = lambda key: F.when(
+        F.col("fmt") == "ltsv",
+        F.nullif(F.regexp_extract(t, rf"(?:^|\t){key}:([^\t]*)", 1), F.lit("")),
     )
     df = df.withColumns(
         {
-            "k1": F.try_element_at(F.col("_lm"), F.lit("k1")),
-            "k2": F.try_element_at(F.col("_lm"), F.lit("k2")).cast("long"),
-            "ltsv_cents": F.try_element_at(F.col("_lm"), F.lit("cents")).cast("long"),
+            "k1": lt("k1"),
+            "k2": lt("k2").try_cast("long"),
+            "ltsv_cents": lt("cents").try_cast("long"),
         }
     )
     # unified fields
@@ -261,7 +259,7 @@ def parse_stage(df: DataFrame) -> DataFrame:
     )
     # the parse-once helper columns are internal; CollapseProject will
     # not inline them back (non-cheap exprs referenced multiple times)
-    return df.drop("_j", "_lm", "pc", "_ps")
+    return df.drop("_j", "pc", "_ps")
 
 
 # ---------------------------------------------------------------------------

@@ -47,23 +47,22 @@ def _epoch_seconds(c: Column) -> Column:
     return c.cast("timestamp_ltz").cast("double")
 
 
-def to_json_lines(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def to_json_lines(df: DataFrame) -> DataFrame:
     """One JSON object per record (out_stdout json_lines,
     include/fluent-bit/flb_pack.h:39-50)."""
-    struct = F.struct(*[F.col(c) for c in (cols or df.columns)])
-    return df.select(F.to_json(struct).alias("value"))
+    return df.select(F.to_json(F.struct(*df.columns)).alias("value"))
 
 
-def to_csv_lines(df: DataFrame, cols: list[str], sep: str = ",") -> DataFrame:
-    """CSV-formatted lines (out_file csv; quoting: embedded sep/quote
+def to_csv_lines(df: DataFrame, cols: list[str]) -> DataFrame:
+    """CSV-formatted lines (out_file csv; quoting: embedded comma/quote
     => double-quoted field, matching the common CSV rule)."""
     def fmt(c: str) -> Column:
         s = F.col(c).cast("string")
-        needs = s.contains(sep) | s.contains('"') | s.contains("\n")
+        needs = s.contains(",") | s.contains('"') | s.contains("\n")
         quoted = F.concat(F.lit('"'), F.regexp_replace(s, '"', '""'), F.lit('"'))
         return F.coalesce(F.when(needs, quoted).otherwise(s), F.lit(""))
 
-    return df.select(F.concat_ws(sep, *[fmt(c) for c in cols]).alias("value"))
+    return df.select(F.concat_ws(",", *[fmt(c) for c in cols]).alias("value"))
 
 
 def to_ltsv_lines(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -78,9 +77,10 @@ def to_ltsv_lines(df: DataFrame, cols: list[str]) -> DataFrame:
 _TEMPLATE_VAR = re.compile(r"\{([A-Za-z_][A-Za-z0-9_]*)\}")
 
 
-def to_template_lines(df: DataFrame, template: str, time_col: str = "ts") -> DataFrame:
+def to_template_lines(df: DataFrame, template: str) -> DataFrame:
     """out_file `template` format: '{time} {key}' substitution
-    (plugins/out_file/file.c:261). Unknown keys render empty."""
+    (plugins/out_file/file.c:261), `{time}` rendering `ts`. Unknown
+    keys render empty."""
     parts: list[Column] = []
     pos = 0
     for m in _TEMPLATE_VAR.finditer(template):
@@ -92,7 +92,7 @@ def to_template_lines(df: DataFrame, template: str, time_col: str = "ts") -> Dat
             # instead of nulling the whole concatenated line
             parts.append(
                 F.coalesce(
-                    F.date_format(F.col(time_col), "yyyy-MM-dd HH:mm:ss"),
+                    F.date_format(F.col("ts"), "yyyy-MM-dd HH:mm:ss"),
                     F.lit(""),
                 )
             )
@@ -113,18 +113,16 @@ def gelf_transform(
     host_col: str = "host",
     short_message_col: str = "text",
     ts_col: str = "ts",
-    level_col: str | None = None,
 ) -> DataFrame:
     """GELF field mapping (src/flb_pack_gelf.c:408): version, host,
-    short_message, timestamp (epoch float), level."""
-    out = df.select(
+    short_message, timestamp (epoch float), level 1."""
+    return df.select(
         F.lit("1.1").alias("version"),
         F.coalesce(F.col(host_col).cast("string"), F.lit("unknown")).alias("host"),
         F.col(short_message_col).alias("short_message"),
         _epoch_seconds(F.col(ts_col)).alias("timestamp"),
-        (F.col(level_col) if level_col else F.lit(1)).alias("level"),
+        F.lit(1).alias("level"),
     )
-    return out
 
 
 # GELF string-level keyword table (src/flb_pack_gelf.c:574
@@ -161,7 +159,6 @@ def gelf_extended_transform(
     short_message_col: str = "text",
     ts_col: str = "ts",
     level_col: str | None = None,
-    full_message_col: str | None = None,
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """GELF mapping with the additional-field path
@@ -176,15 +173,11 @@ def gelf_extended_transform(
         F.coalesce(F.col(host_col).cast("string"), F.lit("unknown")).alias("host"),
         F.col(short_message_col).alias("short_message"),
         _epoch_seconds(F.col(ts_col)).alias("timestamp"),
-    ]
-    if full_message_col:
-        out.append(F.col(full_message_col).alias("full_message"))
-    out.append(
         (gelf_level_column(F.col(level_col)) if level_col else F.lit("1")).alias(
             "level"
-        )
-    )
-    reserved = {host_col, short_message_col, ts_col, level_col, full_message_col}
+        ),
+    ]
+    reserved = {host_col, short_message_col, ts_col, level_col}
     for c in extra_cols or []:
         if c in reserved or c == "id":
             continue
@@ -356,39 +349,26 @@ def loki_labels_k8s(
     )
 
 
-def splunk_hec_transform(
-    df: DataFrame,
-    ts_col: str = "ts",
-    host_col: str | None = None,
-    sourcetype: str = "_json",
-    index: str | None = None,
-) -> DataFrame:
-    """Splunk HEC envelope (plugins/out_splunk): {time, host,
-    sourcetype, index, event} with event = the record as JSON."""
+def splunk_hec_transform(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+    """Splunk HEC envelope (plugins/out_splunk): {time, host "unknown",
+    sourcetype "_json", event} with event = the record as JSON."""
     event_cols = [c for c in df.columns if c != ts_col]
-    fields = {
-        "time": _epoch_seconds(F.col(ts_col)),
-        "host": F.coalesce(
-            (F.col(host_col) if host_col else F.lit(None)).cast("string"),
-            F.lit("unknown"),
-        ),
-        "sourcetype": F.lit(sourcetype),
-        "event": F.to_json(F.struct(*[F.col(c) for c in event_cols])),
-    }
-    if index:
-        fields["index"] = F.lit(index)
-    return df.select(*[v.alias(k) for k, v in fields.items()])
+    return df.select(
+        _epoch_seconds(F.col(ts_col)).alias("time"),
+        F.lit("unknown").alias("host"),
+        F.lit("_json").alias("sourcetype"),
+        F.to_json(F.struct(*[F.col(c) for c in event_cols])).alias("event"),
+    )
 
 
 def datadog_transform(
     df: DataFrame,
     message_col: str = "text",
     ts_col: str = "ts",
-    service: str = "fluent-bit-spark",
     tag_cols: list[str] | None = None,
 ) -> DataFrame:
     """Datadog logs-intake shape (plugins/out_datadog): {message,
-    timestamp(ms), service, ddsource, ddtags}."""
+    timestamp(ms), service "fluent-bit-spark", ddsource, ddtags}."""
     tags = F.concat_ws(
         ",",
         *[
@@ -399,7 +379,7 @@ def datadog_transform(
     return df.select(
         F.col(message_col).alias("message"),
         (_epoch_seconds(F.col(ts_col)) * 1000).cast("long").alias("timestamp"),
-        F.lit(service).alias("service"),
+        F.lit("fluent-bit-spark").alias("service"),
         F.lit("spark").alias("ddsource"),
         tags.alias("ddtags"),
     )
@@ -430,15 +410,11 @@ STACKDRIVER_SEVERITY_NAMES: dict[int, str] = {
 
 
 def stackdriver_transform(
-    df: DataFrame,
-    message_col: str = "text",
-    ts_col: str = "ts",
-    severity_col: str | None = "level",
-    id_cols: tuple[str, str] | None = ("conv_id", "turn_idx"),
-    log_name: str = "projects/fluent-bit/logs/fluent-bit",
+    df: DataFrame, severity_col: str | None = "level"
 ) -> DataFrame:
-    """Cloud Logging (out_stackdriver) entry shape: logName, insertId,
-    severity (name) + severity_num, message, timestamp(ms). Severity
+    """Cloud Logging (out_stackdriver) entry shape: logName, insertId
+    (`conv_id:turn_idx`), severity (name) + severity_num, message
+    (`text`), timestamp(ms) (`ts`). Severity
     resolves via the reference's case-insensitive token table — a
     literal map expression, so the whole transform stays inside
     whole-stage codegen (no join, no UDF)."""
@@ -458,18 +434,16 @@ def stackdriver_transform(
         if severity_col
         else F.lit(0)
     )
-    insert_id = (
-        F.concat_ws(":", *[F.col(c).cast("string") for c in id_cols])
-        if id_cols
-        else F.monotonically_increasing_id().cast("string")
+    insert_id = F.concat_ws(
+        ":", F.col("conv_id").cast("string"), F.col("turn_idx").cast("string")
     )
     return df.select(
-        F.lit(log_name).alias("logName"),
+        F.lit("projects/fluent-bit/logs/fluent-bit").alias("logName"),
         insert_id.alias("insertId"),
         F.element_at(name_map, sev_num).alias("severity"),
         sev_num.alias("severity_num"),
-        F.col(message_col).alias("message"),
-        (_epoch_seconds(F.col(ts_col)) * 1000).cast("long").alias("timestamp"),
+        F.col("text").alias("message"),
+        (_epoch_seconds(F.col("ts")) * 1000).cast("long").alias("timestamp"),
     )
 
 
@@ -484,17 +458,14 @@ SYSLOG_SEVERITY: dict[str, int] = {
 
 def syslog_rfc5424_transform(
     df: DataFrame,
-    msg_col: str = "text",
-    ts_col: str = "ts",
     host_col: str | None = "host",
     app_col: str | None = "tool",
     severity_col: str | None = "level",
-    facility: int = 1,
 ) -> DataFrame:
     """RFC5424 syslog line rendering (plugins/out_syslog/syslog.c:143
     syslog_rfc5424): `<prival>1 TIMESTAMP HOST APP PROCID MSGID SD
-    MSG` with prival = facility*8 + severity, microsecond UTC
-    timestamp, '-' for absent fields, and the reference's truncation
+    MSG` with prival = facility*8 + severity (facility 1, user-level),
+    microsecond UTC `ts` timestamp, MSG = `text`, '-' for absent fields, and the reference's truncation
     caps (host 255, appname 48). Pure string expressions — stays in
     whole-stage codegen."""
     pairs: list[Column] = []
@@ -510,8 +481,8 @@ def syslog_rfc5424_transform(
         if severity_col
         else F.lit(6)
     )
-    prival = F.lit(facility * 8) + sev
-    stamp = F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
+    prival = F.lit(8) + sev
+    stamp = F.date_format(F.col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
     host = (
         F.coalesce(F.substring(F.col(host_col).cast("string"), 1, 255), F.lit("-"))
         if host_col
@@ -524,7 +495,7 @@ def syslog_rfc5424_transform(
     )
     line = F.concat(
         F.lit("<"), prival.cast("string"), F.lit(">1 "), stamp, F.lit(" "),
-        host, F.lit(" "), app, F.lit(" - - - "), F.col(msg_col),
+        host, F.lit(" "), app, F.lit(" - - - "), F.col("text"),
     )
     return df.select(
         F.col("conv_id"), F.col("turn_idx"), sev.alias("severity"), line.alias("line")
@@ -544,7 +515,6 @@ def influx_line_transform(
     df: DataFrame,
     measurement: str = "transcripts",
     tag_cols: tuple[str, ...] = ("role", "tool"),
-    ts_col: str = "ts",
 ) -> DataFrame:
     """InfluxDB line protocol (out_influxdb):
     `measurement,tag=v,... field=value,... timestamp_ns` — tag values
@@ -565,7 +535,7 @@ def influx_line_transform(
         F.lit("turn_idx="), F.col("turn_idx").cast("string"), F.lit("i"),
         F.lit(",len="), F.length("text").cast("string"), F.lit("i"),
     )
-    ns = (_epoch_seconds(F.col(ts_col)) * 1_000_000).cast("long") * F.lit(1000)
+    ns = (_epoch_seconds(F.col("ts")) * 1_000_000).cast("long") * F.lit(1000)
     line = F.concat(
         F.lit(measurement), tags, F.lit(" "), fields, F.lit(" "), ns.cast("string")
     )
@@ -676,28 +646,21 @@ def fanout_write(
     return {name: {"records": n} for name, n in got.items()}
 
 
-def retention_by_budget(
-    per_sink: DataFrame,
-    budget_bytes: int,
-    sink_col: str = "sink",
-    ts_col: str = "ts",
-    bytes_col: Column | None = None,
-    order_cols: tuple = ("conv_id", "turn_idx"),
-    bucket: str = "day",
-) -> DataFrame:
+def retention_by_budget(per_sink: DataFrame, budget_bytes: int) -> DataFrame:
     """Per-sink byte-budget retention — the reference's
     `storage.total_limit_size` (plugins enforce it per output: oldest
     chunks are destroyed until the output's stored bytes fit the limit,
     src/flb_storage.c / flb_output.h `total_limit_size`), re-expressed
-    declaratively: keep the NEWEST rows of each sink whose running byte
-    total stays within `budget_bytes`; everything older is dropped.
+    declaratively: keep the NEWEST rows of each `sink` whose running
+    byte total (`length(text)` per row) stays within `budget_bytes`;
+    everything older is dropped.
 
     Two-phase cutoff so no sink ever needs a global row-ordered window
     (a per-sink full-table cumsum would serialize a 100 TB sink onto
     one reducer):
 
-      1. bucket totals: sum bytes per (sink, time bucket) — a tiny
-         frame (sinks x buckets) — and a newest-first cumulative sum
+      1. bucket totals: sum bytes per (sink, `ts` day) — a tiny
+         frame (sinks x days) — and a newest-first cumulative sum
          over it picks, per sink, the buckets kept in full and the ONE
          boundary bucket that straddles the budget.
       2. only boundary-bucket rows (bounded by bucket width) get the
@@ -705,31 +668,31 @@ def retention_by_budget(
          no window at all.
 
     Row order within the budget is total and deterministic:
-    (ts DESC, *order_cols) — never arrival order.
+    (ts DESC, conv_id, turn_idx) — never arrival order.
     """
-    nbytes = bytes_col if bytes_col is not None else F.length("text")
-    b = per_sink.withColumn("_rb_bytes", nbytes.cast("bigint")).withColumn(
-        "_rb_bkt", F.date_trunc(bucket, F.col(ts_col))
+    order_cols = ("conv_id", "turn_idx")
+    b = per_sink.withColumn("_rb_bytes", F.length("text").cast("bigint")).withColumn(
+        "_rb_bkt", F.date_trunc("day", F.col("ts"))
     )
-    btot = b.groupBy(sink_col, "_rb_bkt").agg(
+    btot = b.groupBy("sink", "_rb_bkt").agg(
         F.sum("_rb_bytes").alias("_rb_btotal")
     )
     wb = (
-        Window.partitionBy(sink_col)
+        Window.partitionBy("sink")
         .orderBy(F.desc("_rb_bkt"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     bcum = btot.withColumn(
         "_rb_prior", F.coalesce(F.sum("_rb_btotal").over(wb), F.lit(0))
     )
-    joined = b.join(F.broadcast(bcum), [sink_col, "_rb_bkt"])
-    keep_cols = [sink_col, *order_cols, ts_col, F.col("_rb_bytes").alias("nbytes")]
+    joined = b.join(F.broadcast(bcum), ["sink", "_rb_bkt"])
+    keep_cols = ["sink", *order_cols, "ts", F.col("_rb_bytes").alias("nbytes")]
     full = joined.filter(
         F.col("_rb_prior") + F.col("_rb_btotal") <= F.lit(budget_bytes)
     ).select(*keep_cols)
     wr = (
-        Window.partitionBy(sink_col, "_rb_bkt")
-        .orderBy(F.desc(ts_col), *[F.col(c) for c in order_cols])
+        Window.partitionBy("sink", "_rb_bkt")
+        .orderBy(F.desc("ts"), *[F.col(c) for c in order_cols])
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     boundary = (
@@ -760,7 +723,7 @@ def gelf_chunk_plan(
 
     Pure JVM column math (closed form), so it prices a sink's UDP
     budget over 100 TB in one map pass; the byte-level chunker lives
-    in functions/wire.py for tests that reassemble real datagrams.
+    in functions/wire.py (`gelf_chunk`).
     """
     plen = F.octet_length(F.col(payload_col))
     chunks = F.expr(
@@ -786,10 +749,9 @@ def prometheus_exposition(
     counts: DataFrame,
     metric: str = "fbs_turns_total",
     label_cols: tuple[str, ...] = ("role", "tool"),
-    value_col: str = "n",
 ) -> DataFrame:
     """Prometheus text exposition format over an aggregated counter
-    frame: `metric{label="v",...} value` — the rendering the
+    frame: `metric{label="v",...} n` — the rendering the
     reference's metrics exporter surface (src/flb_metrics_exporter.c
     counters; out_prometheus in later lines) exposes to scrapes.
     Label values escape backslash, double-quote, and newline per the
@@ -820,9 +782,9 @@ def prometheus_exposition(
         F.lit(metric + "{"),
         labels,
         F.lit("} "),
-        F.col(value_col).cast("string"),
+        F.col("n").cast("string"),
     )
-    return counts.select(*label_cols, F.col(value_col), line.alias("line"))
+    return counts.select(*label_cols, F.col("n"), line.alias("line"))
 
 
 def cloudwatch_events_transform(df: DataFrame) -> DataFrame:
@@ -917,17 +879,16 @@ def slack_text_transform(df: DataFrame) -> DataFrame:
     )
 
 
-def logdna_lines_transform(df: DataFrame, app: str = "Fluent Bit") -> DataFrame:
+def logdna_lines_transform(df: DataFrame) -> DataFrame:
     """out_logdna `lines` entries (plugins/out_logdna/logdna.c:150-199):
     each record becomes {app, timestamp: int seconds, line: record
-    json}; `app` falls back to the config default "Fluent Bit"
-    (logdna.c:561) when the record carries none — transcripts don't,
-    so the default always applies here."""
+    json}; `app` is the config default "Fluent Bit" (logdna.c:561),
+    which applies when the record carries none — transcripts don't."""
     record = F.to_json(F.struct("conv_id", "turn_idx", "role", "text"))
     return df.select(
         "conv_id",
         "turn_idx",
-        F.lit(app).alias("app"),
+        F.lit("Fluent Bit").alias("app"),
         _epoch_seconds(F.col("ts")).cast("long").alias("timestamp"),
         record.alias("line"),
     )

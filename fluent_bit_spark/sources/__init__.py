@@ -27,35 +27,20 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def read_text_lines(
-    spark: SparkSession, path: str, whole_files: bool = True
-) -> DataFrame:
+def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
     """in_tail batch analog: (file, line_no, line) rows.
 
-    whole_files=True reads each file atomically (wholetext) and
-    posexplodes its lines — exact line numbers, required for multiline
-    joining (a split file would interleave). For huge individual files
-    set whole_files=False: line numbers are then per-split (monotonic
-    within a file as long as the file isn't split, i.e.
-    spark.sql.files.maxPartitionBytes >= file size)."""
-    if whole_files:
-        df = spark.read.text(path, wholetext=True).withColumn(
-            "file", F.input_file_name()
-        )
-        # strip a single trailing newline so "a\nb\n" is 2 lines, not 3
-        # (\z, not $: Java's $ also matches BEFORE a final terminator,
-        # so it would eat two trailing newlines and lose a blank line)
-        lines = F.split(F.regexp_replace(F.col("value"), "\\r?\\n\\z", ""), r"\r?\n")
-        return df.select(
-            "file", F.posexplode(lines).alias("line_no", "line")
-        )
-    df = spark.read.text(path).withColumn("file", F.input_file_name())
-    w = Window.partitionBy("file").orderBy(F.monotonically_increasing_id())
-    return df.select(
-        "file",
-        (F.row_number().over(w) - 1).alias("line_no"),
-        F.col("value").alias("line"),
+    Each file is read atomically (wholetext) and its lines posexploded:
+    exact line numbers, which multiline joining requires (a split file
+    would interleave)."""
+    df = spark.read.text(path, wholetext=True).withColumn(
+        "file", F.input_file_name()
     )
+    # strip a single trailing newline so "a\nb\n" is 2 lines, not 3
+    # (\z, not $: Java's $ also matches BEFORE a final terminator,
+    # so it would eat two trailing newlines and lose a blank line)
+    lines = F.split(F.regexp_replace(F.col("value"), "\\r?\\n\\z", ""), r"\r?\n")
+    return df.select("file", F.posexplode(lines).alias("line_no", "line"))
 
 
 def tail_tag(tag: str, file_col: Column, tag_regex: str | None = None) -> Column:
@@ -132,8 +117,6 @@ def _segment_reassemble(
     df: DataFrame,
     complete: Column,
     chunk_col: str,
-    file_col: str,
-    line_no_col: str,
     sep: str,
     extra_firsts: list[str],
 ) -> DataFrame:
@@ -151,41 +134,37 @@ def _segment_reassemble(
     analog of the reference's `docker_mode_flush` timeout flush
     (plugins/in_tail/tail_dockermode.c:296-333, tail.c:367-372)."""
     w = (
-        Window.partitionBy(file_col)
-        .orderBy(line_no_col)
+        Window.partitionBy("file")
+        .orderBy("line_no")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     seg = df.withColumn(
         "_seg", F.coalesce(F.sum(complete.cast("int")).over(w), F.lit(0))
     )
     aggs = [
-        F.min(line_no_col).alias("first_line_no"),
+        F.min("line_no").alias("first_line_no"),
         F.concat_ws(
             sep,
             F.sort_array(
-                F.collect_list(F.struct(line_no_col, chunk_col))
+                F.collect_list(F.struct("line_no", chunk_col))
             ).getField(chunk_col),
         ).alias(chunk_col),
     ]
     for c in extra_firsts:
-        aggs.append(F.min_by(F.col(c), F.col(line_no_col)).alias(c))
-    out = seg.groupBy(file_col, "_seg").agg(*aggs).drop("_seg")
-    return out.select(file_col, "first_line_no", *extra_firsts, chunk_col)
+        aggs.append(F.min_by(F.col(c), F.col("line_no")).alias(c))
+    out = seg.groupBy("file", "_seg").agg(*aggs).drop("_seg")
+    return out.select("file", "first_line_no", *extra_firsts, chunk_col)
 
 
-def docker_mode_join(
-    df: DataFrame,
-    file_col: str = "file",
-    line_no_col: str = "line_no",
-    line_col: str = "line",
-) -> DataFrame:
+def docker_mode_join(df: DataFrame) -> DataFrame:
     """in_tail Docker_Mode (plugins/in_tail/tail_dockermode.c:237
     flb_tail_dmode_process_content): each json-file record is
     `{"log": ..., "stream": ..., "time": ...}`; the container runtime
     splits log lines over 16 KB into consecutive records whose `log`
     lacks the trailing `\\n` — only the final piece carries it
     (tail_dockermode.c:194 `nl = unesc[unesc_len - 1] == '\\n'`).
-    Reassembles those runs per file and parses the envelope.
+    Reassembles those runs per file (`read_text_lines` rows) and
+    parses the envelope.
 
     Returns (file, first_line_no, stream, ts, log); `log` keeps the
     terminating newline exactly as the reference's buffered value does
@@ -193,12 +172,12 @@ def docker_mode_join(
     terminator). Records the json parse rejects surface with NULL
     fields rather than vanishing — the DLQ split can route them."""
     parsed = df.select(
-        F.col(file_col),
-        F.col(line_no_col),
-        F.get_json_object(F.col(line_col), "$.log").alias("log"),
-        F.get_json_object(F.col(line_col), "$.stream").alias("stream"),
+        "file",
+        "line_no",
+        F.get_json_object("line", "$.log").alias("log"),
+        F.get_json_object("line", "$.stream").alias("stream"),
         F.try_to_timestamp(
-            F.get_json_object(F.col(line_col), "$.time"),
+            F.get_json_object("line", "$.time"),
             F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"),
         ).alias("ts"),
     )
@@ -206,47 +185,39 @@ def docker_mode_join(
         parsed,
         F.col("log").isNull() | F.col("log").endswith("\n"),
         "log",
-        file_col,
-        line_no_col,
         sep="",
         extra_firsts=["stream", "ts"],
     )
 
 
-def cri_mode_join(
-    df: DataFrame,
-    file_col: str = "file",
-    line_no_col: str = "line_no",
-    line_col: str = "line",
-) -> DataFrame:
+def cri_mode_join(df: DataFrame) -> DataFrame:
     """CRI/containerd log reassembly: lines are
     `<time> <stdout|stderr> <P|F> <message>` (the `cri` parser,
     conf/parsers.conf:105-112); the runtime tags split pieces `P`
     (partial) and the final piece `F` (full). Joins P-runs with their
     terminating F record per file, concatenating messages with no
-    separator (the runtime split the bytes mid-line).
+    separator (the runtime split the bytes mid-line). Input rows are
+    `read_text_lines`' (file, line_no, line).
 
     Returns (file, first_line_no, stream, ts, message). `(?s)` keeps
     the message group intact if upstream chunking ever lands an
     embedded newline inside one row."""
     pat = r"(?s)^(\S+) (stdout|stderr) ([PF]) (.*)$"
     parsed = df.select(
-        F.col(file_col),
-        F.col(line_no_col),
+        "file",
+        "line_no",
         F.try_to_timestamp(
-            F.regexp_extract(F.col(line_col), pat, 1),
+            F.regexp_extract(F.col("line"), pat, 1),
             F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"),
         ).alias("ts"),
-        F.regexp_extract(F.col(line_col), pat, 2).alias("stream"),
-        F.regexp_extract(F.col(line_col), pat, 3).alias("logtag"),
-        F.regexp_extract(F.col(line_col), pat, 4).alias("message"),
+        F.regexp_extract(F.col("line"), pat, 2).alias("stream"),
+        F.regexp_extract(F.col("line"), pat, 3).alias("logtag"),
+        F.regexp_extract(F.col("line"), pat, 4).alias("message"),
     )
     return _segment_reassemble(
         parsed,
         F.col("logtag") == "F",
         "message",
-        file_col,
-        line_no_col,
         sep="",
         extra_firsts=["stream", "ts"],
     ).withColumnRenamed("message", "log")
@@ -255,7 +226,6 @@ def cri_mode_join(
 def parse_kmsg(
     df: DataFrame,
     boot_time: str = "2024-01-01 00:00:00",
-    line_col: str = "line",
 ) -> DataFrame:
     """in_kmsg (plugins/in_kmsg/in_kmsg.c:108 process_line): parse
     /dev/kmsg lines `<prival>,<sequence>,<usec_since_boot>,<flags>;
@@ -269,12 +239,11 @@ def parse_kmsg(
     fields (the reference's `goto fail` drop, kept visible for DLQ
     routing). Other input columns pass through."""
     header = r"^(\d+),(\d+),(\d+),"
-    pri = F.regexp_extract(F.col(line_col), header, 1).try_cast("long")
-    seq = F.regexp_extract(F.col(line_col), header, 2).try_cast("long")
-    mono = F.regexp_extract(F.col(line_col), header, 3).try_cast("long")
-    msg = F.regexp_replace(
-        F.regexp_replace(F.col(line_col), r"^[^;]*;", ""), r"\n$", ""
-    )
+    line = F.col("line")
+    pri = F.regexp_extract(line, header, 1).try_cast("long")
+    seq = F.regexp_extract(line, header, 2).try_cast("long")
+    mono = F.regexp_extract(line, header, 3).try_cast("long")
+    msg = F.regexp_replace(F.regexp_replace(line, r"^[^;]*;", ""), r"\n$", "")
     boot_us = F.unix_micros(F.to_timestamp(F.lit(boot_time)))
     return (
         df.withColumn("_mono", mono)
@@ -289,15 +258,12 @@ def parse_kmsg(
         .withColumn(
             "msg", F.when(F.col("_mono").isNotNull(), msg)
         )
-        .drop("_mono", line_col)
+        .drop("_mono", "line")
     )
 
 
 def parse_journal_export(
     df: DataFrame,
-    file_col: str = "file",
-    line_no_col: str = "line_no",
-    line_col: str = "line",
     keys: tuple = ("PRIORITY", "MESSAGE", "_SYSTEMD_UNIT", "_PID"),
 ) -> DataFrame:
     """in_systemd analog over the journal EXPORT serialization (the
@@ -311,17 +277,17 @@ def parse_journal_export(
     Returns (file, entry_no, <keys lowercased>, ts) where ts comes
     from __REALTIME_TIMESTAMP (epoch microseconds, the journal's
     native clock)."""
-    is_sep = F.col(line_col) == ""
+    is_sep = F.col("line") == ""
     w = (
-        Window.partitionBy(file_col)
-        .orderBy(line_no_col)
+        Window.partitionBy("file")
+        .orderBy("line_no")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     kv = (
         df.withColumn("_entry", F.sum(is_sep.cast("int")).over(w))
         .filter(~is_sep)
-        .withColumn("_k", F.regexp_extract(F.col(line_col), r"^([^=]+)=", 1))
-        .withColumn("_v", F.regexp_replace(F.col(line_col), r"^[^=]+=", ""))
+        .withColumn("_k", F.regexp_extract(F.col("line"), r"^([^=]+)=", 1))
+        .withColumn("_v", F.regexp_replace(F.col("line"), r"^[^=]+=", ""))
     )
     aggs = [
         F.max(
@@ -337,7 +303,7 @@ def parse_journal_export(
         ).alias("ts")
     )
     return (
-        kv.groupBy(file_col, "_entry")
+        kv.groupBy("file", "_entry")
         .agg(*aggs)
         .withColumnRenamed("_entry", "entry_no")
     )
@@ -463,9 +429,9 @@ def statsd_lines_from_transcripts(df: DataFrame) -> DataFrame:
     return df.select("conv_id", "turn_idx", "ts", line.alias("line"))
 
 
-def parse_statsd(df: DataFrame, line_col: str = "line", keep: tuple = ()) -> DataFrame:
+def parse_statsd(df: DataFrame, keep: tuple = ()) -> DataFrame:
     """in_statsd datagram parsing (plugins/in_statsd/statsd.c:142
-    statsd_process_line + :87 statsd_process_message), per-line:
+    statsd_process_line + :87 statsd_process_message), per `line`:
 
     - bucket = text before the first ':', value = between ':' and the
       first '|', type token = after the '|';
@@ -481,7 +447,7 @@ def parse_statsd(df: DataFrame, line_col: str = "line", keep: tuple = ()) -> Dat
     - lines missing a separator are dropped (reference logs and skips).
 
     Whole-stage-codegen regexp splits, no Python."""
-    l = F.col(line_col)
+    l = F.col("line")
     bucket = F.nullif(F.regexp_extract(l, STATSD_SPLIT_RE, 1), F.lit(""))
     value_raw = F.regexp_extract(l, STATSD_SPLIT_RE, 2)
     typepart = F.nullif(F.regexp_extract(l, STATSD_SPLIT_RE, 3), F.lit(""))
@@ -529,11 +495,7 @@ SYSLOG_RFC3164_RE = (
 )
 
 
-def parse_syslog_rfc5424(
-    df: DataFrame,
-    line_col: str = "line",
-    ts_format: str = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'",
-) -> DataFrame:
+def parse_syslog_rfc5424(df: DataFrame, line_col: str = "line") -> DataFrame:
     """in_syslog datagram processing (plugins/in_syslog/syslog_prot.c:130
     syslog_prot_process_udp -> flb_parser_do with the stock
     syslog-rfc5424 parser): one regex pass over the raw wire line, pri
@@ -561,7 +523,9 @@ def parse_syslog_rfc5424(
         # otherwise abort the whole job on a regex-matching line whose
         # stamp deviates from the format (RFC5424 nil '-' or offset
         # stamps) -- same convention as operators/parse.py
-        F.try_to_timestamp(g(2), F.lit(ts_format)).alias("event_time"),
+        F.try_to_timestamp(
+            g(2), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
+        ).alias("event_time"),
         g(3).alias("host"),
         g(4).alias("ident"),
         g(5).alias("pid"),
@@ -571,14 +535,9 @@ def parse_syslog_rfc5424(
     )
 
 
-def zone_maps(
-    df: DataFrame,
-    part_col: Column,
-    ts_col: str = "ts",
-    key_col: str = "conv_id",
-) -> DataFrame:
+def zone_maps(df: DataFrame, part_col: Column) -> DataFrame:
     """Partition zone maps — per-partition min/max statistics over the
-    clustering columns, the scan-planning table an Iceberg/parquet
+    clustering columns `ts` and `conv_id`, the scan-planning table an Iceberg/parquet
     layout keeps in its manifests. `prune_flags` then answers "which
     partitions can a predicate skip entirely" WITHOUT touching data —
     the planning step that makes a ts-range query over a 10^12-turn
@@ -589,31 +548,30 @@ def zone_maps(
     """
     return df.groupBy(part_col.alias("part")).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.min(ts_col).alias("min_ts"),
-        F.max(ts_col).alias("max_ts"),
-        F.min(key_col).alias("min_key"),
-        F.max(key_col).alias("max_key"),
+        F.min("ts").alias("min_ts"),
+        F.max("ts").alias("max_ts"),
+        F.min("conv_id").alias("min_key"),
+        F.max("conv_id").alias("max_key"),
     )
 
 
-def prune_flags(zmaps: DataFrame, lo, hi, ts_lo: str = "min_ts", ts_hi: str = "max_ts") -> DataFrame:
+def prune_flags(zmaps: DataFrame, lo, hi) -> DataFrame:
     """Mark each zone-map partition prunable for the half-open
     timestamp predicate [lo, hi): disjoint iff the partition's range
     ends before `lo` or starts at/after `hi`."""
     return zmaps.withColumn(
-        "pruned", (F.col(ts_hi) < F.lit(lo)) | (F.col(ts_lo) >= F.lit(hi))
+        "pruned", (F.col("max_ts") < F.lit(lo)) | (F.col("min_ts") >= F.lit(hi))
     )
 
 
 def compaction_plan(
     stats: DataFrame,
     part_cols: tuple = ("part",),
-    bytes_col: str = "n_bytes",
     target_bytes: int = 50_000,
     small_bytes: int | None = None,
 ) -> DataFrame:
     """Small-file compaction planner over a partition-stats frame (e.g.
-    `zone_maps` output): partitions below `small_bytes` are grouped, in
+    `zone_maps` output with an `n_bytes` column): partitions below `small_bytes` are grouped, in
     partition order, into compaction tasks of ~`target_bytes` each
     (task id = running-bytes-before div target — the shard_manifest
     cumsum convention). This is the Iceberg `rewrite_data_files`
@@ -626,12 +584,12 @@ def compaction_plan(
     window is bounded by partition count, never row count.
     """
     small = small_bytes if small_bytes is not None else target_bytes // 2
-    cand = stats.filter(F.col(bytes_col) < F.lit(small))
+    cand = stats.filter(F.col("n_bytes") < F.lit(small))
     return cand.select(
         *part_cols,
-        F.col(bytes_col),
+        F.col("n_bytes"),
         F.expr(
-            f"CAST(coalesce(sum({bytes_col}) OVER (ORDER BY "
+            f"CAST(coalesce(sum(n_bytes) OVER (ORDER BY "
             f"{', '.join(part_cols)} ROWS BETWEEN UNBOUNDED PRECEDING AND"
             f" 1 PRECEDING), 0) AS BIGINT) div {target_bytes}"
         ).alias("task_id"),

@@ -41,17 +41,15 @@ def streaming_pipeline(spark: SparkSession, source: DataFrame) -> DataFrame:
     return route_stage(enrich_stage(parse_stage(source), spark))
 
 
-def windowed_flowcounter(
-    routed: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def windowed_flowcounter(routed: DataFrame, window: str = "1 hour") -> DataFrame:
     """Streaming flowcounter: the batch `flowcounter` per (sink, tag)
-    over a watermarked input, so finished windows are emitted and their
-    state evicted."""
+    over a 2-hour-watermarked input, so finished windows are emitted
+    and their state evicted."""
     from fluent_bit_spark.operators.aggregate import flowcounter
     from fluent_bit_spark.operators.route import explode_routes
 
     return flowcounter(
-        explode_routes(routed.withWatermark("ts", watermark)), ["sink", "tag"], window
+        explode_routes(routed.withWatermark("ts", "2 hours")), ["sink", "tag"], window
     )
 
 
@@ -59,11 +57,10 @@ def session_stats(
     routed: DataFrame,
     key_col: str = "conv_id",
     gap: str = "30 minutes",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming sessionization: native session_window (gap-merged
-    event-time sessions) per conversation with a watermark bounding
-    state. Works on batch frames too (same expression), which is how
+    event-time sessions) per conversation with a 2-hour watermark
+    bounding state. Works on batch frames too (same expression), which is how
     the oracle/tests cross-check it against a closed-form gap
     computation.
 
@@ -72,7 +69,7 @@ def session_stats(
     and merges/extends it as events arrive, evicting sessions older
     than the watermark — bounded state at any scale, no custom
     stateful UDF needed."""
-    src = routed.withWatermark("ts", watermark) if routed.isStreaming else routed
+    src = routed.withWatermark("ts", "2 hours") if routed.isStreaming else routed
     return (
         src.groupBy(
             F.col(key_col), F.session_window("ts", gap).alias("sw")
@@ -91,15 +88,13 @@ def windowed_hll(
     df: DataFrame,
     value_col: str = "conv_id",
     window: str = "1 hour",
-    watermark: str = "2 hours",
-    p: int = 10,
 ) -> DataFrame:
-    """Streaming per-window distinct-count HLL registers: the sketch
-    that makes COUNT(DISTINCT) feasible over an unbounded stream.
+    """Streaming per-window distinct-count HLL registers (p = 10): the
+    sketch that makes COUNT(DISTINCT) feasible over an unbounded stream.
 
     MAX over (window, bucket) is an ordinary mergeable streaming
     aggregate — state is <= 2^p rows per open window regardless of how
-    many distinct values arrive, and the watermark evicts closed
+    many distinct values arrive, and the 2-hour watermark evicts closed
     windows. Works on batch frames too (same expressions), which is how
     the stream==batch test and the batch query (`hll_hourly` via
     hll_registers) cross-check it: identical registers, byte for byte.
@@ -109,8 +104,8 @@ def windowed_hll(
     """
     from fluent_bit_spark.operators.sketch import hll_bucket_rho
 
-    bucket, rho = hll_bucket_rho(value_col, p)
-    src = df.withWatermark("ts", watermark) if df.isStreaming else df
+    bucket, rho = hll_bucket_rho(value_col, 10)
+    src = df.withWatermark("ts", "2 hours") if df.isStreaming else df
     return (
         src.filter(F.col(value_col).isNotNull())
         .groupBy(F.window("ts", window).alias("w"), bucket.alias("bucket"))
@@ -150,13 +145,10 @@ def windowed_cms(
     df: DataFrame,
     key_col: str = "tool",
     window: str = "1 hour",
-    watermark: str = "2 hours",
-    depth: int = 4,
-    width: int = 512,
 ) -> DataFrame:
-    """Streaming count-min counter grid per event-time window:
-    per-window state is depth*width counter rows regardless of key
-    cardinality — the sum-mergeable sibling of windowed_hll's
+    """Streaming count-min counter grid per event-time window (2-hour
+    watermark): per-window state is depth*width = 4*512 counter rows
+    regardless of key cardinality — the sum-mergeable sibling of windowed_hll's
     max-mergeable registers (together they cover the two mergeable-
     sketch shapes a streaming pipeline needs: frequency and distinct).
 
@@ -169,10 +161,10 @@ def windowed_cms(
     """
     from fluent_bit_spark.operators.sketch import cms_probes
 
-    src = df.withWatermark("ts", watermark) if df.isStreaming else df
+    src = df.withWatermark("ts", "2 hours") if df.isStreaming else df
     return (
         src.filter(F.col(key_col).isNotNull())
-        .select("ts", cms_probes(key_col, depth, width))
+        .select("ts", cms_probes(key_col, 4, 512))
         .select("ts", F.col("pr.seed").alias("seed"), F.col("pr.pos").alias("pos"))
         .groupBy(F.window("ts", window).alias("w"), "seed", "pos")
         .agg(F.count("*").alias("cnt"))
@@ -201,10 +193,7 @@ def foreach_batch_fanout(base_path: str, sinks: list[tuple[str, str]]):
 def multiline_stateful(
     df: DataFrame,
     key_col: str = "path",
-    line_col: str = "line",
-    idx_col: str = "line_no",
     start_pattern: str = r"^\[",
-    flush_ms: int = 0,
 ):
     """Streaming multiline join: stitch continuation lines into records
     ACROSS micro-batches — the true streaming analog of the reference's
@@ -214,14 +203,13 @@ def multiline_stateful(
     within one frame; here the open record lives in the state store
     keyed by file/tag.
 
-    A line matching `start_pattern` begins a new record and completes
+    A `line` matching `start_pattern` begins a new record and completes
     (emits) the previous one; other lines append to the open record.
-    The final open record is held in state — with flush_ms > 0 a
-    processing-time timeout flushes it (≙ the reference's Flush_MS);
-    with 0 it is emitted only when a later batch starts the next record.
+    The final open record is held in state and emitted only when a
+    later batch starts the next record (no Flush_MS timeout).
 
     Emits (key, start_line, n_lines, record). Lines are processed in
-    idx_col order within each batch; cross-batch order is arrival
+    `line_no` order within each batch; cross-batch order is arrival
     order, same as tailing a growing file.
     """
     import re
@@ -234,50 +222,37 @@ def multiline_stateful(
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         done: list[tuple] = []
-        if state.hasTimedOut:
+        if state.exists:
             lines, start_no = state.get
-            if lines:
-                done.append((key[0], int(start_no), len(lines), "\n".join(lines)))
-            state.remove()
+            lines = list(lines)
         else:
-            if state.exists:
-                lines, start_no = state.get
-                lines = list(lines)
-            else:
-                lines, start_no = [], -1
-            # one concat+sort across ALL Arrow chunks of this batch: a
-            # key exceeding maxRecordsPerBatch arrives as multiple pdfs
-            # in shuffle order, and per-chunk sorting would stitch
-            # lines from a later chunk before earlier ones
-            chunks = [pdf for pdf in pdfs if len(pdf)]
-            if chunks:
-                batch = pd.concat(chunks).sort_values(idx_col)
-                for no, ln in zip(batch[idx_col], batch[line_col]):
-                    ln = "" if ln is None else str(ln)
-                    if rx.search(ln) and lines:
-                        done.append(
-                            (key[0], int(start_no), len(lines), "\n".join(lines))
-                        )
-                        lines, start_no = [ln], int(no)
-                    else:
-                        if not lines:
-                            start_no = int(no)
-                        lines.append(ln)
-            state.update((lines, start_no))
-            if flush_ms > 0:
-                state.setTimeoutDuration(flush_ms)
+            lines, start_no = [], -1
+        # one concat+sort across ALL Arrow chunks of this batch: a
+        # key exceeding maxRecordsPerBatch arrives as multiple pdfs
+        # in shuffle order, and per-chunk sorting would stitch
+        # lines from a later chunk before earlier ones
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            batch = pd.concat(chunks).sort_values("line_no")
+            for no, ln in zip(batch["line_no"], batch["line"]):
+                ln = "" if ln is None else str(ln)
+                if rx.search(ln) and lines:
+                    done.append(
+                        (key[0], int(start_no), len(lines), "\n".join(lines))
+                    )
+                    lines, start_no = [ln], int(no)
+                else:
+                    if not lines:
+                        start_no = int(no)
+                    lines.append(ln)
+        state.update((lines, start_no))
         if done:
             yield pd.DataFrame(
                 done, columns=[key_col, "start_line", "n_lines", "record"]
             )
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if flush_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
     return df.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
+        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
@@ -367,9 +342,6 @@ def backpressure_stateful(
     df: DataFrame,
     drain_per_hour: int,
     mem_buf_limit: int,
-    sink_col: str = "sink",
-    hour_col: str = "hour",
-    n_col: str = "n_in",
 ):
     """Streaming buffer replay WITH pause feedback — the part of the
     reference's backpressure loop (src/flb_input_chunk.c pause /
@@ -397,7 +369,7 @@ def backpressure_stateful(
     shuffles only the (sink, hour) spine rows, never raw records.
     """
     out_schema = (
-        f"{sink_col} string, {hour_col} timestamp, {n_col} long, "
+        "sink string, hour timestamp, n_in long, "
         "accepted long, queue_depth long, paused boolean"
     )
     state_schema = "q long, paused boolean"
@@ -405,9 +377,9 @@ def backpressure_stateful(
     def fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         q, paused = state.get if state.exists else (0, False)
         for pdf in pdfs:
-            pdf = pdf.sort_values(hour_col)
+            pdf = pdf.sort_values("hour")
             out = {"accepted": [], "queue_depth": [], "paused": []}
-            for n in pdf[n_col]:
+            for n in pdf["n_in"]:
                 accepted = 0 if paused else int(n)
                 q = max(0, q + accepted - drain_per_hour)
                 paused = q > mem_buf_limit
@@ -415,29 +387,24 @@ def backpressure_stateful(
                 out["queue_depth"].append(q)
                 out["paused"].append(paused)
             yield pdf.assign(**out)[
-                [sink_col, hour_col, n_col, "accepted", "queue_depth", "paused"]
+                ["sink", "hour", "n_in", "accepted", "queue_depth", "paused"]
             ]
         state.update((q, paused))
 
-    return df.groupBy(sink_col).applyInPandasWithState(
+    return df.groupBy("sink").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
-def docker_mode_stateful(
-    df: DataFrame,
-    key_col: str = "file",
-    line_col: str = "line",
-    idx_col: str = "line_no",
-    flush_ms: int = 0,
-):
+def docker_mode_stateful(df: DataFrame):
     """Streaming Docker_Mode reassembly: stitch json-file partial
     records (`log` without a trailing newline) into whole lines ACROSS
     micro-batches — the true streaming analog of
     tail_dockermode.c:237: the reference buffers the open line per
-    file between reads and flushes it on `docker_mode_flush` seconds,
-    which maps here to a per-file state-store entry and an optional
-    processing-time timeout (`flush_ms`).
+    file between reads, which maps here to a per-`file` state-store
+    entry over (file, line_no, line) rows. The reference's
+    `docker_mode_flush` timeout has no analog: the open line waits in
+    state for its terminator.
 
     The batch operator (sources.docker_mode_join) needs the whole file
     in one frame; this one holds only the OPEN line in state, so state
@@ -450,65 +417,44 @@ def docker_mode_stateful(
     import json as _json
 
     out_schema = (
-        f"{key_col} string, first_line_no long, stream string, "
+        "file string, first_line_no long, stream string, "
         "time_str string, log string"
     )
     state_schema = "pieces array<string>, start_no long, stream string, tstr string"
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         done: list[tuple] = []
-        if state.hasTimedOut:
+        if state.exists:
             pieces, start_no, stream, tstr = state.get
-            if pieces:
-                done.append(
-                    (key[0], int(start_no), stream, tstr, "".join(pieces))
-                )
-            state.remove()
+            pieces = list(pieces)
         else:
-            if state.exists:
-                pieces, start_no, stream, tstr = state.get
-                pieces = list(pieces)
-            else:
-                pieces, start_no, stream, tstr = [], -1, None, None
-            chunks = [pdf for pdf in pdfs if len(pdf)]
-            if chunks:
-                batch = pd.concat(chunks).sort_values(idx_col)
-                for no, ln in zip(batch[idx_col], batch[line_col]):
-                    try:
-                        rec = _json.loads(ln)
-                        log = rec.get("log")
-                    except (ValueError, TypeError):
-                        rec, log = {}, None
-                    if not pieces:
-                        start_no = int(no)
-                        stream = rec.get("stream")
-                        tstr = rec.get("time")
-                    pieces.append("" if log is None else log)
-                    if log is None or log.endswith("\n"):
-                        done.append(
-                            (
-                                key[0],
-                                int(start_no),
-                                stream,
-                                tstr,
-                                "".join(pieces),
-                            )
-                        )
-                        pieces, start_no, stream, tstr = [], -1, None, None
-            state.update((pieces, start_no, stream, tstr))
-            if flush_ms > 0:
-                state.setTimeoutDuration(flush_ms)
+            pieces, start_no, stream, tstr = [], -1, None, None
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            batch = pd.concat(chunks).sort_values("line_no")
+            for no, ln in zip(batch["line_no"], batch["line"]):
+                try:
+                    rec = _json.loads(ln)
+                    log = rec.get("log")
+                except (ValueError, TypeError):
+                    rec, log = {}, None
+                if not pieces:
+                    start_no = int(no)
+                    stream = rec.get("stream")
+                    tstr = rec.get("time")
+                pieces.append("" if log is None else log)
+                if log is None or log.endswith("\n"):
+                    done.append(
+                        (key[0], int(start_no), stream, tstr, "".join(pieces))
+                    )
+                    pieces, start_no, stream, tstr = [], -1, None, None
+        state.update((pieces, start_no, stream, tstr))
         if done:
             yield pd.DataFrame(
                 done,
-                columns=[key_col, "first_line_no", "stream", "time_str", "log"],
+                columns=["file", "first_line_no", "stream", "time_str", "log"],
             )
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if flush_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
+    return df.groupBy("file").applyInPandasWithState(
+        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )

@@ -186,6 +186,21 @@ def test_lua_callable(spark):
     assert res == {"counter_0": 6}
 
 
+def test_lua_call_with_no_registered_function_is_a_config_error(spark, tmp_path):
+    """A file config cannot register lua functions, so its `Call` names
+    nothing: the error says which function, not a bare KeyError."""
+    from fluent_bit_spark.config import pipeline_from_file
+
+    conf = tmp_path / "fb.conf"
+    conf.write_text(
+        "[INPUT]\n    Name dummy\n    Tag l.x\n"
+        "[FILTER]\n    Name lua\n    Match *\n    Call double\n"
+        "[OUTPUT]\n    Name counter\n    Match *\n"
+    )
+    with pytest.raises(ConfigError, match="lua filter: Call 'double'"):
+        pipeline_from_file(str(conf)).run(spark)
+
+
 def test_unroutable_dropped_and_errors(spark):
     cfg = """
 [INPUT]
@@ -206,8 +221,8 @@ def test_unroutable_dropped_and_errors(spark):
         ).run(spark)
 
 
-def test_parsers_conf_named_parser(spark):
-    from fluent_bit_spark.config import parse_parsers_conf
+def test_parsers_conf_named_parser(spark, tmp_path):
+    from fluent_bit_spark.config import parse_parsers_conf, pipeline_from_file
 
     parsers = """
 [PARSER]
@@ -222,7 +237,10 @@ def test_parsers_conf_named_parser(spark):
     specs = parse_parsers_conf(parsers)
     assert set(specs) == {"apache_demo", "kv"} and specs["apache_demo"].types == {"code": "integer"}
 
+    (tmp_path / "parsers.conf").write_text(parsers)
     cfg = """
+[SERVICE]
+    Parsers_File parsers.conf
 [INPUT]
     Name dummy
     Dummy {"log": "1.2.3.4 \\"GET /x\\" 500"}
@@ -241,7 +259,8 @@ def test_parsers_conf_named_parser(spark):
     Name stdout
     Match *
 """
-    res = ConfigPipeline(cfg, parsers_conf=parsers).run(spark)
+    (tmp_path / "fb.conf").write_text(cfg)
+    res = pipeline_from_file(str(tmp_path / "fb.conf")).run(spark)
     rows = res["stdout_0"]
     assert len(rows) == 4
     assert rows[0].host == "1.2.3.4" and rows[0].code == 500 and "log" not in rows[0].asDict()

@@ -54,13 +54,14 @@ def test_pattern_sanity(name, good, bad):
     assert not pat.match(bad), (name, bad)
 
 
-def test_unknown_pattern_duplicate_field_and_cycle_raise():
+def test_unknown_pattern_duplicate_field_and_cycle_raise(monkeypatch):
     with pytest.raises(GrokError, match="unknown"):
         grok_compile("%{NOPE:x}")
     with pytest.raises(GrokError, match="duplicate"):
         grok_compile("%{INT:x} %{INT:x}")
     with pytest.raises(GrokError, match="deep"):
-        grok_compile("%{SELF:x}", custom={"SELF": "%{SELF}"})
+        monkeypatch.setitem(GROK_PATTERNS, "SELF", "%{SELF}")
+        grok_compile("%{SELF:x}")
 
 
 def test_nested_references_do_not_capture():

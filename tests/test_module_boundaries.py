@@ -139,3 +139,117 @@ def test_only_transcripts_names_the_transcript_schema():
         in (getattr(node, "id", None), getattr(node, "attr", None), getattr(node, "name", None))
     ]
     assert not found, "\n".join(found)
+
+
+# Pipeline modules whose options must each have a caller: a default a
+# caller never overrides is a constant, not an option.
+PIPELINE_MODULES = [
+    "fluent_bit_spark/sources/__init__.py",
+    "fluent_bit_spark/operators/parse.py",
+    "fluent_bit_spark/operators/filters.py",
+    "fluent_bit_spark/operators/enrich.py",
+    "fluent_bit_spark/operators/route.py",
+    "fluent_bit_spark/operators/aggregate.py",
+    "fluent_bit_spark/operators/skew.py",
+    "fluent_bit_spark/operators/grok.py",
+    "fluent_bit_spark/sinks/__init__.py",
+    "fluent_bit_spark/streaming/__init__.py",
+    "fluent_bit_spark/metrics.py",
+    "fluent_bit_spark/retry.py",
+    "fluent_bit_spark/checkpoint.py",
+    "fluent_bit_spark/cli.py",
+    "fluent_bit_spark/config.py",
+    "fluent_bit_spark/transcripts.py",
+    "fluent_bit_spark/functions/record_accessor.py",
+]
+
+# (module, function, parameter) -> why the value stays settable
+# although no package, entry-point or perfbench call sets it.
+UNSET_OPTIONS_ALLOWED = {
+    ("fluent_bit_spark/cli.py", "main", "argv"):
+        "entry-point idiom: None reads sys.argv, tests pass a list",
+    ("fluent_bit_spark/transcripts.py", "read_transcripts", "table_format"):
+        "deployment setting: the table format (parquet or Iceberg) of the store",
+    ("fluent_bit_spark/sinks/__init__.py", "es_logstash_index", "id_mode"):
+        "the reference-exact Generate_ID (murmur3); dropping it is a product decision",
+    ("fluent_bit_spark/config.py", "ConfigPipeline.__init__", "lua_functions"):
+        "the Python functions a lua filter's Call names; a config file cannot carry them",
+    ("fluent_bit_spark/operators/enrich.py", "asof_join", "left_ts"):
+        "the time column of a frame the caller builds, not a pipeline column",
+    ("fluent_bit_spark/operators/enrich.py", "asof_join", "right_ts"):
+        "the time column of a frame the caller builds, not a pipeline column",
+}
+
+
+def _defaulted_params(path: pathlib.Path):
+    """(function, parameter, call name, positional index or None) for
+    every defaulted parameter of a public function or method; the index
+    counts the arguments a call passes, so a method's skips `self`."""
+    fns = []
+    for node in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+            fns.append((node.name, node.name, node, 0))
+        elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            for m in node.body:
+                if not isinstance(m, ast.FunctionDef):
+                    continue
+                if m.name.startswith("_") and m.name != "__init__":
+                    continue
+                static = any(getattr(d, "id", None) == "staticmethod" for d in m.decorator_list)
+                called_as = node.name if m.name == "__init__" else m.name
+                fns.append((f"{node.name}.{m.name}", called_as, m, 0 if static else 1))
+    for qual, called_as, fn, skip in fns:
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        first = len(pos) - len(a.defaults)
+        for i, p in enumerate(pos[first:], start=first):
+            yield qual, p.arg, called_as, i - skip
+        for p, d in zip(a.kwonlyargs, a.kw_defaults):
+            if d is not None:
+                yield qual, p.arg, called_as, None
+
+
+def _calls_by_name(files):
+    """call name -> [(positional count, keywords, passes *args/**kwargs)]"""
+    calls: dict[str, list] = {}
+    for f in files:
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            star = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            )
+            calls.setdefault(name, []).append(
+                (len(node.args), {k.arg for k in node.keywords}, star)
+            )
+    return calls
+
+
+def test_every_pipeline_option_has_a_caller():
+    """Every defaulted parameter of a public function in the pipeline
+    modules is passed, by position or keyword, by some call in the
+    package, `__spark_entry__.py` or perfbench (a call with `*args` or
+    `**kwargs` counts as passing all), or is allowlisted with a reason.
+    Calls match by name, so a same-named call elsewhere also counts.
+    Tests do not count: a value only a test sets is a constant."""
+    callers = (
+        sorted((REPO / PKG).rglob("*.py"))
+        + [REPO / "__spark_entry__.py"]
+        + sorted((REPO / "perfbench").glob("*.py"))
+    )
+    calls = _calls_by_name(callers)
+    unset = set()
+    for mod in PIPELINE_MODULES:
+        for qual, param, called_as, idx in _defaulted_params(REPO / mod):
+            if not any(
+                star or param in kws or (idx is not None and n > idx)
+                for n, kws, star in calls.get(called_as, [])
+            ):
+                unset.add((mod, qual, param))
+    found = sorted(unset - UNSET_OPTIONS_ALLOWED.keys())
+    assert not found, f"{len(found)} options no caller sets:\n" + "\n".join(
+        f"{m}: {q}({p}=)" for m, q, p in found
+    )
+    stale = sorted(UNSET_OPTIONS_ALLOWED.keys() - unset)
+    assert not stale, f"allowlisted options that now have a caller or are gone: {stale}"

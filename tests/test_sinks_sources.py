@@ -27,7 +27,7 @@ def recs(spark):
 
 
 def test_json_lines(recs):
-    vals = [r.value for r in SK.to_json_lines(recs, ["k", "n"]).collect()]
+    vals = [r.value for r in SK.to_json_lines(recs.select("k", "n")).collect()]
     assert '{"k":"a","n":1}' in vals
 
 
@@ -188,8 +188,8 @@ def test_synthetic_metrics(spark):
 
 
 def test_splunk_datadog(recs):
-    sp = SK.splunk_hec_transform(recs, host_col="k").collect()[0]
-    assert sp.sourcetype == "_json" and '"n":1' in sp.event and sp.host == "a"
+    sp = SK.splunk_hec_transform(recs).collect()[0]
+    assert sp.sourcetype == "_json" and '"n":1' in sp.event and sp.host == "unknown"
     dd = SK.datadog_transform(recs, message_col="text", tag_cols=["k"]).collect()[0]
     assert dd.service == "fluent-bit-spark" and dd.ddtags == "k:a"
     assert dd.timestamp == 1704067200000

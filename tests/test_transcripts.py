@@ -258,16 +258,21 @@ def test_stable_turn_order_skew_safe_equals_window(spark, sf_dir):
             "conv_id", "turn_idx", "turn_rank"
         )
         for parts in (3, 17):
-            got = stable_turn_order_skew_safe(frame, partitions=parts)
-            assert set(got.columns) == set(frame.columns) | {"turn_rank"}
-            diff = (
-                got.select("conv_id", "turn_idx", "turn_rank")
-                .exceptAll(want)
-                .count()
-                + want.exceptAll(
+            old = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            try:
+                got = stable_turn_order_skew_safe(frame)
+                assert set(got.columns) == set(frame.columns) | {"turn_rank"}
+                diff = (
                     got.select("conv_id", "turn_idx", "turn_rank")
-                ).count()
-            )
+                    .exceptAll(want)
+                    .count()
+                    + want.exceptAll(
+                        got.select("conv_id", "turn_idx", "turn_rank")
+                    ).count()
+                )
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", old)
             release_persisted()
             assert diff == 0, (parts, diff)
     # empty input: no driver-side offsets, still shaped correctly
@@ -326,3 +331,32 @@ def test_parse_span_group_derivations_match_per_group_regex(spark):
         assert r.code == want_code, (r.text, r.code, want_code)
         assert r.pri == want_pri, (r.text, r.pri, want_pri)
         assert r.smsg == want_smsg, (r.text, r.smsg, want_smsg)
+
+
+def test_malformed_log_lines_read_null_instead_of_failing_the_job(spark):
+    """Under ANSI mode one bad line must not abort the flagship job: a
+    repeated LTSV key reads its first occurrence, and a number that does
+    not parse, or overflows a long, reads as NULL (in `parse_stage` and
+    in the declared-type casts of `parse.typecast`)."""
+    import datetime as dt
+
+    from fluent_bit_spark.operators.parse import typecast
+    from fluent_bit_spark.plans.flagship import run_pipeline
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    lines = [
+        "k1:a\tk2:5\tk1:b",
+        "k1:a\tk2:abc\tcents:5",
+        'level=info msg="evt x" latency_cents=' + "9" * 23,
+    ]
+    src = spark.createDataFrame(
+        [("c", i, "user", line, None, dt.datetime(2024, 1, 1)) for i, line in enumerate(lines)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    rows = {r.turn_idx: r for r in run_pipeline(spark, None, source=src).collect()}
+    assert (rows[0].fmt, rows[0].k1, rows[0].k2, rows[0].ltsv_cents) == ("ltsv", "a", 5, None)
+    assert (rows[1].k1, rows[1].k2, rows[1].ltsv_cents) == ("a", None, 5)
+    assert (rows[2].fmt, rows[2].level, rows[2].latency_cents) == ("logfmt", "info", None)
+    bad = spark.createDataFrame([("9" * 23, "x1", "maybe")], "i string, f string, b string")
+    row = typecast(bad, {"i": "integer", "f": "float", "b": "bool"}).first()
+    assert (row.i, row.f, row.b) == (None, None, None)

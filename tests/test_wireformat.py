@@ -8,6 +8,8 @@ from __future__ import annotations
 import pytest
 
 from fluent_bit_spark.functions.wire import (
+    GELF_HEADER_SIZE,
+    GELF_MAGIC,
     avro_decode,
     avro_encode,
     msgpack_pack,
@@ -263,13 +265,26 @@ class TestForwardProtocol:
         assert by_tag["t.b"][0]["msg_bytes"] < a[0]["msg_bytes"]
 
 
+def gelf_reassemble(chunks: list) -> bytes:
+    """Inverse of `gelf_chunk`, as a GELF receiver runs it: validate
+    magic/msgid/count, reorder by sequence number, concatenate."""
+    if len(chunks) == 1 and not chunks[0][:2] == GELF_MAGIC:
+        return chunks[0]
+    msgid = chunks[0][2:10]
+    total = chunks[0][11]
+    if len(chunks) != total:
+        raise ValueError(f"expected {total} chunks, got {len(chunks)}")
+    parts = {}
+    for c in chunks:
+        if c[:2] != GELF_MAGIC or c[2:10] != msgid:
+            raise ValueError("magic/msgid mismatch")
+        parts[c[10]] = c[GELF_HEADER_SIZE:]
+    return b"".join(parts[i] for i in range(total))
+
+
 class TestGelfChunking:
     def test_header_layout_and_reassembly(self):
-        from fluent_bit_spark.functions.wire import (
-            GELF_HEADER_SIZE,
-            gelf_chunk,
-            gelf_reassemble,
-        )
+        from fluent_bit_spark.functions.wire import gelf_chunk
 
         payload = bytes(range(256)) * 2  # 512 bytes
         msgid = b"\x01\x02\x03\x04\x05\x06\x07\x08"
@@ -284,7 +299,7 @@ class TestGelfChunking:
         assert gelf_reassemble(chunks[::-1]) == payload
 
     def test_small_payload_unchunked(self):
-        from fluent_bit_spark.functions.wire import gelf_chunk, gelf_reassemble
+        from fluent_bit_spark.functions.wire import gelf_chunk
 
         [d] = gelf_chunk(b"small", b"\x00" * 8, pckt_size=100)
         assert d == b"small"
